@@ -921,10 +921,11 @@ def q_store_yield_many(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_store_get_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2/S4 batched (round 5): ``get_many_ts(list)`` answers N keyed
-    range reads in ONE pruned Spark job (929→104 ms/key on H1); every
-    returned series re-aggregated must equal the source events inside
-    the requested range — same per-key semantics as sequential get_ts."""
+    """S2/S4 batched: ``get_many_ts(list)`` answers N keyed range reads
+    with one driver-side arrow scan of the manifest-pruned files (no
+    Spark job); every returned series re-aggregated must equal the
+    source events inside the requested range — same per-key semantics
+    as sequential get_ts."""
     import pandas as pd
 
     store, path = _make_event_store(spark, sf_dir)

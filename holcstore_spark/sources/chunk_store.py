@@ -32,10 +32,13 @@ which removes the single-writer restriction entirely.
 
 from __future__ import annotations
 
+import bisect
 import contextlib
+import operator
 import os
 import time
 from datetime import datetime, timezone
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1021,11 +1024,13 @@ class ChunkStore:
 
         The collapsed state is metadata-sized (keys × chunks), so it is
         cached per store instance and invalidated on every write — repeated
-        keyed reads then filter the cached frame instead of re-windowing
-        the log (the reference's CACHED_INDEX_SIZE analogue,
-        chunk_timeserie_store.py:199). Cross-process writers are not seen
-        until a new store instance is opened (same caveat as the reference's
-        per-class cache)."""
+        Spark reads (``alive_data`` and the aggregates) then filter the
+        cached frame instead of re-windowing the log (the reference's
+        CACHED_INDEX_SIZE analogue, chunk_timeserie_store.py:199). On these
+        Spark paths cross-process writers are not seen until ``refresh()``
+        or a new store instance (same caveat as the reference's per-class
+        cache). Keyed reads (``get_ts``, ``get_batch_ts``) do not use this
+        cache: they read the requested keys' meta rows per call."""
         if self._meta_cache is None:
             w = Window.partitionBy(*self.config.keys, "chunk_index").orderBy(
                 F.desc("op_id")
@@ -1051,22 +1056,22 @@ class ChunkStore:
         self._has_tombstones = None
 
     def refresh(self) -> None:
-        """Drop the per-instance ``latest_meta`` cache so the next read
-        observes writes committed by OTHER processes/store instances.
+        """Drop the per-instance ``latest_meta`` cache so the next Spark
+        read observes writes committed by OTHER processes/store instances.
 
         The cache is invalidated automatically on this instance's own
-        writes; cross-process writers are invisible until ``refresh()``
-        or a new instance (same caveat as the reference's per-class
-        cache, chunk_timeserie_store.py:199 — this is its explicit
-        escape hatch)."""
+        writes; cross-process writers are invisible to the Spark reads
+        until ``refresh()`` or a new instance (same caveat as the
+        reference's per-class cache, chunk_timeserie_store.py:199 — this
+        is its explicit escape hatch). Keyed reads never need it."""
         self._invalidate_meta_cache()
 
     def _any_tombstones(self) -> bool:
         """Whether any tombstone row exists in the meta log — a DRIVER-side
         pyarrow scan of the metadata-sized log's ``is_deleted`` column
-        (row-group stats skip clean files), remembered until the next
-        write. The common store has none, and every keyed read can then
-        skip its tombstone semi-join entirely.
+        (row-group stats skip clean files) that stops at the first hit,
+        remembered until the next write. The common store has none, and
+        every ``alive_data`` read can then skip its tombstone semi-join.
 
         r17 (§5 — the driver gate was a whole Spark job): this replaces a
         ``latest_meta().filter(is_deleted).limit(1).count()`` job — 1.6 to
@@ -1091,11 +1096,12 @@ class ChunkStore:
             if ds is None:
                 self._has_tombstones = False
             else:
-                tbl = ds.to_table(
+                # stop at the first tombstone: one hit answers the gate
+                batches = ds.to_batches(
                     columns=["is_deleted"],
                     filter=pads.field("is_deleted") == True,  # noqa: E712
                 )
-                self._has_tombstones = tbl.num_rows > 0
+                self._has_tombstones = any(b.num_rows for b in batches)
         return self._has_tombstones
 
     def alive_chunks(self, filters: dict | None = None) -> DataFrame:
@@ -1934,110 +1940,15 @@ class ChunkStore:
         """Keyed range read (reference: chunk_timeserie_store.py:375-416).
         Full key required; None when absent.
 
-        The Spark side does only what must be distributed (pruned scan +
-        tombstone check); ordering and NaN-bound trimming happen on the
-        collected single series at the pandas edge — two fewer shuffle
-        stages per point read."""
-        self._ensure_all_attrs(attrs)
-        d = self.alive_data(attrs, start, end)
-        pdf = d.select("ts", "value").toPandas()
-        s = long_to_series(pdf, self.config.tz)
-        if s is None:
-            return None
-        if drop_bounds_na:
-            valid = s.notna()
-            if not valid.any():
-                return None
-            s = s.loc[valid.idxmax(): valid[::-1].idxmax()]
-        return s
+        Served on the driver by pyarrow from the manifest — no Spark job,
+        ms latency, like the reference's b-tree lookup (see
+        :meth:`_read_keyed`). Every call reads the current snapshot, so
+        writes of other store instances are seen without ``refresh()``."""
+        got = self._read_keyed([attrs], start, end, drop_bounds_na)
+        return next(iter(got.values()), None)
 
-    def get_ts_local(
-        self,
-        attrs: dict,
-        start=None,
-        end=None,
-        drop_bounds_na: bool = True,
-    ) -> pd.Series | None:
-        """Low-latency point read served directly by pyarrow — no Spark job.
-
-        Same layout, same semantics as :meth:`get_ts` (tombstone check via
-        the meta log, partition pruning via the hive chunk_index dirs, key
-        equality and ts bounds pushed into the arrow scan). Spark remains
-        the engine for every analytical path; this is the serving-side
-        mitigation for SURVEY §7.4's "small-read latency" trade — the
-        reference answers point reads from a b-tree in ms, a Spark job
-        costs hundreds of ms regardless of data size.
-        """
-        import pyarrow.dataset as pads
-
-        self._ensure_all_attrs(attrs)
-        if self._meta_empty():
-            return None
-        # latest meta state in pandas (metadata-sized)
-        if self._acid:
-            snap = self._snapshot()
-            meta = pads.dataset(snap.paths("meta", self.path)).to_table().to_pandas()
-        else:
-            meta = pads.dataset(self._meta_path).to_table().to_pandas()
-        for k, v in attrs.items():
-            meta = meta[meta[k] == v]
-        if len(meta) == 0:
-            return None
-        latest = (
-            meta.sort_values("op_id")
-            .groupby("chunk_index", as_index=False)
-            .tail(1)
-        )
-        alive = sorted(latest.loc[~latest["is_deleted"], "chunk_index"].tolist())
-        if not alive:
-            return None
-
-        tz = self.config.tz
-        s_bound = normalize_bound(start, tz)
-        e_bound = normalize_bound(end, tz)
-        if self._acid:
-            from holcstore_spark.plans.pruning import entry_may_match_keys
-
-            # manifest file skipping (chunk range AND key stats — the
-            # serving path is where footer-open latency matters most),
-            # then chunk_index as a regular column
-            entries = snap.entries_overlapping(
-                "data", min(alive), max(alive)
-            )
-            kv = {k: [v] for k, v in attrs.items() if v is not None}
-            if kv:
-                entries = [
-                    e for e in entries if entry_may_match_keys(e, kv)
-                ]
-            if not entries:
-                return None
-            data = pads.dataset(
-                [os.path.join(self.path, e["path"]) for e in entries]
-            )
-        else:
-            data = pads.dataset(self._data_path, partitioning="hive")
-        filt = pads.field("chunk_index").isin([int(c) for c in alive])
-        for k, v in attrs.items():
-            filt = filt & (pads.field(k) == v)
-        # the files hold naive UTC wall-clock instants (Spark session=UTC):
-        # strip tz from the bounds so arrow compares like with like
-        if s_bound is not None:
-            filt = filt & (pads.field("ts") >= s_bound.tz_localize(None).to_pydatetime())
-        if e_bound is not None:
-            filt = filt & (pads.field("ts") <= e_bound.tz_localize(None).to_pydatetime())
-        pdf = data.to_table(filter=filt, columns=["ts", "value"]).to_pandas()
-        if len(pdf):
-            ts_col = pd.to_datetime(pdf["ts"], utc=True)
-            pdf = pd.DataFrame({"ts": ts_col, "value": pdf["value"]})
-        s = long_to_series(pdf, tz)
-        if s is None:
-            return None
-        if drop_bounds_na:
-            valid = s.notna()
-            if not valid.any():
-                return None
-            s = s.loc[valid.idxmax(): valid[::-1].idxmax()]
-        return s
+    #: alias kept for compatibility — ``get_ts`` is the low-latency path
+    get_ts_local = get_ts
 
     def get_batch_ts(
         self,
@@ -2046,86 +1957,148 @@ class ChunkStore:
         end=None,
         drop_bounds_na: bool = True,
     ) -> dict[tuple, pd.Series]:
-        """Batched point reads: N keyed range reads answered by ONE pruned
-        Spark job, split into per-key series at the pandas edge.
+        """Batched point reads: N keyed range reads answered by ONE arrow
+        scan, split into per-key series at the pandas edge.
 
         Returns ``{tuple(key values in config.keys order): pd.Series}``;
         keys with no alive data are absent, matching :meth:`get_ts`'s
         ``None``. Per-key semantics (tz rendering, NaN-bound trim) are
-        identical to N sequential ``get_ts`` calls — this exists because
-        each Spark job carries a fixed scheduling cost (~hundreds of ms),
-        so N point reads cost N jobs sequentially but ~1 job batched.
-
-        The key predicate is a per-column IN list, which reaches the
-        parquet scan as a pushed filter (exact for single-key stores; a
-        coarse superset for composite keys, tightened exactly at the
-        edge). For SPARSE composite requests — where the per-column IN
-        cross-product is much larger than the requested key set (a
-        1000×1000 sparse request would otherwise read up to 10⁶ key
-        combinations' row groups) — an exact broadcast semi-join on the
-        requested key tuples runs ON TOP of the pushed IN filters, so the
-        scan stays pruned and the residue never leaves the executors.
-        Driver memory holds the N requested series — the same bound as
-        the sequential loop it replaces; for unbounded scans use
-        :meth:`yield_many_ts`.
+        identical to N sequential ``get_ts`` calls. Driver memory holds
+        the N requested series — the same bound as the sequential loop it
+        replaces; for unbounded scans use :meth:`yield_many_ts`.
         """
-        keys = self.config.keys
+        return self._read_keyed(attrs_list, start, end, drop_bounds_na)
+
+    def _read_keyed(
+        self,
+        attrs_list: list[dict],
+        start=None,
+        end=None,
+        drop_bounds_na: bool = True,
+    ) -> dict[tuple, pd.Series]:
+        """THE keyed-read path: full-key range reads answered on the
+        driver with pyarrow, no Spark job.
+
+        1. latest meta state of the requested keys only — the per-column
+           key IN sets and the chunk bound are pushed into the meta scan,
+           so the cost follows the requested keys' meta rows, not the log;
+        2. manifest file skipping on the alive chunks and key stats;
+        3. one data scan (keys IN, chunk_index IN alive, ts bounds), then
+           an exact join on the alive (key tuple, chunk) pairs — it drops
+           the composite-key IN cross-product residue and tombstoned
+           chunks of partly deleted keys;
+        4. per-key series with the NaN-bound trim.
+
+        The alive filter always applies, so tombstones, sync replicas
+        (mid-import data stays hidden) and ``time_travel`` views read as
+        on the Spark path (:meth:`alive_data`)."""
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+
+        from holcstore_spark.functions.scalar import chunk_index_of
+        from holcstore_spark.plans.pruning import (
+            entry_may_match_keys,
+            key_equality_values,
+        )
+
+        keys = list(self.config.keys)
         for a in attrs_list:
             self._ensure_all_attrs(a)
-        if not attrs_list:
-            return {}
         wanted = {tuple(a[k] for k in keys) for a in attrs_list}
-        d = self._batch_frame(attrs_list, start, end)
-        pdf = d.select(*keys, "ts", "value").toPandas()
+        if not wanted:
+            return {}
+        tz, axis = self.config.tz, self.config.chunk_axis
+        s = normalize_bound(start, tz)
+        e = normalize_bound(end, tz)
+        lo = chunk_index_of(s, axis, tz) if s is not None else None
+        hi = chunk_index_of(e, axis, tz) if e is not None else None
+        in_sets = {k: list({kt[i] for kt in wanted}) for i, k in enumerate(keys)}
+        key_filt = reduce(
+            operator.and_, (pads.field(k).isin(v) for k, v in in_sets.items())
+        )
+        chunk = pads.field("chunk_index")
+        meta_filt = key_filt
+        for c, cmp in ((lo, operator.ge), (hi, operator.le)):
+            if c is not None:
+                meta_filt = meta_filt & cmp(chunk, c)
+
+        # 1. latest meta state per (keys, chunk) of the requested keys
+        if self._acid:
+            snap = self._snapshot()
+            meta = [
+                os.path.join(self.path, en["path"])
+                for en in snap.entries_overlapping("meta", lo, hi)
+            ]
+        else:
+            meta = self._meta_path if has_parquet(self._meta_path) else []
+        if not meta:
+            return {}
+        pair = [*keys, "chunk_index"]
+        latest = (
+            pads.dataset(meta)
+            .to_table(columns=[*pair, "op_id", "is_deleted"], filter=meta_filt)
+            .to_pandas()
+            .sort_values("op_id", kind="stable")
+            .drop_duplicates(pair, keep="last")
+        )
+        alive = latest.loc[~latest["is_deleted"], pair]
+        alive = alive.loc[
+            [kt in wanted for kt in alive[keys].itertuples(index=False, name=None)]
+        ]
+        if alive.empty:
+            return {}
+        chunks = sorted(int(c) for c in alive["chunk_index"].unique())
+
+        # 2. file pruning: alive chunks, then the key IN sets
+        if self._acid:
+            def holds_alive_chunk(en) -> bool:
+                cmin, cmax = en.get("chunk_min"), en.get("chunk_max")
+                if cmin is None or cmax is None:
+                    return True
+                i = bisect.bisect_left(chunks, cmin)
+                return i < len(chunks) and chunks[i] <= cmax
+
+            kv = key_equality_values({f"{k}__in": v for k, v in in_sets.items()})
+            entries = [
+                en for en in snap.entries_overlapping("data", chunks[0], chunks[-1])
+                if holds_alive_chunk(en) and entry_may_match_keys(en, kv)
+            ]
+            if not entries:
+                return {}
+            data = pads.dataset([os.path.join(self.path, en["path"]) for en in entries])
+        else:
+            if not has_parquet(self._data_path):
+                return {}
+            data = pads.dataset(self._data_path, partitioning="hive")
+
+        # 3. one arrow scan; the files hold naive UTC instants (Spark
+        # session=UTC), so the UTC bounds go in naive, as the file's type
+        ts_type = data.schema.field("ts").type
+        filt = key_filt & chunk.isin(chunks)
+        for bound, cmp in ((s, operator.ge), (e, operator.le)):
+            if bound is not None:
+                b = pa.scalar(bound.tz_localize(None), type=ts_type)
+                filt = filt & cmp(pads.field("ts"), b)
+        pdf = (
+            data.to_table(columns=[*pair, "ts", "value"], filter=filt)
+            .to_pandas()
+            .merge(alive, on=pair)
+        )
+
+        # 4. per-key series, NaN bounds trimmed
         out: dict[tuple, pd.Series] = {}
-        for kt, g in pdf.groupby(list(keys), sort=False):
+        for kt, g in pdf.groupby(keys, sort=False, dropna=False):
             kt = kt if isinstance(kt, tuple) else (kt,)
-            if kt not in wanted:  # composite-key cross-product residue
-                continue
-            s = long_to_series(g.reset_index(drop=True), self.config.tz)
-            if s is None:
-                continue
-            if drop_bounds_na:
-                valid = s.notna()
-                if not valid.any():
-                    continue
-                s = s.loc[valid.idxmax(): valid[::-1].idxmax()]
-            out[kt] = s
+            ser = long_to_series(g, tz)
+            if ser is not None and drop_bounds_na:
+                valid = ser.notna()
+                ser = (
+                    ser.loc[valid.idxmax(): valid[::-1].idxmax()]
+                    if valid.any() else None
+                )
+            if ser is not None:
+                out[kt] = ser
         return out
-
-    #: composite-key batched reads switch from "coarse IN superset only"
-    #: to "coarse IN + exact key-tuple broadcast semi-join" once the IN
-    #: cross-product exceeds this multiple of the requested key count
-    BATCH_RESIDUE_FACTOR = 4
-
-    def _batch_frame(self, attrs_list: list[dict], start=None, end=None) -> DataFrame:
-        """The pruned scan behind :meth:`get_batch_ts`, exposed so plan
-        tests can assert the composite-key semi-join engages. The coarse
-        per-column IN filters are ALWAYS applied (they reach the parquet
-        scan as pushed filters); the exact key-tuple broadcast semi-join
-        is layered on top only for sparse composite requests, where the
-        IN cross-product residue would otherwise dominate the result."""
-        keys = self.config.keys
-        coarse = {
-            f"{k}__in": sorted({a[k] for a in attrs_list}) for k in keys
-        }
-        d = self.alive_data(coarse, start, end)
-        combos = 1
-        for k in keys:
-            combos *= len(coarse[f"{k}__in"])
-        n_wanted = len({tuple(a[k] for k in keys) for a in attrs_list})
-        if len(keys) > 1 and combos > self.BATCH_RESIDUE_FACTOR * n_wanted:
-            spec = pd.DataFrame(
-                [{k: a[k] for k in keys} for a in attrs_list]
-            ).drop_duplicates()
-            spec_sdf = self.spark.createDataFrame(
-                spec,
-                schema=T.StructType(
-                    [T.StructField(k, t) for k, t in self._key_schema(spec)]
-                ),
-            )
-            d = d.join(F.broadcast(spec_sdf), on=list(keys), how="left_semi")
-        return d
 
     def yield_many_ts(
         self,
@@ -2165,9 +2138,9 @@ class ChunkStore:
 
     def get_many_ts(self, filters=None, start=None, end=None):
         """Multi-series read. A LIST of full-key attr dicts dispatches to
-        the batched point-read path (:meth:`get_batch_ts`, one Spark job,
-        ``{key_tuple: series}``); a dict/None filter keeps the
-        reference-parity materialized scan (list of (series, key))."""
+        the batched point-read path (:meth:`get_batch_ts`, one driver-side
+        arrow scan, ``{key_tuple: series}``); a dict/None filter keeps the
+        reference-parity materialized Spark scan (list of (series, key))."""
         if isinstance(filters, (list, tuple)):
             return self.get_batch_ts(filters, start, end)
         return list(self.yield_many_ts(filters, start, end))

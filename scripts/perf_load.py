@@ -160,7 +160,8 @@ def run_lookup() -> None:
     """Round 10: measure manifest key-stats file skipping on the read
     path — a fragmented chunk (one file per inserted series), point
     lookups timed with the pruning live vs disabled (monkeypatched
-    entry_may_match_keys ≡ True = the pre-round-10 behavior)."""
+    entry_may_match_keys ≡ True = the pre-round-10 behavior), each as
+    the arrow ``get_ts`` and as the Spark ``alive_data().toPandas()``."""
     import pandas as pd
 
     import holcstore_spark.plans.pruning as pruning_mod
@@ -189,14 +190,14 @@ def run_lookup() -> None:
         t0 = time.perf_counter()
         for p in probes:
             store.get_ts({"key": p})
-        t_spark = (time.perf_counter() - t0) / len(probes)
+        t_keyed = (time.perf_counter() - t0) / len(probes)
         t0 = time.perf_counter()
         for p in probes:
-            store.get_ts_local({"key": p})
-        t_local = (time.perf_counter() - t0) / len(probes)
+            store.alive_data({"key": p}).toPandas()
+        t_spark = (time.perf_counter() - t0) / len(probes)
         print(f"lookup[{tag}]: files_opened={opened}/{n_files} "
-              f"get_ts={t_spark * 1000:.0f}ms "
-              f"get_ts_local={t_local * 1000:.0f}ms")
+              f"get_ts={t_keyed * 1000:.0f}ms "
+              f"alive_data.toPandas={t_spark * 1000:.0f}ms")
 
     timed("pruned")
     real = pruning_mod.entry_may_match_keys

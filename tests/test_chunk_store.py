@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from holcstore_spark import ChunkStoreConfig
+from holcstore_spark.edge.pandas_bridge import long_to_series
 from holcstore_spark.sources.chunk_store import ChunkStore, KeyExistsError, SyncGuardError
 
 
@@ -297,31 +298,126 @@ class TestWriteSemantics:
         assert (jun_part == 6.0).all() and len(jun_part) == 48
 
 
+def spark_reference(st, attrs, start=None, end=None, drop_bounds_na=True):
+    """What a keyed read must return, computed on the Spark path:
+    ``alive_data`` collected, rendered and NaN-bound trimmed."""
+    pdf = st.alive_data(attrs, start, end).select("ts", "value").toPandas()
+    s = long_to_series(pdf, st.config.tz)
+    if s is None or not drop_bounds_na:
+        return s
+    valid = s.notna()
+    if not valid.any():
+        return None
+    return s.loc[valid.idxmax(): valid[::-1].idxmax()]
+
+
+PART = {"site": "p1", "meter": "m1"}   # one chunk deleted, then rewritten
+GONE = {"site": "zz", "meter": "q"}    # fully tombstoned
+READ_KEYS = [ATTRS, PART, GONE]
+READ_WINDOWS = [
+    {},
+    {"start": "2024-01-10", "end": "2024-01-25"},
+    {"drop_bounds_na": False},
+    # crosses the Europe/Paris spring-forward change (2024-03-31 02:00)
+    {"start": "2024-03-30 12:00",
+     "end": pd.Timestamp("2024-04-01 06:00", tz="Europe/Paris")},
+    # spans PART's alive February and its tombstoned March
+    {"start": "2024-02-20", "end": pd.Timestamp("2024-03-10", tz="UTC")},
+]
+
+
+def write_read_matrix(st) -> int | None:
+    """Writes the keyed-read cases; returns the ACID log version after
+    the first write (None on plain stores)."""
+    kw = {"update": True} if st.config.allow_sync else {}
+    s = hourly("2024-01-01", 24 * 121, seed=3)
+    s.iloc[:5] = np.nan
+    s.iloc[50:60] = np.nan
+    st.set_ts(ATTRS, s, **kw)
+    first = st._txlog.snapshot().version if st._acid else None
+    st.set_ts(ATTRS, hourly("2024-01-20", 24 * 5, value=7.0), update=True)
+    st.set_ts(PART, hourly("2024-01-01", 24 * 121, seed=4), **kw)
+    # replace keeps February and tombstones January, March and April
+    st.set_ts(PART, hourly("2024-02-01", 24 * 29, value=2.0), replace=True)
+    # January comes back; March and April stay deleted
+    st.set_ts(PART, hourly("2024-01-05", 24 * 3, value=5.0), update=True)
+    st.set_ts(GONE, hourly("2024-01-01", 24), **kw)
+    st.delete({"site": "zz"})
+    return first
+
+
+def assert_keyed_reads_match_spark(st) -> None:
+    keys = st.config.keys
+    for kw in READ_WINDOWS:
+        want = {
+            tuple(a[k] for k in keys): spark_reference(st, a, **kw)
+            for a in READ_KEYS
+        }
+        for a in READ_KEYS:
+            ref = want[tuple(a[k] for k in keys)]
+            for got in (st.get_ts(a, **kw), st.get_ts_local(a, **kw)):
+                if ref is None:
+                    assert got is None, (a, kw)
+                else:
+                    pd.testing.assert_series_equal(got, ref, check_freq=False)
+        batch = st.get_batch_ts(READ_KEYS, **kw)
+        assert set(batch) == {kt for kt, r in want.items() if r is not None}
+        for kt, got in batch.items():
+            pd.testing.assert_series_equal(got, want[kt], check_freq=False)
+
+
 class TestLocalRead:
     def test_get_ts_local_equals_spark_path(self, spark, tmpdir):
-        import time
+        # the keyed reads (get_ts, its get_ts_local alias, get_batch_ts)
+        # are served by arrow on the driver; the Spark alive_data path is
+        # their oracle, on every store flavour
+        from holcstore_spark.streaming.sync import SyncClient
+
+        plain = make_store(spark, tmpdir)
+        write_read_matrix(plain)
+        assert plain.get_ts(PART) is not None
+        assert plain.get_ts(GONE) is None
+        assert_keyed_reads_match_spark(plain)
+
+        def acid_store(name, allow_sync=False):
+            cfg = ChunkStoreConfig(
+                keys=("site", "meter"), freq="1h", tz="Europe/Paris",
+                chunk_axis=("year", "month"), allow_sync=allow_sync,
+                key_types={"site": "str", "meter": "str"}, acid=True,
+            )
+            return ChunkStore(spark, os.path.join(tmpdir, name), cfg)
+
+        acid = acid_store("acid")
+        first = write_read_matrix(acid)
+        assert_keyed_reads_match_spark(acid)
+        view = acid.time_travel(first)
+        assert view.get_ts(PART) is None  # not yet written at that version
+        assert_keyed_reads_match_spark(view)
+
+        server = acid_store("server", allow_sync=True)
+        write_read_matrix(server)
+        replica = acid_store("replica", allow_sync=True)
+        assert SyncClient(server, replica).pull() > 0
+        assert_keyed_reads_match_spark(replica)
+
+    def test_tombstone_gate_on_many_tombstones(self, spark, tmpdir):
+        import pyarrow.dataset as pads
 
         st = make_store(spark, tmpdir)
-        s = hourly("2024-01-01", 24 * 30, seed=3)
-        s.iloc[50:60] = np.nan
-        st.set_ts(ATTRS, s)
-        st.set_ts(ATTRS, hourly("2024-01-20", 24 * 5, value=7.0), update=True)
-        st.set_ts({"site": "zz", "meter": "q"}, hourly("2024-01-01", 24))
-        st.delete({"site": "zz"})
-        for kw in [
-            {},
-            {"start": "2024-01-10", "end": "2024-01-25"},
-            {"drop_bounds_na": False},
-        ]:
-            a = st.get_ts(ATTRS, **kw)
-            b = st.get_ts_local(ATTRS, **kw)
-            pd.testing.assert_series_equal(a, b, check_freq=False)
-        # tombstoned key is invisible locally too
-        assert st.get_ts_local({"site": "zz", "meter": "q"}) is None
-        # and it is actually fast (no Spark job)
-        t0 = time.perf_counter()
-        st.get_ts_local(ATTRS)
-        assert time.perf_counter() - t0 < 0.5
+        st.set_many_ts({
+            (f"s{i}", "m"): hourly("2024-01-01", 24 * 40) for i in range(12)
+        })
+        assert st._any_tombstones() is False
+        for i in range(0, 12, 2):
+            st.delete({"site": f"s{i}"})
+        # the early-exit gate gives the full scan's answer
+        full = pads.dataset(st._meta_path).to_table(
+            columns=["is_deleted"], filter=pads.field("is_deleted") == True,  # noqa: E712
+        )
+        assert full.num_rows == 12
+        assert st._any_tombstones() is True
+        assert st.get_ts({"site": "s0", "meter": "m"}) is None
+        assert st.get_ts({"site": "s1", "meter": "m"}) is not None
 
 
 class TestConcurrentWriteFence:

@@ -318,29 +318,31 @@ class TestBatchReadPlans:
         })
         return st
 
-    def test_sparse_composite_batch_engages_semi_join(self, spark, tmp_store_path):
-        # 3 distinct sites × 3 distinct meters but only 3 requested tuples:
-        # cross-product 9 > 4×3 is false — use 3×3 diag of a larger grid.
+    def test_sparse_composite_batch_returns_asked_tuples(self, spark, tmp_store_path):
+        # 5 asked tuples whose per-column IN sets span 5 × 5 = 25 key
+        # combinations, 13 of them stored: the read returns exactly the
+        # asked tuples, each equal to its alive_data rows
+        from holcstore_spark.edge.pandas_bridge import long_to_series
+
         st = self._composite_store(spark, tmp_store_path)
-        asked = [{"site": s_, "meter": m_}
-                 for s_, m_ in (("a", "x"), ("b", "y"), ("c", "z"))]
-        # 9 combos vs 3 wanted: ratio 3 < factor 4 -> NO semi-join
-        txt = plan_text(st._batch_frame(asked))
-        assert n_nodes(txt, r"BroadcastHashJoin") == 0
-        # force sparsity past the factor: one more site/meter pair widens
-        # the cross-product to 16 vs 4 wanted (ratio 4, still <=) — and
-        # 25 vs 5 (ratio 5 > 4) must engage the broadcast semi-join
         st.set_many_ts({
-            (s_, m_): hourly("2024-01-01", 24)
-            for s_ in ("d", "e") for m_ in ("v", "w")
-            if (s_, m_) not in (("d", "w"), ("e", "v"))
+            (s_, m_): hourly("2024-01-01", 24, value=10 * i + j)
+            for i, s_ in enumerate(("d", "e"))
+            for j, m_ in enumerate(("v", "w"))
         })
-        asked5 = asked + [{"site": "d", "meter": "v"},
-                          {"site": "e", "meter": "w"}]
-        txt5 = plan_text(st._batch_frame(asked5))
-        assert "LeftSemi" in txt5 and n_nodes(txt5, r"BroadcastHashJoin") >= 1
-        # pushed IN filters still reach the scan alongside the semi-join
-        assert "PushedFilters" in txt5 and "In(site" in txt5
+        tuples = [("a", "x"), ("b", "y"), ("c", "z"), ("d", "v"), ("e", "w")]
+        got = st.get_batch_ts([{"site": s_, "meter": m_} for s_, m_ in tuples])
+        assert set(got) == set(tuples)
+        ref = st.alive_data({
+            "site__in": [s_ for s_, _ in tuples],
+            "meter__in": [m_ for _, m_ in tuples],
+        }).toPandas()
+        for (s_, m_), series in got.items():
+            rows = ref[(ref["site"] == s_) & (ref["meter"] == m_)]
+            want = long_to_series(rows.reset_index(drop=True), st.config.tz)
+            valid = want.notna()  # the chunk grid's NaN bounds are trimmed
+            want = want.loc[valid.idxmax(): valid[::-1].idxmax()]
+            pd.testing.assert_series_equal(series, want, check_freq=False)
 
     def test_sparse_composite_batch_results_exact(self, spark, tmp_store_path):
         st = self._composite_store(spark, tmp_store_path)
@@ -356,6 +358,44 @@ class TestBatchReadPlans:
                             ("d", "v"), ("e", "w")}
         for series in got.values():
             assert series.notna().sum() == 24
+
+
+class TestKeyedReadJobBudget:
+    def test_keyed_reads_launch_no_spark_job(self, spark, tmp_store_path):
+        # the job budget of a keyed read is zero: get_ts, its alias and
+        # get_batch_ts are answered on the driver, tombstones included
+        import uuid
+
+        cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
+                               chunk_axis=("year", "month"),
+                               key_types={"site": "str"}, acid=True)
+        st = ChunkStore(spark, os.path.join(tmp_store_path, "jobs"), cfg)
+        st.set_many_ts({
+            (s_,): hourly("2024-01-01", 24 * 40, value=i)
+            for i, s_ in enumerate(("a", "b", "c"))
+        })
+        st.delete({"site": "c"})
+        assert st._any_tombstones()
+        sc = spark.sparkContext
+
+        def jobs_of(fn) -> list:
+            group = f"keyed-read-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "job budget probe")
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return list(sc.statusTracker().getJobIdsForGroup(group))
+
+        def keyed_reads():
+            assert (st.get_ts({"site": "a"}, "2024-01-02", "2024-01-03") == 0).all()
+            assert st.get_ts_local({"site": "b"}) is not None
+            got = st.get_batch_ts([{"site": s_} for s_ in ("a", "b", "c")])
+            assert set(got) == {("a",), ("b",)}
+
+        assert jobs_of(keyed_reads) == []
+        # the probe does see jobs: the Spark read path launches some
+        assert jobs_of(lambda: st.alive_data({"site": "a"}).count()) != []
 
 
 class TestModLookup:

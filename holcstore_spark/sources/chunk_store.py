@@ -41,6 +41,7 @@ from datetime import datetime, timezone
 from functools import reduce
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -273,6 +274,20 @@ def _history_df(spark: SparkSession, txlog) -> DataFrame:
 #: source's schema derivation — one source of truth)
 _KEY_TYPE_MAP = {"str": T.StringType(), "int": T.LongType(), "float": T.DoubleType()}
 
+#: Spark type name → the arrow type driver-side writes stage (timestamps
+#: are naive UTC instants, as Spark's session=UTC files read back)
+_ARROW_TYPES = {
+    "string": pa.string(), "long": pa.int64(), "double": pa.float64(),
+    "integer": pa.int32(), "timestamp": pa.timestamp("ns"),
+    "boolean": pa.bool_(),
+}
+
+
+def _arrow_schema(schema: T.StructType) -> pa.Schema:
+    return pa.schema(
+        [(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in schema.fields]
+    )
+
 
 def probe_key_types_from_manifest(path: str, keys, txlog=None) -> dict[str, str]:
     """Resolve key-column type names (``str``/``int``/``float``) from a
@@ -289,7 +304,6 @@ def probe_key_types_from_manifest(path: str, keys, txlog=None) -> dict[str, str]
     keys = list(keys)
     if not keys:
         return {}
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     if txlog is None:
@@ -425,7 +439,9 @@ class ChunkStore:
         """Current manifest snapshot; inside a transaction, the BASE
         snapshot captured at txn start — every read a write op performs
         sees one consistent version (MVCC), so no localCheckpoint
-        lineage cuts are needed on the ACID path."""
+        lineage cuts are needed on the ACID path. None on plain stores."""
+        if not self._acid:
+            return None
         if self._pinned_snapshot is not None:
             return self._pinned_snapshot
         txn = self._active_txn
@@ -660,32 +676,70 @@ class ChunkStore:
             )
 
     def _stage_into_txn(
-        self, sdf: DataFrame, table: str, npart: int | None = None
+        self, frame: DataFrame | pa.Table, table: str, npart: int | None = None
     ) -> None:
         """Write a frame to a fresh immutable ``files/<uuid>/`` dir and
-        register its files in the active transaction. Data frames are
+        register its files in the active transaction — THE staging seam
+        of every ACID write, Spark or driver-side.
+
+        A Spark frame is written by a Spark job. Data frames are
         range-partitioned by (chunk_index, keys…) so each file covers a
         narrow chunk range — that is what makes the manifest's per-file
         chunk stats selective (file skipping) and retention sweeps
         file-granular. ``npart`` pins the range-partition count (the
         binpack path: ``optimize`` wants ~one file per repacked chunk,
-        not the session shuffle parallelism)."""
+        not the session shuffle parallelism).
+
+        A ``pyarrow.Table`` (single-series writes) is written on the
+        driver as ONE file, no Spark job, with the physical schema of
+        Spark's canonical files (see :meth:`_write_arrow`)."""
         txn = self._active_txn
         abs_dir, rel_dir = self._txlog.new_staging_dir()
-        if table == "data":
-            df = self._cast_canonical(sdf, self._data_schema())
-            rng = ("chunk_index", *self.config.keys)
-            df = (
-                df.repartitionByRange(npart, *rng)
-                if npart is not None
-                else df.repartitionByRange(*rng)
-            ).sortWithinPartitions(*self.config.keys, "ts")
+        if isinstance(frame, pa.Table):
+            self._write_arrow(frame, table, abs_dir)
         else:
-            df = self._cast_canonical(sdf, self._meta_schema()).coalesce(1)
-        df.write.mode("overwrite").parquet(abs_dir)
+            if table == "data":
+                df = self._cast_canonical(frame, self._data_schema())
+                rng = ("chunk_index", *self.config.keys)
+                df = (
+                    df.repartitionByRange(npart, *rng)
+                    if npart is not None
+                    else df.repartitionByRange(*rng)
+                ).sortWithinPartitions(*self.config.keys, "ts")
+            else:
+                df = self._cast_canonical(frame, self._meta_schema()).coalesce(1)
+            df.write.mode("overwrite").parquet(abs_dir)
         key_cols = self.config.keys if table == "data" else ()
         txn.adds[table].extend(
             self._txlog.collect_entries(abs_dir, rel_dir, key_cols=key_cols)
+        )
+
+    def _arrow_canonical(self, tbl: pa.Table, table: str) -> pa.Table:
+        """Arrow twin of :meth:`_cast_canonical`: the store's column
+        order and types, every column nullable (as in Spark's canonical
+        files), timestamps as naive UTC nanoseconds."""
+        schema = self._data_schema() if table == "data" else self._meta_schema()
+        return tbl.select(schema.fieldNames()).cast(_arrow_schema(schema))
+
+    def _write_arrow(self, tbl: pa.Table, table: str, abs_dir: str) -> None:
+        """Write one staged file on the driver whose parquet physical
+        schema matches Spark's (INT96 timestamps, so one dataset over
+        mixed-writer files has one ``ts`` type; the same columns, types
+        and repetition). Data rows are sorted by (keys…, ts), as
+        ``sortWithinPartitions`` does. zstd level 3 and dictionary
+        encoding of the key columns only keep the file smaller than
+        Spark's for the same rows."""
+        import pyarrow.parquet as pq
+
+        keys = list(self.config.keys)
+        tbl = self._arrow_canonical(tbl, table)
+        if table == "data":
+            tbl = tbl.sort_by([(c, "ascending") for c in (*keys, "ts")])
+        os.makedirs(abs_dir)
+        pq.write_table(
+            tbl, os.path.join(abs_dir, "part-00000.zstd.parquet"),
+            compression="zstd", compression_level=3, use_dictionary=keys,
+            use_deprecated_int96_timestamps=True, store_schema=False,
         )
 
     #: append commits record at most this many inserted-key digests for
@@ -815,82 +869,124 @@ class ChunkStore:
         self._stage_into_txn(latest, "meta")
         txn.removes["meta"].extend(txn.snapshot.files["meta"])
 
-    def _rewrite_acid(
-        self, sdf_new: DataFrame, drop_pred=None, pair_anti: bool = False,
-        chunks: list[int] | None = None,
-    ) -> None:
-        """Copy-on-write MERGE: stage (kept rows of affected files ∪ new
-        rows) into fresh files, mark the affected files removed — all
-        visibility flips at commit. 'Affected' is decided by manifest
-        chunk stats, so an update to one month rewrites that month's
-        files, never the table. Conflicts with concurrent commits are
-        resolved at commit time (txlog), not by a racy fence."""
+    def _affected_files(self, chunk_set: set[int]) -> list:
+        """The live data files a copy-on-write of ``chunk_set`` must
+        rewrite: files whose manifest chunk range overlaps it, narrowed
+        by per-file KEY stats to files that can hold a replaced series.
+        Files whose key ranges cannot contain any replaced series hold
+        only bystander rows — they stay live untouched (less IO, and
+        key-disjoint same-chunk writers stop sharing removes, so their
+        commits don't conflict). Every key dimension contributes
+        independently (bounding-box over-approximation, same soundness
+        argument as plans.pruning.entry_may_match_keys): one provably
+        empty dimension rules a file out even when the first key is
+        low-cardinality (e.g. one site, many meters)."""
         txn = self._active_txn
-        if chunks is None:
-            chunks = [r[0] for r in sdf_new.select("chunk_index").distinct().collect()]
-        chunk_set = {int(c) for c in chunks}
         affected = [
             e
             for e in txn.snapshot.files["data"]
             if e.get("chunk_min") is None
             or any(e["chunk_min"] <= c <= e["chunk_max"] for c in chunk_set)
         ]
-        # narrow the copy-on-write by per-file KEY stats: files whose
-        # key ranges cannot contain any replaced series hold only
-        # bystander rows — leave them live untouched (less IO, and
-        # key-disjoint same-chunk writers stop sharing removes, so their
-        # commits don't conflict). Every key dimension contributes
-        # independently (bounding-box over-approximation, same soundness
-        # argument as plans.pruning.entry_may_match_keys): one provably
-        # empty dimension rules a file out even when the first key is
-        # low-cardinality (e.g. one site, many meters).
-        if txn.dropped_key_tuples is not None:
-            import bisect
+        if txn.dropped_key_tuples is None:
+            return affected
+        dims = [
+            (k, sorted({kt[i] for kt in txn.dropped_key_tuples}))
+            for i, k in enumerate(self.config.keys)
+        ]
 
-            dims = [
-                (k, sorted({kt[i] for kt in txn.dropped_key_tuples}))
-                for i, k in enumerate(self.config.keys)
-            ]
+        def may_contain(e) -> bool:
+            ks = e.get("key_stats") or {}
+            for k, vals in dims:
+                rng = ks.get(k)
+                if not rng:
+                    continue  # no stats for this dim: conservative
+                lo, hi = rng
+                try:
+                    i = bisect.bisect_left(vals, lo)
+                    if not (i < len(vals) and vals[i] <= hi):
+                        return False
+                except TypeError:
+                    continue  # incomparable: conservative
+            return True
 
-            def may_contain(e) -> bool:
-                ks = e.get("key_stats") or {}
-                for k, vals in dims:
-                    rng = ks.get(k)
-                    if not rng:
-                        continue  # no stats for this dim: conservative
-                    lo, hi = rng
-                    try:
-                        i = bisect.bisect_left(vals, lo)
-                        if not (i < len(vals) and vals[i] <= hi):
-                            return False
-                    except TypeError:
-                        continue  # incomparable: conservative
-                return True
+        return [e for e in affected if may_contain(e)]
 
-            affected = [e for e in affected if may_contain(e)]
+    def _rewrite_acid(self, sdf_new: DataFrame) -> None:
+        """Copy-on-write MERGE of a bulk frame: stage (kept rows of the
+        affected files ∪ new rows) into fresh files by a Spark job and
+        mark the affected files removed — all visibility flips at
+        commit. Kept rows are the affected files' rows whose (key tuple,
+        chunk_index) pair the new frame does not cover. 'Affected' is
+        decided by manifest stats (:meth:`_affected_files`), so an
+        update to one month rewrites that month's files, never the
+        table. Conflicts with concurrent commits are resolved at commit
+        time (txlog), not by a racy fence. Single-series writes take
+        the driver-side twin, :meth:`_rewrite_acid_arrow`."""
+        txn = self._active_txn
+        pair = [*self.config.keys, "chunk_index"]
+        chunk_set = {
+            int(r[0]) for r in sdf_new.select("chunk_index").distinct().collect()
+        }
+        affected = self._affected_files(chunk_set)
         sdf_new = self._cast_canonical(sdf_new, self._data_schema())
         if affected:
             paths = [os.path.join(self.path, e["path"]) for e in affected]
-            existing = self.spark.read.schema(self._data_schema()).parquet(*paths)
-            if pair_anti:
-                keep = existing.join(
-                    sdf_new.select(*self.config.keys, "chunk_index").distinct(),
-                    on=[*self.config.keys, "chunk_index"],
-                    how="left_anti",
-                )
-            else:
-                # drop pred rows only within the touched chunks — rows an
-                # affected file holds for OTHER chunks ride along intact
-                keep = existing.filter(
-                    ~(drop_pred & F.col("chunk_index").isin(list(chunk_set)))
-                )
-            combined = keep.select(*[f.name for f in self._data_schema()]).unionByName(
-                sdf_new
+            keep = (
+                self.spark.read.schema(self._data_schema())
+                .parquet(*paths)
+                .join(sdf_new.select(*pair).distinct(), on=pair, how="left_anti")
             )
+            combined = keep.select(
+                *[f.name for f in self._data_schema()]
+            ).unionByName(sdf_new)
             txn.removes["data"].extend(affected)
         else:
             combined = sdf_new
         self._stage_into_txn(combined, "data")
+        txn.touch(chunk_set)
+
+    def _rewrite_acid_arrow(self, new: pa.Table, chunks: list[int]) -> None:
+        """Driver-side copy-on-write of ONE series: the same affected
+        files as :meth:`_rewrite_acid`, rewritten one at a time with
+        Arrow compute — the series' rows in ``chunks`` are dropped and
+        the new rows are placed into the first rewritten file whose
+        chunk range holds their chunk (rows no file covers are staged as
+        one more file), so the file count does not grow with updates.
+        The driver holds the series plus one affected file, the unit a
+        Spark task would read."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        txn = self._active_txn
+        chunk_set = set(chunks)
+        new = self._arrow_canonical(new, "data")
+        names = new.schema.names
+        ci = pa.array(sorted(chunk_set), pa.int32())
+        pending = new
+        for e in self._affected_files(chunk_set):
+            t = self._arrow_canonical(
+                pq.read_table(os.path.join(self.path, e["path"]), columns=names),
+                "data",
+            )
+            drop = pc.is_in(t["chunk_index"], value_set=ci)
+            for k in self.config.keys:
+                drop = pc.and_(drop, pc.equal(t[k], new[k][0]))
+            parts = [t.filter(pc.invert(pc.fill_null(drop, False)))]
+            lo, hi = e.get("chunk_min"), e.get("chunk_max")
+            if lo is None or hi is None:
+                here = pc.is_valid(pending["chunk_index"])
+            else:
+                c = pending["chunk_index"]
+                here = pc.and_(pc.greater_equal(c, lo), pc.less_equal(c, hi))
+            parts.append(pending.filter(here))
+            pending = pending.filter(pc.invert(here))
+            out = pa.concat_tables(parts)
+            if out.num_rows:
+                self._stage_into_txn(out, "data")
+            txn.removes["data"].append(e)
+        if pending.num_rows:
+            self._stage_into_txn(pending, "data")
         txn.touch(chunk_set)
 
     # ------------------------------------------------------------------
@@ -1029,8 +1125,9 @@ class ChunkStore:
         CACHED_INDEX_SIZE analogue, chunk_timeserie_store.py:199). On these
         Spark paths cross-process writers are not seen until ``refresh()``
         or a new store instance (same caveat as the reference's per-class
-        cache). Keyed reads (``get_ts``, ``get_batch_ts``) do not use this
-        cache: they read the requested keys' meta rows per call."""
+        cache). Keyed reads (``get_ts``, ``get_batch_ts``), ``set_ts`` and
+        the keyed ``delete`` do not use this cache: they read the keys'
+        meta rows per call."""
         if self._meta_cache is None:
             w = Window.partitionBy(*self.config.keys, "chunk_index").orderBy(
                 F.desc("op_id")
@@ -1063,7 +1160,8 @@ class ChunkStore:
         writes; cross-process writers are invisible to the Spark reads
         until ``refresh()`` or a new instance (same caveat as the
         reference's per-class cache, chunk_timeserie_store.py:199 — this
-        is its explicit escape hatch). Keyed reads never need it."""
+        is its explicit escape hatch). Keyed reads and ``set_ts`` never
+        need it."""
         self._invalidate_meta_cache()
 
     def _any_tombstones(self) -> bool:
@@ -1214,13 +1312,6 @@ class ChunkStore:
         sdf = self.spark.createDataFrame(pdf, schema=schema)
         return nan_to_null(sdf, "value")
 
-    def _series_to_sdf(self, attrs: dict, serie: pd.Series) -> DataFrame:
-        pdf = series_to_long(serie, attrs)
-        pdf["chunk_index"] = self._chunk_index_pd(
-            pd.DatetimeIndex(pdf["ts"])
-        ).to_numpy()
-        return self._pdf_to_sdf(pdf)
-
     # ------------------------------------------------------------------
     # write paths
     # ------------------------------------------------------------------
@@ -1264,7 +1355,10 @@ class ChunkStore:
             big()
             fut.result()
 
-    def _append_data(self, sdf: DataFrame) -> None:
+    def _append_data(self, sdf: DataFrame | pa.Table) -> None:
+        """Append data rows. ACID: staged into the transaction (a
+        ``pyarrow.Table`` by the Arrow writer). Plain: a Spark frame,
+        appended into the hive partitions."""
         if self._acid:
             self._stage_into_txn(sdf, "data")
             return
@@ -1291,10 +1385,11 @@ class ChunkStore:
         col = pads.dataset(self._meta_path).to_table(columns=["op_id"])
         return int(col["op_id"].to_pandas().max()) if col.num_rows else -1
 
-    def _rewrite_partitions(self, sdf_new: DataFrame, drop_pred, chunks=None) -> None:
-        """Replace the partitions present in ``sdf_new``: keep other rows of
-        those partitions, drop rows matching ``drop_pred``, union the new
-        rows, dynamic-partition-overwrite. (With Delta this is one MERGE.)
+    def _rewrite_partitions(self, sdf_new: DataFrame, drop_pred, chunks) -> None:
+        """Plain layout only: replace the partitions ``chunks``: keep
+        other rows of those partitions, drop rows matching ``drop_pred``,
+        union the new rows, dynamic-partition-overwrite. (With Delta this
+        is one MERGE.)
 
         SINGLE-WRITER contract: the checkpoint-then-overwrite below is not
         transactional, so concurrent writers to the same store must be
@@ -1304,14 +1399,10 @@ class ChunkStore:
         that writer's rows (see README §operational-constraints).
 
         ACID mode replaces all of this with a copy-on-write merge +
-        atomic commit (:meth:`_rewrite_acid`) — no fence, no checkpoint,
-        and concurrent disjoint writers both survive."""
-        if self._acid:
-            self._rewrite_acid(sdf_new, drop_pred=drop_pred, chunks=chunks)
-            return
+        atomic commit (:meth:`_rewrite_acid_arrow` for a single series)
+        — no fence, no checkpoint, and concurrent disjoint writers both
+        survive."""
         fence_op_id = self._max_committed_op_id()
-        if chunks is None:
-            chunks = [r[0] for r in sdf_new.select("chunk_index").distinct().collect()]
         existing = self.data().filter(F.col("chunk_index").isin(chunks))
         keep = existing.filter(~drop_pred).select(*[f.name for f in self._data_schema()])
         combined = keep.unionByName(self._cast_canonical(sdf_new, self._data_schema()))
@@ -1337,14 +1428,21 @@ class ChunkStore:
     #: unbounded log would make the 10^5-th write pay a 10^5-file scan.
     META_COMPACT_THRESHOLD = 64
 
-    def _append_meta(self, rows: list[dict], pdf_like: pd.DataFrame | None = None) -> None:
-        schema = self._meta_schema(pdf_like)
-        # createDataFrame(pandas, schema) matches positionally — align order
-        pdf = pd.DataFrame(rows)[[f.name for f in schema.fields]]
-        sdf = self.spark.createDataFrame(pdf, schema=schema)
+    def _append_meta(self, pdf: pd.DataFrame) -> None:
+        """Append driver-built meta rows (one series' chunks, or a sync
+        page). ACID: staged by the Arrow writer, no Spark job. Plain:
+        appended by Spark, then the log self-compacts past the
+        threshold."""
         if self._acid:
-            self._stage_into_txn(sdf, "meta")
+            self._stage_into_txn(
+                pa.Table.from_pandas(pdf, preserve_index=False), "meta"
+            )
             return
+        schema = self._meta_schema(pdf)
+        # createDataFrame(pandas, schema) matches positionally — align order
+        sdf = self.spark.createDataFrame(
+            pdf[[f.name for f in schema.fields]], schema=schema
+        )
         sdf.coalesce(1).write.mode("append").parquet(self._meta_path)
         self._invalidate_meta_cache()
         self._maybe_compact_meta()
@@ -1480,57 +1578,29 @@ class ChunkStore:
         self._invalidate_meta_cache()
         self._maybe_compact_meta()
 
-    def _meta_rows_single_series(
-        self, sdf: DataFrame, updated_at: datetime, op_id: int
-    ) -> list[dict]:
-        """Driver-side meta rows — ONLY for single-series writes, where the
-        result is bounded by that series' chunk count (a few dozen rows).
-        Bulk paths use :meth:`_meta_sdf_for` (distributed, no collect)."""
-        agg = (
-            sdf.groupBy(*self.config.keys, "chunk_index")
-            .agg(F.min("ts").alias("start_ts"), F.count("ts").alias("n_points"))
-            .collect()
+    def _series_meta_rows(
+        self, pdf: pd.DataFrame, updated_at: datetime, op_id: int
+    ) -> pd.DataFrame:
+        """Driver-side meta rows of ONE series' long frame, built in
+        pandas — bounded by that series' chunk count. Bulk paths use
+        :meth:`_meta_sdf_for` (distributed, no collect)."""
+        meta = (
+            pdf.groupby([*self.config.keys, "chunk_index"])["ts"]
+            .agg(start_ts="min", n_points="count")
+            .reset_index()
         )
-        return [
-            {
-                **{k: r[k] for k in self.config.keys},
-                "chunk_index": r["chunk_index"],
-                "start_ts": r["start_ts"],
-                "n_points": r["n_points"],
-                "updated_at": updated_at,
-                "op_id": op_id,
-                "is_deleted": False,
-            }
-            for r in agg
-        ]
+        return meta.assign(updated_at=updated_at, op_id=op_id, is_deleted=False)
 
-    def _meta_rows_pandas(
-        self, pdf: pd.DataFrame, attrs: dict, updated_at: datetime, op_id: int
-    ) -> list[dict]:
-        """Driver-side twin of _meta_rows_single_series when the long frame is already
-        pandas (single-series writes) — zero extra Spark jobs."""
-        agg = pdf.groupby("chunk_index")["ts"].agg(["min", "count"])
-        return [
-            {
-                **attrs,
-                "chunk_index": int(ci),
-                "start_ts": row["min"].to_pydatetime(),
-                "n_points": int(row["count"]),
-                "updated_at": updated_at,
-                "op_id": op_id,
-                "is_deleted": False,
-            }
-            for ci, row in agg.iterrows()
-        ]
-
-    def _key_pred(self, attrs: dict):
-        return attrs_filter(attrs)
-
-    def _physical_chunks(self, attrs: dict) -> set[int]:
-        """chunk_index values with any physical rows or meta entry for key."""
-        m = {r[0] for r in self.meta().filter(attrs_filter(attrs))
-             .select("chunk_index").distinct().collect()}
-        return m
+    def _tombstone_rows(
+        self, pairs: pd.DataFrame, updated_at: datetime, op_id: int
+    ) -> pd.DataFrame:
+        """Driver-side twin of :meth:`_tombstone_sdf` for a pandas
+        (keys…, chunk_index) frame."""
+        pairs = pairs[[*self.config.keys, "chunk_index"]]
+        return pairs.assign(
+            start_ts=pd.Series(pd.NaT, index=pairs.index, dtype="datetime64[ns, UTC]"),
+            n_points=0, updated_at=updated_at, op_id=op_id, is_deleted=True,
+        )
 
     # -- public write API ----------------------------------------------
     @_transactional("set_ts")
@@ -1541,7 +1611,18 @@ class ChunkStore:
         update: bool = False,
         replace: bool = False,
     ) -> None:
-        """Write one series (reference set_ts, chunk_timeserie_store.py:309-373)."""
+        """Write one series (reference set_ts, chunk_timeserie_store.py:309-373).
+
+        A single-series write runs on the driver, with no Spark job on
+        an ACID store, in every mode: the key's latest meta and (for
+        ``update``) its rows in the overlapping alive chunks are read
+        with pyarrow from the transaction's base snapshot; the merge
+        (``new.combine_first(existing)``), the meta rows and the
+        ``replace`` tombstones are built in pandas; the data file(s)
+        and the meta file are staged by the Arrow writer into the same
+        atomic commit. The driver holds the series plus one affected
+        data file at a time. Plain stores run the same body and hand the
+        result to the Spark writers."""
         if update and replace:
             raise ValueError("update and replace are mutually exclusive")
         if self.config.allow_sync and not (update or replace):
@@ -1549,87 +1630,61 @@ class ChunkStore:
                 "plain set_ts is forbidden on a sync-enabled store; use update/replace"
             )
         self._ensure_all_attrs(attrs)
+        keys = list(self.config.keys)
+        pair = [*keys, "chunk_index"]
+        key_sets = {k: [attrs[k]] for k in keys}
         dense = self._normalize_to_grid(serie)
+        new_chunks = sorted({int(c) for c in self._chunk_index_pd(dense.index)})
+
+        snap = self._snapshot()
+        latest = self._latest_keyed_meta(snap, key_sets)
+        alive = ~latest["is_deleted"]
+        if not (update or replace) and alive.any():
+            raise KeyExistsError(
+                f"series {attrs} already exists; pass update=True or replace=True"
+            )
+        in_new = latest["chunk_index"].isin(new_chunks)
+        if update and (alive & in_new).any():
+            old = self._scan_alive_rows(
+                snap, latest.loc[alive & in_new, pair], key_sets
+            )
+            old = pd.Series(
+                old["value"].to_numpy(dtype="float64"),
+                index=pd.DatetimeIndex(pd.to_datetime(old["ts"], utc=True)),
+            )
+            # the new values win, the existing ones fill their holes
+            dense = dense.combine_first(old)
         pdf = series_to_long(dense, attrs)
         pdf["chunk_index"] = self._chunk_index_pd(
             pd.DatetimeIndex(pdf["ts"])
         ).to_numpy()
-        new_chunks = set(int(c) for c in pdf["chunk_index"].unique())
-        sdf = self._pdf_to_sdf(pdf)
 
-        # ONE meta collect yields both the alive and the physical chunk sets
-        meta_rows_now = self.latest_meta(attrs).select(
-            "chunk_index", "is_deleted"
-        ).collect()
-        alive = {r["chunk_index"] for r in meta_rows_now if not r["is_deleted"]}
-        physical = {r["chunk_index"] for r in meta_rows_now}
         updated_at, op_id = self._now_stamp()
-
-        if not update and not replace:
-            if alive:
-                raise KeyExistsError(
-                    f"series {attrs} already exists; pass update=True or replace=True"
-                )
-
-        merged_spark_side = False
-        if update:
-            overlap = sorted(new_chunks & alive)
-            if overlap:
-                existing = self.alive_data(attrs).filter(
-                    F.col("chunk_index").isin(overlap)
-                )
-                merged = combine_first(
-                    [sdf.filter(F.col("chunk_index").isin(overlap)), existing],
-                    keys=self.config.keys,
-                )
-                merged = merged.withColumn(
-                    "chunk_index",
-                    chunk_index_col("ts", self.config.chunk_axis, self.config.tz),
-                )
-                sdf = merged.unionByName(
-                    sdf.filter(~F.col("chunk_index").isin(overlap))
-                    .select(*self.config.keys, "ts", "value", "chunk_index")
-                )
-                merged_spark_side = True
-
-        # a merge never moves rows outside the input's chunk span, so the
-        # written chunk set is known driver-side — no Spark distinct jobs
-        stale = sorted(alive - new_chunks) if replace else []
-
-        touched_physical = physical & new_chunks
-        if merged_spark_side or touched_physical:
-            # cut lineage: sdf may read the very files the rewrite replaces,
-            # and the meta aggregation below runs after the rewrite
-            sdf = safe_local_checkpoint(sdf)
-        if touched_physical:
-            self._note_dropped_keys([tuple(attrs[k] for k in self.config.keys)])
-            self._rewrite_partitions(sdf, self._key_pred(attrs), chunks=sorted(new_chunks))
+        meta = self._series_meta_rows(pdf, updated_at, op_id)
+        if replace and (alive & ~in_new).any():
+            stale = self._tombstone_rows(latest.loc[alive & ~in_new], updated_at, op_id)
+            meta = pd.concat([meta, stale], ignore_index=True)
+        kt = tuple(attrs[k] for k in keys)
+        rows = (
+            pa.Table.from_pandas(pdf, preserve_index=False)
+            if self._acid else self._pdf_to_sdf(pdf)
+        )
+        if in_new.any():
+            # the key has rows (alive or tombstoned) in a written chunk
+            self._note_dropped_keys([kt])
+            if self._acid:
+                self._rewrite_acid_arrow(rows, new_chunks)
+            else:
+                self._rewrite_partitions(rows, attrs_filter(attrs), new_chunks)
         else:
             if not update and not replace:
                 # plain INSERT only: update/replace taking the append
                 # path (key exists but these chunks are new) must keep
                 # the appends-never-conflict property — two concurrent
                 # chunk-disjoint updates of one key both land
-                self._note_append_keys([tuple(attrs[k] for k in self.config.keys)])
-            self._append_data(sdf)
-
-        if merged_spark_side:
-            meta_rows = self._meta_rows_single_series(sdf, updated_at, op_id)
-        else:
-            meta_rows = self._meta_rows_pandas(pdf, attrs, updated_at, op_id)
-        for c in stale:
-            meta_rows.append(
-                {
-                    **attrs,
-                    "chunk_index": c,
-                    "start_ts": None,
-                    "n_points": 0,
-                    "updated_at": updated_at,
-                    "op_id": op_id,
-                    "is_deleted": True,
-                }
-            )
-        self._append_meta(meta_rows)
+                self._note_append_keys([kt])
+            self._append_data(rows)
+        self._append_meta(meta)
 
     @_transactional("set_many_ts")
     def set_many_ts(self, mapping: dict[tuple, pd.Series],
@@ -1738,7 +1793,7 @@ class ChunkStore:
         :meth:`_rewrite_partitions` (ACID mode: copy-on-write commit
         instead, see :meth:`_rewrite_acid`)."""
         if self._acid:
-            self._rewrite_acid(sdf_new, pair_anti=True)
+            self._rewrite_acid(sdf_new)
             return
         fence_op_id = self._max_committed_op_id()
         cols = [f.name for f in self._data_schema()]
@@ -1979,27 +2034,17 @@ class ChunkStore:
         """THE keyed-read path: full-key range reads answered on the
         driver with pyarrow, no Spark job.
 
-        1. latest meta state of the requested keys only — the per-column
-           key IN sets and the chunk bound are pushed into the meta scan,
-           so the cost follows the requested keys' meta rows, not the log;
-        2. manifest file skipping on the alive chunks and key stats;
-        3. one data scan (keys IN, chunk_index IN alive, ts bounds), then
-           an exact join on the alive (key tuple, chunk) pairs — it drops
-           the composite-key IN cross-product residue and tombstoned
-           chunks of partly deleted keys;
+        1. latest meta state of the requested keys only
+           (:meth:`_latest_keyed_meta`);
+        2. manifest file skipping on the alive chunks and key stats, and
+        3. one data scan joined exactly on the alive (key tuple, chunk)
+           pairs (:meth:`_scan_alive_rows`);
         4. per-key series with the NaN-bound trim.
 
         The alive filter always applies, so tombstones, sync replicas
         (mid-import data stays hidden) and ``time_travel`` views read as
         on the Spark path (:meth:`alive_data`)."""
-        import pyarrow as pa
-        import pyarrow.dataset as pads
-
         from holcstore_spark.functions.scalar import chunk_index_of
-        from holcstore_spark.plans.pruning import (
-            entry_may_match_keys,
-            key_equality_values,
-        )
 
         keys = list(self.config.keys)
         for a in attrs_list:
@@ -2013,77 +2058,19 @@ class ChunkStore:
         lo = chunk_index_of(s, axis, tz) if s is not None else None
         hi = chunk_index_of(e, axis, tz) if e is not None else None
         in_sets = {k: list({kt[i] for kt in wanted}) for i, k in enumerate(keys)}
-        key_filt = reduce(
-            operator.and_, (pads.field(k).isin(v) for k, v in in_sets.items())
-        )
-        chunk = pads.field("chunk_index")
-        meta_filt = key_filt
-        for c, cmp in ((lo, operator.ge), (hi, operator.le)):
-            if c is not None:
-                meta_filt = meta_filt & cmp(chunk, c)
 
         # 1. latest meta state per (keys, chunk) of the requested keys
-        if self._acid:
-            snap = self._snapshot()
-            meta = [
-                os.path.join(self.path, en["path"])
-                for en in snap.entries_overlapping("meta", lo, hi)
-            ]
-        else:
-            meta = self._meta_path if has_parquet(self._meta_path) else []
-        if not meta:
-            return {}
-        pair = [*keys, "chunk_index"]
-        latest = (
-            pads.dataset(meta)
-            .to_table(columns=[*pair, "op_id", "is_deleted"], filter=meta_filt)
-            .to_pandas()
-            .sort_values("op_id", kind="stable")
-            .drop_duplicates(pair, keep="last")
-        )
-        alive = latest.loc[~latest["is_deleted"], pair]
+        snap = self._snapshot()
+        latest = self._latest_keyed_meta(snap, in_sets, lo, hi)
+        alive = latest.loc[~latest["is_deleted"], [*keys, "chunk_index"]]
         alive = alive.loc[
             [kt in wanted for kt in alive[keys].itertuples(index=False, name=None)]
         ]
         if alive.empty:
             return {}
-        chunks = sorted(int(c) for c in alive["chunk_index"].unique())
 
-        # 2. file pruning: alive chunks, then the key IN sets
-        if self._acid:
-            def holds_alive_chunk(en) -> bool:
-                cmin, cmax = en.get("chunk_min"), en.get("chunk_max")
-                if cmin is None or cmax is None:
-                    return True
-                i = bisect.bisect_left(chunks, cmin)
-                return i < len(chunks) and chunks[i] <= cmax
-
-            kv = key_equality_values({f"{k}__in": v for k, v in in_sets.items()})
-            entries = [
-                en for en in snap.entries_overlapping("data", chunks[0], chunks[-1])
-                if holds_alive_chunk(en) and entry_may_match_keys(en, kv)
-            ]
-            if not entries:
-                return {}
-            data = pads.dataset([os.path.join(self.path, en["path"]) for en in entries])
-        else:
-            if not has_parquet(self._data_path):
-                return {}
-            data = pads.dataset(self._data_path, partitioning="hive")
-
-        # 3. one arrow scan; the files hold naive UTC instants (Spark
-        # session=UTC), so the UTC bounds go in naive, as the file's type
-        ts_type = data.schema.field("ts").type
-        filt = key_filt & chunk.isin(chunks)
-        for bound, cmp in ((s, operator.ge), (e, operator.le)):
-            if bound is not None:
-                b = pa.scalar(bound.tz_localize(None), type=ts_type)
-                filt = filt & cmp(pads.field("ts"), b)
-        pdf = (
-            data.to_table(columns=[*pair, "ts", "value"], filter=filt)
-            .to_pandas()
-            .merge(alive, on=pair)
-        )
+        # 2.-3. the alive pairs' rows inside the window
+        pdf = self._scan_alive_rows(snap, alive, in_sets, s, e)
 
         # 4. per-key series, NaN bounds trimmed
         out: dict[tuple, pd.Series] = {}
@@ -2099,6 +2086,103 @@ class ChunkStore:
             if ser is not None:
                 out[kt] = ser
         return out
+
+    def _latest_keyed_meta(
+        self, snap, in_sets: dict[str, list], lo: int | None = None,
+        hi: int | None = None,
+    ) -> pd.DataFrame:
+        """Latest meta state per (keys…, chunk_index) of the keys in the
+        per-column ``in_sets``, read with pyarrow on the driver from the
+        manifest snapshot ``snap`` (:meth:`_snapshot`: inside a write
+        transaction, its base snapshot). The key IN sets and the chunk bounds are pushed into
+        the meta scan, so the cost follows those keys' meta rows, not
+        the log. Columns: keys…, chunk_index, op_id, is_deleted."""
+        import pyarrow.dataset as pads
+
+        pair = [*self.config.keys, "chunk_index"]
+        cols = [*pair, "op_id", "is_deleted"]
+        if self._acid:
+            meta = [
+                os.path.join(self.path, en["path"])
+                for en in snap.entries_overlapping("meta", lo, hi)
+            ]
+        else:
+            meta = self._meta_path if has_parquet(self._meta_path) else []
+        if not meta:
+            return pd.DataFrame({c: [] for c in cols}).astype({"is_deleted": bool})
+        filt = reduce(
+            operator.and_, (pads.field(k).isin(v) for k, v in in_sets.items())
+        )
+        chunk = pads.field("chunk_index")
+        for c, cmp in ((lo, operator.ge), (hi, operator.le)):
+            if c is not None:
+                filt = filt & cmp(chunk, c)
+        return (
+            pads.dataset(meta)
+            .to_table(columns=cols, filter=filt)
+            .to_pandas()
+            .sort_values("op_id", kind="stable")
+            .drop_duplicates(pair, keep="last")
+        )
+
+    def _scan_alive_rows(
+        self, snap, alive: pd.DataFrame, in_sets: dict[str, list], s=None,
+        e=None,
+    ) -> pd.DataFrame:
+        """Data rows ``(keys…, chunk_index, ts, value)`` of the ``alive``
+        (key tuple, chunk) pairs, read with pyarrow from the manifest
+        snapshot ``snap`` the meta state came from: manifest file
+        skipping on their chunks and the key stats, one arrow scan (key
+        IN sets, chunk_index IN, the UTC bounds ``s``/``e``), then an
+        exact join on the pairs — it drops the composite-key IN
+        cross-product residue and tombstoned chunks of partly deleted
+        keys."""
+        import pyarrow.dataset as pads
+
+        from holcstore_spark.plans.pruning import (
+            entry_may_match_keys,
+            key_equality_values,
+        )
+
+        pair = [*self.config.keys, "chunk_index"]
+        cols = [*pair, "ts", "value"]
+        chunks = sorted(int(c) for c in alive["chunk_index"].unique())
+        if self._acid:
+            def holds_alive_chunk(en) -> bool:
+                cmin, cmax = en.get("chunk_min"), en.get("chunk_max")
+                if cmin is None or cmax is None:
+                    return True
+                i = bisect.bisect_left(chunks, cmin)
+                return i < len(chunks) and chunks[i] <= cmax
+
+            kv = key_equality_values({f"{k}__in": v for k, v in in_sets.items()})
+            entries = [
+                en for en in snap.entries_overlapping("data", chunks[0], chunks[-1])
+                if holds_alive_chunk(en) and entry_may_match_keys(en, kv)
+            ]
+            if not entries:
+                return pd.DataFrame(columns=cols)
+            data = pads.dataset([os.path.join(self.path, en["path"]) for en in entries])
+        else:
+            if not has_parquet(self._data_path):
+                return pd.DataFrame(columns=cols)
+            data = pads.dataset(self._data_path, partitioning="hive")
+
+        # the files hold naive UTC instants (Spark session=UTC), so the
+        # UTC bounds go in naive, as the file's type
+        ts_type = data.schema.field("ts").type
+        filt = reduce(
+            operator.and_, (pads.field(k).isin(v) for k, v in in_sets.items())
+        ) & pads.field("chunk_index").isin(chunks)
+        for bound, cmp in ((s, operator.ge), (e, operator.le)):
+            if bound is not None:
+                b = pa.scalar(bound.tz_localize(None), type=ts_type)
+                filt = filt & cmp(pads.field("ts"), b)
+        return (
+            data.to_table(columns=cols, filter=filt)
+            .to_pandas()
+            .merge(alive, on=pair)
+        )
 
     def yield_many_ts(
         self,
@@ -2320,14 +2404,44 @@ class ChunkStore:
     # ------------------------------------------------------------------
     # delete / compact
     # ------------------------------------------------------------------
+    def _keyed_in_sets(self, filters: dict | None) -> dict[str, list] | None:
+        """Per-key value lists when ``filters`` pins EVERY key column with
+        one plain equality or ``__in`` (the keyed rule of :meth:`get_ts`),
+        else None. The filter then matches exactly the cross product of
+        the lists, which a per-column IN scan of the meta log answers."""
+        from holcstore_spark.plans.pruning import key_equality_values
+
+        parts = [k.partition("__") for k in filters or {}]
+        if any(op not in ("", "in") for _, _, op in parts) or len(
+            {f for f, _, _ in parts}
+        ) < len(parts):
+            return None
+        in_sets = key_equality_values(filters)
+        return in_sets if set(in_sets) == set(self.config.keys) else None
+
     @_transactional("delete")
     def delete(self, filters: dict | None = None, keep_tracking: bool = True) -> int:
         """Tombstone matching chunks (reference soft delete,
-        chunk_timeserie_store.py:30-52). ``keep_tracking=False`` erases all
-        trace (physical rewrite) and is forbidden on sync-enabled stores."""
+        chunk_timeserie_store.py:30-52); returns the number of chunks
+        tombstoned. ``keep_tracking=False`` erases all trace (physical
+        rewrite) and is forbidden on sync-enabled stores.
+
+        A keyed delete — ``filters`` pins every key column with plain
+        equality or ``__in`` — runs on the driver: the keys' alive chunks
+        come from a pyarrow read of the meta log and their tombstone rows
+        are staged as one meta file, with no Spark job on an ACID store.
+        Any other filter tombstones with a distributed Spark job."""
         validate_filter_keys(filters, self.config.keys)
         if not keep_tracking and self.config.allow_sync:
             raise SyncGuardError("untracked delete is forbidden on a sync-enabled store")
+        in_sets = self._keyed_in_sets(filters) if keep_tracking else None
+        if in_sets is not None:
+            latest = self._latest_keyed_meta(self._snapshot(), in_sets)
+            victims = latest.loc[~latest["is_deleted"]]
+            if victims.empty:
+                return 0
+            self._append_meta(self._tombstone_rows(victims, *self._now_stamp()))
+            return len(victims)
         victims = self.alive_chunks(filters).select(*self.config.keys, "chunk_index")
         updated_at, op_id = self._now_stamp()
         if keep_tracking:
@@ -2824,7 +2938,7 @@ class ChunkStore:
                     .itertuples(index=False)
                 )
             self._rewrite_partitions_multi(data_sdf)
-        self._append_meta(meta_rows.to_dict("records"), meta_rows)
+        self._append_meta(meta_rows)
 
     def has_data(self) -> bool:
         """Whether any committed data rows exist — layout-aware (the

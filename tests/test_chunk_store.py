@@ -433,24 +433,33 @@ class TestConcurrentWriteFence:
         other = ChunkStore(spark, st.path, st.config)
 
         real = cs_mod.safe_local_checkpoint
-        # set_ts checkpoints once itself (call 1) BEFORE the fence
-        # captures; the rewrite's keep-set checkpoint is call 2 — a write
-        # landing there is inside the fence window and must be detected
-        calls = {"n": 0}
+        real_fence = cs_mod.ChunkStore._max_committed_op_id
+        # the rewrite captures the fence, then checkpoints its keep-set —
+        # a write landing at the first checkpoint after the capture is
+        # inside the fence window and must be detected
+        state = {"fenced": False, "fired": False}
+
+        def fence(self_):
+            if self_ is st:
+                state["fenced"] = True
+            return real_fence(self_)
 
         def inject(df):
             out = real(df)
-            calls["n"] += 1
-            if calls["n"] == 2:
+            if state["fenced"] and not state["fired"]:
+                state["fired"] = True
                 # a second writer commits while our keep-set materializes
                 other.set_ts({"site": "s9", "meter": "m9"},
                              hourly("2024-01-01", 24))
             return out
 
+        monkeypatch.setattr(cs_mod.ChunkStore, "_max_committed_op_id", fence)
         monkeypatch.setattr(cs_mod, "safe_local_checkpoint", inject)
         with pytest.raises(cs_mod.ConcurrentWriteError, match="op_id advanced"):
             st.set_ts(ATTRS, hourly("2024-01-01", 48, value=2.0), replace=True)
         monkeypatch.setattr(cs_mod, "safe_local_checkpoint", real)
+        monkeypatch.setattr(cs_mod.ChunkStore, "_max_committed_op_id", real_fence)
+        assert state["fired"]
         # the concurrent writer's rows survived the aborted rewrite
         assert other.get_ts({"site": "s9", "meter": "m9"}) is not None
         assert st.get_ts(ATTRS) is not None
@@ -572,7 +581,8 @@ class TestDistributedMeta:
     def test_bulk_ingest_meta_stays_distributed(self, spark, tmpdir):
         """ingest_long at 100k+ keys: the meta changelog is written as a
         Spark aggregate — no per-(key, chunk) driver collect (VERDICT r2 #1).
-        Guarded by monkeypatching the single-series driver helper to raise."""
+        Guarded by monkeypatching the driver-side meta-row builders of
+        single-series writes and keyed deletes to raise."""
         path = os.path.join(tmpdir, "bulk")
         cfg = ChunkStoreConfig(
             keys=("k",), freq="1D", tz="UTC", chunk_axis=("year", "month"),
@@ -583,7 +593,8 @@ class TestDistributedMeta:
         def boom(*a, **k):  # any driver-side meta path in a bulk write is a bug
             raise AssertionError("driver-side meta materialization in bulk path")
 
-        st._meta_rows_single_series = boom
+        st._series_meta_rows = boom
+        st._tombstone_rows = boom
         n_keys = 120_000
         src = (
             spark.range(n_keys)

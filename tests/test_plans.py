@@ -360,32 +360,39 @@ class TestBatchReadPlans:
             assert series.notna().sum() == 24
 
 
+def jobs_of(spark, fn) -> list:
+    """Spark job ids ``fn`` launched, counted in a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def budget_store(spark, tmp_store_path, name):
+    cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
+                           chunk_axis=("year", "month"),
+                           key_types={"site": "str"}, acid=True)
+    st = ChunkStore(spark, os.path.join(tmp_store_path, name), cfg)
+    st.set_many_ts({
+        (s_,): hourly("2024-01-01", 24 * 40, value=i)
+        for i, s_ in enumerate(("a", "b", "c"))
+    })
+    return st
+
+
 class TestKeyedReadJobBudget:
     def test_keyed_reads_launch_no_spark_job(self, spark, tmp_store_path):
         # the job budget of a keyed read is zero: get_ts, its alias and
         # get_batch_ts are answered on the driver, tombstones included
-        import uuid
-
-        cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
-                               chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
-        st = ChunkStore(spark, os.path.join(tmp_store_path, "jobs"), cfg)
-        st.set_many_ts({
-            (s_,): hourly("2024-01-01", 24 * 40, value=i)
-            for i, s_ in enumerate(("a", "b", "c"))
-        })
+        st = budget_store(spark, tmp_store_path, "jobs")
         st.delete({"site": "c"})
         assert st._any_tombstones()
-        sc = spark.sparkContext
-
-        def jobs_of(fn) -> list:
-            group = f"keyed-read-{uuid.uuid4().hex}"
-            sc.setJobGroup(group, "job budget probe")
-            try:
-                fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            return list(sc.statusTracker().getJobIdsForGroup(group))
 
         def keyed_reads():
             assert (st.get_ts({"site": "a"}, "2024-01-02", "2024-01-03") == 0).all()
@@ -393,9 +400,38 @@ class TestKeyedReadJobBudget:
             got = st.get_batch_ts([{"site": s_} for s_ in ("a", "b", "c")])
             assert set(got) == {("a",), ("b",)}
 
-        assert jobs_of(keyed_reads) == []
+        assert jobs_of(spark, keyed_reads) == []
         # the probe does see jobs: the Spark read path launches some
-        assert jobs_of(lambda: st.alive_data({"site": "a"}).count()) != []
+        assert jobs_of(spark, lambda: st.alive_data({"site": "a"}).count()) != []
+
+
+class TestWriteJobBudget:
+    def test_single_series_writes_launch_no_spark_job(self, spark, tmp_store_path):
+        # set_ts in every mode and a keyed delete run on the driver: the
+        # ACID store stages their files with Arrow, no Spark job
+        st = budget_store(spark, tmp_store_path, "wjobs")
+        assert jobs_of(spark, lambda: st.set_ts(
+            {"site": "d"}, hourly("2024-01-01", 24, 4.0))) == []
+        # the patch lands in the Spark-written file that holds a, b and c
+        assert jobs_of(spark, lambda: st.set_ts(
+            {"site": "a"}, hourly("2024-01-05", 24, 9.0), update=True)) == []
+        # b's January chunk is tombstoned, its February chunk rewritten
+        assert jobs_of(spark, lambda: st.set_ts(
+            {"site": "b"}, hourly("2024-02-01", 24, 5.0), replace=True)) == []
+        got = {}
+        assert jobs_of(spark, lambda: got.update(n=st.delete({"site": "c"}))) == []
+        assert got["n"] == 2
+
+        a = st.get_ts({"site": "a"})
+        assert (a["2024-01-05 00:00":"2024-01-05 23:00"] == 9.0).all()
+        assert (a["2024-01-06":] == 0.0).all() and len(a) == 24 * 40
+        b = st.get_ts({"site": "b"})
+        assert (b == 5.0).all() and len(b) == 24
+        assert st.get_ts({"site": "c"}) is None
+        assert (st.get_ts({"site": "d"}) == 4.0).all()
+        # control: a filter that does not pin the key stays distributed
+        assert jobs_of(spark, lambda: st.delete({"site__startswith": "d"})) != []
+        assert st.get_ts({"site": "d"}) is None
 
 
 class TestModLookup:

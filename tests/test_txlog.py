@@ -120,18 +120,19 @@ class TestAcidConcurrency:
                 action()
 
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", inject)
-        return orig
+        return state
 
     def test_concurrent_inserts_both_survive(self, spark, tmpdir, monkeypatch):
         # the deliverable the fence could never offer: two writers,
         # disjoint keys, same chunk — both commits land, zero data loss
         a = acid_store(spark, tmpdir)
         b = ChunkStore(spark, a.path, a.config)
-        self._interleave(
+        state = self._interleave(
             monkeypatch, a, "data",
             lambda: b.set_ts({"site": "bb"}, hourly("2024-01-01", 24, value=2.0)),
         )
         a.set_ts({"site": "aa"}, hourly("2024-01-01", 24))
+        assert state["fired"]
         a.refresh()
         assert a.get_ts({"site": "aa"}) is not None
         assert (a.get_ts({"site": "bb"}) == 2.0).all()
@@ -140,7 +141,7 @@ class TestAcidConcurrency:
         a = acid_store(spark, tmpdir)
         b = ChunkStore(spark, a.path, a.config)
         a.set_ts({"site": "s"}, hourly("2024-03-01", 24))
-        self._interleave(
+        state = self._interleave(
             monkeypatch, a, "data",
             lambda: b.set_ts({"site": "s"}, hourly("2024-03-01", 24, value=7.0),
                              replace=True),
@@ -148,6 +149,7 @@ class TestAcidConcurrency:
         with pytest.raises(ConcurrentWriteError):
             a.set_ts({"site": "s"}, hourly("2024-03-01", 24, value=8.0),
                      replace=True)
+        assert state["fired"]
         a.refresh()
         # the winner's data is intact; the loser's staged rows never
         # became visible
@@ -503,6 +505,7 @@ class TestAcidInsertKeyConflict:
         with pytest.raises(ConcurrentWriteError, match="same key"):
             a.set_ts({"site": "dup"}, hourly("2024-01-01", 6, value=1.0))
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        assert state["fired"]
         a.refresh()
         got = a.get_ts({"site": "dup"})
         # exactly ONE generation of the series survived (the winner's)
@@ -527,6 +530,7 @@ class TestAcidInsertKeyConflict:
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", inject)
         st.set_ts({"site": "b"}, hourly("2024-01-01", 6, value=2.0))
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        assert state["fired"]
         st.refresh()
         assert (st.get_ts({"site": "b"}) == 2.0).all()
 
@@ -588,6 +592,7 @@ class TestReviewHardening:
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", inject)
         a.set_ts({"site": "k"}, hourly("2021-06-01", 6, value=3.0), update=True)
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        assert state["fired"]
         a.refresh()
         got = a.get_ts({"site": "k"})
         assert got is not None
@@ -1820,6 +1825,7 @@ class TestCompactConcurrency:
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", inject)
         a.compact()  # lands despite the interleaved append
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        assert state["fired"]
         a.refresh()
         head = a._txlog.snapshot().version
         rec = a._txlog.read(head)
@@ -1853,6 +1859,7 @@ class TestCompactConcurrency:
         with pytest.raises(ConcurrentWriteError):
             a.compact()
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        assert state["fired"]
         a.refresh()
         got = a.get_ts({"site": "x"})
         assert (got.iloc[3:5] == 9.0).all() and (got.iloc[:3] == 1.0).all()
@@ -1884,6 +1891,7 @@ class TestCompactConcurrency:
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", inject)
         a.compact()  # lands despite the interleaved tombstone
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        assert state["fired"]
         a.refresh()
         assert a.get_ts({"site": "z"}) is None       # tombstone visible
         assert (a.get_ts({"site": "x"}) == 1.0).all()
@@ -2763,6 +2771,7 @@ class TestOptimize:
         with pytest.raises(ConcurrentWriteError):
             a.optimize(min_files=2)
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        assert state["fired"]
         a.refresh()
         assert (a.get_ts({"site": "s0"}) == 99.0).all()  # rewrite won
         a.optimize(min_files=2)  # clean re-run lands
@@ -2797,6 +2806,7 @@ class TestOptimize:
             a.set_ts({"site": "s1"}, hourly("2024-01-01", 4, value=42.0),
                      update=True)
         monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        assert state["fired"]
         a.refresh()
         a.set_ts({"site": "s1"}, hourly("2024-01-01", 4, value=42.0),
                  update=True)  # clean re-run

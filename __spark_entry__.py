@@ -485,15 +485,8 @@ def q_lookup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4/S9/P3/P8 end-to-end: hourly series per user ingested into a real
-    ChunkStore (dense grid, partitioned parquet), read back alive with
-    bounds — per-user count and exact total must equal the source.
-
-    Runs on the manifest (ACID) backend: measured faster than the plain
-    hive layout on every axis in round 6 (sf0.1 ingest 2.5 s vs 4.8 s;
-    H1 105M rows 1.59M rows/s; keyed reads 3-4x) because commits skip
-    the directory-listing/overwrite dance and reads open exact manifest
-    paths. The plain layout keeps driver coverage via the other
-    store-backed queries (store_update_overlay, store_set_many, ...)."""
+    ChunkStore (dense grid, transaction-log parquet), read back alive
+    with bounds — per-user count and exact total must equal the source."""
     from holcstore_spark import ChunkStoreConfig
     from holcstore_spark.sources.chunk_store import ChunkStore
 
@@ -512,8 +505,7 @@ def q_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path,
             ChunkStoreConfig(keys=("user_id",), freq="1h", tz="UTC",
                              chunk_axis=("year", "month"),
-                             key_types={"user_id": "int"},
-                             acid=True),
+                             key_types={"user_id": "int"}),
         )
         store.ingest_long(hourly, mode="insert")
         got = store.alive_data(
@@ -548,7 +540,7 @@ def q_kv_store_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="holc_kv_")
     shutil.rmtree(path, ignore_errors=True)
     try:
-        kv = KeyValueStore(spark, path, acid=_acid_default())
+        kv = KeyValueStore(spark, path)
         # one bulk write per version (ascending): set_many_lc assigns each
         # scope max+1, so every user ends with versions 0..2 in order —
         # 3 Spark writes instead of one per (user, version)
@@ -584,17 +576,7 @@ def _hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.max("value").alias("value"))
 
 
-#: The library default flipped in round 7: NEW stores are ACID
-#: (transaction-log backend, sources/txlog.py) unless opted down.
-#: SPARK_GRAFT_ACID=0 runs every store-backed query on the legacy plain
-#: layout instead — the local validation switch proving the whole
-#: battery stays green on both layouts; unset (the driver's mode) runs
-#: the library default, i.e. ACID.
-def _acid_default() -> bool:
-    return bool(int(os.environ.get("SPARK_GRAFT_ACID", "1")))
-
-
-def _make_event_store(spark: SparkSession, sf_dir: str, acid: bool | None = None):
+def _make_event_store(spark: SparkSession, sf_dir: str):
     from holcstore_spark import ChunkStoreConfig
     from holcstore_spark.sources.chunk_store import ChunkStore
 
@@ -604,22 +586,20 @@ def _make_event_store(spark: SparkSession, sf_dir: str, acid: bool | None = None
         spark, path,
         ChunkStoreConfig(keys=("user_id",), freq="1h", tz="UTC",
                          chunk_axis=("year", "month"),
-                         key_types={"user_id": "int"},
-                         acid=_acid_default() if acid is None else acid),
+                         key_types={"user_id": "int"}),
     )
     store.ingest_long(_hourly_events(spark, sf_dir), mode="insert")
     return store, path
 
 
 def q_store_acid_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round 6: the transaction-log (ACID) backend under the driver gate.
-    Same lifecycle as the plain-store queries — bulk insert, doubled
-    mid-January update patch, tombstone every 7th user, bounded read —
-    but on ``acid=True``: immutable ``files/<uuid>/`` parquet governed by
-    an atomic commit log with optimistic concurrency and manifest-stats
-    file skipping (sources/txlog.py). Per-user counts and exact totals
-    must equal the source events."""
-    store, path = _make_event_store(spark, sf_dir, acid=True)
+    """The transaction-log backend under the driver gate: bulk insert,
+    doubled mid-January update patch, tombstone every 7th user, bounded
+    read — immutable ``files/<uuid>/`` parquet governed by an atomic
+    commit log with optimistic concurrency and manifest-stats file
+    skipping (sources/txlog.py). Per-user counts and exact totals must
+    equal the source events."""
+    store, path = _make_event_store(spark, sf_dir)
     try:
         patch = _hourly_events(spark, sf_dir).filter(
             (F.col("ts") >= "2024-01-10") & (F.col("ts") < "2024-01-15")
@@ -648,7 +628,7 @@ def q_store_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exceptAll). Every patched non-zero hour must surface as exactly
     one delete of the old value and one insert of the doubled value —
     aggregated per (user, change type) with exact decimal totals."""
-    store, path = _make_event_store(spark, sf_dir, acid=True)
+    store, path = _make_event_store(spark, sf_dir)
     try:
         v1 = store._txlog.snapshot().version
         patch = _hourly_events(spark, sf_dir).filter(
@@ -675,7 +655,7 @@ def q_store_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation's files, so per-user counts and exact totals must equal
     the ORIGINAL un-patched series — and the audit trail must show the
     restore as its own history row (asserted in-query)."""
-    store, path = _make_event_store(spark, sf_dir, acid=True)
+    store, path = _make_event_store(spark, sf_dir)
     try:
         v1 = store._txlog.snapshot().version
         patch = _hourly_events(spark, sf_dir).filter(
@@ -716,7 +696,7 @@ def q_store_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path,
             ChunkStoreConfig(keys=("user_id",), freq="1h", tz="UTC",
                              chunk_axis=("year", "month"),
-                             key_types={"user_id": "int"}, acid=True),
+                             key_types={"user_id": "int"}),
         )
         ev = _hourly_events(spark, sf_dir)
         for m in range(3):
@@ -765,7 +745,7 @@ def q_store_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path,
             ChunkStoreConfig(keys=("user_id",), freq="1h", tz="UTC",
                              chunk_axis=("year", "month"),
-                             key_types={"user_id": "int"}, acid=True),
+                             key_types={"user_id": "int"}),
         )
         ev = _hourly_events(spark, sf_dir)
         batches = [ev.filter(F.col("user_id") % 2 == m) for m in (0, 1)]
@@ -808,7 +788,7 @@ def q_stream_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(ChunkStoreChangesDataSource)
     except Exception:
         pass  # already registered in this session
-    store, path = _make_event_store(spark, sf_dir, acid=True)
+    store, path = _make_event_store(spark, sf_dir)
     sink = tempfile.mkdtemp(prefix="holc_cdfsink_")
     ckpt = tempfile.mkdtemp(prefix="holc_cdfck_")
     try:
@@ -988,8 +968,7 @@ def q_attr_store_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="holc_attr_")
     shutil.rmtree(path, ignore_errors=True)
     try:
-        store = AttrStore(spark, path, keys=("grp", "kind"), tz="UTC",
-                          acid=_acid_default())
+        store = AttrStore(spark, path, keys=("grp", "kind"), tz="UTC")
         base, patches = {}, {}
         for grp, g in pdf.groupby("grp"):
             s = pd.Series(
@@ -1036,7 +1015,7 @@ def q_kv_find_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="holc_kvh_")
     shutil.rmtree(path, ignore_errors=True)
     try:
-        kv = KeyValueStore(spark, path, acid=_acid_default())
+        kv = KeyValueStore(spark, path)
         batch = {}
         for uid, g in daily.groupby("user_id"):
             # keep only even-valued days? no — drop days where floor(v) % 3 == 0
@@ -1079,8 +1058,7 @@ def q_sync_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     cfg = ChunkStoreConfig(keys=("user_id",), freq="1h", tz="UTC",
                            chunk_axis=("year", "month"), allow_sync=True,
-                           key_types={"user_id": "int"},
-                             acid=_acid_default())
+                           key_types={"user_id": "int"})
     try:
         server = ChunkStore(spark, os.path.join(base, "server"), cfg)
         client = ChunkStore(spark, os.path.join(base, "client"), cfg)
@@ -1111,8 +1089,7 @@ def q_rest_sync_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     cfg = ChunkStoreConfig(keys=("user_id",), freq="1h", tz="UTC",
                            chunk_axis=("year", "month"), allow_sync=True,
-                           key_types={"user_id": "int"},
-                             acid=_acid_default())
+                           key_types={"user_id": "int"})
     srv = None
     try:
         server = ChunkStore(spark, os.path.join(base, "server"), cfg)
@@ -1592,8 +1569,7 @@ def q_store_set_many(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path,
             ChunkStoreConfig(keys=("user_id",), freq="1D", tz="UTC",
                              chunk_axis=("year", "month"),
-                             key_types={"user_id": "int"},
-                             acid=_acid_default()),
+                             key_types={"user_id": "int"}),
         )
         mapping = {}
         for uid, g in daily.groupby("user_id"):
@@ -1623,7 +1599,7 @@ def q_kv_clear(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="holc_kvclear_")
     shutil.rmtree(path, ignore_errors=True)
     try:
-        kv = KeyValueStore(spark, path, acid=_acid_default())
+        kv = KeyValueStore(spark, path)
         batch = {}
         for uid, g in daily.groupby("user_id"):
             batch[str(int(uid))] = pd.Series(
@@ -1653,7 +1629,7 @@ def q_kv_clear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kv_acid_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 6: the KV transaction-log backend under the driver gate.
-    ``KeyValueStore(acid=True)`` lifecycle — manifest-governed immutable
+    ``KeyValueStore`` lifecycle — manifest-governed immutable
     files (sources/txlog.py) with client_id as the chunk role and prm as
     the key role: versioned bulk writes plus an overlay patch for even
     users (doubled, with day%3 holes the base must fill on combined
@@ -1669,7 +1645,7 @@ def q_kv_acid_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="holc_kvacid_")
     shutil.rmtree(path, ignore_errors=True)
     try:
-        kv = KeyValueStore(spark, path, acid=True)
+        kv = KeyValueStore(spark, path)
         base, patch = {}, {}
         for uid, g in daily.groupby("user_id"):
             g = g.sort_values("day")
@@ -1720,8 +1696,7 @@ def q_sync_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     cfg = ChunkStoreConfig(keys=("user_id",), freq="1h", tz="UTC",
                            chunk_axis=("year", "month"), allow_sync=True,
-                           key_types={"user_id": "int"},
-                             acid=_acid_default())
+                           key_types={"user_id": "int"})
     try:
         server = ChunkStore(spark, os.path.join(base, "server"), cfg)
         client = ChunkStore(spark, os.path.join(base, "client"), cfg)
@@ -1760,8 +1735,7 @@ def _make_imported_store(spark: SparkSession, sf_dir: str):
         spark, path,
         ChunkStoreConfig(keys=("user_id",), freq="1h", tz="UTC",
                          chunk_axis=("year", "month"),
-                         key_types={"user_id": "int"},
-                             acid=_acid_default()),
+                         key_types={"user_id": "int"}),
     )
     hourly = _hourly_events(spark, sf_dir).toPandas()
     hourly["ts"] = pd.to_datetime(hourly["ts"], utc=True)
@@ -2035,8 +2009,7 @@ def q_sync_guards(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path,
             ChunkStoreConfig(keys=("k",), freq="1h", tz="UTC",
                              chunk_axis=("year", "month"), allow_sync=True,
-                             key_types={"k": "str"},
-                             acid=_acid_default()),
+                             key_types={"k": "str"}),
         )
         s = pd.Series([1.0, 2.0],
                       index=pd.date_range("2024-01-01", periods=2, freq="1h",

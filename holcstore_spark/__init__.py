@@ -22,12 +22,12 @@ Layout
                    text analysis (stats, lang-id, quality, BPE-ish
                    tokens), multimodal binary-column plumbing
 - ``sources``    — the three store classes (KeyValueStore, AttrStore,
-                   ChunkStore) — ACID transaction-log layout by default
+                   ChunkStore) on one transaction-log layout
                    (``sources/txlog.py``: atomic commits, optimistic
                    multi-writer concurrency, manifest file skipping,
                    ``history()`` / ``time_travel`` / ``changes_between``
-                   / ``vacuum``), plain partitioned Parquet as the
-                   explicit opt-down
+                   / ``vacuum``); ``convert_to_acid`` copies a store of
+                   the retired plain layout into it
 - ``streaming``  — incremental sync (change feed / pull client),
                    Structured Streaming ingestion (foreachBatch →
                    ingest_long; watermarked windowed rollups), and the
@@ -39,7 +39,8 @@ Layout
 
 from holcstore_spark.config import ChunkStoreConfig
 from holcstore_spark.session import get_spark
+from holcstore_spark.sources.convert import convert_to_acid
 
 __version__ = "0.1.0"
 
-__all__ = ["get_spark", "ChunkStoreConfig", "__version__"]
+__all__ = ["get_spark", "ChunkStoreConfig", "convert_to_acid", "__version__"]

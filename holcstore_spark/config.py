@@ -36,18 +36,10 @@ class ChunkStoreConfig:
       partitioning of the physical table.
     - ``allow_sync``: when True the store is a sync replica target and
       guards against writes that would break the change feed.
-    - ``acid``: when True the store's files are immutable and governed
-      by a file-manifest transaction log (``sources/txlog.py``) —
-      atomic data+meta commits, optimistic multi-writer concurrency,
-      manifest-stats file skipping. The plain layout (False) keeps the
-      single-writer contract with the op_id fence. The default ``None``
-      resolves at store open: an existing store keeps the layout it was
-      created with (from its saved config, falling back to artifact
-      detection for a config-less directory); a NEW store gets the ACID
-      layout — it matches or beats the plain layout on every measured
-      axis (BASELINE.md round-6 A/Bs) and removes the single-writer
-      fence race, so opting DOWN to plain is what now takes an explicit
-      ``acid=False``.
+
+    The store's files are immutable and governed by a file-manifest
+    transaction log (``sources/txlog.py``) — atomic data+meta commits,
+    optimistic multi-writer concurrency, manifest-stats file skipping.
     """
 
     keys: tuple[str, ...]
@@ -56,7 +48,6 @@ class ChunkStoreConfig:
     chunk_axis: tuple[str, ...] = ("year", "month")
     allow_sync: bool = False
     key_types: dict[str, str] = field(default_factory=dict)
-    acid: bool | None = None
 
     def __post_init__(self) -> None:
         object.__setattr__(self, "keys", tuple(self.keys))
@@ -87,34 +78,9 @@ class ChunkStoreConfig:
         return int(secs)
 
     # -- persistence ---------------------------------------------------
-    def resolve(self, path: str) -> "ChunkStoreConfig":
-        """Concretize ``acid=None`` against what exists at ``path``:
-        saved config wins (existing stores keep their layout across the
-        library's default change), then artifact detection (``_txlog``
-        dir → ACID, parquet without one → plain) for a directory whose
-        config file was lost, then the new-store default (ACID)."""
-        from dataclasses import replace
-
-        if self.acid is not None:
-            return self
-        cfg_file = os.path.join(path, "_store_config.json")
-        if os.path.exists(cfg_file):
-            with open(cfg_file) as f:
-                saved = json.load(f).get("acid")
-            return replace(self, acid=bool(saved))
-        if os.path.isdir(os.path.join(path, "_txlog")):
-            return replace(self, acid=True)
-        if os.path.isdir(path):
-            # an existing directory without a transaction log is a plain
-            # store (possibly emptied — no parquet footers left); ACID
-            # stores create ``_txlog`` at first open, so flipping an
-            # existing dir to ACID here would orphan its layout
-            return replace(self, acid=False)
-        return replace(self, acid=True)
-
     def save(self, path: str) -> None:
         """Idempotent + atomic + FIRST-wins: concurrent store opens on
-        the same path (ACID multi-writer) must never observe a
+        the same path (multi-writer) must never observe a
         truncated config, and two racing CREATORS with different
         configs must not last-writer-win — the claim goes through
         os.link (never overwrites) and the loser validates against what
@@ -141,12 +107,9 @@ class ChunkStoreConfig:
             raw = json.load(f)
         raw["keys"] = tuple(raw["keys"])
         raw["chunk_axis"] = tuple(raw["chunk_axis"])
-        # configs saved before the acid field existed describe plain
-        # stores; loading them as acid=None would spuriously fail
-        # check_compatible's equality against a resolved (concrete) config
-        raw.setdefault("acid", False)
-        if raw["acid"] is None:
-            raw["acid"] = False
+        # stores created while the layout was selectable saved an "acid"
+        # flag; there is one layout now
+        raw.pop("acid", None)
         return cls(**raw)
 
     def check_compatible(self, path: str) -> None:

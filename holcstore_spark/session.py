@@ -60,11 +60,6 @@ def get_spark(
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # dynamic mode: `INSERT OVERWRITE` / mode("overwrite") with
-        # partitionBy only replaces the partitions present in the incoming
-        # frame — this is how the stores do chunk-scoped rewrites without
-        # Delta MERGE.
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # local-mode localCheckpoint ships block data through task results;
         # the 1g default kills large ingests
@@ -88,14 +83,11 @@ def get_spark(
 
 
 def ensure_engine_conf(spark: SparkSession) -> None:
-    """Enforce the two session configs store correctness depends on.
-
-    Under Spark's default *static* partitionOverwriteMode, a chunk-scoped
-    rewrite would delete every other partition of the table (catastrophic
-    data loss from an ordinary update); non-UTC session time zones skew the
-    instant arithmetic. Both are runtime-settable SQL confs, so the store
-    constructors set them rather than failing: sessions built by
-    :func:`get_spark` already comply and are untouched.
+    """Enforce the session config store correctness depends on: a non-UTC
+    session time zone skews the instant arithmetic. It is a
+    runtime-settable SQL conf, so the store constructors set it rather
+    than failing: sessions built by :func:`get_spark` already comply and
+    are untouched.
     """
     import warnings
 
@@ -106,10 +98,3 @@ def ensure_engine_conf(spark: SparkSession) -> None:
             f"overriding session value {tz!r}"
         )
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    if str(mode).lower() != "dynamic":
-        warnings.warn(
-            "holcstore_spark requires spark.sql.sources.partitionOverwriteMode="
-            f"dynamic (partition-scoped rewrites); overriding {mode!r}"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -2,7 +2,8 @@
 hostore/models/timeserie_store.py:16-138).
 
 Arbitrary declared key columns; one logical series per unique key tuple.
-Long layout ``(keys…, ts, value)`` in a single Parquet table. Reads accept
+Long layout ``(keys…, ts, value)`` in immutable Parquet files governed by
+the transaction log (sources/txlog.py). Reads accept
 *partial* attrs (multiple matches); ``flat=True`` asserts exactly one.
 Writes: plain set over an existing key raises; ``update=True`` is
 ``new.combine_first(existing)``; ``replace=True`` deletes then inserts.
@@ -20,7 +21,6 @@ from pyspark.sql import types as T
 from holcstore_spark.edge.pandas_bridge import long_to_series
 from holcstore_spark.functions.scalar import nan_to_null
 from holcstore_spark.plans.predicates import attrs_filter, validate_filter_keys
-from holcstore_spark.sources.io_util import safe_local_checkpoint
 
 
 class AttrStore:
@@ -30,30 +30,23 @@ class AttrStore:
         path: str,
         keys: tuple[str, ...],
         tz: str = "UTC",
-        acid: bool | None = None,
     ):
         from holcstore_spark.session import ensure_engine_conf
-        from holcstore_spark.sources.kv_store import _resolve_acid
+        from holcstore_spark.sources.txlog import open_txlog
 
         ensure_engine_conf(spark)
         self.spark = spark
         self.path = path
         self.keys = tuple(keys)
         self.tz = tz
-        #: ``acid=True`` swaps the racy full-table overwrite for the same
-        #: file-manifest transaction log ChunkStore uses
+        #: the file-manifest transaction log ChunkStore uses
         #: (sources/txlog.py): immutable files, atomic commits, key-level
         #: optimistic concurrency (AttrStore has no chunk axis, so every
         #: conflict decision rides on the per-file KEY statistics and the
         #: commits' key digests — str-canonicalized, the over-conflicting
-        #: safe direction). ``None`` (default) keeps an existing store's
-        #: detected layout and creates NEW stores as ACID.
-        self._acid = _resolve_acid(path, acid)
+        #: safe direction)
+        self._txlog = open_txlog(path)
         self._pinned_snapshot = None  # set on time_travel() views
-        if self._acid:
-            from holcstore_spark.sources.txlog import TxLog
-
-            self._txlog = TxLog(path)
 
     def _schema(self, pdf: pd.DataFrame | None = None) -> T.StructType:
         fields = []
@@ -68,87 +61,42 @@ class AttrStore:
         ]
         return T.StructType(fields)
 
-    def df(self) -> DataFrame:
-        from holcstore_spark.sources.io_util import has_parquet
+    def _read_snapshot(self):
+        """The snapshot reads serve: the pinned one on time-travel views,
+        else the current one."""
+        if self._pinned_snapshot is not None:
+            return self._pinned_snapshot
+        return self._txlog.snapshot()
 
-        if self._acid:
-            if self._pinned_snapshot is not None:
-                return self._df_at(self._pinned_snapshot)
-            return self._df_at(self._txlog.snapshot())
-        # emptied stores keep their directory with no parquet footers
-        if not has_parquet(self.path):
-            return self.spark.createDataFrame([], self._schema())
-        return self.spark.read.parquet(self.path)
+    def df(self) -> DataFrame:
+        return self._df_at(self._read_snapshot())
 
     def time_travel(self, version: int) -> "AttrStore":
-        """Read-only view of the store AS OF a committed log version
-        (ACID only; see ChunkStore.time_travel for the availability
-        window vs vacuum/prune)."""
-        if not self._acid:
-            raise ValueError("time_travel requires an ACID store (acid=True)")
+        """Read-only view of the store AS OF a committed log version (see
+        ChunkStore.time_travel for the availability window vs
+        vacuum/prune)."""
         snap = self._txlog.snapshot_exact(version)
-        view = AttrStore(self.spark, self.path, self.keys, self.tz, acid=True)
+        view = AttrStore(self.spark, self.path, self.keys, self.tz)
         view._pinned_snapshot = snap
         return view
 
     def _pin(self):
-        """Snapshot captured ONCE at mutation start (ACID only; None on
-        the plain layout). The existence check, the update read-back, the
+        """Snapshot captured ONCE at mutation start. The existence check, the update read-back, the
         keep-set, and the commit's base_version all come from this one
         snapshot — a commit interleaving mid-operation then sits ABOVE
         our base and is conflict-checked by the rebase walk, instead of
         silently becoming part of a fresher commit base."""
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only")
-        return self._txlog.snapshot() if self._acid else None
+        return self._txlog.snapshot()
 
     def _df_at(self, snap) -> DataFrame:
-        if snap is None:
-            return self.df()
         files = snap.paths("data", self.path)
         if not files:
             return self.spark.createDataFrame([], self._schema())
         return self.spark.read.parquet(*files)
 
-    #: Non-ACID remove-rows writes rewrite the WHOLE table (the
-    #: reference TimeseriesStore's modest-catalog shape). Above this
-    #: many on-disk rows the rewrite refuses loudly instead of silently
-    #: going O(table) per call (VERDICT r10 "what's wrong #3"); ACID
-    #: rewrites are file-narrowed and not capped.
-    REWRITE_ROWS_CAP = 5_000_000
-
-    def _overwrite(self, df: DataFrame) -> None:
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
-        try:
-            on_disk = ds.dataset(
-                self.path, format="parquet"
-            ).count_rows()  # footers only — no data read, no Spark job
-        except (FileNotFoundError, OSError):
-            on_disk = 0
-        except pa.ArrowInvalid:
-            # a corrupt / partially-written footer must not crash the
-            # guard — but one bad file must not DISABLE the cap either:
-            # count the readable footers, warn per unreadable one
-            from holcstore_spark.sources.io_util import (
-                sum_readable_footers,
-            )
-
-            on_disk = sum_readable_footers(self.path)
-        if on_disk > self.REWRITE_ROWS_CAP:
-            raise ValueError(
-                f"full-table rewrite of ~{on_disk} rows is above "
-                f"REWRITE_ROWS_CAP={self.REWRITE_ROWS_CAP}. The plain "
-                "AttrStore layout rewrites the whole table per "
-                "remove-rows write; raise REWRITE_ROWS_CAP if "
-                "intentional, or use acid=True (file-narrowed rewrites) "
-                "or ChunkStore for catalog-scale data."
-            )
-        df = safe_local_checkpoint(df)
-        df.write.mode("overwrite").parquet(self.path)
-
-    # -- ACID write primitives (manifest-governed immutable files) -----
+    # -- write primitives (manifest-governed immutable files) ----------
     def _key_digest(self, kt: tuple) -> str:
         import hashlib
 
@@ -195,12 +143,11 @@ class AttrStore:
         )
         return self._txlog.collect_entries(abs_dir, rel_dir, key_cols=self.keys)
 
-    def _acid_append(self, new: DataFrame, kts: list[tuple], op: str,
-                     snap=None, txn: tuple[str, int] | None = None) -> None:
+    def _append(self, new: DataFrame, kts: list[tuple], op: str, snap,
+                txn: tuple[str, int] | None = None) -> None:
         """Pure insert: one staged write + one atomic commit; concurrent
         inserts of the SAME key conflict via the key digests, disjoint
         inserts all land."""
-        snap = snap if snap is not None else self._txlog.snapshot()
         adds = self._stage(new)
         self._txlog.commit_idempotent(
             snap.version, op, self._txlog.next_op_id(snap),
@@ -211,16 +158,15 @@ class AttrStore:
             txn_version=txn[1] if txn else None,
         )
 
-    def _acid_rewrite(
+    def _rewrite(
         self, kts: list[tuple], keep_pred, new: DataFrame | None, op: str,
-        snap=None, txn: tuple[str, int] | None = None,
+        snap, txn: tuple[str, int] | None = None,
     ) -> None:
         """Copy-on-write of the files that can contain ``kts`` (per-file
         key stats), one atomic commit. ``touched=[]`` + dropped_keys
         makes conflicts purely key-level: same-key interleavings raise,
         different-series writers commit concurrently; removed-file
         path intersection still catches shared-file collisions."""
-        snap = snap if snap is not None else self._txlog.snapshot()
         affected = [
             e for e in snap.files["data"] if self._may_contain(e, kts)
         ]
@@ -254,16 +200,12 @@ class AttrStore:
         O(orphans) default-vs-``deep`` sweep shape)."""
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only (vacuum refused)")
-        if not self._acid:
-            return 0
         return self._txlog.vacuum_files(retention_seconds, deep=deep)
 
     def restore(self, version: int) -> int:
         """Roll the store back to a committed log version as a NEW
         commit (see ChunkStore.restore — same Delta RESTORE semantics,
         same refusals on pruned versions and vacuumed files)."""
-        if not self._acid:
-            raise ValueError("restore requires an ACID store (acid=True)")
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only (restore refused)")
         return self._txlog.restore_commit(version)
@@ -276,8 +218,6 @@ class AttrStore:
         ChunkStore.optimize): change feeds skip it and concurrent
         appends commute with it (rule-1 path intersection is its only
         conflict). Returns 1 when a repack committed, else 0."""
-        if not self._acid:
-            raise ValueError("optimize() requires acid=True")
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only (optimize refused)")
         from holcstore_spark.sources.txlog import exact_rows
@@ -324,19 +264,12 @@ class AttrStore:
     def last_txn_version(self, txn_app: str) -> int | None:
         """Highest committed ``txn_version`` for the idempotent writer
         ``txn_app`` (see ChunkStore.last_txn_version)."""
-        if not self._acid:
-            raise ValueError(
-                "idempotent writes (txn_app) require an ACID store "
-                "(acid=True)"
-            )
         return self._txlog.snapshot().app_versions.get(str(txn_app))
 
     def history(self) -> DataFrame:
         """Commit-log audit frame (see ChunkStore.history)."""
         from holcstore_spark.sources.chunk_store import _history_df
 
-        if not self._acid:
-            raise ValueError("history requires an ACID store (acid=True)")
         return _history_df(self.spark, self._txlog)
 
     def changes_between(self, from_version: int,
@@ -348,8 +281,6 @@ class AttrStore:
         default when both are empty)."""
         from holcstore_spark.sources.chunk_store import _changes_between_df
 
-        if not self._acid:
-            raise ValueError("changes_between requires an ACID store (acid=True)")
         cols = [*self.keys, "ts", "value"]
 
         def _read(paths, other: DataFrame | None) -> DataFrame:
@@ -411,15 +342,9 @@ class AttrStore:
         new = nan_to_null(self.spark.createDataFrame(pdf, self._schema(pdf)), "value")
         kt = tuple(ts_attributes[k] for k in self.keys)
         if exists:
-            if self._acid:
-                self._acid_rewrite([kt], ~pred, new, "attr_set_ts", snap=snap)
-            else:
-                self._overwrite(self.df().filter(~pred).unionByName(new))
+            self._rewrite([kt], ~pred, new, "attr_set_ts", snap)
         else:
-            if self._acid:
-                self._acid_append(new, [kt], "attr_set_ts", snap=snap)
-            else:
-                new.write.mode("append").parquet(self.path)
+            self._append(new, [kt], "attr_set_ts", snap)
 
     def set_many_ts(
         self,
@@ -443,14 +368,14 @@ class AttrStore:
         check is a single left-semi join for the entire batch.
 
         ``(txn_app, txn_version)`` — idempotent write (Delta's ``txn``
-        action, ACID only; see ChunkStore.ingest_long): a retried batch
-        job re-running the same write is a no-op instead of refusing
-        (plain) or re-applying (update/replace)."""
+        action; see ChunkStore.ingest_long): a retried batch job
+        re-running the same write is a no-op instead of refusing (plain
+        insert) or re-applying (update/replace)."""
         from holcstore_spark.sources.txlog import resolve_txn
 
         if update and replace:
             raise ValueError("update and replace are mutually exclusive")
-        txn = resolve_txn(self._acid, txn_app, txn_version)
+        txn = resolve_txn(txn_app, txn_version)
         if not mapping:
             return
         # key-arity validation BEFORE the replay skip: a replayed call
@@ -482,51 +407,39 @@ class AttrStore:
             kt if isinstance(kt, tuple) else (kt,) for kt in mapping
         ]
         if not exists_any:
-            if self._acid:
-                self._acid_append(new, kts, "attr_set_many", snap=snap,
-                                  txn=txn)
-            else:
-                new.write.mode("append").parquet(self.path)
+            self._append(new, kts, "attr_set_many", snap, txn=txn)
             return
         if update:
             from holcstore_spark.operators.overlay import combine_first
 
             new = combine_first([new, existing_match], keys=self.keys)
-        if self._acid:
-            from functools import reduce
+        from functools import reduce
 
-            in_batch = reduce(
-                lambda a, b: a | b,
-                [
-                    reduce(
-                        lambda a, b: a & b,
-                        [F.col(k) == F.lit(v) for k, v in zip(self.keys, kt)],
-                    )
-                    for kt in kts
-                ],
-            )
-            self._acid_rewrite(kts, ~in_batch, new.select(*self.keys, "ts", "value"),
-                               "attr_set_many", snap=snap, txn=txn)
-            return
-        keep = self.df().join(key_set, on=list(self.keys), how="left_anti")
-        self._overwrite(keep.unionByName(new.select(*self.keys, "ts", "value")))
+        in_batch = reduce(
+            lambda a, b: a | b,
+            [
+                reduce(
+                    lambda a, b: a & b,
+                    [F.col(k) == F.lit(v) for k, v in zip(self.keys, kt)],
+                )
+                for kt in kts
+            ],
+        )
+        self._rewrite(kts, ~in_batch, new.select(*self.keys, "ts", "value"),
+                      "attr_set_many", snap, txn=txn)
 
     def _df_pruned(self, filters: dict | None) -> DataFrame:
-        """Manifest key-stats pruned read (ACID; see ChunkStore.data
+        """Manifest key-stats pruned read (see ChunkStore.data
         key_values): only files whose per-key min/max can hold the
         filter's equality/`__in` candidates are opened. Conservative —
         stat-less entries always read — and callers re-apply the exact
         predicate in-plan; honors time-travel pins."""
-        if not self._acid:
-            return self.df()
         from holcstore_spark.plans.pruning import (
             entry_may_match_keys,
             key_equality_values,
         )
 
-        snap = (self._pinned_snapshot if self._pinned_snapshot is not None
-                else self._txlog.snapshot())
-        entries = snap.files["data"]
+        entries = self._read_snapshot().files["data"]
         kv = key_equality_values(filters)
         if kv:
             entries = [e for e in entries if entry_may_match_keys(e, kv)]
@@ -566,33 +479,30 @@ class AttrStore:
     def delete(self, ts_attributes: dict) -> None:
         validate_filter_keys(ts_attributes, self.keys)
         pred = attrs_filter(ts_attributes)
-        if self._acid:
-            # partial attrs: resolve to concrete key tuples first so the
-            # rewrite narrows to (and conflicts on) exactly those series;
-            # resolved from the SAME pinned snapshot the commit bases on.
-            # limit(CAP+1) bounds the collect itself — the driver never
-            # holds more than CAP+1 tuples even when the match is huge.
-            snap = self._pin()
-            kt_rows = (
-                self._df_at(snap).filter(pred).select(*self.keys)
-                .distinct().limit(self.DELETE_KEYS_CAP + 1).collect()
+        # partial attrs: resolve to concrete key tuples first so the
+        # rewrite narrows to (and conflicts on) exactly those series;
+        # resolved from the SAME pinned snapshot the commit bases on.
+        # limit(CAP+1) bounds the collect itself — the driver never
+        # holds more than CAP+1 tuples even when the match is huge.
+        snap = self._pin()
+        kt_rows = (
+            self._df_at(snap).filter(pred).select(*self.keys)
+            .distinct().limit(self.DELETE_KEYS_CAP + 1).collect()
+        )
+        if len(kt_rows) > self.DELETE_KEYS_CAP:
+            raise ValueError(
+                f"delete filter matches more than DELETE_KEYS_CAP="
+                f"{self.DELETE_KEYS_CAP} distinct series — resolving "
+                "them on the driver would materialize the whole key "
+                "catalog. Narrow the filter (delete in slices), or "
+                "raise DELETE_KEYS_CAP if the driver can hold the "
+                "tuples; for catalog-scale keyed data use ChunkStore, "
+                "whose deletes stay distributed."
             )
-            if len(kt_rows) > self.DELETE_KEYS_CAP:
-                raise ValueError(
-                    f"delete filter matches more than DELETE_KEYS_CAP="
-                    f"{self.DELETE_KEYS_CAP} distinct series — resolving "
-                    "them on the driver would materialize the whole key "
-                    "catalog. Narrow the filter (delete in slices), or "
-                    "raise DELETE_KEYS_CAP if the driver can hold the "
-                    "tuples; for catalog-scale keyed data use ChunkStore, "
-                    "whose deletes stay distributed."
-                )
-            kts = [tuple(r) for r in kt_rows]
-            if not kts:
-                return
-            self._acid_rewrite(kts, ~pred, None, "attr_delete", snap=snap)
+        kts = [tuple(r) for r in kt_rows]
+        if not kts:
             return
-        self._overwrite(self.df().filter(~pred))
+        self._rewrite(kts, ~pred, None, "attr_delete", snap)
 
     def count(self, ts_attributes: dict | None = None) -> int:
         d = self.df().filter(attrs_filter(ts_attributes))

@@ -212,7 +212,7 @@ class BandIndex(ForgetMixin):
         shape-checked against the frozen MinHash params (sampled)."""
         from holcstore_spark.sources.txlog import TxLog, resolve_txn
 
-        txn_id = resolve_txn(True, txn_app, txn_version)
+        txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
         if txn_id is not None and (
             txn_id[1] <= snap.app_versions.get(txn_id[0], -1)
@@ -267,7 +267,7 @@ class BandIndex(ForgetMixin):
         from holcstore_spark.sources.txlog import TxLog, resolve_txn
 
         p = self.params
-        txn_id = resolve_txn(True, txn_app, txn_version)
+        txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
         kept = dedup_incremental(
             new_docs, self.df(snap), text=text, id_col=p["id_col"],

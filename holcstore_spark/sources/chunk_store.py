@@ -1,15 +1,17 @@
 """ChunkStore — the scale-path store (reference ``TimeseriesChunkStore``,
 hostore/models/chunk_timeserie_store.py:180-899, re-architected for Spark).
 
-Physical layout (no blobs, no hand-rolled compression — Parquet does both):
+Physical layout (no blobs, no hand-rolled compression — Parquet does both).
+Two tables of immutable Parquet files under ``<path>/files/``, governed by
+the transaction log in ``<path>/_txlog`` (``sources/txlog.py``):
 
-- ``<path>/data``  — long table ``(keys…, ts TIMESTAMP, value DOUBLE)``
-  **partitioned by** ``chunk_index`` (local-calendar year or year-month,
-  same arithmetic as the reference so partition ids line up). A time-bounded
-  read touches only the matching partition directories; within a partition,
-  Parquet row-group min/max stats on the key columns skip other series'
-  row groups.
-- ``<path>/meta``  — append-only changelog ``(keys…, chunk_index, start_ts,
+- data — long table ``(keys…, ts TIMESTAMP, value DOUBLE, chunk_index)``;
+  ``chunk_index`` is the local-calendar year or year-month (same
+  arithmetic as the reference, so chunk ids line up). The manifest keeps
+  per-file chunk and key ranges, so a bounded or keyed read opens only
+  the files that can hold its rows; within a file, Parquet row-group
+  min/max stats on the key columns skip other series' row groups.
+- meta — append-only changelog ``(keys…, chunk_index, start_ts,
   n_points, updated_at, op_id, is_deleted)``. The *latest state* per
   ``(keys…, chunk_index)`` (max op_id) is the chunk directory: it carries
   the tombstone flag (reference: is_deleted soft delete,
@@ -22,12 +24,12 @@ keys; ``update`` is per-timestamp ``new.combine_first(existing)``;
 ``replace`` overwrites the new span and tombstones the key's chunks outside
 it (:357-370). Deletes are tombstones unless ``keep_tracking=False``.
 
-Concurrency: the plain layout is single-writer per store (the reference
-relies on DB row locks, :786-789) with an optimistic op_id fence that
-detects violations. ``ChunkStoreConfig(acid=True)`` swaps in the built-in
-transaction-log backend (``sources/txlog.py``) — immutable files + atomic
-manifest commits, Delta-style optimistic concurrency and data skipping —
-which removes the single-writer restriction entirely.
+Concurrency: where the reference relies on DB transactions and row locks
+(:786-789), every write here stages its files and publishes them in ONE
+atomic log commit — Delta-style optimistic concurrency: disjoint writers
+rebase and all land, a genuine conflict raises at the commit point.
+Stores of the pre-transaction-log plain layout are refused at open;
+``holcstore_spark.convert_to_acid`` migrates them (``sources/convert.py``).
 """
 
 from __future__ import annotations
@@ -36,7 +38,6 @@ import bisect
 import contextlib
 import operator
 import os
-import time
 from datetime import datetime, timezone
 from functools import reduce
 
@@ -59,7 +60,7 @@ from holcstore_spark.operators.slicing import drop_bounds_na as _drop_bounds_na
 from holcstore_spark.operators.slicing import time_slice
 from holcstore_spark.plans.predicates import attrs_filter, validate_filter_keys
 from holcstore_spark.plans.pruning import chunk_bounds_filter, normalize_bound
-from holcstore_spark.sources.io_util import has_parquet, safe_local_checkpoint
+from holcstore_spark.sources.io_util import safe_local_checkpoint
 
 
 class KeyExistsError(Exception):
@@ -75,17 +76,10 @@ class SyncGuardError(Exception):
 class ConcurrentWriteError(Exception):
     """Another writer committed during this write's read→publish span.
 
-    Plain layout: raised by the optimistic op_id fence — plain Parquet
-    has no row locks (the reference serializes upserts with
-    select_for_update, chunk_timeserie_store.py:786-789), the store is
-    SINGLE-WRITER by contract, and the fence turns a detected violation
-    into a loud failure instead of silently-lost rows. Best-effort: a
-    writer landing inside the final check→overwrite window can still
-    race; serialize writers externally — or use ACID mode.
-
-    ACID mode (``ChunkStoreConfig(acid=True)``): raised at the ATOMIC
-    commit point of the transaction log when an interleaved commit
-    genuinely conflicts (touched the same files/chunks). No race
+    Raised at the ATOMIC commit point of the transaction log when an
+    interleaved commit genuinely conflicts (touched the same
+    files/chunks/keys) — where the reference serializes upserts with
+    select_for_update (chunk_timeserie_store.py:786-789). No race
     window; disjoint concurrent writers rebase and both survive
     (sources/txlog.py)."""
 
@@ -102,9 +96,8 @@ class StaleBaseError(ConcurrentWriteError):
 
 
 def _transactional(op: str):
-    """Wrap a public write method in an ACID transaction (no-op on plain
-    stores): every staged file of the call commits as one atomic log
-    record at exit."""
+    """Wrap a public write method in a transaction: every staged file of
+    the call commits as one atomic log record at exit."""
     import functools
 
     def deco(fn):
@@ -119,7 +112,7 @@ def _transactional(op: str):
 
 
 class _Txn:
-    """Accumulator for one ACID write operation: the base snapshot all
+    """Accumulator for one write transaction: the base snapshot all
     reads use, staged adds/removes, the touched chunk set the commit
     declares for conflict detection, and (for inserts) the key digests
     that let concurrent same-key appends conflict precisely."""
@@ -398,50 +391,42 @@ _META_EXTRA = [
 
 class ChunkStore:
     def __init__(self, spark: SparkSession, path: str, config: ChunkStoreConfig):
+        import threading
+
         from holcstore_spark.session import ensure_engine_conf
+        from holcstore_spark.sources.txlog import open_txlog
 
         ensure_engine_conf(spark)
         self.spark = spark
         self.path = path
-        config = config.resolve(path)  # acid=None → saved/detected/new-default
+        # refuses a plain-layout directory before anything is written
+        self._txlog = open_txlog(path, legacy_dirs=("data", "meta"))
         self.config = config
         config.check_compatible(path)
         config.save(path)
-        self._data_path = os.path.join(path, "data")
-        self._meta_path = os.path.join(path, "meta")
         self._meta_cache: DataFrame | None = None
         self._has_tombstones: bool | None = None
-        self._acid = bool(getattr(config, "acid", False))
         self._active_txn: "_Txn | None" = None
         self._pinned_snapshot = None  # set on time_travel() views
         self._meta_cache_version: int | None = None
         self._key_type_probe: dict[str, str] | None = None
         #: incomplete probe memo: (manifest version, partial result)
         self._key_type_probe_partial: tuple[int, dict[str, str]] | None = None
-        if self._acid:
-            import threading
-
-            from holcstore_spark.sources.txlog import TxLog
-
-            self._txlog = TxLog(path)
-            # serializes write transactions of THIS instance across
-            # threads: without it a second thread entering _txn while
-            # another thread's txn is open would silently merge into it
-            # (cross-INSTANCE concurrency is the supported multi-writer
-            # pattern and goes through the commit protocol instead)
-            self._txn_lock = threading.Lock()
-            self._txn_owner: int | None = None
+        # serializes write transactions of THIS instance across threads:
+        # without it a second thread entering _txn while another thread's
+        # txn is open would silently merge into it (cross-INSTANCE
+        # concurrency is the supported multi-writer pattern and goes
+        # through the commit protocol instead)
+        self._txn_lock = threading.Lock()
+        self._txn_owner: int | None = None
 
     # ------------------------------------------------------------------
-    # ACID mode: transactions over the file-manifest log (txlog.py)
+    # transactions over the file-manifest log (txlog.py)
     # ------------------------------------------------------------------
     def _snapshot(self):
         """Current manifest snapshot; inside a transaction, the BASE
         snapshot captured at txn start — every read a write op performs
-        sees one consistent version (MVCC), so no localCheckpoint
-        lineage cuts are needed on the ACID path. None on plain stores."""
-        if not self._acid:
-            return None
+        sees one consistent version (MVCC)."""
         if self._pinned_snapshot is not None:
             return self._pinned_snapshot
         txn = self._active_txn
@@ -450,15 +435,13 @@ class ChunkStore:
         return self._txlog.snapshot()
 
     def time_travel(self, version: int) -> "ChunkStore":
-        """Read-only view of the store AS OF a committed log version
-        (ACID only) — every read API (``get_ts``, ``alive_data``,
+        """Read-only view of the store AS OF a committed log version —
+        every read API (``get_ts``, ``alive_data``,
         ``updates``, …) serves the historical state; writes raise.
         Available as long as the version's commit records and files
         survive (``vacuum()`` reclaims superseded files and prunes
         checkpointed records, giving up horizons older than the latest
         checkpoint — Delta's VACUUM/log-retention trade)."""
-        if not self._acid:
-            raise ValueError("time_travel requires an ACID store (acid=True)")
         snap = self._txlog.snapshot_exact(version)
         view = ChunkStore(self.spark, self.path, self.config)
         view._pinned_snapshot = snap
@@ -472,8 +455,6 @@ class ChunkStore:
         chunk set. Commits summarized by a pruned checkpoint are no
         longer listed (same reach as ``time_travel``). Metadata-sized:
         the replayable log is bounded by checkpoint+prune."""
-        if not self._acid:
-            raise ValueError("history requires an ACID store (acid=True)")
         return _history_df(self.spark, self._txlog)
 
     def last_txn_version(self, txn_app: str) -> int | None:
@@ -482,16 +463,11 @@ class ChunkStore:
         read-back). A resuming sink queries this to decide where its
         replay must start; watermarks survive log pruning (persisted in
         checkpoint headers)."""
-        if not self._acid:
-            raise ValueError(
-                "idempotent writes (txn_app) require an ACID store "
-                "(acid=True)"
-            )
         return self._txlog.snapshot().app_versions.get(str(txn_app))
 
     def restore(self, version: int) -> int:
         """Roll the store back to a committed log version as a NEW
-        commit (Delta's ``RESTORE TABLE`` analogue; ACID only) — the
+        commit (Delta's ``RESTORE TABLE`` analogue) — the
         write-side completion of the :meth:`time_travel` /
         :meth:`history` triad. The rollback commit re-references the old
         generation's files and removes everything newer, so history is
@@ -500,8 +476,6 @@ class ChunkStore:
         vacuum/prune reclaims them. Refuses when the target version is
         pruned below the log horizon or any file it needs was vacuumed.
         Returns the new commit's version."""
-        if not self._acid:
-            raise ValueError("restore requires an ACID store (acid=True)")
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only (restore refused)")
         v = self._txlog.restore_commit(version)
@@ -511,7 +485,7 @@ class ChunkStore:
     def changes_between(self, from_version: int,
                         to_version: int | None = None) -> DataFrame:
         """Row-level change feed between two committed log versions
-        (Delta CDF's ``table_changes`` analogue; ACID only): the data
+        (Delta CDF's ``table_changes`` analogue): the data
         rows inserted and removed by the commits in
         ``(from_version, to_version]``, as the data columns plus a
         ``_change_type`` column ('insert' | 'delete'; an in-place
@@ -529,8 +503,6 @@ class ChunkStore:
         tombstone deletes (meta-only commits) report no data changes;
         both bounds must be at-or-below the pruned log horizon's reach
         (same availability as :meth:`time_travel`)."""
-        if not self._acid:
-            raise ValueError("changes_between requires an ACID store (acid=True)")
         cols = [f.name for f in self._data_schema()]
 
         def _read(paths, _other) -> DataFrame:
@@ -548,10 +520,7 @@ class ChunkStore:
         """All staged adds/removes of one public write op commit as ONE
         atomic log record (data + meta together — the import path's
         'data lands first, meta last' crash window disappears). Nested
-        entry reuses the outer transaction. No-op on plain stores."""
-        if not self._acid:
-            yield None
-            return
+        entry reuses the outer transaction."""
         if self._pinned_snapshot is not None:
             raise ValueError(f"time-travel views are read-only ({op} refused)")
         import threading
@@ -610,10 +579,10 @@ class ChunkStore:
         auto-compaction; if the compaction (and only it) loses a race
         with a concurrent commit, retry once without it — a pure append
         must never fail because housekeeping piggybacked on it."""
-        # meta auto-compaction (ACID twin of _maybe_compact_meta): every
-        # commit stages one meta file, so a long-lived store would pay an
-        # O(commits) meta read — collapse to latest state inside this
-        # same atomic commit past the threshold
+        # meta auto-compaction: every commit stages one meta file, so a
+        # long-lived store would pay an O(commits) meta read — collapse
+        # to latest state inside this same atomic commit past the
+        # threshold
         removed_meta = {r["path"] for r in txn.removes["meta"]}
         if (
             len(txn.snapshot.files["meta"]) + len(txn.adds["meta"])
@@ -680,7 +649,7 @@ class ChunkStore:
     ) -> None:
         """Write a frame to a fresh immutable ``files/<uuid>/`` dir and
         register its files in the active transaction — THE staging seam
-        of every ACID write, Spark or driver-side.
+        of every write, Spark or driver-side.
 
         A Spark frame is written by a Spark job. Data frames are
         range-partitioned by (chunk_index, keys…) so each file covers a
@@ -791,7 +760,7 @@ class ChunkStore:
         commit can conflict with a concurrent insert of the same series
         (extends the KeyExistsError contract to multi-writer ACID
         operation)."""
-        if not self._acid or not self._key_level_detection_ok():
+        if not self._key_level_detection_ok():
             return
         txn = self._active_txn
         kts = list(key_tuples)
@@ -816,7 +785,7 @@ class ChunkStore:
         then conflicts with interleaved same-chunk commits ONLY when the
         key sets overlap (or either side is unknown), so concurrent
         writers updating different series of one chunk all land."""
-        if not self._acid or not self._key_level_detection_ok():
+        if not self._key_level_detection_ok():
             return
         txn = self._active_txn
         if txn.dropped_unknown:
@@ -845,8 +814,7 @@ class ChunkStore:
         swap it into the transaction: the commit then carries ONE
         compacted meta file and removes the whole backlog. Tombstone
         rows survive (they ARE latest states), so the change feed and
-        watermarks are unchanged — same contract as the plain path's
-        ``_maybe_compact_meta``."""
+        watermarks are unchanged."""
         files = [
             os.path.join(self.path, e["path"])
             for e in [*txn.snapshot.files["meta"], *txn.adds["meta"]]
@@ -912,7 +880,7 @@ class ChunkStore:
 
         return [e for e in affected if may_contain(e)]
 
-    def _rewrite_acid(self, sdf_new: DataFrame) -> None:
+    def _rewrite_spark(self, sdf_new: DataFrame) -> None:
         """Copy-on-write MERGE of a bulk frame: stage (kept rows of the
         affected files ∪ new rows) into fresh files by a Spark job and
         mark the affected files removed — all visibility flips at
@@ -922,7 +890,7 @@ class ChunkStore:
         update to one month rewrites that month's files, never the
         table. Conflicts with concurrent commits are resolved at commit
         time (txlog), not by a racy fence. Single-series writes take
-        the driver-side twin, :meth:`_rewrite_acid_arrow`."""
+        the driver-side twin, :meth:`_rewrite_arrow`."""
         txn = self._active_txn
         pair = [*self.config.keys, "chunk_index"]
         chunk_set = {
@@ -946,9 +914,9 @@ class ChunkStore:
         self._stage_into_txn(combined, "data")
         txn.touch(chunk_set)
 
-    def _rewrite_acid_arrow(self, new: pa.Table, chunks: list[int]) -> None:
+    def _rewrite_arrow(self, new: pa.Table, chunks: list[int]) -> None:
         """Driver-side copy-on-write of ONE series: the same affected
-        files as :meth:`_rewrite_acid`, rewritten one at a time with
+        files as :meth:`_rewrite_spark`, rewritten one at a time with
         Arrow compute — the series' rows in ``chunks`` are dropped and
         the new rows are placed into the first rewritten file whose
         chunk range holds their chunk (rows no file covers are staged as
@@ -1009,8 +977,8 @@ class ChunkStore:
                 else:
                     out.append((k, T.DoubleType()))
             else:
-                # no declaration and no sample frame: on ACID stores the
-                # WRITTEN type is recoverable from a live file's footer
+                # no declaration and no sample frame: the WRITTEN type is
+                # recoverable from a live file's footer
                 # — a string default would misread int/float-keyed
                 # stores created without key_types (ADVICE r7)
                 if probed is None:
@@ -1020,14 +988,11 @@ class ChunkStore:
         return out
 
     def _probed_key_types(self) -> dict[str, str]:
-        """Footer-probed types of undeclared key columns (ACID only).
-        A complete answer is cached forever; an INCOMPLETE one (empty
+        """Footer-probed types of undeclared key columns. A complete answer is cached forever; an INCOMPLETE one (empty
         store, or a key no footer proves) is cached per manifest version
         so repeated schema derivations don't repeat the O(live-files)
         footer scan — only a new commit (which may add the proving file)
         re-probes."""
-        if not self._acid:
-            return {}
         if self._key_type_probe is not None:
             return self._key_type_probe
         undeclared = [
@@ -1063,57 +1028,37 @@ class ChunkStore:
     # ------------------------------------------------------------------
     # table access
     # ------------------------------------------------------------------
-    def _exists(self) -> bool:
-        return os.path.exists(self._meta_path)
-
     def data(self, chunk_lo: int | None = None, chunk_hi: int | None = None,
              key_values: dict[str, list] | None = None) -> DataFrame:
-        """Physical data rows. In ACID mode the live file set comes from
-        the manifest and ``chunk_lo``/``chunk_hi`` apply MANIFEST-STATS
-        FILE SKIPPING — only files whose per-file chunk range overlaps
-        the bound are opened (the Delta-style replacement for hive
-        partition pruning; chunk_index is a regular column there).
+        """Physical data rows. The live file set comes from the manifest
+        and ``chunk_lo``/``chunk_hi`` apply MANIFEST-STATS FILE SKIPPING
+        — only files whose per-file chunk range overlaps the bound are
+        opened (the Delta-style replacement for hive partition pruning;
+        chunk_index is a regular column).
         ``key_values`` (per-key candidate sets, see
         plans.pruning.key_equality_values) extends the skipping to the
         KEY columns via the manifest's per-file key min/max: a point
         lookup then opens only the files whose key range can hold the
         requested series — at large file counts this is the difference
-        between listing a month and listing one file. Plain mode ignores
-        the bounds: the hive ``chunk_index=`` partitioning prunes at
-        planning time instead."""
-        if self._acid:
-            from holcstore_spark.plans.pruning import entry_may_match_keys
+        between listing a month and listing one file."""
+        from holcstore_spark.plans.pruning import entry_may_match_keys
 
-            snap = self._snapshot()
-            entries = snap.entries_overlapping("data", chunk_lo, chunk_hi)
-            if key_values:
-                entries = [
-                    e for e in entries if entry_may_match_keys(e, key_values)
-                ]
-            if not entries:
-                return self.spark.createDataFrame([], self._data_schema())
-            files = [os.path.join(self.path, e["path"]) for e in entries]
-            return self.spark.read.schema(self._data_schema()).parquet(*files)
-        # emptied-by-rewrite tables keep their directory with no parquet
-        # footers — read them as the empty frame instead of failing inference
-        if not has_parquet(self._data_path):
+        entries = self._snapshot().entries_overlapping("data", chunk_lo, chunk_hi)
+        if key_values:
+            entries = [e for e in entries if entry_may_match_keys(e, key_values)]
+        if not entries:
             return self.spark.createDataFrame([], self._data_schema())
-        return self.spark.read.parquet(self._data_path)
+        files = [os.path.join(self.path, e["path"]) for e in entries]
+        return self.spark.read.schema(self._data_schema()).parquet(*files)
 
     def meta(self) -> DataFrame:
-        if self._acid:
-            files = self._snapshot().paths("meta", self.path)
-            if not files:
-                return self.spark.createDataFrame([], self._meta_schema())
-            return self.spark.read.schema(self._meta_schema()).parquet(*files)
-        if not has_parquet(self._meta_path):
+        files = self._snapshot().paths("meta", self.path)
+        if not files:
             return self.spark.createDataFrame([], self._meta_schema())
-        return self.spark.read.parquet(self._meta_path)
+        return self.spark.read.schema(self._meta_schema()).parquet(*files)
 
     def _meta_empty(self) -> bool:
-        if self._acid:
-            return not self._snapshot().files["meta"]
-        return not has_parquet(self._meta_path)
+        return not self._snapshot().files["meta"]
 
     def latest_meta(self, filters: dict | None = None) -> DataFrame:
         """Latest state per (keys…, chunk_index): tombstone flag + watermark.
@@ -1139,11 +1084,10 @@ class ChunkStore:
                 .drop("__rn")
                 .cache()
             )
-            if self._acid:
-                # tag the cache with the manifest version it was built
-                # from — write transactions compare against their base
-                # snapshot and refuse to validate against a stale cache
-                self._meta_cache_version = self._snapshot().version
+            # tag the cache with the manifest version it was built from —
+            # write transactions compare against their base snapshot and
+            # refuse to validate against a stale cache
+            self._meta_cache_version = self._snapshot().version
         return self._meta_cache.filter(attrs_filter(filters))
 
     def _invalidate_meta_cache(self) -> None:
@@ -1183,19 +1127,12 @@ class ChunkStore:
         if self._has_tombstones is None:
             import pyarrow.dataset as pads
 
-            if self._acid:
-                files = self._snapshot().paths("meta", self.path)
-                ds = pads.dataset(files) if files else None
-            else:
-                ds = (
-                    pads.dataset(self._meta_path)
-                    if has_parquet(self._meta_path) else None
-                )
-            if ds is None:
+            files = self._snapshot().paths("meta", self.path)
+            if not files:
                 self._has_tombstones = False
             else:
                 # stop at the first tombstone: one hit answers the gate
-                batches = ds.to_batches(
+                batches = pads.dataset(files).to_batches(
                     columns=["is_deleted"],
                     filter=pads.field("is_deleted") == True,  # noqa: E712
                 )
@@ -1211,7 +1148,7 @@ class ChunkStore:
         start=None,
         end=None,
     ) -> DataFrame:
-        """Data rows of non-tombstoned chunks, partition-pruned by bounds.
+        """Data rows of non-tombstoned chunks, file-pruned by bounds.
 
         The tombstone check is a broadcast semi-join against the (filtered,
         tiny) latest-meta — physical data of deleted chunks lingers until
@@ -1220,16 +1157,13 @@ class ChunkStore:
         tz, axis = self.config.tz, self.config.chunk_axis
         s = normalize_bound(start, tz)
         e = normalize_bound(end, tz)
-        if self._acid:
-            from holcstore_spark.functions.scalar import chunk_index_of
-            from holcstore_spark.plans.pruning import key_equality_values
+        from holcstore_spark.functions.scalar import chunk_index_of
+        from holcstore_spark.plans.pruning import key_equality_values
 
-            lo = chunk_index_of(s, axis, tz) if s is not None else None
-            hi = chunk_index_of(e, axis, tz) if e is not None else None
-            d = self.data(chunk_lo=lo, chunk_hi=hi,
-                          key_values=key_equality_values(filters))
-        else:
-            d = self.data()
+        lo = chunk_index_of(s, axis, tz) if s is not None else None
+        hi = chunk_index_of(e, axis, tz) if e is not None else None
+        d = self.data(chunk_lo=lo, chunk_hi=hi,
+                      key_values=key_equality_values(filters))
         d = d.filter(attrs_filter(filters))
         d = d.filter(chunk_bounds_filter(s, e, axis, tz))
         # tombstone-free NON-SYNC store (the common case): physical rows ARE
@@ -1256,19 +1190,12 @@ class ChunkStore:
             )
 
     def _now_stamp(self) -> tuple[datetime, int]:
-        """(updated_at, op_id) for meta rows. Inside an ACID transaction
-        the op_id is the txn's Lamport stamp (derived from the base
-        snapshot's max observed op_id) so that the commit record and
-        every meta row it stages carry ONE stamp that orders causally
-        across skewed writer clocks; outside a txn (plain layout,
-        single-writer contract) raw wall-clock nanoseconds."""
-        import threading
-
-        now = datetime.now(timezone.utc)
-        txn = self._active_txn
-        if txn is not None and self._txn_owner == threading.get_ident():
-            return now, txn.op_id
-        return now, time.time_ns()
+        """(updated_at, op_id) for meta rows. The op_id is the open
+        transaction's Lamport stamp (derived from the base snapshot's max
+        observed op_id), so the commit record and every meta row it
+        stages carry ONE stamp that orders causally across skewed writer
+        clocks."""
+        return datetime.now(timezone.utc), self._active_txn.op_id
 
     # ------------------------------------------------------------------
     # normalization (driver-side, one series)
@@ -1303,15 +1230,6 @@ class ChunkStore:
             return pd.Index(local.year, dtype="int32")
         return pd.Index(local.year * 12 + local.month - 1, dtype="int32")
 
-    def _pdf_to_sdf(self, pdf: pd.DataFrame) -> DataFrame:
-        schema = self._data_schema(pdf)
-        # createDataFrame(pandas, schema) matches positionally: reorder the
-        # frame to schema field order so attrs={'b':..,'a':..} cannot write
-        # swapped key values on a keys=('a','b') store
-        pdf = pdf[[f.name for f in schema.fields]]
-        sdf = self.spark.createDataFrame(pdf, schema=schema)
-        return nan_to_null(sdf, "value")
-
     # ------------------------------------------------------------------
     # write paths
     # ------------------------------------------------------------------
@@ -1333,13 +1251,10 @@ class ChunkStore:
         the meta frame's driver-side plan construction overlaps the data
         job instead of serially following it).
 
-        ACID-ONLY by contract: staged files are invisible until the
-        transaction commits, so ordering between the two stagings is
-        immaterial — a failure of either aborts the txn and the staged
-        orphans are vacuum-collected. The non-ACID append path must KEEP
-        its serial data-before-meta order: a crash between the two must
-        leave an invisible data orphan, never phantom meta rows pointing
-        at missing data. Callers guard on ``self._acid``.
+        Staged files are invisible until the transaction commits, so
+        ordering between the two stagings is immaterial — a failure of
+        either aborts the txn and the staged orphans are
+        vacuum-collected.
 
         ``small`` runs in the pool thread (plan construction included);
         ``big`` runs on the caller thread. If both fail, ``big``'s error
@@ -1355,115 +1270,16 @@ class ChunkStore:
             big()
             fut.result()
 
-    def _append_data(self, sdf: DataFrame | pa.Table) -> None:
-        """Append data rows. ACID: staged into the transaction (a
-        ``pyarrow.Table`` by the Arrow writer). Plain: a Spark frame,
-        appended into the hive partitions."""
-        if self._acid:
-            self._stage_into_txn(sdf, "data")
-            return
-        # every data write sorts within tasks by (keys, ts): parquet
-        # row-group min/max stats on the key columns then become tight, so
-        # a keyed read skips other series' row groups inside the partition
-        # (the property that replaces the reference's (keys, chunk) b-tree)
-        (
-            self._cast_canonical(sdf, self._data_schema())
-            .repartition("chunk_index", *self.config.keys)
-            .sortWithinPartitions(*self.config.keys, "ts")
-            .write.mode("append")
-            .partitionBy("chunk_index")
-            .parquet(self._data_path)
-        )
-
-    def _max_committed_op_id(self) -> int:
-        """Latest committed op_id from the meta log — a pyarrow
-        single-column read of a metadata-sized table, no Spark job."""
-        import pyarrow.dataset as pads
-
-        if not has_parquet(self._meta_path):
-            return -1
-        col = pads.dataset(self._meta_path).to_table(columns=["op_id"])
-        return int(col["op_id"].to_pandas().max()) if col.num_rows else -1
-
-    def _rewrite_partitions(self, sdf_new: DataFrame, drop_pred, chunks) -> None:
-        """Plain layout only: replace the partitions ``chunks``: keep
-        other rows of those partitions, drop rows matching ``drop_pred``,
-        union the new rows, dynamic-partition-overwrite. (With Delta this
-        is one MERGE.)
-
-        SINGLE-WRITER contract: the checkpoint-then-overwrite below is not
-        transactional, so concurrent writers to the same store must be
-        serialized externally. An optimistic op_id fence detects a writer
-        that committed while our keep-set was being materialized and
-        raises :class:`ConcurrentWriteError` before the overwrite can drop
-        that writer's rows (see README §operational-constraints).
-
-        ACID mode replaces all of this with a copy-on-write merge +
-        atomic commit (:meth:`_rewrite_acid_arrow` for a single series)
-        — no fence, no checkpoint, and concurrent disjoint writers both
-        survive."""
-        fence_op_id = self._max_committed_op_id()
-        existing = self.data().filter(F.col("chunk_index").isin(chunks))
-        keep = existing.filter(~drop_pred).select(*[f.name for f in self._data_schema()])
-        combined = keep.unionByName(self._cast_canonical(sdf_new, self._data_schema()))
-        # materialize before overwriting the files the plan reads from
-        combined = safe_local_checkpoint(combined)
-        latest = self._max_committed_op_id()
-        if latest != fence_op_id:
-            raise ConcurrentWriteError(
-                f"meta op_id advanced {fence_op_id} -> {latest} during "
-                f"rewrite of chunks {chunks}; aborting before the overwrite "
-                f"could drop the concurrent writer's rows"
-            )
-        (
-            combined.repartition("chunk_index", *self.config.keys)
-            .sortWithinPartitions(*self.config.keys, "ts")
-            .write.mode("overwrite")
-            .partitionBy("chunk_index")
-            .parquet(self._data_path)
-        )
-
-    #: meta-log files above which _append_meta self-compacts. Every write
-    #: appends one file and every read windows the whole log, so an
-    #: unbounded log would make the 10^5-th write pay a 10^5-file scan.
+    #: live meta files above which a commit folds in a meta compaction.
+    #: Every write stages one file and every read windows the whole log,
+    #: so an unbounded log would make the 10^5-th write pay a 10^5-file
+    #: scan.
     META_COMPACT_THRESHOLD = 64
 
     def _append_meta(self, pdf: pd.DataFrame) -> None:
-        """Append driver-built meta rows (one series' chunks, or a sync
-        page). ACID: staged by the Arrow writer, no Spark job. Plain:
-        appended by Spark, then the log self-compacts past the
-        threshold."""
-        if self._acid:
-            self._stage_into_txn(
-                pa.Table.from_pandas(pdf, preserve_index=False), "meta"
-            )
-            return
-        schema = self._meta_schema(pdf)
-        # createDataFrame(pandas, schema) matches positionally — align order
-        sdf = self.spark.createDataFrame(
-            pdf[[f.name for f in schema.fields]], schema=schema
-        )
-        sdf.coalesce(1).write.mode("append").parquet(self._meta_path)
-        self._invalidate_meta_cache()
-        self._maybe_compact_meta()
-
-    def _meta_file_count(self) -> int:
-        try:
-            return sum(
-                1 for f in os.listdir(self._meta_path) if f.endswith(".parquet")
-            )
-        except FileNotFoundError:
-            return 0
-
-    def _maybe_compact_meta(self) -> None:
-        """Collapse the meta changelog to its latest state once the log
-        grows past META_COMPACT_THRESHOLD files (log checkpoint; tombstone
-        rows survive so the change feed and watermarks stay correct)."""
-        if self._meta_file_count() <= self.META_COMPACT_THRESHOLD:
-            return
-        latest = safe_local_checkpoint(self.latest_meta())
-        latest.coalesce(1).write.mode("overwrite").parquet(self._meta_path)
-        self._invalidate_meta_cache()
+        """Stage driver-built meta rows (one series' chunks, or a sync
+        page) with the Arrow writer — no Spark job."""
+        self._stage_into_txn(pa.Table.from_pandas(pdf, preserve_index=False), "meta")
 
     _META_COLS = property(
         lambda self: [*self.config.keys, "chunk_index", "start_ts", "n_points",
@@ -1565,19 +1381,6 @@ class ChunkStore:
             .select(*self._META_COLS)
         )
 
-    def _append_meta_sdf(self, meta_sdf: DataFrame) -> None:
-        """Append a Spark-built meta frame. AQE coalesces the (metadata-
-        sized) aggregate to few files; the log self-compacts past the
-        threshold like the driver path."""
-        if self._acid:
-            self._stage_into_txn(meta_sdf, "meta")
-            return
-        self._cast_canonical(meta_sdf, self._meta_schema()).write.mode(
-            "append"
-        ).parquet(self._meta_path)
-        self._invalidate_meta_cache()
-        self._maybe_compact_meta()
-
     def _series_meta_rows(
         self, pdf: pd.DataFrame, updated_at: datetime, op_id: int
     ) -> pd.DataFrame:
@@ -1613,16 +1416,15 @@ class ChunkStore:
     ) -> None:
         """Write one series (reference set_ts, chunk_timeserie_store.py:309-373).
 
-        A single-series write runs on the driver, with no Spark job on
-        an ACID store, in every mode: the key's latest meta and (for
+        A single-series write runs on the driver, with no Spark job, in
+        every mode: the key's latest meta and (for
         ``update``) its rows in the overlapping alive chunks are read
         with pyarrow from the transaction's base snapshot; the merge
         (``new.combine_first(existing)``), the meta rows and the
         ``replace`` tombstones are built in pandas; the data file(s)
         and the meta file are staged by the Arrow writer into the same
         atomic commit. The driver holds the series plus one affected
-        data file at a time. Plain stores run the same body and hand the
-        result to the Spark writers."""
+        data file at a time."""
         if update and replace:
             raise ValueError("update and replace are mutually exclusive")
         if self.config.allow_sync and not (update or replace):
@@ -1665,17 +1467,11 @@ class ChunkStore:
             stale = self._tombstone_rows(latest.loc[alive & ~in_new], updated_at, op_id)
             meta = pd.concat([meta, stale], ignore_index=True)
         kt = tuple(attrs[k] for k in keys)
-        rows = (
-            pa.Table.from_pandas(pdf, preserve_index=False)
-            if self._acid else self._pdf_to_sdf(pdf)
-        )
+        rows = pa.Table.from_pandas(pdf, preserve_index=False)
         if in_new.any():
             # the key has rows (alive or tombstoned) in a written chunk
             self._note_dropped_keys([kt])
-            if self._acid:
-                self._rewrite_acid_arrow(rows, new_chunks)
-            else:
-                self._rewrite_partitions(rows, attrs_filter(attrs), new_chunks)
+            self._rewrite_arrow(rows, new_chunks)
         else:
             if not update and not replace:
                 # plain INSERT only: update/replace taking the append
@@ -1683,7 +1479,7 @@ class ChunkStore:
                 # the appends-never-conflict property — two concurrent
                 # chunk-disjoint updates of one key both land
                 self._note_append_keys([kt])
-            self._append_data(rows)
+            self._stage_into_txn(rows, "data")
         self._append_meta(meta)
 
     @_transactional("set_many_ts")
@@ -1694,7 +1490,7 @@ class ChunkStore:
         """Mass insert, error if any key already exists
         (reference: chunk_timeserie_store.py:418-455).
 
-        ACID concurrency note: same blind-append trade as
+        Concurrency note: same blind-append trade as
         :meth:`ingest_long` — inserts above ``APPEND_KEYS_CAP`` distinct
         series skip per-key conflict digests (warned), so concurrent
         same-key mega-inserts can land twice.
@@ -1713,7 +1509,7 @@ class ChunkStore:
         keys = tuple(keys or self.config.keys)
         if keys != self.config.keys:
             raise ValueError(f"keys must be {self.config.keys}")
-        txn_id = resolve_txn(self._acid, txn_app, txn_version)
+        txn_id = resolve_txn(txn_app, txn_version)
         if txn_id is not None:
             txn = self._active_txn
             if txn_id[1] <= txn.snapshot.app_versions.get(txn_id[0], -1):
@@ -1757,69 +1553,17 @@ class ChunkStore:
         def _stage_meta_sm() -> None:
             # aggregates the driver-built (ExistingRDD) frame — never
             # the files the data write touches, so it can overlap (§2.6)
-            self._append_meta_sdf(self._meta_sdf_for(sdf, updated_at, op_id))
+            self._stage_into_txn(self._meta_sdf_for(sdf, updated_at, op_id), "meta")
 
+        kts = [kt if isinstance(kt, tuple) else (kt,) for kt in mapping]
         if physical_any:
-            self._note_dropped_keys(
-                kt if isinstance(kt, tuple) else (kt,) for kt in mapping
-            )
-            if self._acid:
-                self._overlap_staged_writes(
-                    lambda: self._rewrite_partitions_multi(sdf), _stage_meta_sm
-                )
-            else:
-                self._rewrite_partitions_multi(sdf)
-                _stage_meta_sm()
+            self._note_dropped_keys(kts)
+            self._overlap_staged_writes(lambda: self._rewrite_spark(sdf), _stage_meta_sm)
         else:
-            self._note_append_keys(
-                kt if isinstance(kt, tuple) else (kt,) for kt in mapping
+            self._note_append_keys(kts)
+            self._overlap_staged_writes(
+                lambda: self._stage_into_txn(sdf, "data"), _stage_meta_sm
             )
-            if self._acid:
-                self._overlap_staged_writes(
-                    lambda: self._append_data(sdf), _stage_meta_sm
-                )
-            else:
-                self._append_data(sdf)
-                _stage_meta_sm()
-
-    def _rewrite_partitions_multi(self, sdf_new: DataFrame) -> None:
-        """Partition rewrite where the dropped rows are every (key-tuple,
-        chunk_index) *pair* present in the new frame. Anti-joining on keys
-        alone would erase a key's rows in every touched partition even for
-        chunks the new frame doesn't cover for that key (silent data loss
-        when a batch mixes keys across chunks).
-
-        Same SINGLE-WRITER contract and optimistic op_id fence as
-        :meth:`_rewrite_partitions` (ACID mode: copy-on-write commit
-        instead, see :meth:`_rewrite_acid`)."""
-        if self._acid:
-            self._rewrite_acid(sdf_new)
-            return
-        fence_op_id = self._max_committed_op_id()
-        cols = [f.name for f in self._data_schema()]
-        chunks = [r[0] for r in sdf_new.select("chunk_index").distinct().collect()]
-        existing = self.data().filter(F.col("chunk_index").isin(chunks))
-        sdf_new = self._cast_canonical(sdf_new, self._data_schema())
-        keep = existing.join(
-            sdf_new.select(*self.config.keys, "chunk_index").distinct(),
-            on=[*self.config.keys, "chunk_index"],
-            how="left_anti",
-        ).select(*cols)
-        combined = safe_local_checkpoint(keep.unionByName(sdf_new.select(*cols)))
-        latest = self._max_committed_op_id()
-        if latest != fence_op_id:
-            raise ConcurrentWriteError(
-                f"meta op_id advanced {fence_op_id} -> {latest} during "
-                f"rewrite of chunks {chunks}; aborting before the overwrite "
-                f"could drop the concurrent writer's rows"
-            )
-        (
-            combined.repartition("chunk_index", *self.config.keys)
-            .sortWithinPartitions(*self.config.keys, "ts")
-            .write.mode("overwrite")
-            .partitionBy("chunk_index")
-            .parquet(self._data_path)
-        )
 
     @_transactional("ingest_long")
     def ingest_long(
@@ -1838,7 +1582,7 @@ class ChunkStore:
         mode: 'insert' (error on existing keys) | 'update' (new wins,
         existing fills holes) | 'replace' (span overwrite + tombstones).
 
-        ACID concurrency note: inserts of up to ``APPEND_KEYS_CAP``
+        Concurrency note: inserts of up to ``APPEND_KEYS_CAP``
         (10,000) distinct series record per-key digests so a concurrent
         insert of the SAME series conflicts loudly. LARGER inserts
         commit as blind appends — two concurrent same-key mega-inserts
@@ -1848,7 +1592,7 @@ class ChunkStore:
         matters more than driver memory.
 
         ``(txn_app, txn_version)`` — idempotent write (Delta's ``txn``
-        action, requires ``acid=True``): a call whose version is at or
+        action): a call whose version is at or
         below the app's committed watermark returns WITHOUT writing, and
         the commit protocol refuses a racing duplicate mid-flight — in
         EVERY mode: the pre-check runs before the write regardless of
@@ -1867,7 +1611,7 @@ class ChunkStore:
         # argument guards BEFORE the replay skip (see set_many_ts)
         if self.config.allow_sync and mode == "insert":
             raise SyncGuardError("plain ingest is forbidden on a sync-enabled store")
-        txn_id = resolve_txn(self._acid, txn_app, txn_version)
+        txn_id = resolve_txn(txn_app, txn_version)
         if txn_id is not None:
             txn = self._active_txn
             if txn_id[1] <= txn.snapshot.app_versions.get(txn_id[0], -1):
@@ -1917,22 +1661,15 @@ class ChunkStore:
                 # append-key digests ride along: they are only READ at
                 # commit time (after the overlap joins), never by the
                 # data staging, so their small collect job overlaps too.
-                if self._acid:
-                    kt_rows = new_keys.limit(
-                        self.APPEND_KEYS_CAP + 1
-                    ).collect()
-                    self._note_append_keys(tuple(r) for r in kt_rows)
-                self._append_meta_sdf(
-                    self._meta_sdf_from_bounds(bounds, updated_at, op_id)
+                kt_rows = new_keys.limit(self.APPEND_KEYS_CAP + 1).collect()
+                self._note_append_keys(tuple(r) for r in kt_rows)
+                self._stage_into_txn(
+                    self._meta_sdf_from_bounds(bounds, updated_at, op_id), "meta"
                 )
 
-            if self._acid:
-                self._overlap_staged_writes(
-                    lambda: self._append_data(dense), _stage_meta
-                )
-            else:
-                self._append_data(dense)
-                _stage_meta()
+            self._overlap_staged_writes(
+                lambda: self._stage_into_txn(dense, "data"), _stage_meta
+            )
             return
 
         if mode == "update" and n_existing:
@@ -1960,11 +1697,11 @@ class ChunkStore:
             )
 
         dense = safe_local_checkpoint(dense)
-        if self._acid:
-            # key digests from the (checkpointed, metadata-sized) bounds
-            # frame — no extra data scan
-            kt_rows = new_keys.limit(self.APPEND_KEYS_CAP + 1).collect()
-            self._note_dropped_keys(tuple(r) for r in kt_rows)
+        # key digests from the (checkpointed, metadata-sized) bounds frame
+        # — no extra data scan
+        kt_rows = new_keys.limit(self.APPEND_KEYS_CAP + 1).collect()
+        self._note_dropped_keys(tuple(r) for r in kt_rows)
+
         def _stage_meta_rw() -> None:
             # aggregates the CHECKPOINTED dense frame (and the
             # checkpointed stale tombstones) — never the files the
@@ -1972,15 +1709,9 @@ class ChunkStore:
             meta_sdf = self._meta_sdf_for(dense, updated_at, op_id)
             if stale_sdf is not None:
                 meta_sdf = meta_sdf.unionByName(stale_sdf)
-            self._append_meta_sdf(meta_sdf)
+            self._stage_into_txn(meta_sdf, "meta")
 
-        if self._acid:
-            self._overlap_staged_writes(
-                lambda: self._rewrite_partitions_multi(dense), _stage_meta_rw
-            )
-        else:
-            self._rewrite_partitions_multi(dense)
-            _stage_meta_rw()
+        self._overlap_staged_writes(lambda: self._rewrite_spark(dense), _stage_meta_rw)
 
     # ------------------------------------------------------------------
     # read paths
@@ -2101,13 +1832,10 @@ class ChunkStore:
 
         pair = [*self.config.keys, "chunk_index"]
         cols = [*pair, "op_id", "is_deleted"]
-        if self._acid:
-            meta = [
-                os.path.join(self.path, en["path"])
-                for en in snap.entries_overlapping("meta", lo, hi)
-            ]
-        else:
-            meta = self._meta_path if has_parquet(self._meta_path) else []
+        meta = [
+            os.path.join(self.path, en["path"])
+            for en in snap.entries_overlapping("meta", lo, hi)
+        ]
         if not meta:
             return pd.DataFrame({c: [] for c in cols}).astype({"is_deleted": bool})
         filt = reduce(
@@ -2147,26 +1875,22 @@ class ChunkStore:
         pair = [*self.config.keys, "chunk_index"]
         cols = [*pair, "ts", "value"]
         chunks = sorted(int(c) for c in alive["chunk_index"].unique())
-        if self._acid:
-            def holds_alive_chunk(en) -> bool:
-                cmin, cmax = en.get("chunk_min"), en.get("chunk_max")
-                if cmin is None or cmax is None:
-                    return True
-                i = bisect.bisect_left(chunks, cmin)
-                return i < len(chunks) and chunks[i] <= cmax
 
-            kv = key_equality_values({f"{k}__in": v for k, v in in_sets.items()})
-            entries = [
-                en for en in snap.entries_overlapping("data", chunks[0], chunks[-1])
-                if holds_alive_chunk(en) and entry_may_match_keys(en, kv)
-            ]
-            if not entries:
-                return pd.DataFrame(columns=cols)
-            data = pads.dataset([os.path.join(self.path, en["path"]) for en in entries])
-        else:
-            if not has_parquet(self._data_path):
-                return pd.DataFrame(columns=cols)
-            data = pads.dataset(self._data_path, partitioning="hive")
+        def holds_alive_chunk(en) -> bool:
+            cmin, cmax = en.get("chunk_min"), en.get("chunk_max")
+            if cmin is None or cmax is None:
+                return True
+            i = bisect.bisect_left(chunks, cmin)
+            return i < len(chunks) and chunks[i] <= cmax
+
+        kv = key_equality_values({f"{k}__in": v for k, v in in_sets.items()})
+        entries = [
+            en for en in snap.entries_overlapping("data", chunks[0], chunks[-1])
+            if holds_alive_chunk(en) and entry_may_match_keys(en, kv)
+        ]
+        if not entries:
+            return pd.DataFrame(columns=cols)
+        data = pads.dataset([os.path.join(self.path, en["path"]) for en in entries])
 
         # the files hold naive UTC instants (Spark session=UTC), so the
         # UTC bounds go in naive, as the file's type
@@ -2308,9 +2032,9 @@ class ChunkStore:
         (reference: chunk_timeserie_store.py:519-539).
 
         Pruned like the reference: the max alive chunk comes from the cached
-        metadata-sized ``latest_meta``, then only the last two chunk
-        partitions are scanned (``chunk_index`` is the partition column, so
-        the scan reads two directories regardless of history length). The
+        metadata-sized ``latest_meta``, then only the last two chunks are
+        read (the ``chunk_index`` predicate reaches the parquet scan, whose
+        row-group stats skip the older chunks). The
         full-history scan only runs in the pathological case where both tail
         chunks hold nothing but NaN padding."""
         validate_filter_keys(filters, self.config.keys)
@@ -2429,8 +2153,8 @@ class ChunkStore:
         A keyed delete — ``filters`` pins every key column with plain
         equality or ``__in`` — runs on the driver: the keys' alive chunks
         come from a pyarrow read of the meta log and their tombstone rows
-        are staged as one meta file, with no Spark job on an ACID store.
-        Any other filter tombstones with a distributed Spark job."""
+        are staged as one meta file, with no Spark job. Any other filter
+        tombstones with a distributed Spark job."""
         validate_filter_keys(filters, self.config.keys)
         if not keep_tracking and self.config.allow_sync:
             raise SyncGuardError("untracked delete is forbidden on a sync-enabled store")
@@ -2454,61 +2178,34 @@ class ChunkStore:
             n = tomb.count()
             if n == 0:
                 return 0
-            self._append_meta_sdf(tomb)
+            self._stage_into_txn(tomb, "meta")
             return n
-        # untracked: physically drop data rows and meta entries. This is a
-        # FULL-table rewrite: static overwrite mode so partitions that became
-        # empty are removed (dynamic mode would leave their files visible).
+        # untracked: physically drop data rows and meta entries — a
+        # copy-on-write full rewrite: stage kept rows, remove every live
+        # file, declare touched="all" — any interleaved commit is a
+        # genuine conflict, detected atomically at commit time
         pred = attrs_filter(filters)
-        if self._acid:
-            # copy-on-write full rewrite: stage kept rows, remove every
-            # live file, declare touched="all" — any interleaved commit
-            # is a genuine conflict, detected atomically at commit time
-            n = victims.count()
-            txn = self._active_txn
-            self._stage_into_txn(self.data().filter(~pred), "data")
-            self._stage_into_txn(self.meta().filter(~pred), "meta")
-            txn.removes["data"].extend(txn.snapshot.files["data"])
-            txn.removes["meta"].extend(txn.snapshot.files["meta"])
-            txn.touch("all")
-            return n
-        fence_op_id = self._max_committed_op_id()
         n = victims.count()
-        remaining_data = safe_local_checkpoint(self.data().filter(~pred))
-        remaining_meta = safe_local_checkpoint(self.meta().filter(~pred))
-        # op_id fence: the checkpoints above materialized a snapshot; a
-        # writer committing since would have its rows dropped by the
-        # overwrites below. Residual window: a writer landing between this
-        # check and the overwrites can still be lost (single-writer
-        # contract, see ConcurrentWriteError).
-        if self._max_committed_op_id() != fence_op_id:
-            raise ConcurrentWriteError(
-                "meta op_id advanced during untracked delete; aborting "
-                "before the overwrite could drop the concurrent writer's rows"
-            )
-        (
-            remaining_data.repartition("chunk_index", *self.config.keys)
-            .sortWithinPartitions(*self.config.keys, "ts")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("chunk_index")
-            .parquet(self._data_path)
-        )
-        remaining_meta.coalesce(1).write.mode("overwrite").parquet(self._meta_path)
-        self._invalidate_meta_cache()
+        txn = self._active_txn
+        self._stage_into_txn(self.data().filter(~pred), "data")
+        self._stage_into_txn(self.meta().filter(~pred), "meta")
+        txn.removes["data"].extend(txn.snapshot.files["data"])
+        txn.removes["meta"].extend(txn.snapshot.files["meta"])
+        txn.touch("all")
         return n
-
     def describe_chunks(self) -> DataFrame:
-        """Partition health audit — the skew/small-file report an operator
+        """Chunk health audit — the skew/small-file report an operator
         reads before resizing ``spark.sql.files.maxPartitionBytes`` or
-        scheduling :meth:`compact` / :meth:`delete_before` at scale.
+        scheduling :meth:`optimize` / :meth:`delete_before` at scale.
 
-        One row per ``chunk_index`` partition: alive/tombstoned series
-        counts, total grid points, the partition's file count and bytes
-        (from the FileSystem listing — no data scan; the whole frame is
-        metadata-sized). ``avg_bytes_per_file`` exposes the small-file
-        problem directly: many tiny files per partition means the write
-        path is over-parallelized for the data volume.
+        One row per ``chunk_index``: alive/tombstoned series counts,
+        total grid points, the chunk's live file count and bytes (from
+        the manifest — no data scan; the whole frame is metadata-sized).
+        Each live file is attributed to its ``chunk_min``
+        (range-partitioned staging makes files effectively single-chunk,
+        so this is exact in practice). ``avg_bytes_per_file`` exposes the
+        small-file problem directly: many tiny files per chunk means the
+        write path is over-parallelized for the data volume.
         """
         latest = self.latest_meta()
         agg = latest.groupBy("chunk_index").agg(
@@ -2517,40 +2214,15 @@ class ChunkStore:
             F.sum(F.when(~F.col("is_deleted"), F.col("n_points")).otherwise(0))
             .alias("n_points"),
         )
-        rows = []
-        if self._acid:
-            # manifest-driven report: each live file is attributed to its
-            # chunk_min (range-partitioned staging makes files effectively
-            # single-chunk, so this is exact in practice)
-            per_chunk: dict[int, list[int]] = {}
-            for e in self._snapshot().files["data"]:
-                ci = e.get("chunk_min")
-                if ci is None:
-                    continue
-                size = os.path.getsize(os.path.join(self.path, e["path"]))
-                nf, nb = per_chunk.get(int(ci), (0, 0))
-                per_chunk[int(ci)] = (nf + 1, nb + size)
-            rows = [(ci, nf, nb) for ci, (nf, nb) in per_chunk.items()]
-        else:
-            jvm = self.spark._jvm
-            hconf = self.spark._jsc.hadoopConfiguration()
-            root = jvm.org.apache.hadoop.fs.Path(self._data_path)
-            fs = root.getFileSystem(hconf)
-            if fs.exists(root):
-                for st in fs.listStatus(root):
-                    name = st.getPath().getName()
-                    if not name.startswith("chunk_index="):
-                        continue
-                    try:
-                        idx = int(name.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    n_files, n_bytes = 0, 0
-                    for f in fs.listStatus(st.getPath()):
-                        if f.isFile() and not f.getPath().getName().startswith("_"):
-                            n_files += 1
-                            n_bytes += f.getLen()
-                    rows.append((idx, n_files, n_bytes))
+        per_chunk: dict[int, tuple[int, int]] = {}
+        for e in self._snapshot().files["data"]:
+            ci = e.get("chunk_min")
+            if ci is None:
+                continue
+            size = os.path.getsize(os.path.join(self.path, e["path"]))
+            nf, nb = per_chunk.get(int(ci), (0, 0))
+            per_chunk[int(ci)] = (nf + 1, nb + size)
+        rows = [(ci, nf, nb) for ci, (nf, nb) in per_chunk.items()]
         files = self.spark.createDataFrame(
             rows or [], "chunk_index int, n_files long, n_bytes long"
         )
@@ -2574,17 +2246,12 @@ class ChunkStore:
 
         ``keep_tracking=True`` tombstones them through the normal meta log
         (sync replicas propagate the deletion). ``keep_tracking=False`` is
-        the 100 TB retention path: victims are WHOLE ``chunk_index``
-        partitions, so the data files are dropped directly via the Hadoop
-        FileSystem — O(dropped partitions) metadata work, no table scan or
-        rewrite (unlike filter-based untracked ``delete``, which must
-        rewrite the full table). Forbidden on sync-enabled stores. Guarded
-        by the same op_id fence as ``_rewrite_partitions``, checked twice:
-        before the first directory drop (abort touches nothing) and again
-        immediately before the meta overwrite (abort leaves the meta log
-        intact; already-dropped partitions read empty until a re-run). A
-        writer landing inside the final check→overwrite window can still
-        lose its meta row — the residual single-writer contract.
+        the 100 TB retention path, file-granular under the manifest: files
+        entirely below the cutoff are dropped by a log entry alone (no
+        IO), boundary-straddling files are copy-on-write rewritten, and
+        the meta table is rewritten to the surviving rows — one atomic
+        commit, ``touched="all"`` because the sweep's keep-set spans the
+        whole log. Forbidden on sync-enabled stores.
         """
         from holcstore_spark.functions.scalar import chunk_index_of
 
@@ -2601,103 +2268,43 @@ class ChunkStore:
             n = tomb.count()
             if n == 0:
                 return 0
-            self._append_meta_sdf(tomb)
+            self._stage_into_txn(tomb, "meta")
             return n
         if self.config.allow_sync:
             raise SyncGuardError(
                 "untracked delete_before is forbidden on a sync-enabled store"
             )
-        if self._acid:
-            # file-granular retention under the manifest: files entirely
-            # below the cutoff are dropped by a log entry alone (no IO);
-            # boundary-straddling files are copy-on-write rewritten. The
-            # meta table is rewritten to the surviving rows. One atomic
-            # commit; touched="all" because the sweep's keep-set spans
-            # the whole log.
-            txn = self._active_txn
-            n = (
-                self.meta()
-                .filter(F.col("chunk_index") < cutoff_idx)
-                .select(*self.config.keys, "chunk_index")
-                .distinct()
-                .count()
-            )
-            full, straddle = [], []
-            for e in txn.snapshot.files["data"]:
-                cmin, cmax = e.get("chunk_min"), e.get("chunk_max")
-                if cmax is not None and cmax < cutoff_idx:
-                    full.append(e)
-                elif cmin is None or cmin < cutoff_idx:
-                    straddle.append(e)
-            if n == 0 and not full and not straddle:
-                return 0
-            if straddle:
-                paths = [os.path.join(self.path, e["path"]) for e in straddle]
-                kept = (
-                    self.spark.read.schema(self._data_schema())
-                    .parquet(*paths)
-                    .filter(F.col("chunk_index") >= cutoff_idx)
-                )
-                self._stage_into_txn(kept, "data")
-            txn.removes["data"].extend(full + straddle)
-            self._stage_into_txn(
-                self.meta().filter(F.col("chunk_index") >= cutoff_idx), "meta"
-            )
-            txn.removes["meta"].extend(txn.snapshot.files["meta"])
-            txn.touch("all")
-            return n
-        fence_op_id = self._max_committed_op_id()
-        # count meta chunk states being removed (incl. already-tombstoned
-        # ones — their files and log rows go too); metadata-sized
-        meta = self.meta()
-        n = meta.filter(F.col("chunk_index") < cutoff_idx).select(
-            *self.config.keys, "chunk_index"
-        ).distinct().count()
-        # partition dirs strictly below the cutoff index, from the FS
-        # listing — no data scan
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        data_path = jvm.org.apache.hadoop.fs.Path(self._data_path)
-        fs = data_path.getFileSystem(hconf)
-        victims_dirs = []
-        if fs.exists(data_path):
-            for st in fs.listStatus(data_path):
-                name = st.getPath().getName()
-                if name.startswith("chunk_index="):
-                    try:
-                        idx = int(name.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if idx < cutoff_idx:
-                        victims_dirs.append(st.getPath())
-        if not victims_dirs and n == 0:
-            return 0
-        remaining_meta = safe_local_checkpoint(
-            meta.filter(F.col("chunk_index") >= cutoff_idx)
+        txn = self._active_txn
+        n = (
+            self.meta()
+            .filter(F.col("chunk_index") < cutoff_idx)
+            .select(*self.config.keys, "chunk_index")
+            .distinct()
+            .count()
         )
-        if self._max_committed_op_id() != fence_op_id:
-            raise ConcurrentWriteError(
-                f"meta op_id advanced during delete_before({cutoff!r}); "
-                "aborting before any partition was dropped"
+        full, straddle = [], []
+        for e in txn.snapshot.files["data"]:
+            cmin, cmax = e.get("chunk_min"), e.get("chunk_max")
+            if cmax is not None and cmax < cutoff_idx:
+                full.append(e)
+            elif cmin is None or cmin < cutoff_idx:
+                straddle.append(e)
+        if n == 0 and not full and not straddle:
+            return 0
+        if straddle:
+            paths = [os.path.join(self.path, e["path"]) for e in straddle]
+            kept = (
+                self.spark.read.schema(self._data_schema())
+                .parquet(*paths)
+                .filter(F.col("chunk_index") >= cutoff_idx)
             )
-        for p in victims_dirs:
-            fs.delete(p, True)
-        # second fence immediately before the meta overwrite: a writer
-        # committing during the directory sweep would otherwise have its
-        # meta row silently dropped by the overwrite (orphaning its data
-        # files). Aborting here leaves the meta log INTACT — the victim
-        # partitions' data dirs are already gone, so their still-alive
-        # meta rows read as empty until a re-run finishes the sweep; that
-        # residual (and the narrower check→overwrite window that remains)
-        # is part of the documented single-writer contract.
-        if self._max_committed_op_id() != fence_op_id:
-            raise ConcurrentWriteError(
-                f"meta op_id advanced during delete_before({cutoff!r}) "
-                "partition sweep; meta log left untouched — re-run "
-                "delete_before to finish the sweep"
-            )
-        remaining_meta.coalesce(1).write.mode("overwrite").parquet(self._meta_path)
-        self._invalidate_meta_cache()
+            self._stage_into_txn(kept, "data")
+        txn.removes["data"].extend(full + straddle)
+        self._stage_into_txn(
+            self.meta().filter(F.col("chunk_index") >= cutoff_idx), "meta"
+        )
+        txn.removes["meta"].extend(txn.snapshot.files["meta"])
+        txn.touch("all")
         return n
 
     @_transactional("compact")
@@ -2705,71 +2312,53 @@ class ChunkStore:
         """Physically drop tombstoned data and collapse the meta log to its
         latest state (the Parquet analogue of VACUUM + log checkpoint).
 
-        ACID mode: one atomic commit replacing every live file with the
-        compacted state (MVCC — readers of the old snapshot are
-        unaffected; staged old files linger until a future GC sweep)."""
-        if self._acid:
-            txn = self._active_txn
-            latest = self.latest_meta()
-            alive = latest.filter(~F.col("is_deleted")).select(
-                *self.config.keys, "chunk_index"
-            )
-            data = self.data().join(
-                F.broadcast(alive),
-                on=[*self.config.keys, "chunk_index"],
-                how="left_semi",
-            )
-            self._stage_into_txn(data, "data")
-            self._stage_into_txn(latest, "meta")
-            txn.removes["data"].extend(txn.snapshot.files["data"])
-            txn.removes["meta"].extend(txn.snapshot.files["meta"])
-            txn.touch("all")
-            # the staged data is a SUBSET of the removed data (alive
-            # semi-join), so equal manifest row counts prove the rewrite
-            # is row-preserving — mark it `compacting` and the change
-            # feed skips it at manifest level (Delta dataChange=false).
-            # A compact that physically drops tombstoned rows changes
-            # the row set and must stream as deletes, so it stays
-            # unmarked and cancels row-level downstream as before.
-            # The proof needs REAL counts on both sides: FileEntry
-            # documents rows=None as "stats unavailable" (hand-built /
-            # imported entries), and `None or 0` would alias such an
-            # entry to 0 — a tombstone-dropping compact over stats-less
-            # files could then be misclassified as row-preserving and
-            # silently skipped by the change feed, losing its delete
-            # rows (ADVICE r9). Any None on either side → stay unmarked
-            # and let row-level cancellation handle it.
-            from holcstore_spark.sources.txlog import exact_rows
-
-            added_rows = exact_rows(txn.adds["data"])
-            removed_rows = exact_rows(txn.snapshot.files["data"])
-            txn.compacting = (
-                added_rows is not None
-                and removed_rows is not None
-                and added_rows == removed_rows
-            )
-            return
-        latest = safe_local_checkpoint(self.latest_meta())
-        alive = latest.filter(~F.col("is_deleted")).select(*self.config.keys, "chunk_index")
+        One atomic commit replacing every live file with the compacted
+        state (MVCC — readers of the old snapshot are unaffected; the old
+        files linger until :meth:`vacuum`)."""
+        txn = self._active_txn
+        latest = self.latest_meta()
+        alive = latest.filter(~F.col("is_deleted")).select(
+            *self.config.keys, "chunk_index"
+        )
         data = self.data().join(
-            F.broadcast(alive), on=[*self.config.keys, "chunk_index"], how="left_semi"
+            F.broadcast(alive),
+            on=[*self.config.keys, "chunk_index"],
+            how="left_semi",
         )
-        data = safe_local_checkpoint(data)
-        (
-            data.repartition("chunk_index", *self.config.keys)
-            .sortWithinPartitions(*self.config.keys, "ts")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")  # full rewrite: drop emptied partitions
-            .partitionBy("chunk_index")
-            .parquet(self._data_path)
+        self._stage_into_txn(data, "data")
+        self._stage_into_txn(latest, "meta")
+        txn.removes["data"].extend(txn.snapshot.files["data"])
+        txn.removes["meta"].extend(txn.snapshot.files["meta"])
+        txn.touch("all")
+        # the staged data is a SUBSET of the removed data (alive
+        # semi-join), so equal manifest row counts prove the rewrite
+        # is row-preserving — mark it `compacting` and the change
+        # feed skips it at manifest level (Delta dataChange=false).
+        # A compact that physically drops tombstoned rows changes
+        # the row set and must stream as deletes, so it stays
+        # unmarked and cancels row-level downstream as before.
+        # The proof needs REAL counts on both sides: FileEntry
+        # documents rows=None as "stats unavailable" (hand-built /
+        # imported entries), and `None or 0` would alias such an
+        # entry to 0 — a tombstone-dropping compact over stats-less
+        # files could then be misclassified as row-preserving and
+        # silently skipped by the change feed, losing its delete
+        # rows (ADVICE r9). Any None on either side → stay unmarked
+        # and let row-level cancellation handle it.
+        from holcstore_spark.sources.txlog import exact_rows
+
+        added_rows = exact_rows(txn.adds["data"])
+        removed_rows = exact_rows(txn.snapshot.files["data"])
+        txn.compacting = (
+            added_rows is not None
+            and removed_rows is not None
+            and added_rows == removed_rows
         )
-        latest.coalesce(1).write.mode("overwrite").parquet(self._meta_path)
-        self._invalidate_meta_cache()
 
     @_transactional("optimize")
     def optimize(self, min_files: int = 4, max_chunks: int = 64) -> int:
-        """Incremental small-file binpack (Delta ``OPTIMIZE`` analogue,
-        ACID only). ``compact()`` is a full-table rewrite — the right
+        """Incremental small-file binpack (Delta ``OPTIMIZE`` analogue).
+        ``compact()`` is a full-table rewrite — the right
         tool for physically dropping tombstoned rows, but an O(table)
         job a 100 TB store cannot afford for routine small-file
         hygiene (and its ``touched='all'`` serializes against every
@@ -2792,11 +2381,6 @@ class ChunkStore:
         Files without exact manifest stats (``rows=None`` or a
         multi-chunk span) are left alone: the per-chunk grouping and
         the row-preservation proof both need tight stats."""
-        if not self._acid:
-            raise ValueError(
-                "optimize() requires acid=True (plain stores rewrite "
-                "the whole table: use compact())"
-            )
         from holcstore_spark.sources.txlog import (
             binpack_candidates,
             exact_rows,
@@ -2836,7 +2420,7 @@ class ChunkStore:
     def vacuum(
         self, retention_seconds: float = 3600.0, deep: bool = False
     ) -> int:
-        """ACID-mode garbage collection: physically delete files that
+        """Garbage collection: physically delete files that
         are no longer referenced and older than ``retention_seconds``.
         The retention window is the same safety Delta's VACUUM retention
         gives: a concurrent in-flight writer's freshly STAGED (not yet
@@ -2858,14 +2442,12 @@ class ChunkStore:
         markers, stale ``.tmp-`` log artifacts, and commit records
         already summarized by the latest manifest checkpoint (giving up
         snapshot-as-of below that horizon, Delta log-retention style).
-        Returns the number of filesystem entries removed. No-op on
-        plain stores; refused on time-travel views (it would reclaim
-        files and log history the pinned snapshot — and any other
-        as-of holder — still references)."""
+        Returns the number of filesystem entries removed. Refused on
+        time-travel views (it would reclaim files and log history the
+        pinned snapshot — and any other as-of holder — still
+        references)."""
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only (vacuum refused)")
-        if not self._acid:
-            return 0
         return self._txlog.vacuum_files(retention_seconds, deep=deep)
 
     # ------------------------------------------------------------------
@@ -2922,42 +2504,34 @@ class ChunkStore:
     @_transactional("import_chunks_sdf")
     def import_chunks_sdf(self, meta_rows: pd.DataFrame, data_sdf: DataFrame | None) -> None:
         """Atomically apply exported chunks with the *server's* stamps
-        (reference: chunk_timeserie_store.py:633-695). Data lands first,
-        meta (the watermark carrier) last — a crash in between re-imports
-        idempotently on the next pull. ``meta_rows`` is page-sized (driver
-        pandas is fine); the data frame stays distributed end-to-end."""
+        (reference: chunk_timeserie_store.py:633-695): the rewritten data
+        and the meta rows (the watermark carrier) publish in ONE commit.
+        ``meta_rows`` is page-sized (driver pandas is fine); the data
+        frame stays distributed end-to-end."""
         if len(meta_rows) == 0:
             return
         for col in ("updated_at",):
             meta_rows[col] = pd.to_datetime(meta_rows[col], utc=True)
         if data_sdf is not None:
-            if self._acid:
-                self._note_dropped_keys(
-                    meta_rows[list(self.config.keys)]
-                    .drop_duplicates()
-                    .itertuples(index=False)
-                )
-            self._rewrite_partitions_multi(data_sdf)
+            self._note_dropped_keys(
+                meta_rows[list(self.config.keys)]
+                .drop_duplicates()
+                .itertuples(index=False)
+            )
+            self._rewrite_spark(data_sdf)
         self._append_meta(meta_rows)
 
     def has_data(self) -> bool:
-        """Whether any committed data rows exist — layout-aware (the
-        plain store checks the hive data dir; ACID stores keep files
-        under ``files/`` governed by the manifest, so a path check would
-        always be False there)."""
-        if self._acid:
-            return bool(self._snapshot().files["data"])
-        return has_parquet(self._data_path)
+        """Whether any committed data file exists (from the manifest)."""
+        return bool(self._snapshot().files["data"])
 
     @_transactional("append_import")
     def append_import(self, data_sdf: DataFrame, meta_sdf: DataFrame) -> None:
         """Bulk sync landing: append raw data rows and their meta rows
-        (the watermark carrier) in one operation — on ACID stores both
-        register in ONE atomic commit, closing the bootstrap pull's
-        data-landed-but-no-watermark crash window; plain stores keep the
-        documented data-first/meta-last idempotent-reimport ordering."""
-        self._append_data(data_sdf)
-        self._append_meta_sdf(meta_sdf)
+        (the watermark carrier) in ONE atomic commit, so a crashed
+        bootstrap pull never leaves data landed without its watermark."""
+        self._stage_into_txn(data_sdf, "data")
+        self._stage_into_txn(meta_sdf, "meta")
 
     def import_chunks(self, meta_rows: pd.DataFrame, data_rows: pd.DataFrame) -> None:
         """Pandas-frame twin of :meth:`import_chunks_sdf` — the wire-format

@@ -430,7 +430,7 @@ class ForgetMixin:
         (the tombstone simply pre-forgets them)."""
         from holcstore_spark.sources.txlog import TxLog, resolve_txn
 
-        txn_id = resolve_txn(True, txn_app, txn_version)
+        txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
         if txn_id is not None and (
             txn_id[1] <= snap.app_versions.get(txn_id[0], -1)

@@ -111,48 +111,13 @@ def release_local_checkpoint(df: DataFrame) -> None:
 
 
 def has_parquet(path: str) -> bool:
-    """True when ``path`` holds at least one parquet data file.
-
-    Emptied-by-rewrite tables keep their directory (with only _SUCCESS)
-    but have no footers to infer a schema from — stores treat that as the
-    empty frame instead of failing inference.
-    """
+    """True when ``path`` holds at least one parquet data file (a plain
+    layout directory emptied by a rewrite keeps only ``_SUCCESS``)."""
     for _root, _dirs, files in os.walk(path):
         if any(f.endswith(".parquet") for f in files):
             return True
     return False
 
-def sum_readable_footers(path: str) -> int:
-    """Total row count across the readable parquet footers under
-    ``path``, warning per unreadable file instead of failing — the
-    fallback the REWRITE_ROWS_CAP guards use when pyarrow dataset
-    discovery chokes on one corrupt / partially-written file (a single
-    bad file next to 100M healthy rows must neither crash the write
-    nor silently disable the cap)."""
-    import warnings
-
-    import pyarrow.parquet as pq
-
-    total = 0
-    for root, dirs, files in os.walk(path):
-        # mirror pyarrow dataset discovery's ignore_prefixes ('.', '_'):
-        # the primary counter never sees staged/tx-log/hidden dirs, so
-        # the fallback must not either — over-counting not-yet-vacuumed
-        # dead files would spuriously trip REWRITE_ROWS_CAP (ADVICE r12)
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for f in files:
-            if not f.endswith(".parquet") or f.startswith((".", "_")):
-                continue
-            fp = os.path.join(root, f)
-            try:
-                total += pq.ParquetFile(fp).metadata.num_rows
-            except Exception as exc:  # ArrowInvalid, OSError, ...
-                warnings.warn(
-                    f"unreadable parquet footer {fp} ({exc}); "
-                    "counted as 0 rows in the rewrite-cap check",
-                    stacklevel=2,
-                )
-    return total
 
 def claim_file_first_wins(target: str, payload: str) -> str:
     """Atomically claim ``target`` with ``payload`` — FIRST writer wins

@@ -12,7 +12,9 @@ This store targets modest catalogs (the reference's use) — writes that must
 remove rows rewrite whole table/tenant scopes; the scale path is ChunkStore.
 ``REWRITE_ROWS_CAP`` turns that contract into a loud error: rewrites of
 scopes beyond the cap refuse with a ChunkStore pointer instead of silently
-going O(table) per call. Partitioned by ``client_id`` so tenant reads prune.
+going O(table) per call. Files are governed by the transaction log
+(sources/txlog.py): ``client_id`` plays the manifest's chunk role, so a
+tenant read opens only that tenant's files.
 """
 
 from __future__ import annotations
@@ -31,7 +33,6 @@ from holcstore_spark.operators.grid import completeness_holes
 from holcstore_spark.operators.intervals import Range
 from holcstore_spark.operators.overlay import delayed, overlay_merge
 from holcstore_spark.plans.predicates import attrs_filter, order_cols
-from holcstore_spark.sources.io_util import has_parquet, safe_local_checkpoint
 
 
 _BASE_FIELDS = [
@@ -43,26 +44,6 @@ _BASE_FIELDS = [
     ("ts_num", T.DoubleType()),
     ("value", T.DoubleType()),
 ]
-
-
-def _resolve_acid(path: str, acid: bool | None) -> bool:
-    """Layout resolution for the config-less stores (KeyValueStore /
-    AttrStore): explicit flag wins; ``None`` keeps an existing store's
-    detected layout — a ``_txlog`` dir marks ACID (checked FIRST: ACID
-    stores also hold parquet under ``files/``), any other EXISTING
-    directory marks the plain overwrite layout (an emptied-by-rewrite
-    plain store keeps its directory with no parquet footers — flipping
-    it to ACID on reopen would split-brain a concurrent plain handle;
-    ACID stores always carry ``_txlog`` from their first open, so the
-    directory's mere existence is a reliable plain marker) — and
-    defaults genuinely NEW stores (no directory yet) to ACID."""
-    if acid is not None:
-        return bool(acid)
-    if os.path.isdir(os.path.join(path, "_txlog")):
-        return True
-    if os.path.isdir(path):
-        return False
-    return True
 
 
 class EdgeMemoryError(Exception):
@@ -82,32 +63,25 @@ class KeyValueStore:
     max_edge_rows: int = 10_000_000
 
     def __init__(self, spark: SparkSession, path: str,
-                 attr_cols: tuple[str, ...] = (), acid: bool | None = None):
+                 attr_cols: tuple[str, ...] = ()):
         """``attr_cols``: optional extra indexation columns (reference:
         ``attributes_to_set`` / subclassed model fields, README.md:199-204).
         They are string-typed."""
         from holcstore_spark.session import ensure_engine_conf
+        from holcstore_spark.sources.txlog import open_txlog
 
         ensure_engine_conf(spark)
         self.spark = spark
         self.path = path
         self.attr_cols = tuple(attr_cols)
-        #: ``acid=True`` swaps the per-client overwrite layout for the
-        #: shared file-manifest transaction log (sources/txlog.py):
+        #: the shared file-manifest transaction log (sources/txlog.py):
         #: client_id plays the chunk role (per-file client range drives
         #: file skipping and the touched set), prm the key role (digests
         #: let different-prm writers of one client commit concurrently,
         #: while two concurrent versioned appends of the SAME prm — which
-        #: would compute the same next version — conflict loudly).
-        #: ``None`` (default) keeps an existing store's layout (``_txlog``
-        #: dir → ACID, plain parquet → plain) and creates NEW stores as
-        #: ACID; opting down to plain takes an explicit ``acid=False``.
-        self._acid = _resolve_acid(path, acid)
+        #: would compute the same next version — conflict loudly)
+        self._txlog = open_txlog(path)
         self._pinned_snapshot = None  # set on time_travel() views
-        if self._acid:
-            from holcstore_spark.sources.txlog import TxLog
-
-            self._txlog = TxLog(path)
 
     # ------------------------------------------------------------------
     def _schema(self) -> T.StructType:
@@ -115,32 +89,28 @@ class KeyValueStore:
         fields += [T.StructField(a, T.StringType()) for a in self.attr_cols]
         return T.StructType(fields)
 
+    def _read_snapshot(self):
+        """The snapshot reads serve: the pinned one on time-travel views,
+        else the current one."""
+        if self._pinned_snapshot is not None:
+            return self._pinned_snapshot
+        return self._txlog.snapshot()
+
     def df(self) -> DataFrame:
-        if self._acid:
-            if self._pinned_snapshot is not None:
-                return self._df_at(self._pinned_snapshot)
-            return self._df_at(self._txlog.snapshot())
-        # a store fully emptied by clear_all() keeps its directory but has no
-        # parquet footers to infer from — treat it as the empty frame
-        if not has_parquet(self.path):
-            return self.spark.createDataFrame([], self._schema())
-        return self.spark.read.parquet(self.path)
+        return self._df_at(self._read_snapshot())
 
     def time_travel(self, version: int) -> "KeyValueStore":
-        """Read-only view of the store AS OF a committed log version
-        (ACID only; see ChunkStore.time_travel for the availability
-        window vs vacuum/prune)."""
-        if not self._acid:
-            raise ValueError("time_travel requires an ACID store (acid=True)")
+        """Read-only view of the store AS OF a committed log version (see
+        ChunkStore.time_travel for the availability window vs
+        vacuum/prune)."""
         snap = self._txlog.snapshot_exact(version)
-        view = KeyValueStore(self.spark, self.path, self.attr_cols, acid=True)
+        view = KeyValueStore(self.spark, self.path, self.attr_cols)
         view.max_edge_rows = self.max_edge_rows  # keep instance overrides
         view._pinned_snapshot = snap
         return view
 
     def _pin(self):
-        """Snapshot captured ONCE at mutation start (ACID only; None on
-        the plain layout). Every read a write op performs — existence,
+        """Snapshot captured ONCE at mutation start. Every read a write op performs — existence,
         next version, the keep-set — and the commit's base_version come
         from THIS snapshot, so a commit interleaving between the read
         and our commit is at a version ABOVE our base and gets walked by
@@ -149,31 +119,25 @@ class KeyValueStore:
         advertised append_keys/dropped_keys protection."""
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only")
-        return self._txlog.snapshot() if self._acid else None
+        return self._txlog.snapshot()
 
     def _df_at(self, snap) -> DataFrame:
-        if snap is None:
-            return self.df()
         files = snap.paths("data", self.path)
         if not files:
             return self.spark.createDataFrame([], self._schema())
         return self.spark.read.schema(self._schema()).parquet(*files)
 
     def _df_pruned(self, client_id: int | None, prms: list | None) -> DataFrame:
-        """Manifest-stats pruned read (ACID): ``client_id`` IS this
-        store's manifest chunk column and ``prm`` carries per-file key
-        min/max, so a keyed read opens only the files whose stats can
-        hold the requested (tenant, keys) — not the whole table (see
-        ChunkStore.data key_values). Falls back to the full frame on
-        plain stores; honors time-travel pins. Pruning is conservative
-        (stat-less entries always read) and the callers re-apply the
-        exact predicates in-plan."""
-        if not self._acid:
-            return self.df()
+        """Manifest-stats pruned read: ``client_id`` IS this store's
+        manifest chunk column and ``prm`` carries per-file key min/max,
+        so a keyed read opens only the files whose stats can hold the
+        requested (tenant, keys) — not the whole table (see
+        ChunkStore.data key_values). Honors time-travel pins. Pruning is
+        conservative (stat-less entries always read) and the callers
+        re-apply the exact predicates in-plan."""
         from holcstore_spark.plans.pruning import entry_may_match_keys
 
-        snap = (self._pinned_snapshot if self._pinned_snapshot is not None
-                else self._txlog.snapshot())
+        snap = self._read_snapshot()
         cid = None if client_id is None else int(client_id)
         entries = snap.entries_overlapping("data", cid, cid)
         if prms:
@@ -184,7 +148,7 @@ class KeyValueStore:
         files = [os.path.join(self.path, e["path"]) for e in entries]
         return self.spark.read.schema(self._schema()).parquet(*files)
 
-    # -- ACID primitives (manifest-governed immutable files) -----------
+    # -- write primitives (manifest-governed immutable files) ----------
     def _kv_digest(self, client_id, prm) -> str:
         import hashlib
 
@@ -242,154 +206,87 @@ class KeyValueStore:
                 "affected files."
             )
 
-    @staticmethod
-    def _disk_entries(path: str) -> list[dict]:
-        """Manifest-shaped ``{'rows': n}`` entries for the plain
-        (non-ACID) layout, from parquet FOOTERS only — no data read, no
-        Spark job; missing/fresh paths count as empty."""
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
-        try:
-            dataset = ds.dataset(path, format="parquet",
-                                 partitioning="hive")
-            return [{"rows": dataset.count_rows()}]
-        except (FileNotFoundError, OSError):
-            return []
-        except pa.ArrowInvalid:
-            # a malformed / partially-written footer must not crash a
-            # guard that exists only to SIZE the rewrite — but it must
-            # not DISABLE it either (one bad file next to 100M healthy
-            # rows would skip the cap exactly when it matters): count
-            # the readable footers, warn per unreadable one
-            from holcstore_spark.sources.io_util import (
-                sum_readable_footers,
-            )
-
-            return [{"rows": sum_readable_footers(path)}]
-
-    def _overwrite(self, df: DataFrame, snap=None) -> None:
-        if self._acid:
-            # full-table rewrite as one atomic commit (touched="all")
-            snap = snap if snap is not None else self._txlog.snapshot()
-            self._guard_rewrite_rows(snap.files["data"], "full-table rewrite")
-            adds = self._stage(df)
-            self._txlog.commit(
-                snap.version, "kv_overwrite", self._txlog.next_op_id(snap),
-                {"data": adds}, {"data": snap.files["data"]},
-                touched="all",
-            )
-            return
-        # full-table rewrite: static overwrite mode so a client_id partition
-        # emptied by clear()/clear_all() is actually removed (dynamic mode
-        # only replaces partitions present in the written frame, leaving the
-        # "deleted" rows visible)
-        self._guard_rewrite_rows(
-            self._disk_entries(self.path), "full-table rewrite"
-        )
-        df = safe_local_checkpoint(df)
-        (
-            df.repartition("client_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("client_id")
-            .parquet(self.path)
+    def _overwrite(self, df: DataFrame, snap) -> None:
+        """Full-table rewrite as one atomic commit (touched="all")."""
+        self._guard_rewrite_rows(snap.files["data"], "full-table rewrite")
+        adds = self._stage(df)
+        self._txlog.commit(
+            snap.version, "kv_overwrite", self._txlog.next_op_id(snap),
+            {"data": adds}, {"data": snap.files["data"]},
+            touched="all",
         )
 
-    def _append(self, df: DataFrame, kts: list[tuple] | None = None,
-                snap=None, txn: tuple[str, int] | None = None) -> None:
-        if self._acid:
-            # pure append: one atomic commit; (client, prm) digests make
-            # two concurrent versioned appends of the SAME prm (same
-            # next-version computed from a shared base) conflict loudly
-            snap = snap if snap is not None else self._txlog.snapshot()
-            adds = self._stage(df)
-            self._txlog.commit_idempotent(
-                snap.version, "kv_append", self._txlog.next_op_id(snap),
-                {"data": adds}, {},
-                touched=None,
-                append_keys=sorted(self._kv_digest(c, p) for c, p in kts)
-                if kts is not None else None,
-                txn_app=txn[0] if txn else None,
-                txn_version=txn[1] if txn else None,
-            )
-            return
-        df.repartition("client_id").write.mode("append").partitionBy("client_id").parquet(self.path)
+    def _append(self, df: DataFrame, kts: list[tuple], snap,
+                txn: tuple[str, int] | None = None) -> None:
+        """Pure append: one atomic commit; (client, prm) digests make two
+        concurrent versioned appends of the SAME prm (same next-version
+        computed from a shared base) conflict loudly."""
+        adds = self._stage(df)
+        self._txlog.commit_idempotent(
+            snap.version, "kv_append", self._txlog.next_op_id(snap),
+            {"data": adds}, {},
+            touched=None,
+            append_keys=sorted(self._kv_digest(c, p) for c, p in kts),
+            txn_app=txn[0] if txn else None,
+            txn_version=txn[1] if txn else None,
+        )
 
-    def _overwrite_client(self, client_id: int, remaining: DataFrame,
-                          dropped: list | None = None, snap=None,
+    def _overwrite_client(self, client_id: int, remaining: DataFrame, snap,
+                          dropped: list | None = None,
                           txn: tuple[str, int] | None = None) -> None:
-        """Rewrite ONLY ``client_id``'s partition directory. Non-versioned
-        writes and per-tenant clears are tenant-scoped in the reference
+        """Rewrite ONLY ``client_id``'s files. Non-versioned writes and
+        per-tenant clears are tenant-scoped in the reference
         (hostore.py:396-432); scoping the physical rewrite the same way
-        keeps the blast radius at one partition — other tenants' files are
-        never read, rewritten, or touched (ACID: never LOST — shared
-        files' bystander rows ride along into the staged rewrite)."""
-        import shutil
-
+        keeps the blast radius at one tenant — other tenants' files are
+        never read, rewritten, or touched (shared files' bystander rows
+        ride along into the staged rewrite, never LOST)."""
         cid = int(client_id)
-        if self._acid:
-            # copy-on-write of this client's files only (per-file
-            # client_id range = the chunk stats), one atomic commit;
-            # dropped (client, prm) digests keep conflicts prm-level
-            snap = snap if snap is not None else self._txlog.snapshot()
-            affected = [
-                e for e in snap.files["data"]
-                if e.get("chunk_min") is None
-                or e["chunk_min"] <= cid <= e["chunk_max"]
-            ]
-            self._guard_rewrite_rows(
-                affected, f"tenant rewrite (client_id={cid})"
-            )
-            staged = remaining.filter(F.col("client_id") == cid)
-            # files can span clients (_overwrite/clear_all stage the
-            # whole table): removing them while re-staging only cid's
-            # rows would silently delete OTHER tenants' rows — read the
-            # SPANNING files back and carry the bystanders into the
-            # rewrite (ChunkStore._rewrite_acid's keep-set pattern).
-            # Single-tenant files (chunk_min == chunk_max == cid, the
-            # common per-tenant staging shape) provably hold no
-            # bystanders and skip the extra read. Path-intersection
-            # conflict detection covers a concurrent writer of a
-            # bystander tenant sharing a file.
-            spanning = [
-                e for e in affected
-                if e.get("chunk_min") is None or e["chunk_min"] != e["chunk_max"]
-            ]
-            if spanning:
-                paths = [os.path.join(self.path, e["path"]) for e in spanning]
-                bystanders = (
-                    self.spark.read.schema(self._schema()).parquet(*paths)
-                    .filter(F.col("client_id") != cid)
-                )
-                cols = [f.name for f in self._schema().fields]
-                staged = bystanders.select(*cols).unionByName(staged.select(*cols))
-            adds = self._stage(staged)
-            self._txlog.commit_idempotent(
-                snap.version, "kv_overwrite_client",
-                self._txlog.next_op_id(snap),
-                {"data": adds}, {"data": affected},
-                touched={cid},
-                dropped_keys=sorted(
-                    self._kv_digest(cid, p) for p in dropped
-                ) if dropped is not None else None,
-                txn_app=txn[0] if txn else None,
-                txn_version=txn[1] if txn else None,
-            )
-            return
-        part_path = os.path.join(self.path, f"client_id={cid}")
+        # copy-on-write of this client's files only (per-file client_id
+        # range = the chunk stats), one atomic commit; dropped
+        # (client, prm) digests keep conflicts prm-level
+        affected = [
+            e for e in snap.files["data"]
+            if e.get("chunk_min") is None
+            or e["chunk_min"] <= cid <= e["chunk_max"]
+        ]
         self._guard_rewrite_rows(
-            self._disk_entries(part_path),
-            f"tenant rewrite (client_id={cid})",
+            affected, f"tenant rewrite (client_id={cid})"
         )
-        remaining = remaining.filter(F.col("client_id") == cid).drop("client_id")
-        remaining = safe_local_checkpoint(remaining)
-        if not remaining.take(1):
-            # the tenant's last rows are gone — remove its directory so the
-            # partition disappears (an empty dir would still be discovered)
-            shutil.rmtree(part_path, ignore_errors=True)
-            return
-        remaining.write.mode("overwrite").parquet(part_path)
+        staged = remaining.filter(F.col("client_id") == cid)
+        # files can span clients (_overwrite/clear_all stage the
+        # whole table): removing them while re-staging only cid's
+        # rows would silently delete OTHER tenants' rows — read the
+        # SPANNING files back and carry the bystanders into the
+        # rewrite (ChunkStore._rewrite_spark's keep-set pattern).
+        # Single-tenant files (chunk_min == chunk_max == cid, the
+        # common per-tenant staging shape) provably hold no
+        # bystanders and skip the extra read. Path-intersection
+        # conflict detection covers a concurrent writer of a
+        # bystander tenant sharing a file.
+        spanning = [
+            e for e in affected
+            if e.get("chunk_min") is None or e["chunk_min"] != e["chunk_max"]
+        ]
+        if spanning:
+            paths = [os.path.join(self.path, e["path"]) for e in spanning]
+            bystanders = (
+                self.spark.read.schema(self._schema()).parquet(*paths)
+                .filter(F.col("client_id") != cid)
+            )
+            cols = [f.name for f in self._schema().fields]
+            staged = bystanders.select(*cols).unionByName(staged.select(*cols))
+        adds = self._stage(staged)
+        self._txlog.commit_idempotent(
+            snap.version, "kv_overwrite_client",
+            self._txlog.next_op_id(snap),
+            {"data": adds}, {"data": affected},
+            touched={cid},
+            dropped_keys=sorted(
+                self._kv_digest(cid, p) for p in dropped
+            ) if dropped is not None else None,
+            txn_app=txn[0] if txn else None,
+            txn_version=txn[1] if txn else None,
+        )
 
     # ------------------------------------------------------------------
     def _series_to_pdf(self, prm, serie: pd.Series, client_id, version, attrs) -> pd.DataFrame:
@@ -420,7 +317,7 @@ class KeyValueStore:
             pdf[a] = str(attrs[a]) if attrs and a in attrs else None
         return pdf
 
-    def _next_version(self, scope: dict, snap=None) -> int:
+    def _next_version(self, scope: dict, snap) -> int:
         row = self._df_at(snap).filter(attrs_filter(scope)).agg(F.max("version")).first()
         mx = row[0] if row else None
         return 0 if mx is None else int(mx) + 1
@@ -458,8 +355,8 @@ class KeyValueStore:
                 (F.col("client_id") == int(client_id))
                 & ~((F.col("prm") == str(prm)) & (F.col("version") == 0))
             )
-            self._overwrite_client(client_id, old.unionByName(new),
-                                   dropped=[prm], snap=snap)
+            self._overwrite_client(client_id, old.unionByName(new), snap,
+                                   dropped=[prm])
 
     def set_many_lc(
         self,
@@ -480,13 +377,13 @@ class KeyValueStore:
         anti-join + overwrite. N keys → O(1) Spark jobs, not O(N) rewrites.
 
         ``(txn_app, txn_version)`` — idempotent write (Delta's ``txn``
-        action, ACID only; see ChunkStore.ingest_long): a retried batch
+        action; see ChunkStore.ingest_long): a retried batch
         job re-running the same write is a no-op instead of a double
         version bump / double apply.
         """
         from holcstore_spark.sources.txlog import resolve_txn
 
-        txn = resolve_txn(self._acid, txn_app, txn_version)
+        txn = resolve_txn(txn_app, txn_version)
         if not dataseries:
             return
         snap = self._pin()
@@ -536,7 +433,7 @@ class KeyValueStore:
                 & ~(F.col("prm").isin(prms) & (F.col("version") == 0))
             )
             self._overwrite_client(client_id, old.unionByName(new.drop("__series_ord")),
-                                   dropped=prms, snap=snap, txn=txn)
+                                   snap, dropped=prms, txn=txn)
 
     # ------------------------------------------------------------------
     def _edge_collect(self, ordered: DataFrame) -> pd.DataFrame:
@@ -673,41 +570,37 @@ class KeyValueStore:
         )
         # clears with version/custom filters drop only SOME rows of a prm
         # — still safe to declare the prms: conflicts are per (client,prm)
-        self._overwrite_client(client_id, remaining,
-                               dropped=[str(p) for p in prms], snap=snap)
+        self._overwrite_client(client_id, remaining, snap,
+                               dropped=[str(p) for p in prms])
 
     def clear_all(self, client_id: int | None = None, custom_filters: dict | None = None) -> None:
         pred = attrs_filter(custom_filters)
         snap = self._pin()
         if client_id is not None:
-            # tenant-scoped: only this client's partition is rewritten
+            # tenant-scoped: only this client's files are rewritten
             remaining = self._df_at(snap).filter(
                 (F.col("client_id") == int(client_id)) & ~pred
             )
-            self._overwrite_client(client_id, remaining, snap=snap)
+            self._overwrite_client(client_id, remaining, snap)
             return
-        self._overwrite(self._df_at(snap).filter(~pred), snap=snap)
+        self._overwrite(self._df_at(snap).filter(~pred), snap)
 
     # ------------------------------------------------------------------
     def vacuum(
         self, retention_seconds: float = 3600.0, deep: bool = False
     ) -> int:
         """Reclaim manifest-unreferenced files older than the retention
-        window plus checkpoint-summarized log records (ACID stores only;
-        see ChunkStore.vacuum for the retention rationale and the
-        O(orphans) default-vs-``deep`` sweep shape)."""
+        window plus checkpoint-summarized log records (see
+        ChunkStore.vacuum for the retention rationale and the O(orphans)
+        default-vs-``deep`` sweep shape)."""
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only (vacuum refused)")
-        if not self._acid:
-            return 0
         return self._txlog.vacuum_files(retention_seconds, deep=deep)
 
     def restore(self, version: int) -> int:
         """Roll the store back to a committed log version as a NEW
         commit (see ChunkStore.restore — same Delta RESTORE semantics,
         same refusals on pruned versions and vacuumed files)."""
-        if not self._acid:
-            raise ValueError("restore requires an ACID store (acid=True)")
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only (restore refused)")
         return self._txlog.restore_commit(version)
@@ -720,8 +613,6 @@ class KeyValueStore:
         skip and that commutes with every concurrent commit not
         rewriting the same source files). Returns the number of tenant
         partitions repacked."""
-        if not self._acid:
-            raise ValueError("optimize() requires acid=True")
         if self._pinned_snapshot is not None:
             raise ValueError("time-travel views are read-only (optimize refused)")
         from holcstore_spark.sources.txlog import (
@@ -777,18 +668,11 @@ class KeyValueStore:
         """Commit-log audit frame (see ChunkStore.history)."""
         from holcstore_spark.sources.chunk_store import _history_df
 
-        if not self._acid:
-            raise ValueError("history requires an ACID store (acid=True)")
         return _history_df(self.spark, self._txlog)
 
     def last_txn_version(self, txn_app: str) -> int | None:
         """Highest committed ``txn_version`` for the idempotent writer
         ``txn_app`` (see ChunkStore.last_txn_version)."""
-        if not self._acid:
-            raise ValueError(
-                "idempotent writes (txn_app) require an ACID store "
-                "(acid=True)"
-            )
         return self._txlog.snapshot().app_versions.get(str(txn_app))
 
     def changes_between(self, from_version: int,
@@ -798,8 +682,6 @@ class KeyValueStore:
         scale shape)."""
         from holcstore_spark.sources.chunk_store import _changes_between_df
 
-        if not self._acid:
-            raise ValueError("changes_between requires an ACID store (acid=True)")
         cols = [f.name for f in self._schema().fields]
 
         def _read(paths, _other) -> DataFrame:

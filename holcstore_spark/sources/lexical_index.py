@@ -400,7 +400,7 @@ class LexicalIndex(ForgetMixin):
         from holcstore_spark.sources.txlog import TxLog, resolve_txn
 
         p = self.params
-        txn_id = resolve_txn(True, txn_app, txn_version)
+        txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
         if txn_id is not None and (
             txn_id[1] <= snap.app_versions.get(txn_id[0], -1)

@@ -1,11 +1,9 @@
-"""File-manifest transaction log — ChunkStore's optional ACID backend.
+"""File-manifest transaction log — the storage layout of every store
+(ChunkStore, KeyValueStore, AttrStore) and of the managed indexes.
 
-The plain-Parquet store is single-writer by contract: its rewrite paths
-are checkpoint-then-overwrite with an optimistic op_id fence that can
-only DETECT a concurrent writer, not survive one (chunk_store.py
-``ConcurrentWriteError``). This module closes that gap the way Delta
-Lake / Iceberg do — the layout was designed for that swap
-(chunk_store.py module docstring) — but with zero new dependencies:
+Where the reference serializes writers with database transactions and
+row locks, the stores publish immutable files through this log the way
+Delta Lake / Iceberg do, with zero new dependencies:
 
 - Data and meta files are immutable; every write lands in a fresh
   ``files/<uuid>/`` directory. Nothing is ever overwritten in place.
@@ -37,8 +35,8 @@ Per-file ``chunk_min``/``chunk_max`` come from the parquet row-group
 statistics at stage time and give planning-time FILE SKIPPING: a
 bounded read opens only manifest entries overlapping the requested
 chunk range — the manifest-stats pruning Delta calls data skipping,
-replacing hive partition pruning (``chunk_index`` is a regular column
-in ACID mode).
+replacing hive partition pruning (``chunk_index`` is a regular
+column).
 
 Conflict rules (checked against each commit that won our slot):
 
@@ -51,8 +49,12 @@ Conflict rules (checked against each commit that won our slot):
    compact): any other data/meta change conflicts.
 
 Pure appends (``touched=None``, no removes) never conflict — two
-concurrent inserts both survive, which the fence-based path could not
-offer.
+concurrent inserts both survive.
+
+Stores written by the retired plain layout (hive-partitioned parquet
+overwritten in place, no ``_txlog``) are refused at open
+(:func:`open_txlog`); ``holcstore_spark.convert_to_acid`` copies them
+into a new store.
 """
 
 from __future__ import annotations
@@ -104,7 +106,7 @@ def entries_may_share_keys(a: dict, b: dict) -> bool:
     return True
 
 
-def resolve_txn(acid: bool, txn_app, txn_version) -> tuple[str, int] | None:
+def resolve_txn(txn_app, txn_version) -> tuple[str, int] | None:
     """Validate and normalize an idempotent-writer identity — the ONE
     place the txn argument contract lives (shared by all three stores'
     bulk writes). Returns ``(app, version)`` or None when no identity
@@ -112,10 +114,6 @@ def resolve_txn(acid: bool, txn_app, txn_version) -> tuple[str, int] | None:
     true/false and dodge the duplicate check)."""
     if txn_app is None:
         return None
-    if not acid:
-        raise ValueError(
-            "idempotent writes (txn_app) require an ACID store (acid=True)"
-        )
     if txn_version is None:
         raise ValueError("txn_app requires txn_version")
     if isinstance(txn_version, bool):
@@ -129,6 +127,40 @@ def resolve_txn(acid: bool, txn_app, txn_version) -> tuple[str, int] | None:
             f"txn_app requires a non-negative txn_version, got {version}"
         )
     return str(txn_app), version
+
+
+def has_legacy_files(path: str, legacy_dirs: tuple[str, ...] = ()) -> bool:
+    """Whether ``path`` holds files of the retired plain layout: parquet
+    under one of the store-relative ``legacy_dirs`` (ChunkStore's
+    ``data``/``meta``), or — with no ``legacy_dirs`` — parquet files or
+    ``client_id=`` partition directories directly under ``path``
+    (AttrStore, KeyValueStore)."""
+    from holcstore_spark.sources.io_util import has_parquet
+
+    if legacy_dirs:
+        return any(has_parquet(os.path.join(path, d)) for d in legacy_dirs)
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return False
+    return any(n.endswith(".parquet") or n.startswith("client_id=") for n in names)
+
+
+def open_txlog(path: str, legacy_dirs: tuple[str, ...] = ()) -> "TxLog":
+    """The transaction log of the store at ``path`` — the layout check
+    every store constructor runs. A path with no ``_txlog`` that holds
+    plain-layout files (:func:`has_legacy_files`) is refused with a
+    pointer to ``convert_to_acid``; a missing path or an empty
+    directory becomes a new store."""
+    if not os.path.isdir(os.path.join(path, "_txlog")) and has_legacy_files(
+        path, legacy_dirs
+    ):
+        raise ValueError(
+            f"{path} holds a store in the retired plain (non-transactional) "
+            "layout; copy it into a new store with "
+            "holcstore_spark.convert_to_acid(src, dst)"
+        )
+    return TxLog(path)
 
 
 class FileEntry(dict):

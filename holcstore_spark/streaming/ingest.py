@@ -36,14 +36,14 @@ def stream_ingest(
     loops. ``trigger_once`` processes the available backlog then stops
     (batch-over-stream operation for tests and scheduled jobs).
 
-    On an ACID store (``acid=True``) each micro-batch lands as ONE
+    Each micro-batch lands as ONE
     atomic data+meta commit, so readers never observe a half-applied
     batch. Exactly-once has two tiers:
 
     - ``txn_app=None`` (default): checkpoint + idempotent combine-first
       re-merge — effectively-once under ``mode='update'`` ('insert'
       would refuse its own replay).
-    - ``txn_app=<stable sink id>`` (ACID stores): each micro-batch
+    - ``txn_app=<stable sink id>``: each micro-batch
       commits with ``(txn_app, txn_version=batch_id)`` and the log's
       idempotence watermark skips any replayed batch BEFORE it writes —
       true exactly-once for EVERY mode, including append-mode 'insert'

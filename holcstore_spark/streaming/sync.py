@@ -21,12 +21,9 @@ Two physical strategies, picked automatically:
 - **bulk** — when NO incoming (keys, chunk) pair physically exists
   client-side (bootstrap of a fresh replica, or an incremental pull of
   brand-new chunks/keys — the daily-append case), every page's
-  partition-rewrite would be a pure append anyway, so the whole backlog
-  lands as ONE distributed data append + ONE meta append. A crash
-  between the two writes is safe: data without meta is invisible on a
-  sync store (``alive_data`` keeps its meta semi-join), and the resume
-  pull's overlap probe sees the orphaned physical rows and falls back
-  to the rewrite path, which dedupes by (keys, chunk).
+  chunk rewrite would be a pure append anyway, so the whole backlog
+  lands as ONE distributed data append + ONE meta append, published in
+  one atomic commit.
 - **paged incremental** — the general path. The ordered feed is
   checkpointed once and streamed through ``toLocalIterator`` (one linear
   pass; driver memory bounded by ``page_size``), instead of one
@@ -42,7 +39,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from holcstore_spark.sources.chunk_store import ChunkStore
-from holcstore_spark.sources.io_util import has_parquet, safe_local_checkpoint
+from holcstore_spark.sources.io_util import safe_local_checkpoint
 
 
 class SyncCrash(Exception):
@@ -79,7 +76,7 @@ class SyncClient:
         # (their stamps are already in the client meta, so the watermark
         # is unaffected) and is what lets a daily-append pull see only
         # genuinely-new chunks and take the bulk path below
-        if not self.client._meta_empty():  # layout-aware (plain dir / ACID manifest)
+        if not self.client._meta_empty():
             applied = self.client.latest_meta(filters).select(
                 *self.server.config.keys, "chunk_index", "op_id"
             )
@@ -142,8 +139,7 @@ class SyncClient:
         # no broadcast hint: a full-bootstrap spec is every alive chunk of
         # the server — let AQE pick the join strategy for the semi-join
         data_sdf = self.server.export_chunks_sdf(alive_pairs, hint_broadcast=False)
-        # data first, meta (the watermark carrier) last — see module doc;
-        # on ACID clients both land in one atomic commit
+        # data and meta (the watermark carrier) land in one atomic commit
         self.client.append_import(data_sdf, feed)
         return total
 

@@ -39,16 +39,9 @@ def run(shape: str) -> None:
 
     path = tempfile.mkdtemp(prefix=f"holc_perf_{shape}_")
     shutil.rmtree(path, ignore_errors=True)
-    # HOLC_PERF_ACID=1/0 pins the backend for apples-to-apples
-    # plain/ACID baselines; unset runs the library default (ACID for
-    # new stores since round 7)
-    env = os.environ.get("HOLC_PERF_ACID")
-    acid = None if env is None else bool(int(env))
     cfg = ChunkStoreConfig(keys=("key",), freq=freq, tz="Europe/Paris",
-                           chunk_axis=axis, key_types={"key": "str"},
-                           acid=acid)
+                           chunk_axis=axis, key_types={"key": "str"})
     store = ChunkStore(spark, path, cfg)
-    print(f"{shape}: {'ACID' if store._acid else 'plain'} backend")
 
     keys = spark.range(n_keys).select(
         F.concat(F.lit("serie_"), F.col("id")).alias("key")
@@ -119,7 +112,7 @@ def run_opt() -> None:
     shutil.rmtree(path, ignore_errors=True)
     cfg = ChunkStoreConfig(keys=("key",), freq="1h", tz="UTC",
                            chunk_axis=("year", "month"),
-                           key_types={"key": "str"}, acid=True)
+                           key_types={"key": "str"})
     store = ChunkStore(spark, path, cfg)
     # base table: 100 keys × 2 years hourly ≈ 1.75M rows over 24 chunks
     keys = spark.range(100).select(
@@ -173,7 +166,7 @@ def run_lookup() -> None:
     shutil.rmtree(path, ignore_errors=True)
     cfg = ChunkStoreConfig(keys=("key",), freq="1h", tz="UTC",
                            chunk_axis=("year", "month"),
-                           key_types={"key": "str"}, acid=True)
+                           key_types={"key": "str"})
     store = ChunkStore(spark, path, cfg)
     jan = pd.Series(
         1.0, index=pd.date_range("2021-01-01", "2021-01-31 23:00",

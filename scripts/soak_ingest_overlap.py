@@ -1,4 +1,4 @@
-"""Soak: ChunkStore ACID ingest at ~17.5M dense rows — serial vs
+"""Soak: ChunkStore ingest at ~17.5M dense rows — serial vs
 overlapped meta staging (OPTIMIZATION_r17 entry 2), interleaved A/B.
 
 2,000 keys x 1 year hourly (8,784 pts/key, 2024 is a leap year) ->
@@ -63,7 +63,7 @@ def main() -> None:
         shutil.rmtree(path, ignore_errors=True)
         st = ChunkStore(spark, path, ChunkStoreConfig(
             keys=("k",), freq="1h", tz="UTC", chunk_axis=("year", "month"),
-            key_types={"k": "int"}, acid=True))
+            key_types={"k": "int"}))
         p = probe()
         t0 = time.perf_counter()
         st.ingest_long(src, mode="insert")

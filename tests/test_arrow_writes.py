@@ -43,7 +43,7 @@ def store(spark, tmpdir, name, keys=("site",), allow_sync=False, key_types=None)
     cfg = ChunkStoreConfig(
         keys=keys, freq="1h", tz=TZ, chunk_axis=("year", "month"),
         key_types=key_types or {k: "str" for k in keys},
-        allow_sync=allow_sync, acid=True,
+        allow_sync=allow_sync,
     )
     return ChunkStore(spark, os.path.join(tmpdir, name), cfg)
 

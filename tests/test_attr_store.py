@@ -123,8 +123,7 @@ class TestSetManyTs:
 
 @pytest.fixture()
 def acid_store_attr(spark, tmp_store_path):
-    return AttrStore(spark, tmp_store_path + "_acid", keys=("year", "kind"),
-                     acid=True)
+    return AttrStore(spark, tmp_store_path + "_acid", keys=("year", "kind"))
 
 
 class TestAttrStoreAcid:
@@ -186,8 +185,8 @@ class TestAttrStoreAcid:
     ):
         import holcstore_spark.sources.attr_store as as_mod
 
-        a = AttrStore(spark, tmp_store_path + "_cc", keys=("k",), acid=True)
-        b = AttrStore(spark, a.path, keys=("k",), acid=True)
+        a = AttrStore(spark, tmp_store_path + "_cc", keys=("k",))
+        b = AttrStore(spark, a.path, keys=("k",))
         a.set_ts({"k": "x"}, s([1, 2]))
         b.set_ts({"k": "y"}, s([3, 4]))
         orig = as_mod.AttrStore._stage
@@ -213,8 +212,8 @@ class TestAttrStoreAcid:
         from holcstore_spark.sources.chunk_store import ConcurrentWriteError
         import holcstore_spark.sources.attr_store as as_mod
 
-        a = AttrStore(spark, tmp_store_path + "_cf", keys=("k",), acid=True)
-        b = AttrStore(spark, a.path, keys=("k",), acid=True)
+        a = AttrStore(spark, tmp_store_path + "_cf", keys=("k",))
+        b = AttrStore(spark, a.path, keys=("k",))
         a.set_ts({"k": "x"}, s([1, 2]))
         orig = as_mod.AttrStore._stage
         state = {"fired": False}
@@ -253,8 +252,8 @@ class TestAttrAcidSnapshotPinning:
         from holcstore_spark.sources.chunk_store import ConcurrentWriteError
         import holcstore_spark.sources.attr_store as attr_mod
 
-        a = AttrStore(spark, tmp_store_path + "_pin", keys=("k",), acid=True)
-        b = AttrStore(spark, a.path, keys=("k",), acid=True)
+        a = AttrStore(spark, tmp_store_path + "_pin", keys=("k",))
+        b = AttrStore(spark, a.path, keys=("k",))
         orig = attr_mod.AttrStore._to_pdf
         state = {"fired": False}
 
@@ -275,7 +274,7 @@ class TestAttrAcidSnapshotPinning:
         assert list(got) == [2.0]
 
     def test_update_reads_back_from_pinned_snapshot(self, spark, tmp_store_path):
-        st = AttrStore(spark, tmp_store_path + "_rb", keys=("k",), acid=True)
+        st = AttrStore(spark, tmp_store_path + "_rb", keys=("k",))
         st.set_ts({"k": "x"}, s([1.0, 2.0]))
         st.set_ts({"k": "x"}, s([9.0]), update=True)
         assert list(st.get_ts({"k": "x"}, flat=True)) == [9.0, 2.0]
@@ -288,8 +287,7 @@ class TestAttrKeyStatsPruning:
         """_may_contain prunes on ALL key columns: two series sharing the
         first key but differing on the second, staged into separate
         commits (separate files), must not rewrite each other."""
-        st = AttrStore(spark, tmp_store_path + "_bb", keys=("site", "kind"),
-                       acid=True)
+        st = AttrStore(spark, tmp_store_path + "_bb", keys=("site", "kind"))
         st.set_ts({"site": "x", "kind": "a"}, s([1.0]))
         st.set_ts({"site": "x", "kind": "b"}, s([2.0]))
         snap_before = st._txlog.snapshot()
@@ -307,7 +305,7 @@ class TestAttrKeyStatsPruning:
 
 class TestAttrChangesBetween:
     def test_update_delta(self, spark, tmp_store_path):
-        st = AttrStore(spark, tmp_store_path + "_cdf", keys=("k",), acid=True)
+        st = AttrStore(spark, tmp_store_path + "_cdf", keys=("k",))
         st.set_ts({"k": "x"}, s([1.0, 2.0]))
         v1 = st._txlog.snapshot().version
         st.set_ts({"k": "x"}, s([9.0]), update=True)
@@ -324,7 +322,7 @@ class TestAttrCdfDeleteOnlyKeepsKeyType:
         # bigint instead of coercing to string via the declared default
         import pandas as pd
 
-        st = AttrStore(spark, tmp_store_path + "_ik", keys=("year",), acid=True)
+        st = AttrStore(spark, tmp_store_path + "_ik", keys=("year",))
         st.set_ts({"year": 2024}, s([1.0, 2.0]))
         v1 = st._txlog.snapshot().version
         st.delete({"year": 2024})
@@ -338,7 +336,7 @@ class TestAttrCdfDeleteOnlyKeepsKeyType:
 
 class TestAttrTimeTravel:
     def test_as_of_view_and_write_refusal(self, spark, tmp_store_path):
-        st = AttrStore(spark, tmp_store_path + "_tt", keys=("k",), acid=True)
+        st = AttrStore(spark, tmp_store_path + "_tt", keys=("k",))
         st.set_ts({"k": "x"}, s([1.0]))
         v1 = st._txlog.snapshot().version
         st.set_ts({"k": "x"}, s([9.0]), replace=True)
@@ -349,24 +347,3 @@ class TestAttrTimeTravel:
             old.set_ts({"k": "y"}, s([2.0]))
         with pytest.raises(ValueError, match="read-only"):
             old.delete({"k": "x"})
-
-
-class TestAttrRewriteRowsCap:
-    def test_plain_full_rewrite_above_cap_refuses_loudly(
-        self, spark, tmp_store_path, monkeypatch
-    ):
-        # VERDICT r10 "what's wrong #3": the plain (acid=False) layout
-        # rewrites the whole table per remove-rows write — above the cap
-        # that must be a loud error (footer-only row count, no Spark
-        # job), and the message must point at the escape hatches
-        store = AttrStore(spark, tmp_store_path + "_plaincap",
-                          keys=("year", "kind"), acid=False)
-        store.set_ts({"year": "2024", "kind": "a"}, s([1, 2, 3]))
-        store.set_ts({"year": "2024", "kind": "b"}, s([4, 5]))
-        monkeypatch.setattr(type(store), "REWRITE_ROWS_CAP", 4)
-        with pytest.raises(ValueError, match="REWRITE_ROWS_CAP"):
-            store.delete({"kind": "a"})  # table holds 5 rows > cap 4
-        assert store.count() == 2  # refusal changed nothing
-        monkeypatch.setattr(type(store), "REWRITE_ROWS_CAP", 5)
-        store.delete({"kind": "a"})
-        assert store.count() == 1

@@ -26,14 +26,11 @@ from holcstore_spark.sources.chunk_store import ChunkStore, KeyExistsError, Sync
 
 def make_store(spark, tmpdir, tz="Europe/Paris", axis=("year", "month"), freq="1h",
                allow_sync=False):
-    # this module is the PLAIN-layout battery (test_txlog.py covers the
-    # ACID backend); since the library default flipped to ACID in round
-    # 7, the plain layout is an explicit opt-down
     path = os.path.join(tmpdir, f"store_{tz.replace('/', '_')}_{'_'.join(axis)}")
     cfg = ChunkStoreConfig(
         keys=("site", "meter"), freq=freq, tz=tz, chunk_axis=axis,
         allow_sync=allow_sync,
-        key_types={"site": "str", "meter": "str"}, acid=False,
+        key_types={"site": "str", "meter": "str"},
     )
     return ChunkStore(spark, path, cfg)
 
@@ -326,15 +323,15 @@ READ_WINDOWS = [
 ]
 
 
-def write_read_matrix(st) -> int | None:
-    """Writes the keyed-read cases; returns the ACID log version after
-    the first write (None on plain stores)."""
+def write_read_matrix(st) -> int:
+    """Writes the keyed-read cases; returns the log version after the
+    first write."""
     kw = {"update": True} if st.config.allow_sync else {}
     s = hourly("2024-01-01", 24 * 121, seed=3)
     s.iloc[:5] = np.nan
     s.iloc[50:60] = np.nan
     st.set_ts(ATTRS, s, **kw)
-    first = st._txlog.snapshot().version if st._acid else None
+    first = st._txlog.snapshot().version
     st.set_ts(ATTRS, hourly("2024-01-20", 24 * 5, value=7.0), update=True)
     st.set_ts(PART, hourly("2024-01-01", 24 * 121, seed=4), **kw)
     # replace keeps February and tombstones January, March and April
@@ -373,30 +370,26 @@ class TestLocalRead:
         # their oracle, on every store flavour
         from holcstore_spark.streaming.sync import SyncClient
 
-        plain = make_store(spark, tmpdir)
-        write_read_matrix(plain)
-        assert plain.get_ts(PART) is not None
-        assert plain.get_ts(GONE) is None
-        assert_keyed_reads_match_spark(plain)
-
-        def acid_store(name, allow_sync=False):
-            cfg = ChunkStoreConfig(
-                keys=("site", "meter"), freq="1h", tz="Europe/Paris",
-                chunk_axis=("year", "month"), allow_sync=allow_sync,
-                key_types={"site": "str", "meter": "str"}, acid=True,
-            )
-            return ChunkStore(spark, os.path.join(tmpdir, name), cfg)
-
-        acid = acid_store("acid")
-        first = write_read_matrix(acid)
-        assert_keyed_reads_match_spark(acid)
-        view = acid.time_travel(first)
+        st = make_store(spark, tmpdir)
+        first = write_read_matrix(st)
+        assert st.get_ts(PART) is not None
+        assert st.get_ts(GONE) is None
+        assert_keyed_reads_match_spark(st)
+        view = st.time_travel(first)
         assert view.get_ts(PART) is None  # not yet written at that version
         assert_keyed_reads_match_spark(view)
 
-        server = acid_store("server", allow_sync=True)
+        def sync_store(name):
+            cfg = ChunkStoreConfig(
+                keys=("site", "meter"), freq="1h", tz="Europe/Paris",
+                chunk_axis=("year", "month"), allow_sync=True,
+                key_types={"site": "str", "meter": "str"},
+            )
+            return ChunkStore(spark, os.path.join(tmpdir, name), cfg)
+
+        server = sync_store("server")
         write_read_matrix(server)
-        replica = acid_store("replica", allow_sync=True)
+        replica = sync_store("replica")
         assert SyncClient(server, replica).pull() > 0
         assert_keyed_reads_match_spark(replica)
 
@@ -411,65 +404,13 @@ class TestLocalRead:
         for i in range(0, 12, 2):
             st.delete({"site": f"s{i}"})
         # the early-exit gate gives the full scan's answer
-        full = pads.dataset(st._meta_path).to_table(
+        full = pads.dataset(st._snapshot().paths("meta", st.path)).to_table(
             columns=["is_deleted"], filter=pads.field("is_deleted") == True,  # noqa: E712
         )
         assert full.num_rows == 12
         assert st._any_tombstones() is True
         assert st.get_ts({"site": "s0", "meter": "m"}) is None
         assert st.get_ts({"site": "s1", "meter": "m"}) is not None
-
-
-class TestConcurrentWriteFence:
-    def test_interleaved_writer_fails_loudly(self, spark, tmpdir, monkeypatch):
-        # plain Parquet has no row locks (the reference serializes upserts
-        # with select_for_update) — the store is single-writer by contract,
-        # and the op_id fence must turn a detected interleave into
-        # ConcurrentWriteError, never silently drop the other writer's rows
-        import holcstore_spark.sources.chunk_store as cs_mod
-
-        st = make_store(spark, tmpdir)
-        st.set_ts(ATTRS, hourly("2024-01-01", 48))
-        other = ChunkStore(spark, st.path, st.config)
-
-        real = cs_mod.safe_local_checkpoint
-        real_fence = cs_mod.ChunkStore._max_committed_op_id
-        # the rewrite captures the fence, then checkpoints its keep-set —
-        # a write landing at the first checkpoint after the capture is
-        # inside the fence window and must be detected
-        state = {"fenced": False, "fired": False}
-
-        def fence(self_):
-            if self_ is st:
-                state["fenced"] = True
-            return real_fence(self_)
-
-        def inject(df):
-            out = real(df)
-            if state["fenced"] and not state["fired"]:
-                state["fired"] = True
-                # a second writer commits while our keep-set materializes
-                other.set_ts({"site": "s9", "meter": "m9"},
-                             hourly("2024-01-01", 24))
-            return out
-
-        monkeypatch.setattr(cs_mod.ChunkStore, "_max_committed_op_id", fence)
-        monkeypatch.setattr(cs_mod, "safe_local_checkpoint", inject)
-        with pytest.raises(cs_mod.ConcurrentWriteError, match="op_id advanced"):
-            st.set_ts(ATTRS, hourly("2024-01-01", 48, value=2.0), replace=True)
-        monkeypatch.setattr(cs_mod, "safe_local_checkpoint", real)
-        monkeypatch.setattr(cs_mod.ChunkStore, "_max_committed_op_id", real_fence)
-        assert state["fired"]
-        # the concurrent writer's rows survived the aborted rewrite
-        assert other.get_ts({"site": "s9", "meter": "m9"}) is not None
-        assert st.get_ts(ATTRS) is not None
-
-    def test_single_writer_rewrite_unaffected(self, spark, tmpdir):
-        # no interleave -> fence is silent and replace works as before
-        st = make_store(spark, tmpdir)
-        st.set_ts(ATTRS, hourly("2024-01-01", 48))
-        st.set_ts(ATTRS, hourly("2024-01-01", 48, value=2.0), replace=True)
-        assert (st.get_ts(ATTRS) == 2.0).all()
 
 
 class TestAggregates:
@@ -568,14 +509,6 @@ class TestConfig:
         assert st.get_ts({"site": "ss", "meter": "mm"}) is not None
         assert st.get_ts({"site": "mm", "meter": "ss"}) is None
 
-    def test_meta_autocompact(self, spark, tmpdir):
-        st = make_store(spark, tmpdir)
-        st.META_COMPACT_THRESHOLD = 5
-        for i in range(8):
-            st.set_ts({"site": f"s{i}", "meter": "m"}, hourly("2024-01-01", 4, value=1.0))
-        assert st._meta_file_count() <= 6
-        assert st.count_keys() == 8
-
 
 class TestDistributedMeta:
     def test_bulk_ingest_meta_stays_distributed(self, spark, tmpdir):
@@ -626,7 +559,7 @@ class TestDistributedMeta:
         path = os.path.join(tmpdir, "ovfail")
         cfg = ChunkStoreConfig(
             keys=("k",), freq="1h", tz="UTC", chunk_axis=("year", "month"),
-            key_types={"k": "int"}, acid=True,
+            key_types={"k": "int"},
         )
         st = ChunkStore(spark, path, cfg)
         idx = pd.date_range("2024-01-10", periods=12, freq="1h", tz="UTC")
@@ -751,33 +684,6 @@ class TestDeleteBefore:
         # idempotent: nothing left below the cutoff
         assert st.delete_before(pd.Timestamp("2024-03-01", tz="Europe/Paris")) == 0
 
-    def test_untracked_retention_drops_partitions_without_rewrite(
-        self, spark, tmpdir
-    ):
-        st = make_store(spark, tmpdir)
-        st.set_ts(ATTRS, hourly("2023-11-01", 24))
-        st.set_ts(ATTRS, hourly("2024-01-10", 24), update=True)
-        st.set_ts({"site": "s2", "meter": "m1"}, hourly("2023-12-01", 24))
-        before_dirs = {
-            d for d in os.listdir(st._data_path) if d.startswith("chunk_index=")
-        }
-        assert len(before_dirs) == 3
-        n = st.delete_before(
-            pd.Timestamp("2024-01-01", tz="Europe/Paris"), keep_tracking=False
-        )
-        assert n == 2   # Nov s1 chunk + Dec s2 chunk
-        after_dirs = {
-            d for d in os.listdir(st._data_path) if d.startswith("chunk_index=")
-        }
-        assert len(after_dirs) == 1
-        # meta rows for dropped chunks are gone; survivors read fine
-        assert st.meta().filter(
-            F.col("chunk_index") < 2024 * 12
-        ).count() == 0
-        assert st.get_ts({"site": "s2", "meter": "m1"}) is None
-        got = st.get_ts(ATTRS)
-        assert got is not None and len(got.dropna()) == 24
-
     def test_untracked_retention_forbidden_on_sync_store(self, spark, tmpdir):
         st = make_store(spark, tmpdir, allow_sync=True)
         with pytest.raises(SyncGuardError):
@@ -869,34 +775,3 @@ class TestMetaCacheRefresh:
         b.refresh()
         assert b.count_chunks() == 2
         assert b.get_ts({"site": "s2", "meter": "m1"}) is not None
-
-
-class TestUntrackedDeleteFence:
-    def test_untracked_delete_aborts_on_concurrent_write(
-        self, spark, tmpdir, monkeypatch
-    ):
-        import holcstore_spark.sources.chunk_store as cs_mod
-
-        st = make_store(spark, tmpdir)
-        st.set_ts(ATTRS, hourly("2024-01-01", 24))
-        other = ChunkStore(spark, st.path, st.config)
-
-        real = cs_mod.safe_local_checkpoint
-        calls = {"n": 0}
-
-        def inject(df):
-            out = real(df)
-            calls["n"] += 1
-            if calls["n"] == 2:  # during the remaining_meta checkpoint
-                other.set_ts({"site": "s9", "meter": "m9"},
-                             hourly("2024-01-01", 24))
-            return out
-
-        monkeypatch.setattr(cs_mod, "safe_local_checkpoint", inject)
-        with pytest.raises(cs_mod.ConcurrentWriteError, match="op_id advanced"):
-            st.delete({"site": "s1"}, keep_tracking=False)
-        monkeypatch.setattr(cs_mod, "safe_local_checkpoint", real)
-        # both writers' rows intact after the abort
-        assert other.get_ts({"site": "s9", "meter": "m9"}) is not None
-        st.refresh()
-        assert st.get_ts(ATTRS) is not None

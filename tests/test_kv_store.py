@@ -19,9 +19,7 @@ def dt_series(vals, start="2024-01-01", freq="1D"):
 
 @pytest.fixture()
 def kv(spark, tmp_store_path):
-    # plain-layout battery (TestKvAcid covers the manifest backend);
-    # plain is an explicit opt-down since the round-7 default flip
-    return KeyValueStore(spark, tmp_store_path, acid=False)
+    return KeyValueStore(spark, tmp_store_path)
 
 
 class TestCrud:
@@ -69,18 +67,13 @@ class TestCrud:
 
     def test_rewrites_scoped_to_tenant_partition(self, kv, tmp_store_path):
         """Non-versioned writes and clears must not touch other tenants'
-        files (VERDICT r2 #7): assert by file mtimes/paths."""
-        import os
-
+        files (VERDICT r2 #7): assert by the live manifest paths (files
+        are immutable, so an untouched tenant keeps its exact paths)."""
         def part_files(cid):
-            d = os.path.join(tmp_store_path, f"client_id={cid}")
-            out = {}
-            for root, _, names in os.walk(d):
-                for n in names:
-                    if n.endswith(".parquet"):
-                        p = os.path.join(root, n)
-                        out[p] = os.stat(p).st_mtime_ns
-            return out
+            return {
+                e["path"] for e in kv._txlog.snapshot().files["data"]
+                if e.get("rows") and e["chunk_min"] <= cid <= e["chunk_max"]
+            }
 
         kv.set_lc("p1", dt_series([1, 2]), client_id=1)
         kv.set_lc("p1", dt_series([3, 4]), client_id=2)
@@ -92,7 +85,7 @@ class TestCrud:
         kv.clear(["p1"], client_id=1)
         kv.clear_all(client_id=1)
         assert part_files(2) == before
-        assert not os.path.isdir(os.path.join(tmp_store_path, "client_id=1"))
+        assert not part_files(1)
         # client 2 still reads back intact
         got = kv.get_lc("p1", 2)
         assert len(got) == 1 and list(got[0]["data"].values) == [3.0, 4.0]
@@ -250,7 +243,7 @@ class TestHoles:
 
 @pytest.fixture()
 def kv_acid(spark, tmp_store_path):
-    return KeyValueStore(spark, tmp_store_path + "_acid", acid=True)
+    return KeyValueStore(spark, tmp_store_path + "_acid")
 
 
 class TestKvAcid:
@@ -290,8 +283,8 @@ class TestKvAcid:
     ):
         import holcstore_spark.sources.kv_store as kv_mod
 
-        a = KeyValueStore(spark, tmp_store_path + "_cc", acid=True)
-        b = KeyValueStore(spark, a.path, acid=True)
+        a = KeyValueStore(spark, tmp_store_path + "_cc")
+        b = KeyValueStore(spark, a.path)
         orig = kv_mod.KeyValueStore._stage
         state = {"fired": False}
 
@@ -316,8 +309,8 @@ class TestKvAcid:
         from holcstore_spark.sources.chunk_store import ConcurrentWriteError
         import holcstore_spark.sources.kv_store as kv_mod
 
-        a = KeyValueStore(spark, tmp_store_path + "_cf", acid=True)
-        b = KeyValueStore(spark, a.path, acid=True)
+        a = KeyValueStore(spark, tmp_store_path + "_cf")
+        b = KeyValueStore(spark, a.path)
         a.set_lc("p", dt_series([0]), client_id=1, versionning=True)
         orig = kv_mod.KeyValueStore._stage
         state = {"fired": False}
@@ -372,7 +365,7 @@ class TestKvAcidAdviceR6:
         # full-table restage with one shuffle partition), then rewrite
         # one tenant: the other tenant's rows live only in the shared
         # file and must ride along into the rewrite, not vanish with it.
-        kv = KeyValueStore(spark, tmp_store_path + "_shared", acid=True)
+        kv = KeyValueStore(spark, tmp_store_path + "_shared")
         kv.set_lc("a", dt_series([1]), client_id=1)
         kv.set_lc("b", dt_series([2]), client_id=2)
         kv.set_lc("junk", dt_series([7]), client_id=3)
@@ -406,8 +399,8 @@ class TestKvAcidAdviceR6:
         from holcstore_spark.sources.chunk_store import ConcurrentWriteError
         import holcstore_spark.sources.kv_store as kv_mod
 
-        a = KeyValueStore(spark, tmp_store_path + "_pin", acid=True)
-        b = KeyValueStore(spark, a.path, acid=True)
+        a = KeyValueStore(spark, tmp_store_path + "_pin")
+        b = KeyValueStore(spark, a.path)
         a.set_lc("p", dt_series([0]), client_id=1, versionning=True)
         orig = kv_mod.KeyValueStore._next_version
         state = {"fired": False}
@@ -430,7 +423,7 @@ class TestKvAcidAdviceR6:
 
 class TestKvChangesBetween:
     def test_versioned_append_and_clear_delta(self, spark, tmp_store_path):
-        kv = KeyValueStore(spark, tmp_store_path + "_cdf", acid=True)
+        kv = KeyValueStore(spark, tmp_store_path + "_cdf")
         kv.set_lc("p1", dt_series([1, 2]), client_id=1, versionning=True)
         v1 = kv._txlog.snapshot().version
         kv.set_lc("p1", dt_series([3, 4]), client_id=1, versionning=True)
@@ -446,7 +439,7 @@ class TestKvChangesBetween:
 
 class TestKvTimeTravel:
     def test_as_of_view_and_write_refusal(self, spark, tmp_store_path):
-        kv = KeyValueStore(spark, tmp_store_path + "_tt", acid=True)
+        kv = KeyValueStore(spark, tmp_store_path + "_tt")
         kv.set_lc("p", dt_series([1, 2]), client_id=1)
         v1 = kv._txlog.snapshot().version
         kv.set_lc("p", dt_series([9, 9]), client_id=1)
@@ -482,18 +475,6 @@ class TestRewriteRowsCap:
         monkeypatch.setattr(type(kv), "REWRITE_ROWS_CAP", 5_000_000)
         kv.clear(["p1"], client_id=1)
         assert kv.get_lc("p1", 1) == []
-
-    def test_plain_rewrite_above_cap_refuses_loudly(self, kv, monkeypatch):
-        kv.set_lc("p1", dt_series([1, 2, 3]), client_id=1)
-        kv.set_lc("p2", dt_series([4]), client_id=2)
-        monkeypatch.setattr(type(kv), "REWRITE_ROWS_CAP", 2)
-        with pytest.raises(ValueError, match="REWRITE_ROWS_CAP"):
-            kv.clear(["p1"], client_id=1)  # tenant scope: 3 rows > 2
-        monkeypatch.setattr(type(kv), "REWRITE_ROWS_CAP", 3)
-        # tenant scope (3 rows) now passes even though the TABLE has 4
-        kv.clear(["p1"], client_id=1)
-        assert kv.get_lc("p1", 1) == []
-        assert list(kv.get_lc("p2", 2)[0]["data"]) == [4.0]
 
     def test_appends_never_capped(self, kv_acid, monkeypatch):
         kv = kv_acid

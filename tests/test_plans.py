@@ -39,22 +39,21 @@ def hourly(start, periods, value=1.0):
 
 class TestStorePlans:
     def test_keyed_bounded_read_prunes_and_pushes(self, spark, tmp_store_path):
-        # hive partition pruning is the PLAIN layout's plan shape (the
-        # ACID layout replaces it with manifest file skipping, asserted
-        # in test_txlog.py) — opt down explicitly
+        # chunk pruning is manifest file skipping (asserted in
+        # test_txlog.py); the key and bound predicates reach the scan
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=False)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, os.path.join(tmp_store_path, "p"), cfg)
         st.set_ts({"site": "a"}, hourly("2024-01-01", 24 * 60))
         txt = plan_text(
             st.alive_data({"site": "a"}, start="2024-02-01", end="2024-02-10")
         )
-        # key + ts predicates must reach the parquet scan, and the chunk
-        # partition column must be filtered (static range pruning)
+        # key, chunk and ts predicates must reach the parquet scan
         assert "PushedFilters" in txt
         assert "EqualTo(site,a)" in txt
-        assert "PartitionFilters" in txt and "chunk_index" in txt
+        assert "GreaterThanOrEqual(chunk_index,24289)" in txt
+        assert "LessThanOrEqual(chunk_index,24289)" in txt
 
     def test_tombstone_free_read_has_no_join(self, spark, tmp_store_path):
         # non-sync store with zero tombstones: physical rows ARE the alive
@@ -377,7 +376,7 @@ def jobs_of(spark, fn) -> list:
 def budget_store(spark, tmp_store_path, name):
     cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                            chunk_axis=("year", "month"),
-                           key_types={"site": "str"}, acid=True)
+                           key_types={"site": "str"})
     st = ChunkStore(spark, os.path.join(tmp_store_path, name), cfg)
     st.set_many_ts({
         (s_,): hourly("2024-01-01", 24 * 40, value=i)
@@ -455,7 +454,7 @@ class TestCdfPlans:
 
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, os.path.join(tmp_store_path, "cdfp"), cfg)
 
         def h(v):
@@ -485,7 +484,7 @@ class TestKeyStatsFileSkipping:
     def _acid_store(self, spark, tmp_store_path, name):
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         return ChunkStore(spark, os.path.join(tmp_store_path, name), cfg)
 
     def test_point_lookup_opens_one_file(self, spark, tmp_store_path):
@@ -591,7 +590,7 @@ class TestPruningReviewFindings:
         # iterable passed as __in — attrs_filter needs it unconsumed
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, os.path.join(tmp_store_path, "it"), cfg)
         st.set_ts({"site": "a"}, hourly("2024-01-01", 4))
         d = st.alive_data({"site__in": iter(["a"])})
@@ -605,7 +604,7 @@ class TestPruningReviewFindings:
         from holcstore_spark.sources.txlog import TxLog, resolve_txn
 
         with _pytest.raises(ValueError, match="integer"):
-            resolve_txn(True, "app", True)
+            resolve_txn("app", True)
         log = TxLog(os.path.join(tmp_store_path, "boollog"))
         with _pytest.raises(ValueError, match="integer"):
             log.commit(0, "x", 1, adds={"data": []}, removes={},

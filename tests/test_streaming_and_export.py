@@ -391,7 +391,7 @@ class TestChangesStreamSource:
         ck, sink = p + "_ck", p + "_sink"
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, p, cfg)
 
         def hourly(s, n, v):
@@ -469,7 +469,7 @@ class TestChangesStreamSourceHardening:
         from holcstore_spark import ChunkStoreConfig
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year",),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         cfg.save(p)
         schema = pa.schema([
             ("site", pa.string()),
@@ -511,7 +511,7 @@ class TestChangesStreamSourceHardening:
         p = tmp_store_path + "_pr"
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, p, cfg)
         for i in range(34):  # crosses the checkpoint interval
             st.set_ts({"site": f"s{i}"}, pd.Series(
@@ -541,7 +541,7 @@ class TestExactlyOnceStreamIngest:
         os.makedirs(src)
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, os.path.join(tmp_store_path, "eo_store"), cfg)
         idx = pd.date_range("2024-01-01", periods=24, freq="1h", tz="UTC")
         ts_us = idx.tz_localize(None).astype("datetime64[us]")
@@ -579,7 +579,7 @@ class TestExactlyOnceStreamIngest:
         os.makedirs(src)
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, os.path.join(tmp_store_path, "eu_store"), cfg)
         idx = pd.date_range("2024-01-01", periods=24, freq="1h", tz="UTC")
         ts_us = idx.tz_localize(None).astype("datetime64[us]")
@@ -620,7 +620,7 @@ class TestExactlyOnceStreamIngest:
         shrink the stored span to the replayed frame."""
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, os.path.join(tmp_store_path, "er_store"), cfg)
         idx = pd.date_range("2024-01-01", periods=6, freq="1h", tz="UTC")
 
@@ -657,7 +657,7 @@ class TestChangesRateLimit:
 
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, os.path.join(tmp_store_path, "rl"), cfg)
         idx = pd.date_range("2024-01-01", periods=4, freq="1h", tz="UTC")
         for i in range(4):
@@ -698,7 +698,7 @@ class TestChangesRateLimit:
 
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, os.path.join(tmp_store_path, "rl2"), cfg)
         idx = pd.date_range("2024-01-01", periods=4, freq="1h", tz="UTC")
         for i in range(3):
@@ -718,7 +718,7 @@ class TestChangesRateLimit:
 
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=True)
+                               key_types={"site": "str"})
         st = ChunkStore(spark, os.path.join(tmp_store_path, "rl3"), cfg)
         with pytest.raises(ValueError, match="positive"):
             ChangesStreamReader({"path": st.path, "maxVersionsPerBatch": "0"})

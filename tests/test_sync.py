@@ -122,24 +122,25 @@ class TestSync:
             )
 
     def test_bulk_bootstrap_crash_between_data_and_meta(self, pair, monkeypatch):
-        # the bulk bootstrap path writes data first, meta last. A crash in
-        # between must leave the landed data invisible (alive_data keeps
-        # its meta semi-join on sync stores) and the resume pull must
-        # converge to the uninterrupted result via the rewrite path.
+        # the bulk bootstrap path stages data first, meta last, in one
+        # commit. A crash in between must leave nothing visible and the
+        # resume pull must converge to the uninterrupted result.
         server, client = pair
         for i in range(4):
             server.set_ts({"site": f"s{i}"}, hourly("2024-01-01", 24, i + 1.0),
                           update=True)
-        orig = ChunkStore._append_meta_sdf
+        orig = ChunkStore._stage_into_txn
 
-        def boom(self_store, meta_sdf):
-            raise SyncCrash("injected crash after data, before meta")
+        def boom(self_store, frame, table, npart=None):
+            if table == "meta":
+                raise SyncCrash("injected crash after data, before meta")
+            return orig(self_store, frame, table, npart)
 
-        monkeypatch.setattr(ChunkStore, "_append_meta_sdf", boom)
+        monkeypatch.setattr(ChunkStore, "_stage_into_txn", boom)
         with pytest.raises(SyncCrash):
             SyncClient(server, client).pull()
-        monkeypatch.setattr(ChunkStore, "_append_meta_sdf", orig)
-        # data landed but is invisible without meta
+        monkeypatch.setattr(ChunkStore, "_stage_into_txn", orig)
+        # the staged data never became visible
         assert client.count_keys() == 0
         assert client.get_ts({"site": "s0"}) is None
         # resume completes and dedupes the orphaned physical rows
@@ -180,9 +181,9 @@ class TestSync:
         server.set_ts({"site": "a"}, hourly("2024-01-01", 24, 1.0), update=True)
         SyncClient(server, client).pull()
         rewrites = []
-        orig = ChunkStore._rewrite_partitions_multi
+        orig = ChunkStore._rewrite_spark
         monkeypatch.setattr(
-            ChunkStore, "_rewrite_partitions_multi",
+            ChunkStore, "_rewrite_spark",
             lambda self_store, sdf: (rewrites.append(1), orig(self_store, sdf))[1],
         )
         # new month + new key → no physical overlap → bulk append

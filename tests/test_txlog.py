@@ -30,7 +30,7 @@ from holcstore_spark.sources.txlog import TxLog
 def acid_store(spark, tmpdir, name="s", tz="UTC", axis=("year", "month")):
     cfg = ChunkStoreConfig(
         keys=("site",), freq="1h", tz=tz, chunk_axis=axis,
-        key_types={"site": "str"}, acid=True,
+        key_types={"site": "str"},
     )
     return ChunkStore(spark, os.path.join(tmpdir, name), cfg)
 
@@ -241,7 +241,7 @@ class TestAcidSync:
 
         cfg = ChunkStoreConfig(
             keys=("site",), freq="1h", tz="UTC", chunk_axis=("year", "month"),
-            key_types={"site": "str"}, allow_sync=True, acid=True,
+            key_types={"site": "str"}, allow_sync=True,
         )
         server = ChunkStore(spark, os.path.join(tmpdir, "srv"), cfg)
         client = ChunkStore(spark, os.path.join(tmpdir, "cli"), cfg)
@@ -398,12 +398,6 @@ class TestTimeTravel:
             old.set_ts({"site": "b"}, hourly("2024-01-01", 3))
         with pytest.raises(ValueError, match="not a committed log version"):
             st.time_travel(999)
-        with pytest.raises(ValueError, match="requires an ACID store"):
-            cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
-                                   chunk_axis=("year",),
-                                   key_types={"site": "str"}, acid=False)
-            plain = ChunkStore(spark, os.path.join(tmpdir, "plain"), cfg)
-            plain.time_travel(1)
 
 
 class TestAcidStreamIngest:
@@ -561,7 +555,7 @@ class TestReviewHardening:
 
         cfg = ChunkStoreConfig(keys=("uid",), freq="1h", tz="UTC",
                                chunk_axis=("year",),
-                               key_types={"uid": "int"}, acid=True)
+                               key_types={"uid": "int"})
         st = ChunkStore(spark, os.path.join(tmpdir, "ck"), cfg)
         # same key arriving as np.int64, int and str must digest equal
         d1 = st._canon_key_tuple((np.int64(7),))
@@ -655,7 +649,7 @@ class TestAcidChaos:
         # digests API-stable — the machinery must stay conservative
         # (chunk-granular) instead of waiving on unsound digests
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
-                               chunk_axis=("year",), acid=True)
+                               chunk_axis=("year",))
         st = ChunkStore(spark, os.path.join(tmpdir, "nokt"), cfg)
         assert not st._key_level_detection_ok()
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3))
@@ -891,64 +885,16 @@ class TestCommitterContract:
 
 
 class TestAcidDefaultAndHistory:
-    """Round-7: ACID is the default for NEW stores; existing stores keep
-    their layout; history() is the DESCRIBE HISTORY surface."""
+    """Every store is a transaction-log store; history() is the DESCRIBE
+    HISTORY surface."""
 
     def test_new_store_defaults_to_acid(self, spark, tmpdir):
         cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                                chunk_axis=("year",), key_types={"site": "str"})
-        assert cfg.acid is None  # unresolved until a path exists
         st = ChunkStore(spark, os.path.join(tmpdir, "fresh"), cfg)
-        assert st._acid and st.config.acid is True
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3))
         assert os.path.isdir(os.path.join(st.path, "_txlog"))
-
-    def test_existing_plain_store_keeps_layout_under_default(self, spark, tmpdir):
-        path = os.path.join(tmpdir, "old")
-        plain_cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
-                                     chunk_axis=("year",),
-                                     key_types={"site": "str"}, acid=False)
-        st = ChunkStore(spark, path, plain_cfg)
-        st.set_ts({"site": "a"}, hourly("2024-01-01", 3))
-        # reopen with the DEFAULT config: saved layout wins, reads work
-        reopened = ChunkStore(spark, path, ChunkStoreConfig(
-            keys=("site",), freq="1h", tz="UTC", chunk_axis=("year",),
-            key_types={"site": "str"}))
-        assert reopened._acid is False
-        assert reopened.get_ts({"site": "a"}) is not None
-        # explicit mismatch still refuses loudly
-        with pytest.raises(ValueError, match="incompatible"):
-            ChunkStore(spark, path, ChunkStoreConfig(
-                keys=("site",), freq="1h", tz="UTC", chunk_axis=("year",),
-                key_types={"site": "str"}, acid=True))
-
-    def test_configless_dir_detection(self, spark, tmpdir):
-        # a store directory whose _store_config.json was lost: _txlog
-        # marks ACID, plain parquet marks plain
-        path = os.path.join(tmpdir, "lost")
-        cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
-                               chunk_axis=("year",), key_types={"site": "str"})
-        st = ChunkStore(spark, path, cfg)
-        st.set_ts({"site": "a"}, hourly("2024-01-01", 3))
-        os.remove(os.path.join(path, "_store_config.json"))
-        again = ChunkStore(spark, path, ChunkStoreConfig(
-            keys=("site",), freq="1h", tz="UTC", chunk_axis=("year",),
-            key_types={"site": "str"}))
-        assert again._acid is True
-        assert again.get_ts({"site": "a"}) is not None
-
-    def test_kv_attr_default_resolution(self, spark, tmpdir):
-        from holcstore_spark.sources.attr_store import AttrStore
-        from holcstore_spark.sources.kv_store import KeyValueStore
-
-        kv_new = KeyValueStore(spark, os.path.join(tmpdir, "kvn"))
-        assert kv_new._acid is True  # fresh → ACID
-        kv_plain = KeyValueStore(spark, os.path.join(tmpdir, "kvp"), acid=False)
-        kv_plain.set_lc("p", hourly("2024-01-01", 2), client_id=1)
-        # default reopen keeps the detected plain layout
-        assert KeyValueStore(spark, kv_plain.path)._acid is False
-        at_new = AttrStore(spark, os.path.join(tmpdir, "atn"), keys=("k",))
-        assert at_new._acid is True
+        assert len(st.history().collect()) == 1
 
     def test_history_surface(self, spark, tmpdir):
         st = acid_store(spark, tmpdir, name="hist")
@@ -967,13 +913,6 @@ class TestAcidDefaultAndHistory:
         assert ops == sorted(ops) and len(set(ops)) == len(ops)
         # pairs with time_travel: the version column IS the as-of axis
         assert (st.time_travel(h[1]["version"]).get_ts({"site": "a"}) == 2.0).all()
-        plain = ChunkStore(spark, os.path.join(tmpdir, "plainh"),
-                           ChunkStoreConfig(keys=("site",), freq="1h",
-                                            tz="UTC", chunk_axis=("year",),
-                                            key_types={"site": "str"},
-                                            acid=False))
-        with pytest.raises(ValueError, match="requires an ACID store"):
-            plain.history()
 
     def test_blind_append_warns_above_cap(self, spark, tmpdir, monkeypatch):
         st = acid_store(spark, tmpdir, name="blind")
@@ -1029,45 +968,39 @@ class TestPostLinkDiscrimination:
         }
 
 
-class TestResolutionHardening:
-    """Code-review r7: pre-acid-field configs must open; an emptied
-    plain store must not flip layouts on default reopen."""
-
-    def test_pre_acid_saved_config_opens(self, spark, tmpdir):
+class TestLayoutResolution:
+    def test_existing_empty_dir_opens_as_new_store(self, spark, tmpdir):
+        """An existing empty directory (a ``tempfile.mkdtemp()`` path) is a
+        new transaction-log store for all three classes — as is a
+        directory holding only the config a plain store saved at open,
+        with its ``"acid": false`` flag, before any write."""
+        import dataclasses
         import json as _json
 
-        path = os.path.join(tmpdir, "preacid")
-        cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
-                               chunk_axis=("year",),
-                               key_types={"site": "str"}, acid=False)
-        st = ChunkStore(spark, path, cfg)
-        st.set_ts({"site": "a"}, hourly("2024-01-01", 3))
-        cfg_file = os.path.join(path, "_store_config.json")
-        with open(cfg_file) as f:
-            raw = _json.load(f)
-        del raw["acid"]  # simulate a config saved before the field existed
-        with open(cfg_file, "w") as f:
-            _json.dump(raw, f)
-        reopened = ChunkStore(spark, path, ChunkStoreConfig(
-            keys=("site",), freq="1h", tz="UTC", chunk_axis=("year",),
-            key_types={"site": "str"}))
-        assert reopened._acid is False
-        assert reopened.get_ts({"site": "a"}) is not None
-
-    def test_emptied_plain_kv_store_stays_plain(self, spark, tmpdir):
-        import pandas as _pd
-
+        from holcstore_spark.sources.attr_store import AttrStore
         from holcstore_spark.sources.kv_store import KeyValueStore
 
-        kv = KeyValueStore(spark, os.path.join(tmpdir, "kvempty"), acid=False)
-        s = _pd.Series([1.0], index=_pd.date_range("2024-01-01", periods=1,
-                                                   freq="1D", tz="UTC"))
-        kv.set_lc("p", s, client_id=1)
-        kv.clear_all()  # directory survives with no parquet footers
-        reopened = KeyValueStore(spark, kv.path)  # default resolution
-        assert reopened._acid is False  # NOT flipped to ACID
-        reopened.set_lc("p", s, client_id=1)
-        assert len(reopened.get_lc("p", 1)) == 1
+        cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
+                               chunk_axis=("year",), key_types={"site": "str"})
+        never_written = os.path.join(tmpdir, "never_written")
+        os.makedirs(never_written)
+        with open(os.path.join(never_written, "_store_config.json"), "w") as f:
+            _json.dump({**dataclasses.asdict(cfg), "acid": False}, f)
+        opened = []
+        for name, make in [
+            ("cs", lambda p: ChunkStore(spark, p, cfg)),
+            ("kv", lambda p: KeyValueStore(spark, p)),
+            ("at", lambda p: AttrStore(spark, p, keys=("k",))),
+        ]:
+            path = os.path.join(tmpdir, name)
+            os.makedirs(path)
+            opened.append(make(path))
+        opened.append(ChunkStore(spark, never_written, cfg))
+        for st in opened:
+            assert st.history().count() == 0
+        st = opened[0]
+        st.set_ts({"site": "a"}, hourly("2024-01-01", 3))
+        assert [r["op"] for r in st.history().collect()] == ["set_ts"]
 
 
 def _mp_writer(root, wid, n_commits, out_q):
@@ -1177,13 +1110,6 @@ class TestChangesBetween:
         assert st.changes_between(v1, v1).count() == 0
         with pytest.raises(ValueError, match="not a committed log version"):
             st.changes_between(99)
-        plain = ChunkStore(spark, os.path.join(tmpdir, "plaincdf"),
-                           ChunkStoreConfig(keys=("site",), freq="1h",
-                                            tz="UTC", chunk_axis=("year",),
-                                            key_types={"site": "str"},
-                                            acid=False))
-        with pytest.raises(ValueError, match="requires an ACID store"):
-            plain.changes_between(0)
 
 
 class TestChangesBetweenHardening:
@@ -1208,7 +1134,7 @@ class TestViewVacuumGuard:
         v = st._txlog.snapshot().version
         with pytest.raises(ValueError, match="vacuum refused"):
             st.time_travel(v).vacuum(0)
-        kv = KeyValueStore(spark, os.path.join(tmpdir, "vgkv"), acid=True)
+        kv = KeyValueStore(spark, os.path.join(tmpdir, "vgkv"))
         s = _pd.Series([1.0], index=_pd.date_range("2024-01-01", periods=1,
                                                    freq="1D", tz="UTC"))
         kv.max_edge_rows = 123456
@@ -1217,8 +1143,7 @@ class TestViewVacuumGuard:
         assert view.max_edge_rows == 123456  # instance overrides carried
         with pytest.raises(ValueError, match="vacuum refused"):
             view.vacuum(0)
-        at = AttrStore(spark, os.path.join(tmpdir, "vgat"), keys=("k",),
-                       acid=True)
+        at = AttrStore(spark, os.path.join(tmpdir, "vgat"), keys=("k",))
         at.set_ts({"k": "x"}, _pd.Series(
             [1.0], index=_pd.date_range("2024-01-01", periods=1, freq="1h",
                                         tz="UTC")))
@@ -1581,13 +1506,6 @@ class TestRestore:
             st.restore(99)
         with pytest.raises(ValueError, match="read-only"):
             st.time_travel(v1).restore(v1)
-        plain = ChunkStore(
-            spark, os.path.join(tmpdir, "rstp"),
-            ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
-                             chunk_axis=("year",), key_types={"site": "str"},
-                             acid=False))
-        with pytest.raises(ValueError, match="requires an ACID store"):
-            plain.restore(1)
 
     def test_restore_refused_when_files_vacuumed(self, spark, tmpdir):
         st = acid_store(spark, tmpdir, name="rst3")
@@ -1605,7 +1523,7 @@ class TestRestore:
         from holcstore_spark.sources.attr_store import AttrStore
         from holcstore_spark.sources.kv_store import KeyValueStore
 
-        kv = KeyValueStore(spark, os.path.join(tmpdir, "rkv"), acid=True)
+        kv = KeyValueStore(spark, os.path.join(tmpdir, "rkv"))
         s = _pd.Series([1.0], index=_pd.date_range("2024-01-01", periods=1,
                                                    freq="1h", tz="UTC"))
         kv.set_lc("p1", s, client_id=1)
@@ -1615,7 +1533,7 @@ class TestRestore:
         assert not kv.get_lc("p2", client_id=1)
         assert kv.get_lc("p1", client_id=1)
         at = AttrStore(spark, os.path.join(tmpdir, "rat"),
-                       keys=("k",), acid=True)
+                       keys=("k",))
         at.set_ts({"k": "x"}, s)
         va = at._txlog.snapshot().version
         at.set_ts({"k": "y"}, s * 3)
@@ -1706,7 +1624,7 @@ class TestKeyTypeProbe:
         path = os.path.join(tmpdir, "ik")
         decl = ChunkStoreConfig(keys=("uid",), freq="1h", tz="UTC",
                                 chunk_axis=("year", "month"),
-                                key_types={"uid": "int"}, acid=True)
+                                key_types={"uid": "int"})
         st0 = ChunkStore(spark, path, decl)
         st0.set_ts({"uid": 42}, hourly("2024-01-01", 24, value=1.0))
         cfgf = os.path.join(path, "_store_config.json")
@@ -1716,7 +1634,7 @@ class TestKeyTypeProbe:
         with open(cfgf, "w") as f:
             f.write(_json.dumps(raw))
         cfg = ChunkStoreConfig(keys=("uid",), freq="1h", tz="UTC",
-                               chunk_axis=("year", "month"), acid=True)
+                               chunk_axis=("year", "month"))
         st = ChunkStore(spark, path, cfg)
         # module-level derivation (the streaming CDC source's path)
         sch = data_schema_from_config(st.config, st.path)
@@ -1737,7 +1655,7 @@ class TestKeyTypeProbe:
         )
 
         cfg = ChunkStoreConfig(keys=("uid",), freq="1h", tz="UTC",
-                               chunk_axis=("year",), acid=True)
+                               chunk_axis=("year",))
         st = ChunkStore(spark, os.path.join(tmpdir, "ek"), cfg)
         with pytest.raises(ValueError, match="declare key_types"):
             data_schema_from_config(st.config, st.path)
@@ -2813,22 +2731,13 @@ class TestOptimize:
         assert (a.get_ts({"site": "s1"}) == 42.0).all()
         assert (a.get_ts({"site": "s0"}) == 0.0).all()
 
-    def test_optimize_requires_acid(self, spark, tmpdir):
-        cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
-                               chunk_axis=("year", "month"),
-                               key_types={"site": "str"}, acid=False)
-        st = ChunkStore(spark, os.path.join(tmpdir, "plain"), cfg)
-        with pytest.raises(ValueError, match="acid=True"):
-            st.optimize()
-
-
 class TestOptimizeKvAttr:
     """optimize() on the other two manifest-backed stores."""
 
     def test_kv_binpack_per_tenant(self, spark, tmpdir):
         from holcstore_spark.sources.kv_store import KeyValueStore
 
-        kv = KeyValueStore(spark, os.path.join(tmpdir, "kvopt"), acid=True)
+        kv = KeyValueStore(spark, os.path.join(tmpdir, "kvopt"))
         # versioned appends stage one file each: tenant 1 fragments
         for i in range(5):
             kv.set_lc(f"p{i}", hourly("2024-01-01", 4, value=float(i)),
@@ -2860,7 +2769,7 @@ class TestOptimizeKvAttr:
         from holcstore_spark.sources.attr_store import AttrStore
 
         at = AttrStore(spark, os.path.join(tmpdir, "atopt"),
-                       keys=("name",), acid=True)
+                       keys=("name",))
         for i in range(5):
             at.set_ts({"name": f"n{i}"}, hourly("2024-01-01", 2, value=float(i)))
         n_before = len(at._txlog.snapshot().files["data"])
@@ -2884,7 +2793,7 @@ class TestOptimizeReviewFixes:
         from holcstore_spark.sources.attr_store import AttrStore
 
         at = AttrStore(spark, os.path.join(tmpdir, "atint"),
-                       keys=("sensor_id",), acid=True)
+                       keys=("sensor_id",))
         for i in range(5):
             at.set_ts({"sensor_id": i}, hourly("2024-01-01", 2, value=float(i)))
         n_before = len(at._txlog.snapshot().files["data"])
@@ -2935,7 +2844,7 @@ class TestOptimizeReviewFixes:
         # staged repack files so the default vacuum reclaims them
         from holcstore_spark.sources.kv_store import KeyValueStore
 
-        kv = KeyValueStore(spark, os.path.join(tmpdir, "kvab"), acid=True)
+        kv = KeyValueStore(spark, os.path.join(tmpdir, "kvab"))
         for i in range(4):
             kv.set_lc(f"p{i}", hourly("2024-01-01", 2, value=1.0),
                       client_id=1, versionning=True)
@@ -3075,18 +2984,7 @@ class TestIdempotentTxn:
         got = st2.get_ts({"site": "a"})
         assert (got.dropna() == 1.0).all()
 
-    def test_txn_requires_acid_and_version(self, spark, tmpdir):
-        cfg = ChunkStoreConfig(
-            keys=("site",), freq="1h", tz="UTC",
-            chunk_axis=("year", "month"), key_types={"site": "str"},
-            acid=False,
-        )
-        plain = ChunkStore(spark, os.path.join(tmpdir, "plain"), cfg)
-        with pytest.raises(ValueError, match="acid"):
-            plain.ingest_long(self._long(spark, "a", "2024-01-01", 4, 1.0),
-                              mode="insert", txn_app="sink", txn_version=0)
-        with pytest.raises(ValueError, match="acid"):
-            plain.last_txn_version("sink")
+    def test_txn_requires_version(self, spark, tmpdir):
         st = acid_store(spark, tmpdir, name="nover")
         with pytest.raises(ValueError, match="txn_version"):
             st.ingest_long(self._long(spark, "a", "2024-01-01", 4, 1.0),
@@ -3100,8 +2998,8 @@ class TestIdempotentTxn:
                            mode="insert", txn_app="sink", txn_version=-1)
         from holcstore_spark.sources.txlog import resolve_txn
         with pytest.raises(ValueError, match="non-negative"):
-            resolve_txn(True, "sink", -5)
-        assert resolve_txn(True, "sink", 0) == ("sink", 0)
+            resolve_txn("sink", -5)
+        assert resolve_txn("sink", 0) == ("sink", 0)
 
 
 def _mp_txn_writer(root, wid, n_batches, out_q):
@@ -3248,21 +3146,6 @@ class TestIdempotentTxnKvAttr:
         s = got[0]["data"]
         assert len(s) == 4 and (s == 9.0).all()
 
-    def test_requires_acid(self, spark, tmpdir):
-        from holcstore_spark.sources.attr_store import AttrStore
-        from holcstore_spark.sources.kv_store import KeyValueStore
-
-        kv = KeyValueStore(spark, os.path.join(tmpdir, "kvplain"),
-                           acid=False)
-        with pytest.raises(ValueError, match="acid"):
-            kv.set_many_lc({"p": hourly("2024-01-01", 2)}, client_id=1,
-                           txn_app="j", txn_version=0)
-        at = AttrStore(spark, os.path.join(tmpdir, "atplain"), keys=("k",),
-                       acid=False)
-        with pytest.raises(ValueError, match="acid"):
-            at.set_many_ts({("x",): hourly("2024-01-01", 2)},
-                           txn_app="j", txn_version=0)
-
     def test_chunk_set_many_ts_replay_noop(self, spark, tmpdir):
         st = acid_store(spark, tmpdir, name="smtxn")
         batch = {("a",): hourly("2024-01-01", 4),
@@ -3284,7 +3167,7 @@ class TestRewriteAllDimNarrowing:
         cfg = ChunkStoreConfig(
             keys=("site", "meter"), freq="1h", tz="UTC",
             chunk_axis=("year", "month"),
-            key_types={"site": "str", "meter": "str"}, acid=True,
+            key_types={"site": "str", "meter": "str"},
         )
         st = ChunkStore(spark, os.path.join(tmpdir, "dims"), cfg)
         for m in ("m1", "m2", "m3"):

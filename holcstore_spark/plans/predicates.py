@@ -4,7 +4,8 @@ The reference's whole query surface is attrs/filters dicts fed to the Django
 ORM — conjunctive equality plus a small ``__lookup`` dialect
 (reference: chunk_timeserie_store.py:889-899, hostore.py:241,292).
 Here the same dialect compiles to a single Catalyst predicate, so it is
-pushed down to the Parquet scan.
+pushed down to the Parquet scan, or to one pyarrow expression for the
+driver-side scans of the metadata-sized paths (:func:`arrow_filter`).
 """
 
 from __future__ import annotations
@@ -58,6 +59,50 @@ def attrs_filter(attrs: dict | None) -> Column:
     if not attrs:
         return F.lit(True)
     return reduce(operator.and_, (lookup_filter(k, v) for k, v in attrs.items()))
+
+
+def arrow_lookup_filter(key: str, value):
+    """One ``field[__lookup]`` pair → pyarrow dataset expression, with the
+    row semantics of :func:`lookup_filter` on Spark: a null never
+    matches a comparison, ``contains``/``startswith`` compare the
+    field's string form, and ``mod`` keeps the dividend's sign, as
+    Spark's ``%`` does (Arrow integer division truncates toward zero)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    field, _, lookup = key.partition("__")
+    col = pc.field(field)
+    if not lookup:
+        return col.is_null() if value is None else (col == value)
+    if lookup in _LOOKUPS:
+        return _LOOKUPS[lookup](col, value)
+    if lookup == "in":
+        # SQL IN: a null member never matches, a null field never does
+        return col.isin([v for v in value if v is not None])
+    if lookup == "isnull":
+        return col.is_null() if value else col.is_valid()
+    if lookup == "ne":
+        return col != value
+    if lookup == "contains":
+        return pc.match_substring(col.cast(pa.string()), str(value))
+    if lookup == "startswith":
+        return pc.starts_with(col.cast(pa.string()), str(value))
+    if lookup == "mod":
+        divisor, remainder = int(value[0]), int(value[1])
+        rem = pc.subtract(col, pc.multiply(pc.divide(col, divisor), divisor))
+        return rem == remainder
+    raise ValueError(f"unsupported lookup: {key!r}")
+
+
+def arrow_filter(attrs: dict | None):
+    """pyarrow twin of :func:`attrs_filter` for driver-side scans of the
+    store's files: AND of per-key expressions; empty/None → None (no
+    filter)."""
+    if not attrs:
+        return None
+    return reduce(
+        operator.and_, (arrow_lookup_filter(k, v) for k, v in attrs.items())
+    )
 
 
 def validate_filter_keys(filters: dict | None, allowed: tuple[str, ...]) -> None:

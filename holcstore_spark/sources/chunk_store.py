@@ -58,7 +58,11 @@ from holcstore_spark.operators.grid import chunk_aligned_bounds, reindex_to_chun
 from holcstore_spark.operators.overlay import combine_first
 from holcstore_spark.operators.slicing import drop_bounds_na as _drop_bounds_na
 from holcstore_spark.operators.slicing import time_slice
-from holcstore_spark.plans.predicates import attrs_filter, validate_filter_keys
+from holcstore_spark.plans.predicates import (
+    arrow_filter,
+    attrs_filter,
+    validate_filter_keys,
+)
 from holcstore_spark.plans.pruning import chunk_bounds_filter, normalize_bound
 from holcstore_spark.sources.io_util import safe_local_checkpoint
 
@@ -389,6 +393,62 @@ _META_EXTRA = [
 ]
 
 
+def bounds_meta_rows(
+    bounds: pd.DataFrame, keys: list[str], chunk_axis: tuple[str, ...],
+    tz: str, freq_seconds: int, updated_at: datetime, op_id: int,
+) -> pd.DataFrame:
+    """Meta rows of the dense grids ``sequence(grid_start, grid_end,
+    freq)`` of a ``chunk_aligned_bounds`` frame (naive UTC instants), by
+    pure arithmetic on the chunk boundaries: O(keys × chunks) rows from a
+    metadata-sized frame. Exact for any freq, including freqs that do not
+    divide the chunk length and DST-shifted chunks: grid point k sits at
+    ``grid_start + k*freq``; chunk ``ci`` owns ``k ∈ [ceil((cs-lo)/f),
+    min(ceil((ce-lo)/f), floor((hi-lo)/f)+1))`` where cs/ce are the
+    chunk's UTC bounds and hi the inclusive grid end (checked against
+    the grid aggregate by tests/test_chunk_store.py)."""
+    import numpy as np
+
+    if bounds.empty:
+        cols = [*keys, *(n for n, _ in _META_EXTRA)]
+        return pd.DataFrame({c: bounds[c] if c in bounds else [] for c in cols})
+    yearly = tuple(chunk_axis) == ("year",)
+    f = int(freq_seconds) * 10**9
+    lo = bounds["grid_start"].to_numpy("datetime64[ns]").astype("int64")
+    hi = bounds["grid_end"].to_numpy("datetime64[ns]").astype("int64")
+
+    def chunk_of(ns):
+        local = pd.DatetimeIndex(ns.astype("datetime64[ns]")).tz_localize(
+            "UTC").tz_convert(tz)
+        ci = local.year if yearly else local.year * 12 + local.month - 1
+        return np.asarray(ci, dtype="int64")
+
+    def chunk_start(ci):
+        u = np.unique(ci)
+        y, m = (u, np.ones_like(u)) if yearly else (u // 12, u % 12 + 1)
+        local = pd.to_datetime(pd.DataFrame({"year": y, "month": m, "day": 1}))
+        utc = local.dt.tz_localize(
+            tz, ambiguous=np.ones(len(u), dtype=bool),
+            nonexistent="shift_forward",
+        ).dt.tz_convert("UTC").dt.tz_localize(None)
+        start = utc.to_numpy("datetime64[ns]").astype("int64")
+        return start[np.searchsorted(u, ci)]
+
+    ci_lo = chunk_of(lo)
+    n = chunk_of(hi) - ci_lo + 1
+    row = np.repeat(np.arange(len(bounds)), n)
+    ci = ci_lo[row] + np.arange(len(row)) - np.repeat(np.cumsum(n) - n, n)
+    lo_r, hi_r = lo[row], hi[row]
+    k0 = -((lo_r - chunk_start(ci)) // f)
+    k1 = np.minimum(-((lo_r - chunk_start(ci + 1)) // f), (hi_r - lo_r) // f + 1)
+    out = bounds[keys].iloc[row].reset_index(drop=True).assign(
+        chunk_index=ci.astype("int32"),
+        start_ts=pd.to_datetime(lo_r + k0 * f, utc=True),
+        n_points=(k1 - k0).astype("int64"),
+    )
+    out = out.loc[out["n_points"] > 0].reset_index(drop=True)
+    return out.assign(updated_at=updated_at, op_id=op_id, is_deleted=False)
+
+
 class ChunkStore:
     def __init__(self, spark: SparkSession, path: str, config: ChunkStoreConfig):
         import threading
@@ -659,9 +719,16 @@ class ChunkStore:
         binpack path: ``optimize`` wants ~one file per repacked chunk,
         not the session shuffle parallelism).
 
-        A ``pyarrow.Table`` (single-series writes) is written on the
-        driver as ONE file, no Spark job, with the physical schema of
-        Spark's canonical files (see :meth:`_write_arrow`)."""
+        A ``pyarrow.Table`` (single-series writes, metadata-sized meta
+        rows) is written on the driver as ONE file, no Spark job, with
+        the physical schema of Spark's canonical files (see
+        :meth:`_write_arrow`).
+
+        A file with no rows (Spark writes one for an empty frame) is
+        deleted, not registered: with no stats it would overlap every
+        chunk and key, so every later rewrite would read it. Each meta
+        entry records its exact max ``updated_at`` (the watermark of
+        :meth:`last_updated_at`), read from the staged rows."""
         txn = self._active_txn
         abs_dir, rel_dir = self._txlog.new_staging_dir()
         if isinstance(frame, pa.Table):
@@ -678,10 +745,15 @@ class ChunkStore:
             else:
                 df = self._cast_canonical(frame, self._meta_schema()).coalesce(1)
             df.write.mode("overwrite").parquet(abs_dir)
-        key_cols = self.config.keys if table == "data" else ()
-        txn.adds[table].extend(
-            self._txlog.collect_entries(abs_dir, rel_dir, key_cols=key_cols)
+        entries = self._txlog.collect_entries(
+            abs_dir, rel_dir,
+            key_cols=self.config.keys if table == "data" else (),
+            max_col="updated_at" if table == "meta" else None,
         )
+        for e in entries:
+            if not e["rows"]:
+                os.remove(os.path.join(self.path, e["path"]))
+        txn.adds[table].extend(e for e in entries if e["rows"])
 
     def _arrow_canonical(self, tbl: pa.Table, table: str) -> pa.Table:
         """Arrow twin of :meth:`_cast_canonical`: the store's column
@@ -880,39 +952,72 @@ class ChunkStore:
 
         return [e for e in affected if may_contain(e)]
 
-    def _rewrite_spark(self, sdf_new: DataFrame) -> None:
+    def _rewrite_spark(
+        self, sdf_new: DataFrame, chunks, pairs=None, merge=None,
+    ) -> None:
         """Copy-on-write MERGE of a bulk frame: stage (kept rows of the
-        affected files ∪ new rows) into fresh files by a Spark job and
-        mark the affected files removed — all visibility flips at
-        commit. Kept rows are the affected files' rows whose (key tuple,
-        chunk_index) pair the new frame does not cover. 'Affected' is
-        decided by manifest stats (:meth:`_affected_files`), so an
-        update to one month rewrites that month's files, never the
+        affected files ∪ new rows) into fresh files by ONE Spark write and
+        mark the affected files removed — all visibility flips at commit.
+        'Affected' is decided by manifest stats (:meth:`_affected_files`),
+        so an update to one month rewrites that month's files, never the
         table. Conflicts with concurrent commits are resolved at commit
-        time (txlog), not by a racy fence. Single-series writes take
-        the driver-side twin, :meth:`_rewrite_arrow`."""
+        time (txlog), not by a racy fence. Single-series writes take the
+        driver-side twin, :meth:`_rewrite_arrow`.
+
+        The caller supplies what it already knows, so the rewrite runs no
+        metadata job of its own:
+
+        - ``chunks``: the chunk set ``sdf_new`` covers;
+        - ``pairs``: the (keys…, chunk_index) pairs it covers, as a pandas
+          frame (broadcast) or a Spark frame; None derives them from
+          ``sdf_new``. Rows of the affected files outside these pairs are
+          kept;
+        - ``merge``: pairs (same forms; None rather than empty) whose
+          existing rows are merged under the new ones,
+          ``new.combine_first(existing)`` — the ``update`` read-back,
+          fused into the same read of the affected files."""
         txn = self._active_txn
-        pair = [*self.config.keys, "chunk_index"]
-        chunk_set = {
-            int(r[0]) for r in sdf_new.select("chunk_index").distinct().collect()
-        }
+        keys = list(self.config.keys)
+        pair = [*keys, "chunk_index"]
+        chunk_set = {int(c) for c in chunks}
         affected = self._affected_files(chunk_set)
-        sdf_new = self._cast_canonical(sdf_new, self._data_schema())
+        schema = self._data_schema()
+        sdf_new = self._cast_canonical(sdf_new, schema)
         if affected:
             paths = [os.path.join(self.path, e["path"]) for e in affected]
-            keep = (
-                self.spark.read.schema(self._data_schema())
-                .parquet(*paths)
-                .join(sdf_new.select(*pair).distinct(), on=pair, how="left_anti")
+            old = self.spark.read.schema(schema).parquet(*paths)
+            covered = (
+                sdf_new.select(*pair).distinct() if pairs is None
+                else self._pairs_frame(pairs)
             )
-            combined = keep.select(
-                *[f.name for f in self._data_schema()]
-            ).unionByName(sdf_new)
+            keep = old.join(covered, on=pair, how="left_anti")
+            if merge is not None:
+                existing = old.join(self._pairs_frame(merge), on=pair, how="left_semi")
+                merged = combine_first([sdf_new, existing], keys=keys).withColumn(
+                    "chunk_index",
+                    chunk_index_col("ts", self.config.chunk_axis, self.config.tz),
+                )
+                sdf_new = self._cast_canonical(merged, schema)
+            combined = keep.unionByName(sdf_new)
             txn.removes["data"].extend(affected)
         else:
             combined = sdf_new
         self._stage_into_txn(combined, "data")
         txn.touch(chunk_set)
+
+    def _pairs_frame(self, pairs) -> DataFrame:
+        """(keys…, chunk_index) pairs as a Spark join side: a pandas frame
+        (metadata-sized, driver-built) becomes a broadcast local relation;
+        a Spark frame is deduplicated and left to AQE."""
+        pair = [*self.config.keys, "chunk_index"]
+        if isinstance(pairs, DataFrame):
+            return pairs.select(*pair).distinct()
+        pdf = pairs[pair].drop_duplicates().astype({"chunk_index": "int32"})
+        schema = T.StructType(
+            [T.StructField(k, t) for k, t in self._key_schema(pdf)]
+            + [T.StructField("chunk_index", T.IntegerType())]
+        )
+        return F.broadcast(self.spark.createDataFrame(pdf, schema=schema))
 
     def _rewrite_arrow(self, new: pa.Table, chunks: list[int]) -> None:
         """Driver-side copy-on-write of ONE series: the same affected
@@ -1286,86 +1391,35 @@ class ChunkStore:
                       "updated_at", "op_id", "is_deleted"]
     )
 
-    def _meta_sdf_for(
-        self, sdf: DataFrame, updated_at: datetime, op_id: int
-    ) -> DataFrame:
-        """Distributed meta rows for a data frame: one aggregate, never a
-        driver collect — a 10M-key ingest produces its changelog rows with
-        the same parallelism as the data write (reference analogue:
-        bulk_create batching, chunk_timeserie_store.py:815-824)."""
-        return (
-            sdf.groupBy(*self.config.keys, "chunk_index")
-            .agg(F.min("ts").alias("start_ts"), F.count("ts").alias("n_points"))
-            .withColumn("updated_at", F.lit(updated_at))
-            .withColumn("op_id", F.lit(op_id).cast("long"))
-            .withColumn("is_deleted", F.lit(False))
-            .select(*self._META_COLS)
+    def _meta_from_bounds(
+        self, bounds: pd.DataFrame | DataFrame, updated_at: datetime,
+        op_id: int,
+    ) -> pd.DataFrame | DataFrame:
+        """Meta rows of a bulk write, derived ARITHMETICALLY from its
+        per-key ``chunk_aligned_bounds`` — never from a pass over the
+        data. The grid is whole calendar chunks, so every written
+        (key, chunk) is one full dense chunk whose ``start_ts`` and
+        ``n_points`` follow from the bounds alone (see
+        :func:`bounds_meta_rows`). One arithmetic on both sides of
+        ``APPEND_KEYS_CAP``: a pandas bounds frame is converted on the
+        driver; a (checkpointed) Spark bounds frame goes through
+        ``mapInPandas``, so a 10M-key ingest builds its changelog rows
+        with the same parallelism as the data write."""
+        import functools
+
+        fn = functools.partial(
+            bounds_meta_rows, keys=list(self.config.keys),
+            chunk_axis=self.config.chunk_axis, tz=self.config.tz,
+            freq_seconds=int(self.config.freq_seconds),
+            updated_at=updated_at, op_id=op_id,
         )
-
-    def _meta_sdf_from_bounds(
-        self, bounds: DataFrame, updated_at: datetime, op_id: int
-    ) -> DataFrame:
-        """Insert-mode twin of :meth:`_meta_sdf_for` that derives the meta
-        rows ARITHMETICALLY from the per-key ``chunk_aligned_bounds`` frame
-        instead of re-aggregating the dense grid.
-
-        The dense grid is ``sequence(grid_start, grid_end, freq)`` per key,
-        so each chunk's point count and first point follow from pure unix
-        arithmetic on the chunk boundaries — O(keys × chunks) rows computed
-        from a metadata-sized frame, never a second pass over the data.
-        (At 100 TB the meta aggregate was a full extra scan of the ingested
-        grid; this removes it.) Exactness holds for any freq, including
-        freqs that don't divide the chunk length and DST-shifted chunks:
-        grid point k sits at ``grid_start + k*freq``; chunk ``ci`` owns
-        ``k ∈ [ceil((cs-lo)/f), min(ceil((ce-lo)/f), floor((hi-lo)/f)+1))``
-        where cs/ce are the chunk's UTC bounds and hi the inclusive grid
-        end. Verified identical to the grid aggregate by
-        tests/test_chunk_store.py (odd-freq + DST matrix)."""
-        unit = "year" if self.config.chunk_axis == ("year",) else "month"
-        tz = self.config.tz
-        f = int(self.config.freq_seconds)
-        lo_l = F.from_utc_timestamp("grid_start", tz)
-        hi_l = F.from_utc_timestamp("grid_end", tz)
-        if unit == "year":
-            ci_lo, ci_hi = F.year(lo_l), F.year(hi_l)
-        else:
-            ci_lo = F.year(lo_l) * 12 + F.month(lo_l) - 1
-            ci_hi = F.year(hi_l) * 12 + F.month(hi_l) - 1
-        b = bounds.withColumn(
-            "chunk_index", F.explode(F.sequence(ci_lo, ci_hi))
-        ).withColumn("chunk_index", F.col("chunk_index").cast("int"))
-
-        def chunk_start_utc(ci):
-            if unit == "year":
-                y, m = ci, F.lit(1)
-            else:
-                y, m = F.floor(ci / 12).cast("int"), (ci % 12 + 1).cast("int")
-            local = F.to_timestamp(F.make_date(y, m, F.lit(1)))
-            return F.to_utc_timestamp(local, tz)
-
-        ci = F.col("chunk_index")
-        lo = F.unix_timestamp("grid_start")
-        hi = F.unix_timestamp("grid_end")
-        cs = F.unix_timestamp(chunk_start_utc(ci))
-        ce = F.unix_timestamp(chunk_start_utc(ci + 1))
-        k0 = F.floor((cs - lo + f - 1) / f).cast("long")
-        k1 = F.least(
-            F.floor((ce - lo + f - 1) / f).cast("long"),
-            (F.floor((hi - lo) / f) + 1).cast("long"),
+        if isinstance(bounds, pd.DataFrame):
+            return fn(bounds)
+        schema = T.StructType(
+            [bounds.schema[k] for k in self.config.keys]
+            + [T.StructField(n, t) for n, t in _META_EXTRA]
         )
-        return (
-            b.select(
-                *self.config.keys,
-                "chunk_index",
-                F.timestamp_seconds(lo + k0 * f).alias("start_ts"),
-                (k1 - k0).alias("n_points"),
-            )
-            .filter(F.col("n_points") > 0)
-            .withColumn("updated_at", F.lit(updated_at))
-            .withColumn("op_id", F.lit(op_id).cast("long"))
-            .withColumn("is_deleted", F.lit(False))
-            .select(*self._META_COLS)
-        )
+        return bounds.mapInPandas(lambda it: map(fn, it), schema=schema)
 
     def _tombstone_sdf(
         self, chunk_keys: DataFrame, updated_at: datetime, op_id: int
@@ -1384,9 +1438,10 @@ class ChunkStore:
     def _series_meta_rows(
         self, pdf: pd.DataFrame, updated_at: datetime, op_id: int
     ) -> pd.DataFrame:
-        """Driver-side meta rows of ONE series' long frame, built in
-        pandas — bounded by that series' chunk count. Bulk paths use
-        :meth:`_meta_sdf_for` (distributed, no collect)."""
+        """Driver-side meta rows of a long frame the driver already holds
+        (one series, or ``set_many_ts``'s mapping), built in pandas.
+        ``ingest_long`` derives its meta rows from the bounds instead
+        (:meth:`_meta_from_bounds`)."""
         meta = (
             pdf.groupby([*self.config.keys, "chunk_index"])["ts"]
             .agg(start_ts="min", n_points="count")
@@ -1490,6 +1545,13 @@ class ChunkStore:
         """Mass insert, error if any key already exists
         (reference: chunk_timeserie_store.py:418-455).
 
+        The mapping is already in pandas on the driver, so the metadata
+        plan is too: one pyarrow read of the keys' meta rows answers the
+        existence check and whether a written chunk holds tombstoned rows
+        (then the write is a copy-on-write rewrite, else an append), and
+        the meta rows are built in pandas and staged with Arrow. The data
+        rows are one Spark write.
+
         Concurrency note: same blind-append trade as
         :meth:`ingest_long` — inserts above ``APPEND_KEYS_CAP`` distinct
         series skip per-key conflict digests (warned), so concurrent
@@ -1529,41 +1591,23 @@ class ChunkStore:
         schema = self._data_schema(pdf_all)
         pdf_all = pdf_all[[f.name for f in schema.fields]]
         sdf = nan_to_null(self.spark.createDataFrame(pdf_all, schema=schema), "value")
-        # ONE existence check for the whole batch (left-semi against the
-        # incoming key set), not a Spark job per key
-        clash = (
-            self.alive_chunks()
-            .join(sdf.select(*keys).distinct(), on=list(keys), how="left_semi")
-            .limit(1)
-            .count()
-        )
-        if clash:
+        kts = [kt if isinstance(kt, tuple) else (kt,) for kt in mapping]
+        # ONE existence check for the whole batch, on the driver: the
+        # keys' latest meta states, read with pyarrow
+        latest = self._keys_latest_meta(pd.DataFrame(kts, columns=list(keys)))
+        if not latest["is_deleted"].all():
             raise KeyExistsError("set_many_ts: some keys already exist")
         updated_at, op_id = self._now_stamp()
-        physical_any = bool(
-            self.meta()
-            .join(
-                sdf.select(*self.config.keys, "chunk_index").distinct(),
-                on=[*self.config.keys, "chunk_index"],
-                how="left_semi",
-            )
-            .limit(1)
-            .count()
-        )
-        def _stage_meta_sm() -> None:
-            # aggregates the driver-built (ExistingRDD) frame — never
-            # the files the data write touches, so it can overlap (§2.6)
-            self._stage_into_txn(self._meta_sdf_for(sdf, updated_at, op_id), "meta")
-
-        kts = [kt if isinstance(kt, tuple) else (kt,) for kt in mapping]
-        if physical_any:
+        meta = self._series_meta_rows(pdf_all, updated_at, op_id)
+        written = meta[[*keys, "chunk_index"]]
+        if not latest.merge(written, on=[*keys, "chunk_index"]).empty:
+            # a written chunk holds tombstoned rows of a key: rewrite it
             self._note_dropped_keys(kts)
-            self._overlap_staged_writes(lambda: self._rewrite_spark(sdf), _stage_meta_sm)
+            self._rewrite_spark(sdf, written["chunk_index"].unique(), pairs=written)
         else:
             self._note_append_keys(kts)
-            self._overlap_staged_writes(
-                lambda: self._stage_into_txn(sdf, "data"), _stage_meta_sm
-            )
+            self._stage_into_txn(sdf, "data")
+        self._append_meta(meta)
 
     @_transactional("ingest_long")
     def ingest_long(
@@ -1576,11 +1620,34 @@ class ChunkStore:
         """Distributed bulk write — the 100 TB path.
 
         ``sdf``: long frame ``(keys…, ts, value)`` (UTC instants). The dense
-        chunk-aligned grid, chunk indexes and write semantics are computed
-        entirely in Spark; no driver-side series loop.
+        chunk-aligned grid, chunk indexes and data rows are computed in
+        Spark; no driver-side series loop.
 
         mode: 'insert' (error on existing keys) | 'update' (new wins,
         existing fills holes) | 'replace' (span overwrite + tombstones).
+
+        Two parts: a metadata plan and ONE Spark plan per staged data
+        write. The per-key ``chunk_aligned_bounds`` are collected once
+        (``limit(APPEND_KEYS_CAP + 1)``). At or below the cap the metadata
+        plan runs on the driver: existence, the alive (key, chunk) pairs
+        the write touches and the ``replace`` tombstones come from a
+        pyarrow read of those keys' meta rows on the base snapshot; the
+        meta rows follow from the bounds (every written pair is one full
+        dense chunk) and are staged with Arrow. The data plan reads the
+        affected files once (:meth:`_rewrite_spark`): rows of untouched
+        pairs are kept, an ``update`` merges the alive touched pairs'
+        rows under the new grid (``combine_first``), and the result is
+        one write. Above the cap the metadata steps stay Spark jobs over
+        the checkpointed bounds (:meth:`_ingest_distributed`) and share
+        the data plan. An insert into chunks that hold tombstoned rows
+        of its keys rewrites them instead of appending.
+
+        The meta rows assume the write's grid and the existing rows of
+        an ``update`` share grid points, which holds when ``freq``
+        divides the length of every chunk (hourly or finer where UTC
+        offsets change by whole hours; not daily across a DST switch);
+        otherwise the merged chunk holds the union of both grids and its
+        ``n_points`` counts the new grid only.
 
         Concurrency note: inserts of up to ``APPEND_KEYS_CAP``
         (10,000) distinct series record per-key digests so a concurrent
@@ -1617,44 +1684,93 @@ class ChunkStore:
             if txn_id[1] <= txn.snapshot.app_versions.get(txn_id[0], -1):
                 return  # this (app, version) is already durable — replay
             txn.txn_app, txn.txn_version = txn_id
-        keys = self.config.keys
-        # The per-key bounds frame is tiny (one row per key) — materialize it
-        # once and derive BOTH the dense grid and the key set from it, so the
-        # source is scanned exactly twice (bounds agg + grid join), never a
-        # third time for the existence check. Callers whose source is
-        # expensive to recompute (a heavy upstream pipeline) should persist
-        # it themselves; a blanket persist measured slower than one recompute.
-        bounds = safe_local_checkpoint(
-            chunk_aligned_bounds(
-                sdf, keys, self.config.chunk_axis, self.config.tz,
-                self.config.freq_seconds,
-            )
+        keys = list(self.config.keys)
+        pair = [*keys, "chunk_index"]
+        cfg = self.config
+        bounds = chunk_aligned_bounds(
+            sdf, keys, cfg.chunk_axis, cfg.tz, cfg.freq_seconds,
+        )
+        # the per-key bounds are collected ONCE: at or below the cap they
+        # are the whole metadata plan's input (keys, chunk set, meta rows)
+        # and rebuild the grid join's bounds side without a checkpoint
+        bpdf = bounds.limit(self.APPEND_KEYS_CAP + 1).toPandas()
+        planned = len(bpdf) <= self.APPEND_KEYS_CAP
+        bounds = (
+            self.spark.createDataFrame(bpdf, schema=bounds.schema) if planned
+            else safe_local_checkpoint(bounds)
         )
         dense = reindex_to_chunk_grid(
-            sdf, keys, self.config.chunk_axis, self.config.tz,
-            self.config.freq_seconds, bounds=bounds,
-        )
-        dense = dense.withColumn(
-            "chunk_index", chunk_index_col("ts", self.config.chunk_axis, self.config.tz)
-        )
+            sdf, keys, cfg.chunk_axis, cfg.tz, cfg.freq_seconds, bounds=bounds,
+        ).withColumn("chunk_index", chunk_index_col("ts", cfg.chunk_axis, cfg.tz))
         updated_at, op_id = self._now_stamp()
+        if not planned:
+            self._ingest_distributed(mode, bounds, dense, updated_at, op_id)
+            return
+
+        # metadata plan, on the driver: the keys' latest states from the
+        # base snapshot, the meta rows from the bounds
+        kts = list(bpdf[keys].itertuples(index=False, name=None))
+        latest = self._keys_latest_meta(bpdf)
+        alive = latest.loc[~latest["is_deleted"], pair]
+        meta = self._meta_from_bounds(bpdf, updated_at, op_id)
+        written = meta[pair]
+        if mode == "insert" and not alive.empty:
+            raise KeyExistsError("ingest_long(insert): some keys already exist")
+        if mode == "insert" and latest.merge(written, on=pair).empty:
+            # pure append: the dense grid is scanned once, by the write
+            self._note_append_keys(kts)
+            self._stage_into_txn(dense, "data")
+            self._append_meta(meta)
+            return
+        # a rewrite: update, replace, or an insert into chunks that hold
+        # tombstoned rows of its keys (dropped, so they cannot come back
+        # alive beside the new ones)
+        if mode == "replace":
+            hit = alive.merge(written, on=pair, how="left", indicator=True)
+            stale = hit.loc[hit["_merge"] == "left_only", pair]
+            if not stale.empty:
+                meta = pd.concat(
+                    [meta, self._tombstone_rows(stale, updated_at, op_id)],
+                    ignore_index=True,
+                )
+        touched = alive.merge(written, on=pair)
+        self._note_dropped_keys(kts)
+        self._rewrite_spark(
+            dense, written["chunk_index"].unique(), pairs=written,
+            merge=touched if mode == "update" and not touched.empty else None,
+        )
+        self._append_meta(meta)
+
+    def _ingest_distributed(
+        self, mode: str, bounds: DataFrame, dense: DataFrame,
+        updated_at: datetime, op_id: int,
+    ) -> None:
+        """``ingest_long`` above ``APPEND_KEYS_CAP`` series: the metadata
+        steps stay Spark jobs over the checkpointed bounds (existence
+        join, tombstones, meta rows by ``mapInPandas``), never a
+        driver collect; the data plan is the one of the planned path."""
+        keys = list(self.config.keys)
+        pair = [*keys, "chunk_index"]
         new_keys = bounds.select(*keys)
         if self._meta_empty():
             # empty store: nothing can pre-exist — skip the meta join
             existing_alive, n_existing = None, 0
         else:
             existing_alive = self.alive_chunks().join(
-                new_keys, on=list(keys), how="left_semi"
+                new_keys, on=keys, how="left_semi"
             )
             n_existing = existing_alive.limit(1).count()
+        meta_sdf = self._meta_from_bounds(bounds, updated_at, op_id)
 
-        if mode == "insert":
-            if n_existing:
-                raise KeyExistsError("ingest_long(insert): some keys already exist")
-            # pure append, SINGLE data pass: no files are overwritten so no
-            # lineage cut is needed, and the meta rows come arithmetically
-            # from the (checkpointed, metadata-sized) bounds frame — the
-            # dense grid is scanned exactly once, by the write itself
+        written = meta_sdf.select(*pair)
+        if mode == "insert" and n_existing:
+            raise KeyExistsError("ingest_long(insert): some keys already exist")
+        # as below the cap, an insert into chunks holding tombstoned rows
+        # of its keys takes the rewrite
+        if mode == "insert" and (existing_alive is None or not (
+            self.meta().join(written, on=pair, how="left_semi").limit(1).count()
+        )):
+
             def _stage_meta() -> None:
                 # built from the CHECKPOINTED bounds frame — independent
                 # of the data write, so it can overlap it (§2.6). The
@@ -1663,55 +1779,30 @@ class ChunkStore:
                 # data staging, so their small collect job overlaps too.
                 kt_rows = new_keys.limit(self.APPEND_KEYS_CAP + 1).collect()
                 self._note_append_keys(tuple(r) for r in kt_rows)
-                self._stage_into_txn(
-                    self._meta_sdf_from_bounds(bounds, updated_at, op_id), "meta"
-                )
+                self._stage_into_txn(meta_sdf, "meta")
 
             self._overlap_staged_writes(
                 lambda: self._stage_into_txn(dense, "data"), _stage_meta
             )
             return
 
-        if mode == "update" and n_existing:
-            new_chunk_keys = dense.select(*keys, "chunk_index").distinct()
-            existing_rows = (
-                self.alive_data()
-                .join(new_chunk_keys, on=[*keys, "chunk_index"], how="left_semi")
-            )
-            dense = combine_first([dense, existing_rows], keys=keys).withColumn(
-                "chunk_index",
-                chunk_index_col("ts", self.config.chunk_axis, self.config.tz),
-            )
-
-        stale_sdf: DataFrame | None = None
-        if mode == "replace" and n_existing:
-            new_chunk_keys = dense.select(*keys, "chunk_index").distinct()
-            stale = existing_alive.join(
-                new_chunk_keys, on=[*keys, "chunk_index"], how="left_anti"
-            ).select(*keys, "chunk_index")
-            # materialize (metadata-sized) BEFORE the rewrite: the plan
-            # references `dense`, whose lineage reads the files the rewrite
-            # replaces. No driver collect — tombstones stay distributed.
-            stale_sdf = safe_local_checkpoint(
-                self._tombstone_sdf(stale, updated_at, op_id)
-            )
-
-        dense = safe_local_checkpoint(dense)
-        # key digests from the (checkpointed, metadata-sized) bounds frame
-        # — no extra data scan
+        chunks = [r[0] for r in written.select("chunk_index").distinct().collect()]
+        merge = None
+        if n_existing:
+            alive = existing_alive.select(*pair)
+            if mode == "update":
+                merge = alive.join(written, on=pair, how="left_semi")
+            else:
+                stale = alive.join(written, on=pair, how="left_anti")
+                meta_sdf = meta_sdf.unionByName(
+                    self._tombstone_sdf(stale, updated_at, op_id)
+                )
         kt_rows = new_keys.limit(self.APPEND_KEYS_CAP + 1).collect()
         self._note_dropped_keys(tuple(r) for r in kt_rows)
-
-        def _stage_meta_rw() -> None:
-            # aggregates the CHECKPOINTED dense frame (and the
-            # checkpointed stale tombstones) — never the files the
-            # rewrite touches, so it can overlap the rewrite (§2.6)
-            meta_sdf = self._meta_sdf_for(dense, updated_at, op_id)
-            if stale_sdf is not None:
-                meta_sdf = meta_sdf.unionByName(stale_sdf)
-            self._stage_into_txn(meta_sdf, "meta")
-
-        self._overlap_staged_writes(lambda: self._rewrite_spark(dense), _stage_meta_rw)
+        self._overlap_staged_writes(
+            lambda: self._rewrite_spark(dense, chunks, pairs=written, merge=merge),
+            lambda: self._stage_into_txn(meta_sdf, "meta"),
+        )
 
     # ------------------------------------------------------------------
     # read paths
@@ -1820,24 +1911,28 @@ class ChunkStore:
 
     def _latest_keyed_meta(
         self, snap, in_sets: dict[str, list], lo: int | None = None,
-        hi: int | None = None,
+        hi: int | None = None, columns: list[str] | None = None,
     ) -> pd.DataFrame:
         """Latest meta state per (keys…, chunk_index) of the keys in the
         per-column ``in_sets``, read with pyarrow on the driver from the
         manifest snapshot ``snap`` (:meth:`_snapshot`: inside a write
         transaction, its base snapshot). The key IN sets and the chunk bounds are pushed into
         the meta scan, so the cost follows those keys' meta rows, not
-        the log. Columns: keys…, chunk_index, op_id, is_deleted."""
+        the log. Columns: keys…, chunk_index, op_id, is_deleted, or
+        ``columns`` (which must include those)."""
         import pyarrow.dataset as pads
 
         pair = [*self.config.keys, "chunk_index"]
-        cols = [*pair, "op_id", "is_deleted"]
+        cols = columns or [*pair, "op_id", "is_deleted"]
         meta = [
             os.path.join(self.path, en["path"])
             for en in snap.entries_overlapping("meta", lo, hi)
         ]
         if not meta:
-            return pd.DataFrame({c: [] for c in cols}).astype({"is_deleted": bool})
+            types = {"chunk_index": "int32", "op_id": "int64", "is_deleted": bool}
+            return pd.DataFrame({c: [] for c in cols}).astype(
+                {c: t for c, t in types.items() if c in cols}
+            )
         filt = reduce(
             operator.and_, (pads.field(k).isin(v) for k, v in in_sets.items())
         )
@@ -1853,9 +1948,27 @@ class ChunkStore:
             .drop_duplicates(pair, keep="last")
         )
 
+    def _keys_latest_meta(
+        self, key_frame: pd.DataFrame, columns: list[str] | None = None,
+    ) -> pd.DataFrame:
+        """:meth:`_latest_keyed_meta` of exactly the key tuples of
+        ``key_frame`` (its key columns) on the current snapshot — the
+        per-column IN sets' cross-product residue of a composite key is
+        dropped by a join on the tuples."""
+        keys = list(self.config.keys)
+        kf = key_frame[keys].drop_duplicates()
+        in_sets = {k: kf[k].drop_duplicates().tolist() for k in keys}
+        latest = self._latest_keyed_meta(self._snapshot(), in_sets, columns=columns)
+        if latest.empty:
+            # typed like the callers' frames, so their joins need no guard
+            return latest.astype(
+                {**{k: kf[k].dtype for k in keys}, "chunk_index": "int32"}
+            )
+        return latest if len(keys) == 1 else latest.merge(kf, on=keys)
+
     def _scan_alive_rows(
         self, snap, alive: pd.DataFrame, in_sets: dict[str, list], s=None,
-        e=None,
+        e=None, values: bool = True,
     ) -> pd.DataFrame:
         """Data rows ``(keys…, chunk_index, ts, value)`` of the ``alive``
         (key tuple, chunk) pairs, read with pyarrow from the manifest
@@ -1864,7 +1977,9 @@ class ChunkStore:
         IN sets, chunk_index IN, the UTC bounds ``s``/``e``), then an
         exact join on the pairs — it drops the composite-key IN
         cross-product residue and tombstoned chunks of partly deleted
-        keys."""
+        keys. The scan itself has no alive filter: ``values=False``
+        reads the pair columns only, to probe which pairs have
+        physical rows (sync's overlap probe)."""
         import pyarrow.dataset as pads
 
         from holcstore_spark.plans.pruning import (
@@ -1873,7 +1988,7 @@ class ChunkStore:
         )
 
         pair = [*self.config.keys, "chunk_index"]
-        cols = [*pair, "ts", "value"]
+        cols = [*pair, "ts", "value"] if values else pair
         chunks = sorted(int(c) for c in alive["chunk_index"].unique())
 
         def holds_alive_chunk(en) -> bool:
@@ -2019,13 +2134,48 @@ class ChunkStore:
 
     def last_updated_at(self, filters: dict | None = None) -> pd.Timestamp:
         """Sync watermark: max updated_at (tombstones included) else the
-        2000-01-01 epoch default (reference: chunk_timeserie_store.py:288-307)."""
+        2000-01-01 epoch default (reference: chunk_timeserie_store.py:288-307).
+
+        Answered on the driver, with no Spark job. Each meta entry
+        records its file's exact max ``updated_at`` when it is staged
+        (INT96 timestamps carry no parquet min/max stats), so the
+        unfiltered watermark is the max over the live meta entries. A
+        filtered watermark, or an entry staged before the stat was
+        recorded, streams the ``updated_at`` column with pyarrow under
+        the filter (:func:`~holcstore_spark.plans.predicates.arrow_filter`),
+        in record batches; files are visited by descending recorded max
+        and the walk stops at the first that cannot raise the answer."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pads
+
         validate_filter_keys(filters, self.config.keys)
-        row = self.meta().filter(attrs_filter(filters)).agg(F.max("updated_at")).first()
-        mx = row[0] if row else None
-        if mx is None:
+        filt = arrow_filter(filters)
+        entries = sorted(
+            self._snapshot().files["meta"],
+            key=lambda e: (e.get("updated_at_max") is not None,
+                           -(e.get("updated_at_max") or 0)),
+        )
+        best = None
+        for e in entries:
+            mx = e.get("updated_at_max")
+            if mx is not None and best is not None and mx <= best:
+                break
+            if mx is None or filt is not None:
+                mx = None
+                path = os.path.join(self.path, e["path"])
+                for b in pads.dataset(path).to_batches(
+                    columns=["updated_at"], filter=filt
+                ):
+                    col = b.column(0).cast(pa.timestamp("ns")).cast(pa.int64())
+                    m = pc.max(col).as_py()
+                    if m is not None and (mx is None or m > mx):
+                        mx = m
+            if mx is not None and (best is None or mx > best):
+                best = mx
+        if best is None:
             return pd.Timestamp(DEFAULT_WATERMARK)
-        return pd.Timestamp(mx, tz="UTC")
+        return pd.Timestamp(best, tz="UTC")
 
     def get_max_horodate(self, filters: dict | None = None) -> pd.Timestamp | None:
         """Latest non-NaN timestamp across matching series
@@ -2456,7 +2606,11 @@ class ChunkStore:
     def updates(self, since=None, filters: dict | None = None) -> DataFrame:
         """Change feed: latest chunk states with updated_at >= since, in
         deterministic (updated_at, keys, chunk) order
-        (reference: chunk_timeserie_store.py:545-565)."""
+        (reference: chunk_timeserie_store.py:545-565), as a Spark frame
+        over the cached ``latest_meta``. ``SyncClient.pull`` builds the
+        same feed on the driver with :meth:`_changed_states` and falls
+        back to this frame only above ``APPEND_KEYS_CAP`` changed
+        (keys…, chunk) pairs."""
         validate_filter_keys(filters, self.config.keys)
         m = self.latest_meta(filters)
         if since is not None:
@@ -2465,35 +2619,98 @@ class ChunkStore:
             m = m.filter(F.col("updated_at") >= F.lit(s.to_pydatetime()))
         return m.orderBy("updated_at", *self.config.keys, "chunk_index")
 
+    def _changed_states(self, since=None, filters: dict | None = None,
+                       ) -> pd.DataFrame | None:
+        """The change feed of :meth:`updates`, built on the driver with
+        pyarrow as a pandas frame of full meta rows, or None when more
+        than ``APPEND_KEYS_CAP`` (keys…, chunk) pairs changed (the caller
+        then takes the Spark feed):
+
+        1. the meta rows with ``updated_at >= since`` (files whose
+           recorded max is older are skipped) under the filter, read
+           for their distinct pairs, stopping past the cap;
+        2. the latest state of those pairs (:meth:`_latest_keyed_meta`),
+           kept when it is itself at or after ``since``;
+        3. sorted by (updated_at, keys…, chunk_index)."""
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+
+        validate_filter_keys(filters, self.config.keys)
+        keys = list(self.config.keys)
+        pair = [*keys, "chunk_index"]
+        s = pd.Timestamp(DEFAULT_WATERMARK if since is None else since)
+        s = (s.tz_localize("UTC") if s.tzinfo is None else s.tz_convert("UTC"))
+        s = s.tz_localize(None)
+        snap = self._snapshot()
+        files = [
+            os.path.join(self.path, e["path"]) for e in snap.files["meta"]
+            if e.get("updated_at_max") is None or e["updated_at_max"] >= s.value
+        ]
+        empty = pd.DataFrame(columns=self._META_COLS)
+        if not files:
+            return empty
+        meta = pads.dataset(files)
+        filt = pads.field("updated_at") >= pa.scalar(
+            s, type=meta.schema.field("updated_at").type
+        )
+        if filters:
+            filt = filt & arrow_filter(filters)
+        seen: set[tuple] = set()
+        for b in meta.to_batches(columns=pair, filter=filt):
+            seen.update(zip(*(b.column(c).to_pylist() for c in pair)))
+            if len(seen) > self.APPEND_KEYS_CAP:
+                return None
+        if not seen:
+            return empty
+        pairs = pd.DataFrame(list(seen), columns=pair)
+        latest = self._latest_keyed_meta(
+            snap, {k: pairs[k].drop_duplicates().tolist() for k in keys},
+            lo=int(pairs["chunk_index"].min()), hi=int(pairs["chunk_index"].max()),
+            columns=self._META_COLS,
+        ).merge(pairs, on=pair)
+        return (
+            latest.loc[latest["updated_at"] >= s]
+            .sort_values(["updated_at", *pair], kind="stable")
+            .reset_index(drop=True)
+        )
+
     def export_chunks_sdf(
-        self, spec: DataFrame | list[dict], hint_broadcast: bool = True
+        self, spec: DataFrame | pd.DataFrame | list[dict],
+        hint_broadcast: bool = True,
     ) -> DataFrame:
         """Raw long rows for the given (keys…, chunk_index) spec as a Spark
         frame — the scale path for table-to-table sync: the data never
         materializes on a driver. No tombstone filter: the caller ships
         exactly what updates() listed.
 
-        ``hint_broadcast=False`` for specs that may be store-sized (a
-        bootstrap pull's full alive-chunk list): AQE then picks the join
-        strategy instead of forcing a driver-sized broadcast."""
-        if isinstance(spec, list):
-            spec_df = self.spark.createDataFrame(
-                pd.DataFrame(spec),
-                schema=T.StructType(
-                    [T.StructField(k, t) for k, t in self._key_schema(pd.DataFrame(spec))]
-                    + [T.StructField("chunk_index", T.IntegerType())]
-                ),
-            )
+        A driver-side spec (pandas frame or list of dicts) is broadcast,
+        and its chunks and keys skip the data files that cannot hold
+        them (manifest stats). A Spark spec may be store-sized (a
+        bootstrap pull's full alive-chunk list): ``hint_broadcast=False``
+        then lets AQE pick the join strategy instead of forcing a
+        driver-sized broadcast."""
+        pair = [*self.config.keys, "chunk_index"]
+        if isinstance(spec, DataFrame):
+            spec_df = spec.select(*pair)
+            data = self.data()
+            if hint_broadcast:
+                spec_df = F.broadcast(spec_df)
         else:
-            spec_df = spec
-        spec_df = spec_df.select(*self.config.keys, "chunk_index")
-        if hint_broadcast:
-            spec_df = F.broadcast(spec_df)
-        return self.data().join(
-            spec_df,
-            on=[*self.config.keys, "chunk_index"],
-            how="left_semi",
-        )
+            from holcstore_spark.plans.pruning import key_equality_values
+
+            pdf = pd.DataFrame(spec)
+            if pdf.empty:
+                return self.spark.createDataFrame([], self._data_schema())
+            data = self.data(
+                chunk_lo=int(pdf["chunk_index"].min()),
+                chunk_hi=int(pdf["chunk_index"].max()),
+                key_values=key_equality_values({
+                    f"{k}__in": pdf[k].drop_duplicates().tolist()
+                    for k in self.config.keys
+                }),
+            )
+            spec_df = self._pairs_frame(pdf)
+        return data.join(spec_df, on=pair, how="left_semi")
 
     def export_chunks(self, spec: DataFrame | list[dict]) -> pd.DataFrame:
         """Driver-materialized :meth:`export_chunks_sdf` — the wire-format
@@ -2518,7 +2735,9 @@ class ChunkStore:
                 .drop_duplicates()
                 .itertuples(index=False)
             )
-            self._rewrite_spark(data_sdf)
+            self._rewrite_spark(
+                data_sdf, meta_rows["chunk_index"].unique(), pairs=meta_rows
+            )
         self._append_meta(meta_rows)
 
     def has_data(self) -> bool:
@@ -2526,12 +2745,20 @@ class ChunkStore:
         return bool(self._snapshot().files["data"])
 
     @_transactional("append_import")
-    def append_import(self, data_sdf: DataFrame, meta_sdf: DataFrame) -> None:
+    def append_import(
+        self, data_sdf: DataFrame | None, meta: DataFrame | pd.DataFrame
+    ) -> None:
         """Bulk sync landing: append raw data rows and their meta rows
         (the watermark carrier) in ONE atomic commit, so a crashed
-        bootstrap pull never leaves data landed without its watermark."""
-        self._stage_into_txn(data_sdf, "data")
-        self._stage_into_txn(meta_sdf, "meta")
+        bootstrap pull never leaves data landed without its watermark.
+        ``data_sdf=None`` (a feed of tombstones only) stages meta only;
+        pandas meta rows are staged with Arrow, no Spark job."""
+        if data_sdf is not None:
+            self._stage_into_txn(data_sdf, "data")
+        if isinstance(meta, pd.DataFrame):
+            self._append_meta(meta)
+        else:
+            self._stage_into_txn(meta, "meta")
 
     def import_chunks(self, meta_rows: pd.DataFrame, data_rows: pd.DataFrame) -> None:
         """Pandas-frame twin of :meth:`import_chunks_sdf` — the wire-format

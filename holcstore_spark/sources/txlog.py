@@ -165,7 +165,27 @@ def open_txlog(path: str, legacy_dirs: tuple[str, ...] = ()) -> "TxLog":
 
 class FileEntry(dict):
     """Manifest entry: path (store-relative), rows, chunk_min/chunk_max
-    (None when stats are unavailable → treated as full-range)."""
+    (None when stats are unavailable → treated as full-range), per-file
+    key ranges, and, on the entries that ask for it, the exact max of one
+    timestamp column as epoch nanoseconds (``<col>_max``; absent on
+    entries written before it was recorded)."""
+
+
+def column_max_ns(abs_path: str, col: str) -> int | None:
+    """Exact max of a timestamp column, streamed in record batches with
+    pyarrow. INT96 columns (Spark's and the Arrow writer's timestamps)
+    carry no parquet min/max statistics, so the max is read from the
+    rows; None for a file with no non-null value."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out = None
+    for b in pq.ParquetFile(abs_path).iter_batches(columns=[col]):
+        m = pc.max(b.column(0).cast(pa.timestamp("ns")).cast(pa.int64())).as_py()
+        if m is not None and (out is None or m > out):
+            out = m
+    return out
 
 
 def file_entry(
@@ -173,6 +193,7 @@ def file_entry(
     rel_path: str,
     chunk_col: str = "chunk_index",
     key_cols: tuple[str, ...] = (),
+    max_col: str | None = None,
 ) -> FileEntry:
     """Build a manifest entry from a parquet footer (driver-side, one
     metadata read — no Spark job). Besides the chunk range, per-file
@@ -212,13 +233,16 @@ def file_entry(
         for c in key_cols
         if ranges.get(c) is not None
     }
-    return FileEntry(
+    entry = FileEntry(
         path=rel_path,
         rows=md.num_rows,
         chunk_min=None if cr is None else int(cr[0]),
         chunk_max=None if cr is None else int(cr[1]),
         key_stats=key_stats or None,
     )
+    if max_col is not None:
+        entry[f"{max_col}_max"] = column_max_ns(abs_path, max_col)
+    return entry
 
 
 class Snapshot:
@@ -1828,6 +1852,7 @@ class TxLog:
         rel_dir: str,
         key_cols: tuple[str, ...] = (),
         chunk_col: str = "chunk_index",
+        max_col: str | None = None,
     ) -> list[FileEntry]:
         out = []
         for f in sorted(os.listdir(abs_dir)):
@@ -1838,6 +1863,7 @@ class TxLog:
                         os.path.join(rel_dir, f),
                         chunk_col=chunk_col,
                         key_cols=key_cols,
+                        max_col=max_col,
                     )
                 )
         return out

@@ -16,19 +16,26 @@ same three calls):
    rows, and ``>=`` re-fetches the boundary (reference:
    test_chunk_timeserie_sync.py:223-261).
 
+Metadata on the driver, data in Spark. Up to ``APPEND_KEYS_CAP`` changed
+(keys…, chunk) pairs, the watermark, the feed, and the overlap probe are
+answered with pyarrow over the two stores' manifests, with no Spark job
+(``ChunkStore.last_updated_at``, ``ChunkStore._changed_states``); only the
+data rows travel as Spark frames. Above the cap the feed is the Spark
+``updates`` frame, checkpointed once and streamed through
+``toLocalIterator``.
+
 Two physical strategies, picked automatically:
 
-- **bulk** — when NO incoming (keys, chunk) pair physically exists
+- **bulk** — when NO incoming alive (keys, chunk) pair physically exists
   client-side (bootstrap of a fresh replica, or an incremental pull of
   brand-new chunks/keys — the daily-append case), every page's
   chunk rewrite would be a pure append anyway, so the whole backlog
-  lands as ONE distributed data append + ONE meta append, published in
-  one atomic commit.
-- **paged incremental** — the general path. The ordered feed is
-  checkpointed once and streamed through ``toLocalIterator`` (one linear
-  pass; driver memory bounded by ``page_size``), instead of one
-  ``offset(n·p).limit(p)`` job per page, which re-skipped the whole feed
-  every page.
+  lands as ONE Spark export-and-stage of the data plus the feed's meta
+  rows (staged with Arrow), published in one atomic commit. A feed of
+  tombstones only stages meta only.
+- **paged incremental** — the general path. Pages are slices of the
+  ordered feed, applied as same-kind runs: a tombstone run is a meta-only
+  import, an alive run one export + copy-on-write import.
 """
 
 from __future__ import annotations
@@ -36,6 +43,7 @@ from __future__ import annotations
 from itertools import islice
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from holcstore_spark.sources.chunk_store import ChunkStore
@@ -64,18 +72,49 @@ class SyncClient:
         """Pull server changes since the client's watermark. Returns the
         number of chunk states applied.
 
-        Only chunk *states* (page_size meta rows) ever reach the driver;
-        the data rows travel server→client as Spark frames (export
-        semi-join → append/rewrite), so the transfer scales with the
-        cluster, not the driver."""
+        Only chunk *states* (meta rows) ever reach the driver; the data
+        rows travel server→client as Spark frames (export semi-join →
+        append/rewrite), so the transfer scales with the cluster, not the
+        driver."""
         since = self.client.last_updated_at(filters)
+        feed = self.server._changed_states(since, filters)
+        if feed is None:
+            feed = self._spark_feed(since, filters)
+        else:
+            feed = self._drop_held(feed)
+        # Bulk fast path: when NO incoming (keys, chunk) pair physically
+        # exists client-side, every per-page partition rewrite would be a
+        # pure append — import the whole backlog in one shot. Covers the
+        # bootstrap (no client data at all) AND the daily-append
+        # replication case (incremental pull of brand-new chunks/keys).
+        # Crash injection forces the paged path so the injected page
+        # boundary stays meaningful.
+        if crash_after_pages is None and not self._any_physical_overlap(feed):
+            return self._pull_bulk(feed)
+        return self._pull_paged(feed, page_size, crash_after_pages)
+
+    def _drop_held(self, feed: pd.DataFrame) -> pd.DataFrame:
+        """Drop the feed states the client already holds VERBATIM (same
+        keys, chunk, op_id as its latest state). The >= watermark resume
+        re-fetches the boundary states every pull; they need no
+        re-import — dropping them is idempotent (their stamps are already
+        in the client meta, so the watermark is unaffected) and is what
+        lets a daily-append pull see only genuinely-new chunks and take
+        the bulk path."""
+        if feed.empty:
+            return feed
+        cols = [*self.server.config.keys, "chunk_index", "op_id"]
+        held = self.client._keys_latest_meta(feed)[cols]
+        hit = feed.merge(held, on=cols, how="left", indicator=True)
+        return feed.loc[(hit["_merge"] == "left_only").to_numpy()].reset_index(
+            drop=True
+        )
+
+    def _spark_feed(self, since, filters) -> DataFrame:
+        """The feed above ``APPEND_KEYS_CAP`` changed pairs: the Spark
+        ``updates`` frame minus the states the client holds verbatim,
+        re-sorted and checkpointed once."""
         feed = self.server.updates(since=since, filters=filters)
-        # the >= watermark resume re-fetches the boundary states every
-        # pull; states the client already holds VERBATIM (same keys,
-        # chunk, op_id) need no re-import — dropping them is idempotent
-        # (their stamps are already in the client meta, so the watermark
-        # is unaffected) and is what lets a daily-append pull see only
-        # genuinely-new chunks and take the bulk path below
         if not self.client._meta_empty():
             applied = self.client.latest_meta(filters).select(
                 *self.server.config.keys, "chunk_index", "op_id"
@@ -89,35 +128,36 @@ class SyncClient:
                 how="left_anti",
             )
         # re-assert the feed's total order AFTER the anti-join: a shuffle
-        # join (AQE's pick when client meta is store-sized) repartitions
-        # and would otherwise hand the pager pages in arbitrary order,
-        # breaking the prefix property crash-resume depends on
+        # join repartitions and would otherwise hand the pager pages in
+        # arbitrary order, breaking the prefix property crash-resume
+        # depends on
         feed = feed.orderBy(
             "updated_at", *self.server.config.keys, "chunk_index"
         )
-        # materialize the ordered feed once (checkpoint cuts the plan to the
-        # sorted result); both strategies below then read the frozen frame
-        feed = safe_local_checkpoint(feed)
-        # Bulk fast path: when NO incoming (keys, chunk) pair physically
-        # exists client-side, every per-page partition rewrite would be a
-        # pure append — import the whole backlog in one shot. Covers the
-        # bootstrap (no client data at all) AND the daily-append
-        # replication case (incremental pull of brand-new chunks/keys).
-        # Crash injection forces the paged path so the injected page
-        # boundary stays meaningful.
-        if crash_after_pages is None and not self._any_physical_overlap(feed):
-            return self._pull_bulk(feed)
-        return self._pull_paged(feed, page_size, crash_after_pages)
+        return safe_local_checkpoint(feed)
 
     def _any_physical_overlap(self, feed) -> bool:
-        """Whether any incoming (keys, chunk) pair already has PHYSICAL
-        client rows (data, not meta: orphans from a crashed bulk import
-        count, so the resume takes the deduping rewrite path). The probe
-        prunes the client scan to the incoming chunk partitions first —
-        its cost scales with the touched chunks, not the client store."""
+        """Whether any incoming alive (keys, chunk) pair already has
+        PHYSICAL client rows (data, not meta: orphans from a crashed bulk
+        import count, so the resume takes the deduping rewrite path). A
+        driver feed probes with pyarrow: manifest file skipping on the
+        pairs' chunks and key stats, then a scan of the pair columns. The
+        Spark feed prunes the client scan to the incoming chunks first —
+        either way the cost scales with the touched chunks, not the
+        client store."""
         if not self.client.has_data():
             return False
         keys = list(self.server.config.keys)
+        if isinstance(feed, pd.DataFrame):
+            pairs = feed.loc[~feed["is_deleted"].astype(bool), [*keys, "chunk_index"]]
+            if pairs.empty:
+                return False
+            in_sets = {k: pairs[k].drop_duplicates().tolist() for k in keys}
+            client = self.client
+            rows = client._scan_alive_rows(
+                client._snapshot(), pairs, in_sets, values=False
+            )
+            return not rows.empty
         pairs = feed.filter(~F.col("is_deleted")).select(*keys, "chunk_index")
         chunks = [r[0] for r in pairs.select("chunk_index").distinct().collect()]
         if not chunks:
@@ -132,13 +172,18 @@ class SyncClient:
     def _pull_bulk(self, feed) -> int:
         """One data append + one meta append for the full backlog."""
         keys = list(self.server.config.keys)
-        total = feed.count()
+        if isinstance(feed, pd.DataFrame):
+            total = len(feed)
+            alive = feed.loc[~feed["is_deleted"].astype(bool), [*keys, "chunk_index"]]
+            data_sdf = None if alive.empty else self.server.export_chunks_sdf(alive)
+        else:
+            total = feed.count()
+            alive = feed.filter(~F.col("is_deleted")).select(*keys, "chunk_index")
+            # no broadcast hint: a full-bootstrap spec is every alive chunk
+            # of the server — let AQE pick the join strategy
+            data_sdf = self.server.export_chunks_sdf(alive, hint_broadcast=False)
         if total == 0:
             return 0
-        alive_pairs = feed.filter(~F.col("is_deleted")).select(*keys, "chunk_index")
-        # no broadcast hint: a full-bootstrap spec is every alive chunk of
-        # the server — let AQE pick the join strategy for the semi-join
-        data_sdf = self.server.export_chunks_sdf(alive_pairs, hint_broadcast=False)
         # data and meta (the watermark carrier) land in one atomic commit
         self.client.append_import(data_sdf, feed)
         return total
@@ -148,18 +193,7 @@ class SyncClient:
     ) -> int:
         applied = 0
         keys = list(self.server.config.keys)
-        page_no = 0
-        # one linear pass over the checkpointed feed: toLocalIterator
-        # streams the globally-sorted result partition by partition, so
-        # driver memory stays bounded by page_size without per-page
-        # offset/limit jobs (reference's server-side pagination,
-        # chunk_timeserie_store.py:545-607)
-        rows = feed.toLocalIterator()
-        while True:
-            batch = list(islice(rows, page_size))
-            if not batch:
-                break
-            page = pd.DataFrame([r.asDict() for r in batch])
+        for page_no, page in enumerate(self._pages(feed, page_size)):
             if crash_after_pages is not None and page_no >= crash_after_pages:
                 raise SyncCrash(f"injected crash before page {page_no}")
             # apply the page as contiguous same-kind runs IN updated_at
@@ -173,9 +207,23 @@ class SyncClient:
                 if bool(run["is_deleted"].iloc[0]):
                     self.client.import_chunks(run.copy(), pd.DataFrame())
                 else:
-                    spec = run[[*keys, "chunk_index"]].to_dict("records")
+                    spec = run[[*keys, "chunk_index"]]
                     data_sdf = self.server.export_chunks_sdf(spec)
                     self.client.import_chunks_sdf(run.copy(), data_sdf)
                 applied += len(run)
-            page_no += 1
         return applied
+
+    @staticmethod
+    def _pages(feed, page_size: int):
+        """Pages of the ordered feed as pandas frames: slices of a driver
+        feed, or one linear ``toLocalIterator`` pass over the checkpointed
+        Spark feed (driver memory bounded by ``page_size``, no per-page
+        offset/limit job; reference's server-side pagination,
+        chunk_timeserie_store.py:545-607)."""
+        if isinstance(feed, pd.DataFrame):
+            for start in range(0, len(feed), page_size):
+                yield feed.iloc[start:start + page_size].reset_index(drop=True)
+            return
+        rows = feed.toLocalIterator()
+        while batch := list(islice(rows, page_size)):
+            yield pd.DataFrame([r.asDict() for r in batch])

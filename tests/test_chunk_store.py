@@ -549,38 +549,42 @@ class TestDistributedMeta:
         assert n == 60_000
         assert st.count_keys() == 60_000
 
-    def test_overlapped_acid_staging_failure_aborts_cleanly(self, spark, tmpdir):
-        """r17: ACID ingest_long stages the data write and the meta
-        write CONCURRENTLY (guide §2.6 — the tiny meta job back-fills
-        the data write's task tail). The new risk surface is a failure
-        in the overlapped meta thread: it must abort the transaction
-        (no visible rows, no phantom meta), and the store must accept
-        the retried ingest afterwards."""
-        path = os.path.join(tmpdir, "ovfail")
+    def test_overlapped_acid_staging_failure_aborts_cleanly(
+        self, spark, tmpdir, monkeypatch
+    ):
+        """A failure in ingest_long's meta staging — on the driver at or
+        below APPEND_KEYS_CAP, in the thread that overlaps the data write
+        above it (guide §2.6) — must abort the transaction (no visible
+        rows, no phantom meta), and the store must accept the retried
+        ingest afterwards."""
         cfg = ChunkStoreConfig(
             keys=("k",), freq="1h", tz="UTC", chunk_axis=("year", "month"),
             key_types={"k": "int"},
         )
-        st = ChunkStore(spark, path, cfg)
         idx = pd.date_range("2024-01-10", periods=12, freq="1h", tz="UTC")
         src = spark.createDataFrame(
             [(1, t.to_pydatetime(), float(i)) for i, t in enumerate(idx)],
             schema="k long, ts timestamp, value double",
         )
-        orig = ChunkStore._meta_sdf_from_bounds
-        def boom(self, *a, **k):
-            raise RuntimeError("injected meta failure")
-        ChunkStore._meta_sdf_from_bounds = boom
-        try:
+        orig = ChunkStore._stage_into_txn
+
+        def boom(self, frame, table, *a, **k):
+            if table == "meta":
+                raise RuntimeError("injected meta failure")
+            return orig(self, frame, table, *a, **k)
+
+        for cap in (ChunkStore.APPEND_KEYS_CAP, 0):
+            st = ChunkStore(spark, os.path.join(tmpdir, f"ovfail{cap}"), cfg)
+            st.APPEND_KEYS_CAP = cap
+            monkeypatch.setattr(ChunkStore, "_stage_into_txn", boom)
             with pytest.raises(Exception, match="injected meta failure"):
                 st.ingest_long(src, mode="insert")
-        finally:
-            ChunkStore._meta_sdf_from_bounds = orig
-        assert st.alive_data().count() == 0      # nothing leaked visible
-        assert st.latest_meta().count() == 0     # no phantom meta
-        st.ingest_long(src, mode="insert")       # retry lands
-        assert st.alive_data().filter(
-            F.col("value").isNotNull()).count() == 12
+            monkeypatch.setattr(ChunkStore, "_stage_into_txn", orig)
+            assert st.alive_data().count() == 0      # nothing leaked visible
+            assert st.latest_meta().count() == 0     # no phantom meta
+            st.ingest_long(src, mode="insert")       # retry lands
+            assert st.alive_data().filter(
+                F.col("value").isNotNull()).count() == 12
 
     def test_ingest_narrow_key_dtype_casts_to_canonical(self, spark, tmpdir):
         """A caller frame with int32 keys must not poison the parquet logs:
@@ -628,10 +632,12 @@ class TestDistributedMeta:
     def test_meta_from_bounds_matches_grid_aggregate(
         self, spark, tmpdir, freq, freq_s, tz, axis
     ):
-        """The arithmetic insert-path meta (_meta_sdf_from_bounds, zero data
-        passes) must be row-identical to the dense-grid aggregate
-        (_meta_sdf_for) for every freq/tz/chunk-axis combination — including
-        freqs that don't divide the chunk length and DST-shifted chunks."""
+        """The arithmetic meta rows of ingest_long (_meta_from_bounds, zero
+        data passes) must be row-identical to the aggregate of the dense
+        grid on both sides of APPEND_KEYS_CAP — pandas bounds converted on
+        the driver, Spark bounds through mapInPandas — for every
+        freq/tz/chunk-axis combination, including freqs that don't divide
+        the chunk length and DST-shifted chunks."""
         from datetime import datetime, timezone
 
         from holcstore_spark.functions.scalar import chunk_index_col
@@ -639,7 +645,6 @@ class TestDistributedMeta:
             chunk_aligned_bounds,
             reindex_to_chunk_grid,
         )
-        from holcstore_spark.sources.io_util import safe_local_checkpoint
 
         cfg = ChunkStoreConfig(keys=("k",), freq=freq, tz=tz, chunk_axis=axis,
                                key_types={"k": "int"})
@@ -650,21 +655,26 @@ class TestDistributedMeta:
             for t in pd.date_range(s, e, freq="13h", tz="UTC"):
                 rows.append((k, t.to_pydatetime(), 1.0))
         sdf = spark.createDataFrame(rows, schema="k int, ts timestamp, value double")
-        bounds = safe_local_checkpoint(
-            chunk_aligned_bounds(sdf, ("k",), axis, tz, freq_s)
-        )
+        bounds = chunk_aligned_bounds(sdf, ("k",), axis, tz, freq_s)
         dense = reindex_to_chunk_grid(
             sdf, ("k",), axis, tz, freq_s, bounds=bounds
-        ).withColumn("chunk_index", chunk_index_col("ts", axis, tz))
+        ).withColumn("chunk_index", chunk_index_col("ts", axis, tz)).toPandas()
+        want = (
+            dense.groupby(["k", "chunk_index"])["ts"]
+            .agg(start_ts="min", n_points="count").reset_index()
+        )
         ua = datetime(2026, 1, 1, tzinfo=timezone.utc)
-        m_grid = st._meta_sdf_for(dense, ua, 1).orderBy("k", "chunk_index").toPandas()
-        m_arith = (
-            st._meta_sdf_from_bounds(bounds, ua, 1)
-            .orderBy("k", "chunk_index").toPandas()
-        )
-        pd.testing.assert_frame_equal(
-            m_grid.reset_index(drop=True), m_arith.reset_index(drop=True)
-        )
+        cols = ["k", "chunk_index", "start_ts", "n_points"]
+        driver = st._meta_from_bounds(bounds.toPandas(), ua, 1)
+        spark_side = st._meta_from_bounds(bounds, ua, 1).toPandas()
+        for got in (driver, spark_side):
+            assert (got["op_id"] == 1).all() and not got["is_deleted"].any()
+            got = got[cols].assign(
+                start_ts=pd.to_datetime(got["start_ts"], utc=True).dt.tz_localize(None)
+            ).sort_values(["k", "chunk_index"]).reset_index(drop=True)
+            pd.testing.assert_frame_equal(
+                got, want[cols].reset_index(drop=True), check_dtype=False
+            )
 
 
 class TestDeleteBefore:
@@ -775,3 +785,31 @@ class TestMetaCacheRefresh:
         b.refresh()
         assert b.count_chunks() == 2
         assert b.get_ts({"site": "s2", "meter": "m1"}) is not None
+
+
+class TestInsertAfterDelete:
+    def test_insert_into_tombstoned_chunk_drops_dead_rows(
+        self, spark, tmpdir, monkeypatch
+    ):
+        """ingest_long(insert) of a deleted key whose chunks still hold
+        its tombstoned rows rewrites those chunks: the dead rows must not
+        come back alive beside the new ones (on both sides of
+        APPEND_KEYS_CAP)."""
+        cfg = ChunkStoreConfig(keys=("k",), freq="1h", tz="UTC",
+                               chunk_axis=("year", "month"),
+                               key_types={"k": "str"})
+        idx = pd.date_range("2024-01-10", periods=5, freq="1h", tz="UTC")
+
+        def src(v):
+            return spark.createDataFrame(
+                pd.DataFrame({"k": "a", "ts": idx, "value": v}))
+
+        for cap in (ChunkStore.APPEND_KEYS_CAP, 0):
+            st = ChunkStore(spark, os.path.join(tmpdir, f"iad{cap}"), cfg)
+            st.APPEND_KEYS_CAP = cap
+            st.ingest_long(src(1.0), mode="insert")
+            st.delete({"k": "a"})
+            st.ingest_long(src(2.0), mode="insert")
+            assert st.alive_data().count() == 31 * 24
+            got = st.get_ts({"k": "a"})
+            assert len(got) == 5 and (got == 2.0).all()

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from holcstore_spark import ChunkStoreConfig
 from holcstore_spark.sources.chunk_store import ChunkStore
+from holcstore_spark.streaming.sync import SyncClient
 
 
 def plan_text(df) -> str:
@@ -431,6 +432,137 @@ class TestWriteJobBudget:
         # control: a filter that does not pin the key stays distributed
         assert jobs_of(spark, lambda: st.delete({"site__startswith": "d"})) != []
         assert st.get_ts({"site": "d"}) is None
+
+
+def sync_pair(spark, tmp_store_path, name):
+    cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
+                           chunk_axis=("year", "month"), allow_sync=True,
+                           key_types={"site": "str"})
+    root = os.path.join(tmp_store_path, name)
+    return (ChunkStore(spark, os.path.join(root, "server"), cfg),
+            ChunkStore(spark, os.path.join(root, "replica"), cfg))
+
+
+def long_frame(spark, keys, start, hours, value):
+    idx = pd.date_range(start, periods=hours, freq="1h", tz="UTC")
+    return spark.createDataFrame(pd.concat(
+        [pd.DataFrame({"site": k, "ts": idx, "value": float(value)})
+         for k in keys], ignore_index=True))
+
+
+class TestBulkJobBudget:
+    """Upper bounds on the Spark jobs of the bulk write and sync verbs,
+    counted in job groups (each AQE stage is a job). At or below
+    APPEND_KEYS_CAP series the metadata plan runs on the driver, so the
+    jobs left are the data plan's: the bounds collect and one staged
+    write (its range-partition sample plus the write's stages). A
+    metadata-only pull and the watermark run none."""
+
+    def test_ingest_long_modes(self, spark, tmp_store_path):
+        server, _ = sync_pair(spark, tmp_store_path, "ing")
+        ins = ChunkStore(spark, os.path.join(tmp_store_path, "ins"), ChunkStoreConfig(
+            keys=("site",), freq="1h", tz="UTC",
+            chunk_axis=("year", "month"), key_types={"site": "str"}))
+        five = [f"s{i}" for i in range(5)]
+        jobs = {
+            "insert": jobs_of(spark, lambda: ins.ingest_long(
+                long_frame(spark, five, "2024-01-01", 24 * 40, 1.0))),
+            "update_new": jobs_of(spark, lambda: server.ingest_long(
+                long_frame(spark, five, "2024-01-01", 24 * 31, 1.0),
+                mode="update")),
+            # an update of existing chunks reads them back in its rewrite
+            "update": jobs_of(spark, lambda: server.ingest_long(
+                long_frame(spark, five[:2], "2024-01-05", 24 * 7, 2.0),
+                mode="update")),
+            "replace": jobs_of(spark, lambda: server.ingest_long(
+                long_frame(spark, five[:1], "2024-02-03", 24 * 10, 3.0),
+                mode="replace")),
+        }
+        budget = {"insert": 7, "update_new": 7, "update": 10, "replace": 7}
+        counts = {k: len(v) for k, v in jobs.items()}
+        assert all(counts[k] <= budget[k] for k in budget), counts
+        a = server.get_ts({"site": "s0"})
+        assert (a == 3.0).all() and len(a) == 24 * 10  # February only
+        b = server.get_ts({"site": "s1"})
+        assert (b["2024-01-05":"2024-01-11"] == 2.0).all()
+        assert (b["2024-01-12":] == 1.0).all()
+
+    def test_pull_paths(self, spark, tmp_store_path):
+        server, replica = sync_pair(spark, tmp_store_path, "pull")
+        sync = SyncClient(server, replica)
+        five = [f"s{i}" for i in range(5)]
+        got, counts = {}, {}
+
+        def pull(name, n):
+            counts[name] = len(jobs_of(spark, lambda: got.update(n=sync.pull())))
+            assert got["n"] == n, name
+
+        counts["watermark"] = len(jobs_of(spark, replica.last_updated_at))
+        pull("empty", 0)
+        server.ingest_long(long_frame(spark, five, "2024-01-01", 24 * 31, 1.0),
+                           mode="update")
+        pull("bulk", 5)                 # only new chunks arrive
+        server.ingest_long(long_frame(spark, five[:2], "2024-01-05", 24, 2.0),
+                           mode="update")
+        pull("paged", 2)                # one page: the chunks exist on the replica
+        server.delete({"site": "s4"})
+        files = replica._txlog.snapshot().files["data"]
+        pull("tombstones", 1)
+        # the tombstone-only pull staged no (empty) data file
+        assert replica._txlog.snapshot().files["data"] == files
+        pull("empty_again", 0)
+        counts["watermark_again"] = len(jobs_of(spark, replica.last_updated_at))
+        budget = {"watermark": 0, "empty": 0, "bulk": 4, "paged": 4,
+                  "tombstones": 0, "empty_again": 0, "watermark_again": 0}
+        assert all(counts[k] <= budget[k] for k in budget), counts
+        assert replica.last_updated_at() == server.last_updated_at()
+        for k in five[:4]:
+            pd.testing.assert_series_equal(
+                replica.get_ts({"site": k}), server.get_ts({"site": k}),
+                check_freq=False)
+        assert replica.get_ts({"site": "s4"}) is None
+
+
+class TestArrowFilterParity:
+    """One filter dialect on both engines: ``arrow_filter`` (driver-side
+    pyarrow scans) selects the same rows as ``attrs_filter`` (Spark)."""
+
+    LOOKUPS = [
+        ({"s": "b"}, {"i": 3}),
+        ({"s": None}, {"i": None}),
+        ({"s__in": ["a", "c", "zz"]}, {"i__in": [-7, 3, 99]}),
+        ({"s__gt": "b"}, {"i__gt": 0}),
+        ({"s__gte": "b"}, {"i__gte": 3}),
+        ({"s__lt": "c"}, {"i__lt": -3}),
+        ({"s__lte": "c"}, {"i__lte": -3}),
+        ({"s__ne": "b"}, {"i__ne": 3}),
+        ({"s__isnull": True}, {"i__isnull": True}),
+        ({"s__isnull": False}, {"i__isnull": False}),
+        ({"s__contains": "b"}, {"i__contains": "1"}),
+        ({"s__startswith": "a"}, {"i__startswith": "-"}),
+        ({"s__startswith": "a", "s__ne": "ab"}, {"i__mod": (3, 1)}),
+        ({"s__in": ["ab", "b"], "i__gte": 0}, {"i__mod": (3, -1)}),
+        ({}, {"i__mod": (7, 0)}),
+    ]
+
+    @pytest.mark.parametrize("str_filter,int_filter", LOOKUPS)
+    def test_same_rows(self, spark, str_filter, int_filter):
+        import pyarrow as pa
+
+        from holcstore_spark.plans.predicates import arrow_filter, attrs_filter
+
+        s_ = ["a", "ab", "b", "bc", "c", None, "abc", "cb", "b", "ba"]
+        i_ = [-7, -3, 0, 1, 3, None, 10, -10, 11, 4]
+        tbl = pa.table({"row": pa.array(range(10), pa.int64()),
+                        "s": pa.array(s_, pa.string()),
+                        "i": pa.array(i_, pa.int64())})
+        sdf = spark.createDataFrame(list(zip(range(10), s_, i_)),
+                                    schema="row long, s string, i long")
+        for flt in (str_filter, int_filter):
+            want = sorted(r[0] for r in sdf.filter(attrs_filter(flt)).select("row").collect())
+            expr = arrow_filter(flt)
+            got = tbl if expr is None else tbl.filter(expr)
+            assert sorted(got.column("row").to_pylist()) == want, flt
 
 
 class TestModLookup:

@@ -184,7 +184,7 @@ class TestSync:
         orig = ChunkStore._rewrite_spark
         monkeypatch.setattr(
             ChunkStore, "_rewrite_spark",
-            lambda self_store, sdf: (rewrites.append(1), orig(self_store, sdf))[1],
+            lambda self_store, *a, **k: (rewrites.append(1), orig(self_store, *a, **k))[1],
         )
         # new month + new key → no physical overlap → bulk append
         server.set_ts({"site": "b"}, hourly("2024-02-01", 24, 2.0), update=True)
@@ -236,3 +236,148 @@ class TestPagePrefixInvariant:
         assert client.get_ts({"site": "p3"}) is None
         # full meta parity including tombstones
         assert client.latest_meta().count() == server.latest_meta().count()
+
+
+class TestCapParity:
+    """Both sides of APPEND_KEYS_CAP give the same store: the metadata
+    plan on the driver (at or below the cap) and the Spark metadata steps
+    (above it, forced here with a cap of 1 on the twin) must leave equal
+    alive data, latest meta, change feeds and watermarks."""
+
+    KEYS = [("a", 1), ("a", 2), ("b", 1), ("c", 7)]
+
+    def cfg(self, allow_sync):
+        return ChunkStoreConfig(
+            keys=("site", "meter"), freq="1h", tz="Europe/Paris",
+            chunk_axis=("year", "month"), allow_sync=allow_sync,
+            key_types={"site": "str", "meter": "int"},
+        )
+
+    def frame(self, spark, keys, start, hours, value):
+        # the window crosses Paris' spring DST switch (2024-03-31)
+        idx = pd.date_range(start, periods=hours, freq="1h", tz="UTC")
+        return spark.createDataFrame(pd.concat(
+            [pd.DataFrame({"site": s, "meter": m, "ts": idx,
+                           "value": float(value) + np.arange(hours) % 5})
+             for s, m in keys], ignore_index=True))
+
+    @staticmethod
+    def rows(sdf, cols):
+        return sdf.toPandas()[cols].sort_values(cols).reset_index(drop=True)
+
+    def assert_same(self, x, y, stamps):
+        data = ["site", "meter", "ts", "chunk_index", "value"]
+        pd.testing.assert_frame_equal(
+            self.rows(x.alive_data(), data), self.rows(y.alive_data(), data))
+        meta = ["site", "meter", "chunk_index", "start_ts", "n_points", "is_deleted"]
+        if stamps:
+            meta += ["updated_at", "op_id"]
+        pd.testing.assert_frame_equal(
+            self.rows(x.latest_meta(), meta), self.rows(y.latest_meta(), meta))
+
+    def test_ingest_long_modes(self, spark, tmp_store_path):
+        planned = ChunkStore(spark, os.path.join(tmp_store_path, "p"), self.cfg(False))
+        spread = ChunkStore(spark, os.path.join(tmp_store_path, "d"), self.cfg(False))
+        spread.APPEND_KEYS_CAP = 1
+        steps = [
+            ("insert", self.KEYS, "2024-02-20", 24 * 45, 1.0),
+            ("update", self.KEYS[:2], "2024-03-28", 24 * 7, 10.0),
+            ("replace", self.KEYS[2:3], "2024-04-03", 24 * 10, 20.0),
+        ]
+        v0 = planned._txlog.snapshot().version
+        for version, (mode, keys, start, hours, value) in enumerate(steps, 1):
+            for st in (planned, spread):
+                sdf = self.frame(spark, keys, start, hours, value)
+                st.ingest_long(sdf, mode=mode, txn_app="sink", txn_version=version)
+                n = st._txlog.snapshot().version
+                # the replayed batch is skipped whole, in every mode
+                st.ingest_long(sdf, mode=mode, txn_app="sink", txn_version=version)
+                assert st._txlog.snapshot().version == n
+            self.assert_same(planned, spread, stamps=False)
+        cdf = ["site", "meter", "ts", "chunk_index", "value", "_change_type"]
+        for v in range(v0, planned._txlog.snapshot().version):
+            pd.testing.assert_frame_equal(
+                self.rows(planned.changes_between(v), cdf),
+                self.rows(spread.changes_between(v), cdf))
+        assert planned.get_ts({"site": "b", "meter": 1}).index.min() >= pd.Timestamp(
+            "2024-04-03", tz="UTC")
+
+    def test_pull_paths(self, spark, tmp_store_path):
+        server = ChunkStore(spark, os.path.join(tmp_store_path, "s"), self.cfg(True))
+        planned = ChunkStore(spark, os.path.join(tmp_store_path, "p"), self.cfg(True))
+        spread = ChunkStore(spark, os.path.join(tmp_store_path, "d"), self.cfg(True))
+        spread.APPEND_KEYS_CAP = 1
+
+        def pull(**kw):
+            got = []
+            for replica in (planned, spread):
+                # the server's cap picks the feed, the replica's the probe
+                server.APPEND_KEYS_CAP = replica.APPEND_KEYS_CAP
+                sync = SyncClient(server, replica)
+                try:
+                    got.append(sync.pull(**kw))
+                except SyncCrash:
+                    got.append("crash")
+            server.APPEND_KEYS_CAP = ChunkStore.APPEND_KEYS_CAP
+            assert got[0] == got[1]
+            self.assert_same(planned, spread, stamps=True)
+            for f in (None, {"site": "a"}, {"meter__gte": 2}):
+                assert planned.last_updated_at(f) == spread.last_updated_at(f)
+            return got[0]
+
+        assert pull() == 0
+        server.ingest_long(self.frame(spark, self.KEYS, "2024-02-20", 24 * 45, 1.0),
+                           mode="update")
+        assert pull() == 12                                  # bulk bootstrap
+        server.ingest_long(self.frame(spark, self.KEYS[:2], "2024-03-28", 24 * 3, 5.0),
+                           mode="update")
+        assert pull(page_size=1) == 2                        # paged
+        server.ingest_long(self.frame(spark, self.KEYS[1:], "2024-03-30", 24, 6.0),
+                           mode="update")
+        assert pull(page_size=2, crash_after_pages=1) == "crash"
+        assert pull(page_size=2) > 0                         # resumed
+        server.ingest_long(self.frame(spark, self.KEYS[2:3], "2024-04-03", 24, 7.0),
+                           mode="replace")
+        server.ingest_long(self.frame(spark, self.KEYS[:1], "2024-04-05", 24, 8.0),
+                           mode="update")
+        # a filtered pull advances only its own watermark's horizon: the
+        # later unfiltered pull still sees a's newer state
+        assert pull(filters={"site": "b"}) == 3              # filtered
+        assert pull() == 1
+        server.delete({"site": "c", "meter": 7})
+        files = planned._txlog.snapshot().files["data"]
+        assert pull() == 3                                   # tombstones only
+        assert planned._txlog.snapshot().files["data"] == files
+        assert pull() == 0
+        self.assert_same(server, planned, stamps=True)
+        assert planned.last_updated_at() == server.last_updated_at()
+
+
+class TestWatermarkStat:
+    def test_watermark_after_skewed_meta_compaction(self, pair, monkeypatch):
+        """The watermark is answered from each meta entry's recorded max
+        ``updated_at``. A writer with a fast clock stamps a state that a
+        later commit (higher op_id, slower clock) supersedes; once meta
+        compaction drops the superseded row, the compacted file's stat must
+        come from its own rows, not from its inputs."""
+        from datetime import datetime, timezone
+
+        from pyspark.sql import functions as F
+
+        server, _ = pair
+        stamps = iter(datetime(y, m, 1, tzinfo=timezone.utc)
+                      for y, m in ((2030, 1), (2024, 1), (2024, 6)))
+        monkeypatch.setattr(ChunkStore, "_now_stamp",
+                            lambda self: (next(stamps), self._active_txn.op_id))
+        server.set_ts({"site": "a"}, hourly("2024-01-01", 24, 1.0), update=True)
+        server.set_ts({"site": "a"}, hourly("2024-01-01", 24, 2.0), update=True)
+        assert server.last_updated_at() == pd.Timestamp("2030-01-01", tz="UTC")
+        monkeypatch.setattr(server, "META_COMPACT_THRESHOLD", 1)
+        server.set_ts({"site": "b"}, hourly("2024-01-01", 24, 3.0), update=True)
+        meta = server._txlog.snapshot().files["meta"]
+        assert len(meta) == 1 and meta[0]["updated_at_max"] is not None
+        spark_max = server.meta().agg(F.max("updated_at")).first()[0]
+        assert server.last_updated_at() == pd.Timestamp(spark_max, tz="UTC")
+        assert server.last_updated_at() == pd.Timestamp("2024-06-01", tz="UTC")
+        assert server.last_updated_at({"site": "a"}) == pd.Timestamp("2024-01-01", tz="UTC")
+        assert server.last_updated_at({"site": "zz"}) == pd.Timestamp("2000-01-01", tz="UTC")

@@ -1,11 +1,15 @@
-"""Partition-pruning derivation.
+"""Pruning derivation: time bounds and key filters → manifest file skipping.
 
 The reference turns time bounds into ``chunk_index__gte/__lte`` range
 predicates so the b-tree skips chunks (chunk_timeserie_store.py:855-861).
-Here the table is *partitioned by* ``chunk_index``, so the same derived
-predicate becomes Catalyst partition elimination: only the matching
-directories are listed and scanned — the property that keeps a point read
-cheap on a 100 TB table.
+Here ``chunk_index`` is a regular column of immutable files governed by
+the transaction log, whose manifest keeps per-file chunk and key
+min/max: the same derived chunk range selects the files a read opens
+(``Snapshot.entries_overlapping``), and :func:`key_equality_values` with
+:func:`entry_may_match_keys` narrows them by the key columns — the
+property that keeps a point read cheap on a 100 TB table. The predicates
+are also re-applied in-plan, where Parquet row-group statistics skip
+the rest.
 """
 
 from __future__ import annotations
@@ -37,7 +41,8 @@ def chunk_bounds_filter(
     tz: str,
     chunk_col: str = "chunk_index",
 ) -> Column:
-    """``chunk_index`` range predicate for a time window (partition pruning)."""
+    """``chunk_index`` range predicate for a time window (re-applied
+    in-plan after manifest file skipping)."""
     pred = F.lit(True)
     if start is not None:
         pred = pred & (F.col(chunk_col) >= chunk_index_of(start, chunk_axis, tz))

@@ -21,9 +21,10 @@ from pyspark.sql import types as T
 from holcstore_spark.edge.pandas_bridge import long_to_series
 from holcstore_spark.functions.scalar import nan_to_null
 from holcstore_spark.plans.predicates import attrs_filter, validate_filter_keys
+from holcstore_spark.sources.manifest_table import _KEY_TYPE_MAP, StoreTable
 
 
-class AttrStore:
+class AttrStore(StoreTable):
     def __init__(
         self,
         spark: SparkSession,
@@ -46,49 +47,26 @@ class AttrStore:
         #: commits' key digests — str-canonicalized, the over-conflicting
         #: safe direction)
         self._txlog = open_txlog(path)
-        self._pinned_snapshot = None  # set on time_travel() views
 
-    def _schema(self, pdf: pd.DataFrame | None = None) -> T.StructType:
-        fields = []
-        for k in self.keys:
-            if pdf is not None and k in pdf and str(pdf[k].dtype).startswith("int"):
-                fields.append(T.StructField(k, T.LongType()))
-            else:
-                fields.append(T.StructField(k, T.StringType()))
+    def _key_decl(self):
+        return self.keys, {}
+
+    def _schema(self, frame=None) -> T.StructType:
+        """Key types by the base's key-typing rule
+        (:meth:`ManifestTable._key_types`); ``frame`` is the frame about
+        to be written."""
+        fields = [
+            T.StructField(k, _KEY_TYPE_MAP[t])
+            for k, t in self._key_types(frame).items()
+        ]
         fields += [
             T.StructField("ts", T.TimestampType()),
             T.StructField("value", T.DoubleType()),
         ]
         return T.StructType(fields)
 
-    def _read_snapshot(self):
-        """The snapshot reads serve: the pinned one on time-travel views,
-        else the current one."""
-        if self._pinned_snapshot is not None:
-            return self._pinned_snapshot
-        return self._txlog.snapshot()
-
     def df(self) -> DataFrame:
         return self._df_at(self._read_snapshot())
-
-    def time_travel(self, version: int) -> "AttrStore":
-        """Read-only view of the store AS OF a committed log version (see
-        ChunkStore.time_travel for the availability window vs
-        vacuum/prune)."""
-        snap = self._txlog.snapshot_exact(version)
-        view = AttrStore(self.spark, self.path, self.keys, self.tz)
-        view._pinned_snapshot = snap
-        return view
-
-    def _pin(self):
-        """Snapshot captured ONCE at mutation start. The existence check, the update read-back, the
-        keep-set, and the commit's base_version all come from this one
-        snapshot — a commit interleaving mid-operation then sits ABOVE
-        our base and is conflict-checked by the rebase walk, instead of
-        silently becoming part of a fresher commit base."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only")
-        return self._txlog.snapshot()
 
     def _df_at(self, snap) -> DataFrame:
         files = snap.paths("data", self.path)
@@ -154,8 +132,7 @@ class AttrStore:
             {"data": adds}, {},
             touched=None,
             append_keys=sorted(self._key_digest(kt) for kt in kts),
-            txn_app=txn[0] if txn else None,
-            txn_version=txn[1] if txn else None,
+            txn=txn,
         )
 
     def _rewrite(
@@ -187,28 +164,8 @@ class AttrStore:
             {"data": adds}, {"data": affected},
             touched=set(),
             dropped_keys=sorted(self._key_digest(kt) for kt in kts),
-            txn_app=txn[0] if txn else None,
-            txn_version=txn[1] if txn else None,
+            txn=txn,
         )
-
-    def vacuum(
-        self, retention_seconds: float = 3600.0, deep: bool = False
-    ) -> int:
-        """Reclaim manifest-unreferenced files older than the retention
-        window plus checkpoint-summarized log records (see
-        ChunkStore.vacuum for the retention rationale and the
-        O(orphans) default-vs-``deep`` sweep shape)."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only (vacuum refused)")
-        return self._txlog.vacuum_files(retention_seconds, deep=deep)
-
-    def restore(self, version: int) -> int:
-        """Roll the store back to a committed log version as a NEW
-        commit (see ChunkStore.restore — same Delta RESTORE semantics,
-        same refusals on pruned versions and vacuumed files)."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only (restore refused)")
-        return self._txlog.restore_commit(version)
 
     def optimize(self, min_files: int = 4) -> int:
         """Small-file binpack. AttrStore manifests carry no chunk column
@@ -218,81 +175,18 @@ class AttrStore:
         ChunkStore.optimize): change feeds skip it and concurrent
         appends commute with it (rule-1 path intersection is its only
         conflict). Returns 1 when a repack committed, else 0."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only (optimize refused)")
-        from holcstore_spark.sources.txlog import exact_rows
-
-        snap = self._txlog.snapshot()
-        sources = [
-            e for e in snap.files["data"]
-            if isinstance(e.get("rows"), int)
-            and not isinstance(e.get("rows"), bool)
-        ]
-        if len(sources) < min_files:
-            return 0
-        full = [os.path.join(self.path, e["path"]) for e in sources]
-        adds: list = []
-        try:
-            # read with the FILES' own schema — this store maps int key
-            # dtypes to LongType at write time (_schema(pdf)), so
-            # forcing the pdf-less string default would crash every
-            # int-keyed store (the same reason _df_at reads schemaless)
-            adds = self._stage(self.spark.read.parquet(*full), npart=1)
-            added = exact_rows(adds)
-            removed = exact_rows(sources)
-            if added != removed:
-                raise RuntimeError(
-                    f"optimize repack row mismatch: staged {added} rows "
-                    f"for {removed} source rows"
-                )
+        snap = self._pin("optimize")
+        cands, adds, removes, _ = self._binpack(
+            snap, lambda src, _: self._stage(src, npart=1),
+            min_files=min_files, max_chunks=1, whole=True,
+        )
+        if cands:
             self._txlog.commit(
                 snap.version, "optimize", self._txlog.next_op_id(snap),
-                {"data": adds}, {"data": sources},
+                {"data": adds}, {"data": removes},
                 touched="all", compacting=True,
             )
-        except BaseException:
-            # pre-commit failure: note the staged repack for the default
-            # O(orphans) vacuum (commit-level failures also note — the
-            # duplicate sidecar is benign)
-            try:
-                self._txlog.note_orphans(e["path"] for e in adds)
-            except OSError:
-                pass
-            raise
-        return 1
-
-    def last_txn_version(self, txn_app: str) -> int | None:
-        """Highest committed ``txn_version`` for the idempotent writer
-        ``txn_app`` (see ChunkStore.last_txn_version)."""
-        return self._txlog.snapshot().app_versions.get(str(txn_app))
-
-    def history(self) -> DataFrame:
-        """Commit-log audit frame (see ChunkStore.history)."""
-        from holcstore_spark.sources.chunk_store import _history_df
-
-        return _history_df(self.spark, self._txlog)
-
-    def changes_between(self, from_version: int,
-                        to_version: int | None = None) -> DataFrame:
-        """Row-level change feed between committed log versions (see
-        ChunkStore.changes_between). AttrStore infers its key types from
-        the data, so each side reads schema-inferred and an empty side
-        borrows the other's schema (falling back to the declared string
-        default when both are empty)."""
-        from holcstore_spark.sources.chunk_store import _changes_between_df
-
-        cols = [*self.keys, "ts", "value"]
-
-        def _read(paths, other: DataFrame | None) -> DataFrame:
-            if not paths:
-                schema = other.schema if other is not None else self._schema()
-                return self.spark.createDataFrame([], schema)
-            full = [os.path.join(self.path, p) for p in paths]
-            return self.spark.read.parquet(*full).select(*cols)
-
-        return _changes_between_df(
-            self.spark, self._txlog, from_version, to_version, _read
-        )
+        return len(cands)
 
     # ------------------------------------------------------------------
     def _to_pdf(self, attrs: dict, serie: pd.Series) -> pd.DataFrame:
@@ -388,7 +282,7 @@ class AttrStore:
             self._ensure_full(attrs)
             kts_attrs.append((attrs, serie))
         snap = self._pin()
-        if txn is not None and txn[1] <= snap.app_versions.get(txn[0], -1):
+        if snap.replayed(txn):
             # replay of a committed batch: skip BEFORE the driver-side
             # frame construction
             return

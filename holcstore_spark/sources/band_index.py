@@ -126,16 +126,7 @@ class BandIndex(ForgetMixin):
         document's bands stop suppressing new near-duplicates from the
         delete commit on."""
         snap = snap if snap is not None else self._txlog.snapshot()
-        files = snap.paths("data", self.path)
-        if not files:
-            return self.spark.createDataFrame([], self._schema())
-        out = self.spark.read.schema(self._schema()).parquet(*files)
-        return self._mask_deleted(out, snap)
-
-    def last_txn_version(self, txn_app) -> int:
-        """Highest committed txn_version for an app (-1 = none) — the
-        watermark a restarting stream reads to skip replayed batches."""
-        return self._txlog.snapshot().app_versions.get(str(txn_app), -1)
+        return self._mask_deleted(self._read_entries(snap.files["data"]), snap)
 
     # -- write side ------------------------------------------------------
     def _typed(self, bands_df: DataFrame) -> DataFrame:
@@ -214,9 +205,7 @@ class BandIndex(ForgetMixin):
 
         txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
-        if txn_id is not None and (
-            txn_id[1] <= snap.app_versions.get(txn_id[0], -1)
-        ):
+        if snap.replayed(txn_id):
             return False
         self._validate_band_shape(bands_df)
         adds = self._stage(self._typed(bands_df))
@@ -224,8 +213,7 @@ class BandIndex(ForgetMixin):
             snap.version, "append", TxLog.next_op_id(snap),
             {"data": adds}, {},
             touched=None,  # pure append: commutes with everything
-            txn_app=txn_id[0] if txn_id else None,
-            txn_version=txn_id[1] if txn_id else None,
+            txn=txn_id,
         )
         return committed is not None
 
@@ -275,9 +263,7 @@ class BandIndex(ForgetMixin):
             shingle_k=p["shingle_k"], max_bucket=max_bucket,
             exclude_self=True,
         )
-        if txn_id is not None and (
-            txn_id[1] <= snap.app_versions.get(txn_id[0], -1)
-        ):
+        if snap.replayed(txn_id):
             return kept  # replay: bands already live, commit skipped
         from holcstore_spark.sources.io_util import safe_local_checkpoint
 
@@ -293,8 +279,7 @@ class BandIndex(ForgetMixin):
             snap.version, "ingest", TxLog.next_op_id(snap),
             {"data": adds}, {},
             touched=None,
-            txn_app=txn_id[0] if txn_id else None,
-            txn_version=txn_id[1] if txn_id else None,
+            txn=txn_id,
         )
         return kept
 
@@ -311,12 +296,7 @@ class BandIndex(ForgetMixin):
         :meth:`~holcstore_spark.sources.index_base.ForgetMixin._optimize_by_chunk`.
         Returns the number of bands repacked."""
         return self._optimize_by_chunk(
-            "band_id", key_cols=("band_key",),
-            sort_cols=("band_id", "band_key"),
+            self._chunk_write("band_id", key_cols=("band_key",),
+                              sort_cols=("band_id", "band_key")),
             min_files=min_files, max_chunks=max_bands,
         )
-
-    def vacuum(self, retention_seconds: float = 3600.0,
-               deep: bool = False) -> int:
-        """Reclaim unreferenced files (see TxLog.vacuum_files)."""
-        return self._txlog.vacuum_files(retention_seconds, deep=deep)

@@ -64,7 +64,12 @@ from holcstore_spark.plans.predicates import (
     validate_filter_keys,
 )
 from holcstore_spark.plans.pruning import chunk_bounds_filter, normalize_bound
-from holcstore_spark.sources.io_util import safe_local_checkpoint
+from holcstore_spark.sources.io_util import overlap_jobs, safe_local_checkpoint
+from holcstore_spark.sources.manifest_table import (
+    _KEY_TYPE_MAP,
+    StoreTable,
+    probe_key_types_from_manifest,
+)
 
 
 class KeyExistsError(Exception):
@@ -124,7 +129,7 @@ class _Txn:
     __slots__ = ("op", "snapshot", "op_id", "adds", "removes", "touched",
                  "append_keys", "dropped_keys", "dropped_unknown",
                  "dropped_key_tuples", "compaction_backup", "compacting",
-                 "txn_app", "txn_version")
+                 "txn_id")
 
     def __init__(self, op: str, snapshot):
         self.op = op
@@ -162,11 +167,10 @@ class _Txn:
         #: sets this — it piggybacks on commits with real data changes,
         #: and no change-feed consumer reads meta files.
         self.compacting = False
-        #: idempotent-writer identity (Delta ``txn`` analogue): when
-        #: set, the commit records ``(txn_app, txn_version)`` and the
+        #: idempotent-writer identity ``(txn_app, txn_version)`` (Delta
+        #: ``txn`` analogue): when set, the commit records it and the
         #: rebase walk refuses a duplicate — see TxLog.commit
-        self.txn_app: str | None = None
-        self.txn_version: int | None = None
+        self.txn_id: tuple[str, int] | None = None
 
     def touch(self, chunks) -> None:
         if chunks == "all" or self.touched == "all":
@@ -174,102 +178,6 @@ class _Txn:
             return
         self.touched = (self.touched or set()) | set(chunks)
 
-
-def _changes_between_df(
-    spark: SparkSession, txlog, from_version: int, to_version: int | None,
-    read_paths,
-) -> DataFrame:
-    """Shared manifest-diff → row-delta core (see
-    ``ChunkStore.changes_between`` for semantics): resolve the two
-    snapshots, diff their data-file sets, and let the store-specific
-    ``read_paths(paths, other_df)`` callback read each side with the
-    right schema (``other_df`` is the already-built opposite side, or
-    None — lets schema-inferring stores type their empty frame)."""
-    snap_to = txlog.snapshot(as_of=to_version)
-    if to_version is not None and snap_to.version != to_version:
-        raise ValueError(
-            f"version {to_version} is not a committed log version "
-            f"(nearest at-or-before: {snap_to.version})"
-        )
-    snap_from = txlog.snapshot(as_of=from_version)
-    if snap_from.version != from_version:
-        raise ValueError(
-            f"version {from_version} is not a committed log version "
-            f"(nearest at-or-before: {snap_from.version})"
-        )
-    if from_version > snap_to.version:
-        # an inverted range would silently return the delta with the
-        # insert/delete labels swapped — refuse like Delta's
-        # table_changes does
-        raise ValueError(
-            f"inverted version range: from_version {from_version} > "
-            f"to_version {snap_to.version}"
-        )
-    paths_from = {e["path"] for e in snap_from.files["data"]}
-    paths_to = {e["path"] for e in snap_to.files["data"]}
-    # manifest-level compaction skip (Delta dataChange=false analogue):
-    # substitute row-preserving commits out of the TO endpoint so their
-    # file churn is never read at all — a compaction in the middle of
-    # the interval then costs nothing instead of a full read-and-cancel
-    from holcstore_spark.sources.txlog import rewind_compacting
-
-    moves = txlog.compacting_data_moves(from_version, snap_to.version)
-    if moves:
-        paths_to = rewind_compacting(paths_to, moves, root=txlog.root)
-    added_paths = sorted(paths_to - paths_from)
-    removed_paths = sorted(paths_from - paths_to)
-    added = read_paths(added_paths, None)
-    removed = read_paths(removed_paths, added)
-    if not added_paths and removed_paths:
-        # schema-inferring stores type an empty frame from the OTHER
-        # side; the added side was built blind, so re-type it now that
-        # removed's schema is known (delete-only intervals)
-        added = read_paths(added_paths, removed)
-    inserts = added.exceptAll(removed).withColumn("_change_type", F.lit("insert"))
-    deletes = removed.exceptAll(added).withColumn("_change_type", F.lit("delete"))
-    return inserts.unionByName(deletes)
-
-
-def _history_df(spark: SparkSession, txlog) -> DataFrame:
-    """Commit-log rows as a typed frame (shared by every
-    manifest-backed store's ``history()``)."""
-    schema = T.StructType([
-        T.StructField("version", T.LongType()),
-        T.StructField("op", T.StringType()),
-        T.StructField("op_id", T.LongType()),
-        T.StructField("committed_at", T.TimestampType()),
-        T.StructField("touched", T.StringType()),
-        T.StructField("data_files_added", T.LongType()),
-        T.StructField("data_files_removed", T.LongType()),
-        T.StructField("data_rows_added", T.LongType()),
-        T.StructField("data_rows_removed", T.LongType()),
-        T.StructField("meta_files_added", T.LongType()),
-        T.StructField("meta_files_removed", T.LongType()),
-        T.StructField("meta_rows_added", T.LongType()),
-        T.StructField("meta_rows_removed", T.LongType()),
-        T.StructField("txn_app", T.StringType()),
-        T.StructField("txn_version", T.LongType()),
-    ])
-    rows = []
-    for r in txlog.history_rows():
-        t = r["touched"]
-        tv = r.get("txn_version")
-        rows.append((
-            r["version"], r["op"], r["op_id"],
-            datetime.fromtimestamp(r["committed_at"], tz=timezone.utc),
-            None if t is None else (t if isinstance(t, str) else str(t)),
-            r["data_files_added"], r["data_files_removed"],
-            r["data_rows_added"], r["data_rows_removed"],
-            r["meta_files_added"], r["meta_files_removed"],
-            r["meta_rows_added"], r["meta_rows_removed"],
-            r.get("txn_app"), None if tv is None else int(tv),
-        ))
-    return spark.createDataFrame(rows, schema)
-
-
-#: declared key-type name → Spark type (shared with the streaming CDC
-#: source's schema derivation — one source of truth)
-_KEY_TYPE_MAP = {"str": T.StringType(), "int": T.LongType(), "float": T.DoubleType()}
 
 #: Spark type name → the arrow type driver-side writes stage (timestamps
 #: are naive UTC instants, as Spark's session=UTC files read back)
@@ -284,63 +192,6 @@ def _arrow_schema(schema: T.StructType) -> pa.Schema:
     return pa.schema(
         [(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in schema.fields]
     )
-
-
-def probe_key_types_from_manifest(path: str, keys, txlog=None) -> dict[str, str]:
-    """Resolve key-column type names (``str``/``int``/``float``) from a
-    live data file's parquet footer — one driver-side metadata read per
-    file consulted, no Spark job. Accumulates across files until EVERY
-    requested key is proven (or the manifest is exhausted) — stopping at
-    the first file that resolves *any* key would let a file missing some
-    key column shadow later files that could prove it, making
-    ``data_schema_from_config`` raise "no live data file" spuriously
-    (ADVICE r9). Returns the subset of ``keys`` the footers could prove;
-    empty when the store has no live (readable) data file. Pass the
-    store's own ``txlog`` where one is held: its snapshot cache makes
-    the repeated empty-store probe a listdir instead of a log replay."""
-    keys = list(keys)
-    if not keys:
-        return {}
-    import pyarrow.parquet as pq
-
-    if txlog is None:
-        from holcstore_spark.sources.txlog import TxLog
-
-        txlog = TxLog(path)
-    out: dict[str, str] = {}
-    # scan bound: a key that NO footer can prove (typo'd name, exotic
-    # physical type) must not turn the probe into an O(live-files)
-    # driver-side footer crawl at 100k+ files — after this many
-    # consecutive readable footers that added nothing, the remaining
-    # keys are declared unprovable (heterogeneous schemas cluster by
-    # write batch, so the proving file is found long before the cap)
-    max_unhelpful = 64
-    unhelpful = 0
-    for e in txlog.snapshot().files["data"]:
-        try:
-            schema = pq.read_schema(os.path.join(path, e["path"]))
-        except (FileNotFoundError, OSError, pa.ArrowInvalid):
-            continue
-        before = len(out)
-        for k in keys:
-            if k in out:
-                continue
-            idx = schema.get_field_index(k)
-            if idx < 0:
-                continue
-            t = schema.field(idx).type
-            if pa.types.is_integer(t):
-                out[k] = "int"
-            elif pa.types.is_floating(t):
-                out[k] = "float"
-            elif pa.types.is_string(t) or pa.types.is_large_string(t):
-                out[k] = "str"
-        if len(out) == len(keys):
-            break
-        unhelpful = unhelpful + 1 if len(out) == before else 0
-        if unhelpful >= max_unhelpful:
-            break
-    return out
 
 
 def data_schema_from_config(cfg, path: str | None = None) -> T.StructType:
@@ -449,7 +300,10 @@ def bounds_meta_rows(
     return out.assign(updated_at=updated_at, op_id=op_id, is_deleted=False)
 
 
-class ChunkStore:
+class ChunkStore(StoreTable):
+    _SNAPSHOT_CACHES = ("_meta_cache", "_meta_cache_version",
+                        "_has_tombstones", "_active_txn", "_txn_owner")
+
     def __init__(self, spark: SparkSession, path: str, config: ChunkStoreConfig):
         import threading
 
@@ -467,11 +321,7 @@ class ChunkStore:
         self._meta_cache: DataFrame | None = None
         self._has_tombstones: bool | None = None
         self._active_txn: "_Txn | None" = None
-        self._pinned_snapshot = None  # set on time_travel() views
         self._meta_cache_version: int | None = None
-        self._key_type_probe: dict[str, str] | None = None
-        #: incomplete probe memo: (manifest version, partial result)
-        self._key_type_probe_partial: tuple[int, dict[str, str]] | None = None
         # serializes write transactions of THIS instance across threads:
         # without it a second thread entering _txn while another thread's
         # txn is open would silently merge into it (cross-INSTANCE
@@ -487,93 +337,13 @@ class ChunkStore:
         """Current manifest snapshot; inside a transaction, the BASE
         snapshot captured at txn start — every read a write op performs
         sees one consistent version (MVCC)."""
-        if self._pinned_snapshot is not None:
-            return self._pinned_snapshot
         txn = self._active_txn
-        if txn is not None:
-            return txn.snapshot
-        return self._txlog.snapshot()
-
-    def time_travel(self, version: int) -> "ChunkStore":
-        """Read-only view of the store AS OF a committed log version —
-        every read API (``get_ts``, ``alive_data``,
-        ``updates``, …) serves the historical state; writes raise.
-        Available as long as the version's commit records and files
-        survive (``vacuum()`` reclaims superseded files and prunes
-        checkpointed records, giving up horizons older than the latest
-        checkpoint — Delta's VACUUM/log-retention trade)."""
-        snap = self._txlog.snapshot_exact(version)
-        view = ChunkStore(self.spark, self.path, self.config)
-        view._pinned_snapshot = snap
-        return view
-
-    def history(self) -> DataFrame:
-        """Commit-log audit frame (Delta's ``DESCRIBE HISTORY``
-        analogue), pairing with :meth:`time_travel`: one row per
-        replayable commit, newest first — version, op, op_id, commit
-        wall-clock, files/rows added and removed per table, touched
-        chunk set. Commits summarized by a pruned checkpoint are no
-        longer listed (same reach as ``time_travel``). Metadata-sized:
-        the replayable log is bounded by checkpoint+prune."""
-        return _history_df(self.spark, self._txlog)
-
-    def last_txn_version(self, txn_app: str) -> int | None:
-        """Highest ``txn_version`` the idempotent writer ``txn_app`` has
-        committed, or None if it never wrote (Delta's ``txnVersion``
-        read-back). A resuming sink queries this to decide where its
-        replay must start; watermarks survive log pruning (persisted in
-        checkpoint headers)."""
-        return self._txlog.snapshot().app_versions.get(str(txn_app))
+        return txn.snapshot if txn is not None else self._read_snapshot()
 
     def restore(self, version: int) -> int:
-        """Roll the store back to a committed log version as a NEW
-        commit (Delta's ``RESTORE TABLE`` analogue) — the
-        write-side completion of the :meth:`time_travel` /
-        :meth:`history` triad. The rollback commit re-references the old
-        generation's files and removes everything newer, so history is
-        preserved: ``history()`` shows the restore itself, and
-        ``time_travel`` can still visit the undone versions until
-        vacuum/prune reclaims them. Refuses when the target version is
-        pruned below the log horizon or any file it needs was vacuumed.
-        Returns the new commit's version."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only (restore refused)")
-        v = self._txlog.restore_commit(version)
+        v = super().restore(version)
         self._invalidate_meta_cache()
         return v
-
-    def changes_between(self, from_version: int,
-                        to_version: int | None = None) -> DataFrame:
-        """Row-level change feed between two committed log versions
-        (Delta CDF's ``table_changes`` analogue): the data
-        rows inserted and removed by the commits in
-        ``(from_version, to_version]``, as the data columns plus a
-        ``_change_type`` column ('insert' | 'delete'; an in-place
-        update of a point surfaces as delete of the old row + insert
-        of the new).
-
-        Scale shape: derived from the MANIFEST diff — only the files
-        added or removed in the interval are read, never the table, so
-        the cost is bounded by what changed regardless of store size.
-        Copy-on-write rewrites carry unchanged bystander rows into
-        their new files; the ``exceptAll`` between the added and
-        removed file sets cancels those exactly, leaving the true
-        row-level delta. Contract notes: this is the PHYSICAL data
-        delta — dense-grid NaN padding participates like any row, and
-        tombstone deletes (meta-only commits) report no data changes;
-        both bounds must be at-or-below the pruned log horizon's reach
-        (same availability as :meth:`time_travel`)."""
-        cols = [f.name for f in self._data_schema()]
-
-        def _read(paths, _other) -> DataFrame:
-            if not paths:
-                return self.spark.createDataFrame([], self._data_schema())
-            full = [os.path.join(self.path, p) for p in paths]
-            return self.spark.read.schema(self._data_schema()).parquet(*full).select(*cols)
-
-        return _changes_between_df(
-            self.spark, self._txlog, from_version, to_version, _read
-        )
 
     @contextlib.contextmanager
     def _txn(self, op: str):
@@ -581,8 +351,6 @@ class ChunkStore:
         atomic log record (data + meta together — the import path's
         'data lands first, meta last' crash window disappears). Nested
         entry reuses the outer transaction."""
-        if self._pinned_snapshot is not None:
-            raise ValueError(f"time-travel views are read-only ({op} refused)")
         import threading
 
         tid = threading.get_ident()
@@ -593,7 +361,7 @@ class ChunkStore:
         # multi-writer pattern is one instance per writer, arbitrated by
         # the commit protocol — within an instance writes are ordered)
         with self._txn_lock:
-            snap = self._txlog.snapshot()
+            snap = self._pin(op)
             # the latest_meta cache may predate this base snapshot (a
             # cross-process commit landed since it was built) — existence
             # checks and tombstone flags must validate against the same
@@ -667,8 +435,7 @@ class ChunkStore:
                 append_keys=txn.append_keys,
                 dropped_keys=txn.dropped_keys,
                 compacting=txn.compacting,
-                txn_app=txn.txn_app,
-                txn_version=txn.txn_version,
+                txn=txn.txn_id,
             )
         except StaleBaseError:
             # a stale base fails at EVERY candidate slot (the horizon
@@ -700,8 +467,7 @@ class ChunkStore:
                 append_keys=txn.append_keys,
                 dropped_keys=txn.dropped_keys,
                 compacting=txn.compacting,
-                txn_app=txn.txn_app,
-                txn_version=txn.txn_version,
+                txn=txn.txn_id,
             )
 
     def _stage_into_txn(
@@ -729,13 +495,21 @@ class ChunkStore:
         chunk and key, so every later rewrite would read it. Each meta
         entry records its exact max ``updated_at`` (the watermark of
         :meth:`last_updated_at`), read from the staged rows."""
-        txn = self._active_txn
+        self._active_txn.adds[table].extend(
+            self._write_staged(frame, table, npart)
+        )
+
+    def _write_staged(
+        self, frame: DataFrame | pa.Table, table: str, npart: int | None = None
+    ) -> list:
+        """The write behind :meth:`_stage_into_txn`: stage ``frame`` into
+        a fresh dir and return its non-empty manifest entries."""
         abs_dir, rel_dir = self._txlog.new_staging_dir()
         if isinstance(frame, pa.Table):
             self._write_arrow(frame, table, abs_dir)
         else:
             if table == "data":
-                df = self._cast_canonical(frame, self._data_schema())
+                df = self._cast_canonical(frame, self._data_schema(frame))
                 rng = ("chunk_index", *self.config.keys)
                 df = (
                     df.repartitionByRange(npart, *rng)
@@ -743,7 +517,7 @@ class ChunkStore:
                     else df.repartitionByRange(*rng)
                 ).sortWithinPartitions(*self.config.keys, "ts")
             else:
-                df = self._cast_canonical(frame, self._meta_schema()).coalesce(1)
+                df = self._cast_canonical(frame, self._meta_schema(frame)).coalesce(1)
             df.write.mode("overwrite").parquet(abs_dir)
         entries = self._txlog.collect_entries(
             abs_dir, rel_dir,
@@ -753,13 +527,13 @@ class ChunkStore:
         for e in entries:
             if not e["rows"]:
                 os.remove(os.path.join(self.path, e["path"]))
-        txn.adds[table].extend(e for e in entries if e["rows"])
+        return [e for e in entries if e["rows"]]
 
     def _arrow_canonical(self, tbl: pa.Table, table: str) -> pa.Table:
         """Arrow twin of :meth:`_cast_canonical`: the store's column
         order and types, every column nullable (as in Spark's canonical
         files), timestamps as naive UTC nanoseconds."""
-        schema = self._data_schema() if table == "data" else self._meta_schema()
+        schema = (self._data_schema if table == "data" else self._meta_schema)(tbl)
         return tbl.select(schema.fieldNames()).cast(_arrow_schema(schema))
 
     def _write_arrow(self, tbl: pa.Table, table: str, abs_dir: str) -> None:
@@ -981,7 +755,7 @@ class ChunkStore:
         pair = [*keys, "chunk_index"]
         chunk_set = {int(c) for c in chunks}
         affected = self._affected_files(chunk_set)
-        schema = self._data_schema()
+        schema = self._data_schema(sdf_new)
         sdf_new = self._cast_canonical(sdf_new, schema)
         if affected:
             paths = [os.path.join(self.path, e["path"]) for e in affected]
@@ -1065,59 +839,17 @@ class ChunkStore:
     # ------------------------------------------------------------------
     # schema helpers
     # ------------------------------------------------------------------
-    def _key_schema(self, pdf: pd.DataFrame | None = None) -> list[tuple[str, T.DataType]]:
-        mapping = _KEY_TYPE_MAP
-        out = []
-        probed = None
-        for k in self.config.keys:
-            declared = self.config.key_types.get(k)
-            if declared:
-                out.append((k, mapping[declared]))
-            elif pdf is not None:
-                dt = pdf[k].dtype
-                if dt == object:
-                    out.append((k, T.StringType()))
-                elif str(dt).startswith("int"):
-                    out.append((k, T.LongType()))
-                else:
-                    out.append((k, T.DoubleType()))
-            else:
-                # no declaration and no sample frame: the WRITTEN type is
-                # recoverable from a live file's footer
-                # — a string default would misread int/float-keyed
-                # stores created without key_types (ADVICE r7)
-                if probed is None:
-                    probed = self._probed_key_types()
-                t = probed.get(k)
-                out.append((k, mapping[t] if t else T.StringType()))
-        return out
+    def _key_decl(self):
+        return self.config.keys, self.config.key_types
 
-    def _probed_key_types(self) -> dict[str, str]:
-        """Footer-probed types of undeclared key columns. A complete answer is cached forever; an INCOMPLETE one (empty
-        store, or a key no footer proves) is cached per manifest version
-        so repeated schema derivations don't repeat the O(live-files)
-        footer scan — only a new commit (which may add the proving file)
-        re-probes."""
-        if self._key_type_probe is not None:
-            return self._key_type_probe
-        undeclared = [
-            k for k in self.config.keys if not self.config.key_types.get(k)
-        ]
-        ver = self._txlog.snapshot().version
-        part = self._key_type_probe_partial
-        if part is not None and part[0] == ver:
-            return part[1]
-        probe = probe_key_types_from_manifest(
-            self.path, undeclared, txlog=self._txlog
-        )
-        if all(k in probe for k in undeclared):
-            self._key_type_probe = probe
-        else:
-            self._key_type_probe_partial = (ver, probe)
-        return probe
+    def _key_schema(self, frame=None) -> list[tuple[str, T.DataType]]:
+        """(key, Spark type) pairs by the base's key-typing rule
+        (:meth:`ManifestTable._key_types`); ``frame`` is the frame about
+        to be written."""
+        return [(k, _KEY_TYPE_MAP[t]) for k, t in self._key_types(frame).items()]
 
-    def _data_schema(self, pdf=None) -> T.StructType:
-        fields = [T.StructField(k, t) for k, t in self._key_schema(pdf)]
+    def _data_schema(self, frame=None) -> T.StructType:
+        fields = [T.StructField(k, t) for k, t in self._key_schema(frame)]
         fields += [
             T.StructField("ts", T.TimestampType()),
             T.StructField("value", T.DoubleType()),
@@ -1125,8 +857,11 @@ class ChunkStore:
         ]
         return T.StructType(fields)
 
-    def _meta_schema(self, pdf=None) -> T.StructType:
-        fields = [T.StructField(k, t) for k, t in self._key_schema(pdf)]
+    #: the data table's schema is the base's read schema
+    _schema = _data_schema
+
+    def _meta_schema(self, frame=None) -> T.StructType:
+        fields = [T.StructField(k, t) for k, t in self._key_schema(frame)]
         fields += [T.StructField(n, t) for n, t in _META_EXTRA]
         return T.StructType(fields)
 
@@ -1151,10 +886,7 @@ class ChunkStore:
         entries = self._snapshot().entries_overlapping("data", chunk_lo, chunk_hi)
         if key_values:
             entries = [e for e in entries if entry_may_match_keys(e, key_values)]
-        if not entries:
-            return self.spark.createDataFrame([], self._data_schema())
-        files = [os.path.join(self.path, e["path"]) for e in entries]
-        return self.spark.read.schema(self._data_schema()).parquet(*files)
+        return self._read_entries(entries)
 
     def meta(self) -> DataFrame:
         files = self._snapshot().paths("meta", self.path)
@@ -1347,33 +1079,6 @@ class ChunkStore:
         return sdf.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
-
-    def _overlap_staged_writes(self, big, small) -> None:
-        """Run the large data-staging job and the small meta-staging job
-        CONCURRENTLY (guide §2.6: independent jobs submitted from a
-        driver thread back-fill each other's stragglers — the meta job's
-        tasks run on cores the data write's task tail leaves idle, and
-        the meta frame's driver-side plan construction overlaps the data
-        job instead of serially following it).
-
-        Staged files are invisible until the transaction commits, so
-        ordering between the two stagings is immaterial — a failure of
-        either aborts the txn and the staged orphans are
-        vacuum-collected.
-
-        ``small`` runs in the pool thread (plan construction included);
-        ``big`` runs on the caller thread. If both fail, ``big``'s error
-        propagates (the txn aborts either way)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(
-                inheritable_thread_target(self.spark)(small)
-            )
-            big()
-            fut.result()
 
     #: live meta files above which a commit folds in a meta compaction.
     #: Every write stages one file and every read windows the whole log,
@@ -1571,12 +1276,10 @@ class ChunkStore:
         keys = tuple(keys or self.config.keys)
         if keys != self.config.keys:
             raise ValueError(f"keys must be {self.config.keys}")
-        txn_id = resolve_txn(txn_app, txn_version)
-        if txn_id is not None:
-            txn = self._active_txn
-            if txn_id[1] <= txn.snapshot.app_versions.get(txn_id[0], -1):
-                return  # this (app, version) is already durable — replay
-            txn.txn_app, txn.txn_version = txn_id
+        txn_id, txn = resolve_txn(txn_app, txn_version), self._active_txn
+        if txn.snapshot.replayed(txn_id):
+            return  # this (app, version) is already durable — replay
+        txn.txn_id = txn_id or txn.txn_id
         frames = []
         for key_tuple, serie in mapping.items():
             attrs = dict(zip(keys, key_tuple if isinstance(key_tuple, tuple) else (key_tuple,)))
@@ -1678,12 +1381,10 @@ class ChunkStore:
         # argument guards BEFORE the replay skip (see set_many_ts)
         if self.config.allow_sync and mode == "insert":
             raise SyncGuardError("plain ingest is forbidden on a sync-enabled store")
-        txn_id = resolve_txn(txn_app, txn_version)
-        if txn_id is not None:
-            txn = self._active_txn
-            if txn_id[1] <= txn.snapshot.app_versions.get(txn_id[0], -1):
-                return  # this (app, version) is already durable — replay
-            txn.txn_app, txn.txn_version = txn_id
+        txn_id, txn = resolve_txn(txn_app, txn_version), self._active_txn
+        if txn.snapshot.replayed(txn_id):
+            return  # this (app, version) is already durable — replay
+        txn.txn_id = txn_id or txn.txn_id
         keys = list(self.config.keys)
         pair = [*keys, "chunk_index"]
         cfg = self.config
@@ -1781,8 +1482,8 @@ class ChunkStore:
                 self._note_append_keys(tuple(r) for r in kt_rows)
                 self._stage_into_txn(meta_sdf, "meta")
 
-            self._overlap_staged_writes(
-                lambda: self._stage_into_txn(dense, "data"), _stage_meta
+            overlap_jobs(
+                self.spark, lambda: self._stage_into_txn(dense, "data"), _stage_meta
             )
             return
 
@@ -1799,7 +1500,8 @@ class ChunkStore:
                 )
         kt_rows = new_keys.limit(self.APPEND_KEYS_CAP + 1).collect()
         self._note_dropped_keys(tuple(r) for r in kt_rows)
-        self._overlap_staged_writes(
+        overlap_jobs(
+            self.spark,
             lambda: self._rewrite_spark(dense, chunks, pairs=written, merge=merge),
             lambda: self._stage_into_txn(meta_sdf, "meta"),
         )
@@ -2530,75 +2232,20 @@ class ChunkStore:
         never blocks writers. Returns the number of chunks repacked.
         Files without exact manifest stats (``rows=None`` or a
         multi-chunk span) are left alone: the per-chunk grouping and
-        the row-preservation proof both need tight stats."""
-        from holcstore_spark.sources.txlog import (
-            binpack_candidates,
-            exact_rows,
-        )
-
+        the row-preservation proof both need tight stats. The repack is
+        the shared core (:meth:`ManifestTable._binpack`); its staged
+        files join this transaction."""
         txn = self._active_txn
-        cands, by_chunk = binpack_candidates(
-            txn.snapshot.files["data"], min_files, max_chunks
+        cands, adds, removes, _ = self._binpack(
+            txn.snapshot, lambda src, _: self._write_staged(src, "data", npart=1),
+            min_files=min_files, max_chunks=max_chunks,
         )
-        if not cands:
-            return 0
-        # stage each chunk separately, pinned to ONE output partition:
-        # a single range-partitioned write over all candidates samples
-        # its boundaries and can emit a CHUNK-SPANNING file on skew —
-        # which the candidate filter above would then exclude from every
-        # future optimize, leaving that chunk permanently un-packable
-        for c in cands:
-            paths = [os.path.join(self.path, e["path"]) for e in by_chunk[c]]
-            src = self.spark.read.schema(self._data_schema()).parquet(*paths)
-            self._stage_into_txn(src, "data", npart=1)
-        sources = [e for c in cands for e in by_chunk[c]]
-        txn.removes["data"].extend(sources)
-        txn.touch(set(cands))
-        added = exact_rows(txn.adds["data"])
-        removed = exact_rows(sources)
-        if added != removed:
-            # the repack lost or duplicated rows (schema drift, torn
-            # source file): abort the transaction — nothing commits (and
-            # the _txn except-path notes the staged files as orphans)
-            raise RuntimeError(
-                f"optimize repack row mismatch: staged {added} rows for "
-                f"{removed} source rows across chunks {sorted(cands)}"
-            )
-        txn.compacting = True
+        if cands:
+            txn.adds["data"].extend(adds)
+            txn.removes["data"].extend(removes)
+            txn.touch(set(cands))
+            txn.compacting = True
         return len(cands)
-
-    def vacuum(
-        self, retention_seconds: float = 3600.0, deep: bool = False
-    ) -> int:
-        """Garbage collection: physically delete files that
-        are no longer referenced and older than ``retention_seconds``.
-        The retention window is the same safety Delta's VACUUM retention
-        gives: a concurrent in-flight writer's freshly STAGED (not yet
-        committed) files are indistinguishable from crash orphans, so
-        reclaiming them immediately would corrupt that writer's commit;
-        age-gating makes vacuum safe to run any time as long as no
-        single transaction stays open longer than the window. Pass ``0``
-        only when no other writer can be active.
-
-        The default sweep is MANIFEST-DRIVEN — O(orphans), reading the
-        sidecars commits write when files become unreferenced, never
-        listing the ``files/`` staging dirs (at millions of commits the
-        full walk was the scaling hazard, VERDICT r8). ``deep=True``
-        additionally walks every staging dir to catch files orphaned by
-        a writer killed before any bookkeeping could happen (kill -9
-        mid-staging) — run it occasionally, not per-vacuum.
-
-        Also reclaims emptied staging directories, their _SUCCESS
-        markers, stale ``.tmp-`` log artifacts, and commit records
-        already summarized by the latest manifest checkpoint (giving up
-        snapshot-as-of below that horizon, Delta log-retention style).
-        Returns the number of filesystem entries removed. Refused on
-        time-travel views (it would reclaim files and log history the
-        pinned snapshot — and any other as-of holder — still
-        references)."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only (vacuum refused)")
-        return self._txlog.vacuum_files(retention_seconds, deep=deep)
 
     # ------------------------------------------------------------------
     # sync surface (change feed / export / import)

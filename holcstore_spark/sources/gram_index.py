@@ -192,11 +192,7 @@ class GramIndex(ForgetMixin):
         so a forgotten document's spans stop suppressing new text from
         the delete commit on."""
         snap = snap if snap is not None else self._txlog.snapshot()
-        files = snap.paths("data", self.path)
-        if not files:
-            return self.spark.createDataFrame([], self._schema())
-        out = self.spark.read.schema(self._schema()).parquet(*files)
-        return self._mask_deleted(out, snap)
+        return self._mask_deleted(self._read_entries(snap.files["data"]), snap)
 
     def grams(self, snap=None) -> DataFrame:
         """The live distinct gram-hash set (column ``gram_h``) — the
@@ -205,11 +201,6 @@ class GramIndex(ForgetMixin):
         distinct shuffle is added here; the consumer's own distinct is
         a cheap no-op over unique keys."""
         return self.df(snap).select("gram_h")
-
-    def last_txn_version(self, txn_app) -> int:
-        """Highest committed txn_version for an app (-1 = none) — the
-        watermark a restarting stream reads to skip replayed batches."""
-        return self._txlog.snapshot().app_versions.get(str(txn_app), -1)
 
     # -- write side ------------------------------------------------------
     def _typed(self, rows_df: DataFrame) -> DataFrame:
@@ -294,9 +285,7 @@ class GramIndex(ForgetMixin):
 
         txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
-        if txn_id is not None and (
-            txn_id[1] <= snap.app_versions.get(txn_id[0], -1)
-        ):
+        if snap.replayed(txn_id):
             return False
         self._validate_gram_shape(rows_df)
         adds = self._stage(self._typed(rows_df))
@@ -304,8 +293,7 @@ class GramIndex(ForgetMixin):
             snap.version, "append", TxLog.next_op_id(snap),
             {"data": adds}, {},
             touched=None,  # pure append: commutes with everything
-            txn_app=txn_id[0] if txn_id else None,
-            txn_version=txn_id[1] if txn_id else None,
+            txn=txn_id,
         )
         return committed is not None
 
@@ -362,9 +350,7 @@ class GramIndex(ForgetMixin):
         hist = self.df(snap).join(
             batch_ids, on=p["id_col"], how="left_anti"
         )
-        replay = txn_id is not None and (
-            txn_id[1] <= snap.app_versions.get(txn_id[0], -1)
-        )
+        replay = snap.replayed(txn_id)
         grams, per_doc = _span_occurrences(
             new_docs, text, p["id_col"], p["k"], p["sep"]
         )
@@ -400,8 +386,7 @@ class GramIndex(ForgetMixin):
             snap.version, "ingest", TxLog.next_op_id(snap),
             {"data": adds}, {},
             touched=None,
-            txn_app=txn_id[0] if txn_id else None,
-            txn_version=txn_id[1] if txn_id else None,
+            txn=txn_id,
         )
         return stats
 
@@ -417,12 +402,7 @@ class GramIndex(ForgetMixin):
         :meth:`~holcstore_spark.sources.index_base.ForgetMixin._optimize_by_chunk`.
         Returns the number of buckets repacked."""
         return self._optimize_by_chunk(
-            "bucket", key_cols=("gram_h",),
-            sort_cols=("bucket", "gram_h"),
+            self._chunk_write("bucket", key_cols=("gram_h",),
+                              sort_cols=("bucket", "gram_h")),
             min_files=min_files, max_chunks=max_buckets,
         )
-
-    def vacuum(self, retention_seconds: float = 3600.0,
-               deep: bool = False) -> int:
-        """Reclaim unreferenced files (see TxLog.vacuum_files)."""
-        return self._txlog.vacuum_files(retention_seconds, deep=deep)

@@ -42,24 +42,24 @@ single-writer guidance the blind-append semantics already document.
 from __future__ import annotations
 
 import os
-# module-level so tests can substitute an instrumented executor
-# (the staging-cancellation regression gates on shutdown(cancel_futures))
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from holcstore_spark.sources.manifest_table import ManifestTable
+
 _ID_TYPES = {"long": T.LongType, "int": T.IntegerType,
              "string": T.StringType}
 
 
-class ForgetMixin:
-    """delete()/tombstones()/_mask_deleted() over a TxLog-managed index.
+class ForgetMixin(ManifestTable):
+    """delete()/tombstones()/_mask_deleted() and the per-chunk staging
+    and binpack of the managed indexes, on the manifest-table base.
 
-    Host class contract: ``self.spark``, ``self._txlog``,
-    ``self.params["id_col"]`` and ``self.params["id_type"]``
-    (long/int/string).
+    Host class contract: the base's (``self.spark``, ``self.path``,
+    ``self._txlog``, ``self._schema()``), ``self.params["id_col"]`` and
+    ``self.params["id_type"]`` (long/int/string).
     """
 
     def _tombstone_schema(self) -> T.StructType:
@@ -110,61 +110,17 @@ class ForgetMixin:
             on=self.params["id_col"], how="left_anti",
         )
 
-    def _map_staged(self, write_one, items, max_workers: int = 8):
-        """Run per-chunk staging writes concurrently with FAILURE-ORPHAN
-        accounting — the shared fan-out for :meth:`_stage_by_chunk` and
-        the :meth:`_optimize_by_chunk` repack. ``write_one(item,
-        abs_dir, rel_dir)`` writes one chunk's file and returns its
-        manifest entries. On ANY failure, still-QUEUED chunk writes are
-        cancelled (advisor r14: a 16-chunk stage used to run every
-        queued write to completion after the first error — wasted jobs
-        and a larger orphan set), in-flight ones are awaited, and every
-        file the attempt managed to stage is noted as an orphan for the
-        sidecar-driven vacuum before the error re-raises. Results come
-        back in input order."""
-        import threading
-
-        attempted = []
-        lock = threading.Lock()
-
-        def one(item):
-            abs_dir, rel_dir = self._txlog.new_staging_dir()
-            with lock:
-                attempted.append((abs_dir, rel_dir))
-            return write_one(item, abs_dir, rel_dir)
-
-        from concurrent.futures import FIRST_EXCEPTION, wait
-
-        ex = ThreadPoolExecutor(
-            max_workers=min(max_workers, max(1, len(items)))
-        )
-        try:
-            futs = [ex.submit(one, item) for item in items]
-            # wait on FIRST_EXCEPTION, not result() in submission order:
-            # blocking on futs[0] would let workers drain the whole
-            # queue before a later chunk's failure ever propagated,
-            # defeating the cancellation (review r15)
-            wait(futs, return_when=FIRST_EXCEPTION)
-            failed = [f for f in futs if f.done() and f.exception()]
-            if failed:
-                raise failed[0].exception()
-            return [f.result() for f in futs]
-        except BaseException:
-            # drop queued writes, wait out in-flight ones so the
-            # orphan walk below sees a quiesced staging area
-            ex.shutdown(wait=True, cancel_futures=True)
-            rels = []
-            for abs_dir, rel_dir in attempted:
-                if os.path.isdir(abs_dir):
-                    for f in sorted(os.listdir(abs_dir)):
-                        rels.append(os.path.join(rel_dir, f))
-            try:
-                self._txlog.note_orphans(rels)
-            except Exception:
-                pass  # best-effort; the deep vacuum walk is the backstop
-            raise
-        finally:
-            ex.shutdown(wait=True)
+    def _deleted_rows(self, entries, snap) -> int:
+        """Rows of ``entries`` whose id is tombstoned at ``snap``, counted
+        by one semi-join job independent of the mask (the binpack
+        core's exact erasure proof) — zero jobs while nothing is
+        deleted."""
+        if not snap.files["meta"] or not entries:
+            return 0
+        return self._read_entries(entries).join(
+            F.broadcast(self.tombstones(snap)),
+            on=self.params["id_col"], how="left_semi",
+        ).count()
 
     def _stage_by_chunk(
         self,
@@ -294,82 +250,14 @@ class ForgetMixin:
                 pass  # best-effort; the deep vacuum walk is the backstop
             raise
 
-    def _optimize_by_chunk(
-        self,
-        chunk_col: str,
-        *,
-        key_cols: tuple,
-        sort_cols: tuple,
-        min_files: int,
-        max_chunks: int,
-        exclude_chunks: frozenset = frozenset(),
-        extra_adds: list | None = None,
-        extra_removes: list | None = None,
-        snap=None,
-    ) -> int:
-        """Shared per-chunk small-file binpack + physical-erasure pass
-        for the managed indexes (chunk = band_id for BandIndex, bucket
-        for GramIndex): repacks every chunk whose live file count
-        reached ``min_files`` into one file, dropping tombstone-masked
-        rows, as one commit. Row-count proof: staged rows must equal
-        source rows minus independently-counted tombstoned rows — a
-        shortfall beyond the known-dead rows is a repack bug and
-        raises. A repack that erased rows commits as a data change
-        (``compacting=False``); a pure binpack keeps the
-        row-preservation proof. Cost O(fragmentation), never O(index).
-        Returns the number of chunks repacked.
+    def _chunk_write(self, chunk_col: str, *, key_cols: tuple,
+                     sort_cols: tuple):
+        """The binpack write of the indexes: one chunk's rows as ONE
+        file sorted by ``sort_cols``, with per-file ``key_cols`` stats
+        (``write(src, sources)`` of :meth:`ManifestTable._binpack`)."""
 
-        ``exclude_chunks`` keeps those chunk ids out of the binpack
-        plan, and ``extra_adds``/``extra_removes`` are pre-staged
-        manifest entries swapped IN THE SAME COMMIT as the repack —
-        the hook :meth:`LexicalIndex.recompute_stats` uses to rewrite
-        its stats stripe atomically with the erasure it accounts for
-        (two commits would let a crash between them double-subtract on
-        retry). Extras are excluded from the row-count proof and force
-        the commit to a data change. ``snap`` pins the planning
-        snapshot — a caller that derived the extras from a snapshot
-        must plan the repack against the SAME one, so its erasure mask
-        and the extras describe one consistent state (the optimistic
-        commit rebases over non-conflicting interleavings and raises
-        on genuine conflicts, exactly as for a fresh snapshot)."""
-        from holcstore_spark.sources.txlog import (
-            TxLog,
-            binpack_candidates,
-            exact_rows,
-        )
-
-        extra_adds = list(extra_adds or [])
-        extra_removes = list(extra_removes or [])
-        snap = snap if snap is not None else self._txlog.snapshot()
-        entries = snap.files["data"]
-        if exclude_chunks:
-            # exclude BEFORE the max_chunks cap — an excluded chunk
-            # must not occupy a candidate slot and starve a real one
-            entries = [
-                e for e in entries
-                if e.get("chunk_min") not in exclude_chunks
-            ]
-        cands, by_chunk = binpack_candidates(entries, min_files, max_chunks)
-        if not cands and not (extra_adds or extra_removes):
-            return 0
-        cand_paths = [os.path.join(self.path, e["path"])
-                      for b in cands for e in by_chunk[b]]
-        dead = 0
-        if snap.files["meta"] and cand_paths:
-            raw = self.spark.read.schema(self._schema()).parquet(
-                *cand_paths)
-            dead = raw.join(
-                F.broadcast(self.tombstones(snap)),
-                on=self.params["id_col"], how="left_semi",
-            ).count()
-        def repack_one(b, abs_dir, rel_dir):
-            paths = [os.path.join(self.path, e["path"])
-                     for e in by_chunk[b]]
-            src = self.spark.read.schema(self._schema()).parquet(*paths)
-            # physical erasure: rows of deleted ids (already masked
-            # from every read) are dropped from the repacked files —
-            # optimize(min_files=1) is the full erasure pass
-            src = self._mask_deleted(src, snap)
+        def write(src, _sources):
+            abs_dir, rel_dir = self._txlog.new_staging_dir()
             (
                 src.coalesce(1).sortWithinPartitions(*sort_cols)
                 .write.mode("overwrite").parquet(abs_dir)
@@ -378,44 +266,67 @@ class ForgetMixin:
                 abs_dir, rel_dir, key_cols=key_cols, chunk_col=chunk_col,
             )
 
-        # per-chunk repacks are independent reads+writes: submit them
-        # through the shared bounded fan-out (a full erasure pass over
-        # 16 buckets costs ~2 sequential single-task jobs instead of
-        # 16); entry order stays deterministic (sorted candidate order)
-        adds, removes, dropped = [], [], []
-        ordered = sorted(cands)
-        staged_per_chunk = self._map_staged(repack_one, ordered)
-        for b, staged in zip(ordered, staged_per_chunk):
-            for e in staged:
-                if e["rows"]:
-                    adds.append(e)
-                else:
-                    # a fully-erased chunk stages no live file; note the
-                    # empty staged file so the default sidecar-driven
-                    # vacuum reclaims it (it is referenced nowhere)
-                    dropped.append(e["path"])
-            removes.extend(by_chunk[b])
-        staged, source = exact_rows(adds), exact_rows(removes)
-        if staged != source - dead:
-            raise RuntimeError(
-                f"optimize repack row mismatch: staged {staged} rows "
-                f"for {source} source rows with {dead} tombstoned "
-                f"across {chunk_col}s {sorted(cands)}"
-            )
-        if dropped:
-            self._txlog.note_orphans(dropped)
-        touched = set(cands)
-        for e in extra_adds + extra_removes:
-            if e.get("chunk_min") is not None:
-                touched.add(int(e["chunk_min"]))
+        return write
+
+    def _optimize_by_chunk(
+        self,
+        write,
+        *,
+        min_files: int,
+        max_chunks: int,
+        exclude_chunks: frozenset = frozenset(),
+        extra_adds: list = (),
+        extra_removes: list = (),
+        snap=None,
+        check=None,
+    ) -> int:
+        """Per-chunk small-file binpack + physical-erasure pass of the
+        managed indexes (chunk = band_id, bucket or list) as ONE commit:
+        the shared core (:meth:`ManifestTable._binpack`) repacks every
+        chunk whose live file count reached ``min_files`` into one file
+        through ``write``, dropping tombstone-masked rows
+        (``optimize(min_files=1)`` is the full erasure pass), with the
+        exact row-count proof. A repack that erased rows commits as a
+        data change (``compacting=False``); a pure binpack keeps the
+        row-preservation proof. Returns the number of chunks repacked.
+
+        ``exclude_chunks`` keeps those chunk ids out of the binpack
+        plan (before the ``max_chunks`` cap — an excluded chunk must
+        not occupy a candidate slot), and ``extra_adds``/
+        ``extra_removes`` are pre-staged manifest entries swapped IN THE
+        SAME COMMIT as the repack — the hook
+        :meth:`LexicalIndex.recompute_stats` uses to rewrite its stats
+        stripe atomically with the erasure it accounts for (two commits
+        would let a crash between them double-subtract on retry).
+        Extras are outside the row-count proof and force the commit to
+        a data change. ``snap`` pins the planning snapshot — a caller
+        that derived the extras from a snapshot must plan the repack
+        against the SAME one, so its erasure mask and the extras
+        describe one consistent state. ``check`` is the core's pre-IO
+        refusal hook."""
+        from holcstore_spark.sources.txlog import TxLog
+
+        extras = [*extra_adds, *extra_removes]
+        snap = snap if snap is not None else self._pin("optimize")
+        cands, adds, removes, dead = self._binpack(
+            snap, write, min_files=min_files, max_chunks=max_chunks,
+            entries=[e for e in snap.files["data"]
+                     if e.get("chunk_min") not in exclude_chunks],
+            check=check,
+        )
+        if not cands and not extras:
+            return 0
+        touched = set(cands) | {
+            int(e["chunk_min"]) for e in extras if e.get("chunk_min") is not None
+        }
         self._txlog.commit(
             snap.version, "optimize", TxLog.next_op_id(snap),
-            {"data": adds + extra_adds}, {"data": removes + extra_removes},
+            {"data": [*adds, *extra_adds]},
+            {"data": [*removes, *extra_removes]},
             # a repack that erased rows — or swapped extra entries — is
             # a data change, not a pure layout change — it must not
             # claim compacting
-            touched=touched,
-            compacting=dead == 0 and not (extra_adds or extra_removes),
+            touched=touched, compacting=dead == 0 and not extras,
         )
         return len(cands)
 
@@ -432,9 +343,7 @@ class ForgetMixin:
 
         txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
-        if txn_id is not None and (
-            txn_id[1] <= snap.app_versions.get(txn_id[0], -1)
-        ):
+        if snap.replayed(txn_id):
             return False
         from holcstore_spark.sources.io_util import safe_local_checkpoint
 
@@ -463,8 +372,6 @@ class ForgetMixin:
             # masks are read-time and monotonic: two deletes commute,
             # and delete+append commutes because the mask applies to
             # future appends of the id as well (forget semantics)
-            touched=None,
-            txn_app=txn_id[0] if txn_id else None,
-            txn_version=txn_id[1] if txn_id else None,
+            touched=None, txn=txn_id,
         )
         return committed is not None

@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import os
+# module-level so tests can substitute an instrumented executor (the
+# cancellation regression gates on shutdown(cancel_futures=True))
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame
 
@@ -151,24 +154,41 @@ def overlap_jobs(spark, *thunks):
     §2.6: actions are only sequential because driver code calls them
     sequentially — overlapping lets each job's tasks back-fill executor
     cores the others' task tails leave idle, so the wall-clock cost is
-    ~max of the thunks instead of their sum).
+    ~max of the thunks instead of their sum). The binpack repacks of
+    every manifest table and ChunkStore's overlapped data/meta staging
+    run through it.
 
     Callers must guarantee the thunks are independent: no shared
     mutable state beyond thread-safe accumulators, and no thunk reads
     files another writes. JVM-thread-local properties (job group /
     description / scheduler pool) are inherited into the pool threads
-    via ``inheritable_thread_target``, so cancellation and UI labels
-    keep covering the concurrent jobs. The first thunk's exception
-    propagates after all thunks have finished (results of the others
-    are discarded)."""
-    from concurrent.futures import ThreadPoolExecutor
+    via ``inheritable_thread_target``, so cancellation, UI labels and
+    job-group attribution keep covering the concurrent jobs.
 
+    On the first failure the still-QUEUED thunks are cancelled (a
+    16-chunk repack must not run every queued write after one failed),
+    in-flight ones are awaited, and the exception of the first failed
+    thunk in argument order propagates (results of the others are
+    discarded)."""
     from pyspark import inheritable_thread_target
 
     if len(thunks) == 1:
         return [thunks[0]()]
-    with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as pool:
+    pool = ThreadPoolExecutor(max_workers=min(len(thunks), 4))
+    try:
         futs = [
             pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
         ]
+        # wait on FIRST_EXCEPTION, not result() in submission order:
+        # blocking on futs[0] would let the workers drain the whole
+        # queue before a later thunk's failure ever propagated
+        wait(futs, return_when=FIRST_EXCEPTION)
+        if any(f.done() and f.exception() for f in futs):
+            pool.shutdown(wait=True, cancel_futures=True)
+            raise next(
+                f.exception() for f in futs
+                if not f.cancelled() and f.exception()
+            )
         return [f.result() for f in futs]
+    finally:
+        pool.shutdown(wait=True)

@@ -19,7 +19,6 @@ tenant read opens only that tenant's files.
 
 from __future__ import annotations
 
-import os
 from datetime import datetime, timezone
 
 import numpy as np
@@ -33,6 +32,7 @@ from holcstore_spark.operators.grid import completeness_holes
 from holcstore_spark.operators.intervals import Range
 from holcstore_spark.operators.overlay import delayed, overlay_merge
 from holcstore_spark.plans.predicates import attrs_filter, order_cols
+from holcstore_spark.sources.manifest_table import StoreTable
 
 
 _BASE_FIELDS = [
@@ -55,7 +55,7 @@ class EdgeMemoryError(Exception):
     standing between a million-prm multi-get and a driver OOM."""
 
 
-class KeyValueStore:
+class KeyValueStore(StoreTable):
     #: driver-side row cap for the pandas edge (get_lc / get_many_lc).
     #: ~10M rows ≈ a few hundred MB buffered; override per instance for
     #: bigger drivers. Enforced with limit(n+1), not a count() pre-pass,
@@ -81,51 +81,19 @@ class KeyValueStore:
         #: while two concurrent versioned appends of the SAME prm — which
         #: would compute the same next version — conflict loudly)
         self._txlog = open_txlog(path)
-        self._pinned_snapshot = None  # set on time_travel() views
 
     # ------------------------------------------------------------------
-    def _schema(self) -> T.StructType:
+    def _schema(self, frame=None) -> T.StructType:
+        """Every column's type is fixed (``frame`` is not consulted)."""
         fields = [T.StructField(n, t) for n, t in _BASE_FIELDS]
         fields += [T.StructField(a, T.StringType()) for a in self.attr_cols]
         return T.StructType(fields)
 
-    def _read_snapshot(self):
-        """The snapshot reads serve: the pinned one on time-travel views,
-        else the current one."""
-        if self._pinned_snapshot is not None:
-            return self._pinned_snapshot
-        return self._txlog.snapshot()
-
     def df(self) -> DataFrame:
         return self._df_at(self._read_snapshot())
 
-    def time_travel(self, version: int) -> "KeyValueStore":
-        """Read-only view of the store AS OF a committed log version (see
-        ChunkStore.time_travel for the availability window vs
-        vacuum/prune)."""
-        snap = self._txlog.snapshot_exact(version)
-        view = KeyValueStore(self.spark, self.path, self.attr_cols)
-        view.max_edge_rows = self.max_edge_rows  # keep instance overrides
-        view._pinned_snapshot = snap
-        return view
-
-    def _pin(self):
-        """Snapshot captured ONCE at mutation start. Every read a write op performs — existence,
-        next version, the keep-set — and the commit's base_version come
-        from THIS snapshot, so a commit interleaving between the read
-        and our commit is at a version ABOVE our base and gets walked by
-        the rebase conflict check. Reading from a fresh snapshot per
-        call would let such a commit slip under the base, bypassing the
-        advertised append_keys/dropped_keys protection."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only")
-        return self._txlog.snapshot()
-
     def _df_at(self, snap) -> DataFrame:
-        files = snap.paths("data", self.path)
-        if not files:
-            return self.spark.createDataFrame([], self._schema())
-        return self.spark.read.schema(self._schema()).parquet(*files)
+        return self._read_entries(snap.files["data"])
 
     def _df_pruned(self, client_id: int | None, prms: list | None) -> DataFrame:
         """Manifest-stats pruned read: ``client_id`` IS this store's
@@ -143,10 +111,7 @@ class KeyValueStore:
         if prms:
             kv = {"prm": [str(p) for p in prms]}
             entries = [e for e in entries if entry_may_match_keys(e, kv)]
-        if not entries:
-            return self.spark.createDataFrame([], self._schema())
-        files = [os.path.join(self.path, e["path"]) for e in entries]
-        return self.spark.read.schema(self._schema()).parquet(*files)
+        return self._read_entries(entries)
 
     # -- write primitives (manifest-governed immutable files) ----------
     def _kv_digest(self, client_id, prm) -> str:
@@ -227,8 +192,7 @@ class KeyValueStore:
             {"data": adds}, {},
             touched=None,
             append_keys=sorted(self._kv_digest(c, p) for c, p in kts),
-            txn_app=txn[0] if txn else None,
-            txn_version=txn[1] if txn else None,
+            txn=txn,
         )
 
     def _overwrite_client(self, client_id: int, remaining: DataFrame, snap,
@@ -268,10 +232,8 @@ class KeyValueStore:
             if e.get("chunk_min") is None or e["chunk_min"] != e["chunk_max"]
         ]
         if spanning:
-            paths = [os.path.join(self.path, e["path"]) for e in spanning]
-            bystanders = (
-                self.spark.read.schema(self._schema()).parquet(*paths)
-                .filter(F.col("client_id") != cid)
+            bystanders = self._read_entries(spanning).filter(
+                F.col("client_id") != cid
             )
             cols = [f.name for f in self._schema().fields]
             staged = bystanders.select(*cols).unionByName(staged.select(*cols))
@@ -284,8 +246,7 @@ class KeyValueStore:
             dropped_keys=sorted(
                 self._kv_digest(cid, p) for p in dropped
             ) if dropped is not None else None,
-            txn_app=txn[0] if txn else None,
-            txn_version=txn[1] if txn else None,
+            txn=txn,
         )
 
     # ------------------------------------------------------------------
@@ -387,7 +348,7 @@ class KeyValueStore:
         if not dataseries:
             return
         snap = self._pin()
-        if txn is not None and txn[1] <= snap.app_versions.get(txn[0], -1):
+        if snap.replayed(txn):
             # replay of a committed batch: skip BEFORE the driver-side
             # frame construction — a replayed 1M-row batch costs nothing
             return
@@ -586,113 +547,27 @@ class KeyValueStore:
         self._overwrite(self._df_at(snap).filter(~pred), snap)
 
     # ------------------------------------------------------------------
-    def vacuum(
-        self, retention_seconds: float = 3600.0, deep: bool = False
-    ) -> int:
-        """Reclaim manifest-unreferenced files older than the retention
-        window plus checkpoint-summarized log records (see
-        ChunkStore.vacuum for the retention rationale and the O(orphans)
-        default-vs-``deep`` sweep shape)."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only (vacuum refused)")
-        return self._txlog.vacuum_files(retention_seconds, deep=deep)
-
-    def restore(self, version: int) -> int:
-        """Roll the store back to a committed log version as a NEW
-        commit (see ChunkStore.restore — same Delta RESTORE semantics,
-        same refusals on pruned versions and vacuumed files)."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only (restore refused)")
-        return self._txlog.restore_commit(version)
-
     def optimize(self, min_files: int = 4, max_chunks: int = 64) -> int:
         """Incremental small-file binpack per tenant partition —
         ``client_id`` is this store's chunk role in the manifest (see
         ChunkStore.optimize for the full semantics: O(fragmentation)
         cost, row-preserving ``compacting`` commit that change feeds
         skip and that commutes with every concurrent commit not
-        rewriting the same source files). Returns the number of tenant
+        rewriting the same source files). Each tenant is repacked into
+        one pinned single-file write. Returns the number of tenant
         partitions repacked."""
-        if self._pinned_snapshot is not None:
-            raise ValueError("time-travel views are read-only (optimize refused)")
-        from holcstore_spark.sources.txlog import (
-            binpack_candidates,
-            exact_rows,
+        snap = self._pin("optimize")
+        cands, adds, removes, _ = self._binpack(
+            snap, lambda src, _: self._stage(src, npart=1),
+            min_files=min_files, max_chunks=max_chunks,
         )
-
-        snap = self._txlog.snapshot()
-        cands, by_chunk = binpack_candidates(
-            snap.files["data"], min_files, max_chunks
-        )
-        if not cands:
-            return 0
-        sources = [e for c in cands for e in by_chunk[c]]
-        adds: list = []
-        try:
-            # one pinned single-file write per tenant: a global
-            # range-partition can straddle tenants on skew, producing a
-            # chunk-spanning file that no future optimize may touch —
-            # and without pinning, the 'binpack' can emit as many files
-            # as it removed and never converge
-            for c in cands:
-                full = [os.path.join(self.path, e["path"]) for e in by_chunk[c]]
-                adds.extend(self._stage(
-                    self.spark.read.schema(self._schema()).parquet(*full),
-                    npart=1,
-                ))
-            added = exact_rows(adds)
-            removed = exact_rows(sources)
-            if added != removed:
-                raise RuntimeError(
-                    f"optimize repack row mismatch: staged {added} rows "
-                    f"for {removed} source rows across tenants {sorted(cands)}"
-                )
+        if cands:
             self._txlog.commit(
                 snap.version, "optimize", self._txlog.next_op_id(snap),
-                {"data": adds}, {"data": sources},
+                {"data": adds}, {"data": removes},
                 touched=set(cands), compacting=True,
             )
-        except BaseException:
-            # pre-commit failure (mismatch abort, staging crash): the
-            # staged repack files would otherwise be invisible to the
-            # default O(orphans) vacuum (TxLog.commit only notes adds
-            # when the COMMIT attempt itself fails)
-            try:
-                self._txlog.note_orphans(e["path"] for e in adds)
-            except OSError:
-                pass
-            raise
         return len(cands)
-
-    def history(self) -> DataFrame:
-        """Commit-log audit frame (see ChunkStore.history)."""
-        from holcstore_spark.sources.chunk_store import _history_df
-
-        return _history_df(self.spark, self._txlog)
-
-    def last_txn_version(self, txn_app: str) -> int | None:
-        """Highest committed ``txn_version`` for the idempotent writer
-        ``txn_app`` (see ChunkStore.last_txn_version)."""
-        return self._txlog.snapshot().app_versions.get(str(txn_app))
-
-    def changes_between(self, from_version: int,
-                        to_version: int | None = None) -> DataFrame:
-        """Row-level change feed between committed log versions (see
-        ChunkStore.changes_between for semantics and the manifest-diff
-        scale shape)."""
-        from holcstore_spark.sources.chunk_store import _changes_between_df
-
-        cols = [f.name for f in self._schema().fields]
-
-        def _read(paths, _other) -> DataFrame:
-            if not paths:
-                return self.spark.createDataFrame([], self._schema())
-            full = [os.path.join(self.path, p) for p in paths]
-            return self.spark.read.schema(self._schema()).parquet(*full).select(*cols)
-
-        return _changes_between_df(
-            self.spark, self._txlog, from_version, to_version, _read
-        )
 
     def find_holes(
         self,

@@ -315,11 +315,6 @@ class LexicalIndex(ForgetMixin):
             )
         return self._mask_deleted(out, snap)
 
-    def last_txn_version(self, txn_app) -> int:
-        """Highest committed txn_version for an app (-1 = none) — the
-        watermark a restarting stream reads to skip replayed batches."""
-        return self._txlog.snapshot().app_versions.get(str(txn_app), -1)
-
     def topk(
         self,
         query_terms: list,
@@ -402,9 +397,7 @@ class LexicalIndex(ForgetMixin):
         p = self.params
         txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
-        if txn_id is not None and (
-            txn_id[1] <= snap.app_versions.get(txn_id[0], -1)
-        ):
+        if snap.replayed(txn_id):
             return False
         toks = tokens(text, p["sep"])
         tcol = F.col(text)
@@ -442,8 +435,7 @@ class LexicalIndex(ForgetMixin):
             snap.version, "ingest", TxLog.next_op_id(snap),
             {"data": adds}, {},
             touched=None,  # pure append: commutes with everything
-            txn_app=txn_id[0] if txn_id else None,
-            txn_version=txn_id[1] if txn_id else None,
+            txn=txn_id,
         )
         return committed is not None
 
@@ -470,7 +462,8 @@ class LexicalIndex(ForgetMixin):
         if recompute_stats:
             self.recompute_stats()
         return self._optimize_by_chunk(
-            "bucket", key_cols=("term",), sort_cols=("bucket", "term"),
+            self._chunk_write("bucket", key_cols=("term",),
+                              sort_cols=("bucket", "term")),
             min_files=min_files, max_chunks=max_buckets,
         )
 
@@ -571,7 +564,8 @@ class LexicalIndex(ForgetMixin):
         new_adds = self._stage(new_stripe)
         try:
             self._optimize_by_chunk(
-                "bucket", key_cols=("term",), sort_cols=("bucket", "term"),
+                self._chunk_write("bucket", key_cols=("term",),
+                                  sort_cols=("bucket", "term")),
                 min_files=1, max_chunks=p["n_buckets"],
                 exclude_chunks=frozenset({_STATS_BUCKET}),
                 extra_adds=new_adds, extra_removes=stripe_entries,
@@ -586,8 +580,3 @@ class LexicalIndex(ForgetMixin):
                 pass
             raise
         return True
-
-    def vacuum(self, retention_seconds: float = 3600.0,
-               deep: bool = False) -> int:
-        """Reclaim unreferenced files (see TxLog.vacuum_files)."""
-        return self._txlog.vacuum_files(retention_seconds, deep=deep)

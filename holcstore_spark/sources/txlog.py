@@ -247,7 +247,7 @@ def file_entry(
 
 class Snapshot:
     __slots__ = ("version", "files", "max_op_id", "base_checkpoint",
-                 "replayed", "app_versions")
+                 "replay_chain", "app_versions")
 
     def __init__(self, version: int, files: dict[str, list[FileEntry]],
                  max_op_id: int = 0, base_checkpoint: int | None = None,
@@ -268,12 +268,19 @@ class Snapshot:
         #: replay chain — never inferred from file-path presence, which
         #: copy-on-write rewrites can erase (ADVICE r7)
         self.base_checkpoint = base_checkpoint
-        self.replayed = tuple(replayed or ())
+        self.replay_chain = tuple(replayed or ())
         #: per-writer idempotence watermarks (Delta ``txn`` analogue):
         #: the highest ``txn_version`` each ``txn_app`` has committed at
         #: or below this snapshot. One int per app_id — metadata-sized;
         #: checkpoints persist it so the watermark survives log pruning.
         self.app_versions: dict[str, int] = dict(app_versions or {})
+
+    def replayed(self, txn: tuple[str, int] | None) -> bool:
+        """Whether the idempotent write ``txn`` (``(app, version)`` from
+        :func:`resolve_txn`, or None) is already durable at this
+        snapshot — THE replay check every idempotent writer runs before
+        staging anything."""
+        return txn is not None and txn[1] <= self.app_versions.get(txn[0], -1)
 
     def paths(self, table: str, root: str) -> list[str]:
         return [os.path.join(root, e["path"]) for e in self.files[table]]
@@ -393,25 +400,25 @@ def exact_rows(entries) -> int | None:
 
 
 def binpack_candidates(
-    entries, min_files: int, max_chunks: int
-) -> tuple[list[int], dict[int, list]]:
+    entries, min_files: int, max_chunks: int, whole: bool = False,
+) -> tuple[list, dict]:
     """Shared ``optimize()`` planning (driver-side manifest math, no
     scan): group SINGLE-chunk entries with exact stats by chunk id and
     pick the chunks holding at least ``min_files`` files, most
     fragmented first, at most ``max_chunks``. Entries spanning chunks or
     without stats are never candidates — per-chunk grouping and the
-    row-preservation proof both need tight manifest stats."""
-    by_chunk: dict[int, list] = {}
+    row-preservation proof both need tight manifest stats. ``whole=True``
+    plans a table with no chunk column: every entry with an exact row
+    count falls in the one chunk ``None``."""
+    by_chunk: dict = {}
     for e in entries:
         cmin, cmax, rows = e.get("chunk_min"), e.get("chunk_max"), e.get("rows")
-        if (
-            cmin is None
-            or cmax != cmin
-            or not isinstance(rows, int)
-            or isinstance(rows, bool)
-        ):
+        if not isinstance(rows, int) or isinstance(rows, bool):
             continue
-        by_chunk.setdefault(int(cmin), []).append(e)
+        if whole:
+            by_chunk.setdefault(None, []).append(e)
+        elif cmin is not None and cmax == cmin:
+            by_chunk.setdefault(int(cmin), []).append(e)
     cands = sorted(
         (c for c, es in by_chunk.items() if len(es) >= min_files),
         key=lambda c: -len(by_chunk[c]),
@@ -652,7 +659,7 @@ class TxLog:
         head = json.dumps(
             {"version": version, "max_op_id": snap.max_op_id,
              "base": snap.base_checkpoint,
-             "replayed": [list(p) for p in snap.replayed],
+             "replayed": [list(p) for p in snap.replay_chain],
              # idempotence watermarks must outlive log pruning: a
              # duplicate micro-batch replayed weeks later still has to
              # hit the skip (one int per txn_app — metadata-sized)
@@ -985,12 +992,16 @@ class TxLog:
             pass
         return v
 
-    def commit_idempotent(self, *args, **kwargs) -> int | None:
+    def commit_idempotent(self, *args, txn: tuple[str, int] | None = None,
+                          **kwargs) -> int | None:
         """:meth:`commit`, but a duplicate idempotent batch
         (:class:`TxnAlreadyApplied`) returns None instead of raising —
         the shape every store-layer caller wants (the batch IS durable;
         the staged files were noted as orphans on the way out). All
-        other exceptions propagate unchanged."""
+        other exceptions propagate unchanged. ``txn`` is the writer
+        identity from :func:`resolve_txn` (None = not idempotent)."""
+        if txn is not None:
+            kwargs["txn_app"], kwargs["txn_version"] = txn
         try:
             return self.commit(*args, **kwargs)
         except TxnAlreadyApplied:

@@ -280,18 +280,12 @@ class VectorIndex(ForgetMixin):
                 elif any(lo <= x <= hi for x in want):
                     kept.append(e)
             entries = kept
-        if not entries:
-            return self.spark.createDataFrame([], self._schema())
-        paths = [os.path.join(self.path, e["path"]) for e in entries]
-        out = self.spark.read.schema(self._schema()).parquet(*paths)
+        out = self._read_entries(entries)
         if lists is not None:
             out = out.filter(F.col("list").isin(sorted(want)))
         # DELETED ids are masked out (see delete()): a forgotten vector
         # is never scored as a neighbour from the delete commit on
         return self._mask_deleted(out, snap)
-
-    def last_txn_version(self, txn_app) -> int:
-        return self._txlog.snapshot().app_versions.get(str(txn_app), -1)
 
     # -- write -------------------------------------------------------------
     def _training_frame(self, df: DataFrame) -> DataFrame:
@@ -398,9 +392,7 @@ class VectorIndex(ForgetMixin):
         p = self.params
         txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
-        if txn_id is not None and (
-            txn_id[1] <= snap.app_versions.get(txn_id[0], -1)
-        ):
+        if snap.replayed(txn_id):
             return False
         need_space = self._centroids.latest_version() is None
         need_pq = bool(p["pq_m"]) and \
@@ -443,8 +435,7 @@ class VectorIndex(ForgetMixin):
             snap.version, "append", TxLog.next_op_id(snap),
             {"data": adds}, {},
             touched=None,
-            txn_app=txn_id[0] if txn_id else None,
-            txn_version=txn_id[1] if txn_id else None,
+            txn=txn_id,
         )
         return committed is not None
 
@@ -483,9 +474,7 @@ class VectorIndex(ForgetMixin):
         p = self.params
         txn_id = resolve_txn(txn_app, txn_version)
         snap = self._txlog.snapshot()
-        if txn_id is not None and (
-            txn_id[1] <= snap.app_versions.get(txn_id[0], -1)
-        ):
+        if snap.replayed(txn_id):
             return None
         entries = snap.files["data"]
         if not entries:
@@ -493,9 +482,7 @@ class VectorIndex(ForgetMixin):
                 f"vector index at {self.path} holds no live files — "
                 "nothing to retrain; append() first"
             )
-        paths = [os.path.join(self.path, e["path"]) for e in entries]
-        rows = self.spark.read.schema(self._schema()).parquet(*paths)
-        rows = self._mask_deleted(rows, snap).drop("list")
+        rows = self._mask_deleted(self._read_entries(entries), snap).drop("list")
         # materialized once: the frame feeds training (iters+1 passes)
         # AND the reassignment write
         rows = safe_local_checkpoint(rows)
@@ -519,8 +506,7 @@ class VectorIndex(ForgetMixin):
             snap.version, "retrain", TxLog.next_op_id(snap),
             {"data": adds}, {"data": entries},
             touched="all",
-            txn_app=txn_id[0] if txn_id else None,
-            txn_version=txn_id[1] if txn_id else None,
+            txn=txn_id,
         )
         return new_v if committed is not None else None
 
@@ -961,94 +947,33 @@ class VectorIndex(ForgetMixin):
     def optimize(self, min_files: int = 4, max_lists: int = 64) -> int:
         """Per-list small-file binpack — same contract as
         BandIndex.optimize: row-preserving compacting commit,
-        O(fragmentation), never O(index)."""
-        from holcstore_spark.sources.txlog import (
-            TxLog,
-            binpack_candidates,
-            exact_rows,
+        O(fragmentation), never O(index). Every repacked file keeps its
+        list's centroid version (``space_v``)."""
+
+        def refuse_mixed(cands, by_list):
+            # mixed-version refusal is pure manifest math — check every
+            # candidate BEFORE any repack IO (review r13: raising after
+            # list 1's full read+write wasted the work and left staged
+            # orphans with no sidecar note)
+            for lst in cands:
+                svs = {int(e.get("space_v", 1)) for e in by_list[lst]}
+                if len(svs) > 1:
+                    raise ValueError(
+                        f"list {lst} holds files from multiple centroid "
+                        f"versions {sorted(svs)} — run retrain() before "
+                        "optimize() on a mixed-version index"
+                    )
+
+        repack = self._chunk_write(
+            "list", key_cols=(), sort_cols=(self.params["id_col"],)
         )
 
-        snap = self._txlog.snapshot()
-        cands, by_list = binpack_candidates(
-            snap.files["data"], min_files, max_lists
-        )
-        if not cands:
-            return 0
-        # mixed-version refusal is pure manifest math — check every
-        # candidate BEFORE any repack IO (review r13: raising after
-        # list 1's full read+write wasted the work and left staged
-        # orphans with no sidecar note)
-        for lst in cands:
-            svs = {int(e.get("space_v", 1)) for e in by_list[lst]}
-            if len(svs) > 1:
-                raise ValueError(
-                    f"list {lst} holds files from multiple centroid "
-                    f"versions {sorted(svs)} — run retrain() before "
-                    "optimize() on a mixed-version index"
-                )
-        cand_paths = [os.path.join(self.path, e["path"])
-                      for lst in cands for e in by_list[lst]]
-        # the EXACT erasure invariant: staged rows must equal source
-        # rows minus the tombstone-matched rows, counted independently
-        # (one extra metadata-cheap job over the repacked files) — a
-        # shortfall beyond the known-dead rows is a repack bug, not an
-        # erasure, and must still raise (review r13: conditioning the
-        # proof on "any tombstone exists" silently blessed any loss)
-        dead = 0
-        if snap.files["meta"]:
-            raw = self.spark.read.schema(self._schema()).parquet(
-                *cand_paths)
-            dead = raw.join(
-                F.broadcast(self.tombstones(snap)),
-                on=self.params["id_col"], how="left_semi",
-            ).count()
-        adds, removes, dropped = [], [], []
-        for lst in cands:
-            paths = [os.path.join(self.path, e["path"])
-                     for e in by_list[lst]]
-            src = self.spark.read.schema(self._schema()).parquet(*paths)
-            # physical erasure: deleted vectors (already masked from
-            # every read) are dropped from the repacked files —
-            # optimize(min_files=1) is the full erasure pass
-            src = self._mask_deleted(src, snap)
-            abs_dir, rel_dir = self._txlog.new_staging_dir()
-            (
-                src.coalesce(1)
-                .sortWithinPartitions(self.params["id_col"])
-                .write.mode("overwrite").parquet(abs_dir)
-            )
-            sv = int(by_list[lst][0].get("space_v", 1))
-            for e in self._txlog.collect_entries(
-                abs_dir, rel_dir, key_cols=(), chunk_col="list",
-            ):
-                if e["rows"]:
-                    e["space_v"] = sv
-                    adds.append(e)
-                else:
-                    # a fully-erased list stages no live file; note the
-                    # empty staged file so the default sidecar-driven
-                    # vacuum reclaims it (it is referenced nowhere)
-                    dropped.append(e["path"])
-        for lst in cands:
-            removes.extend(by_list[lst])
-        staged, source = exact_rows(adds), exact_rows(removes)
-        if staged != source - dead:
-            raise RuntimeError(
-                f"optimize repack row mismatch: staged {staged} rows "
-                f"for {source} source rows with {dead} tombstoned "
-                f"across lists {sorted(cands)}"
-            )
-        if dropped:
-            self._txlog.note_orphans(dropped)
-        self._txlog.commit(
-            snap.version, "optimize", TxLog.next_op_id(snap),
-            {"data": adds}, {"data": removes},
-            # a repack that erased rows is a data change, not a pure
-            # layout change — it must not claim compacting
-            touched=set(cands), compacting=dead == 0,
-        )
-        return len(cands)
+        def write(src, sources):
+            out = repack(src, sources)
+            for e in out:
+                e["space_v"] = int(sources[0].get("space_v", 1))
+            return out
 
-    def vacuum(self, retention_seconds: float = 3600.0,
-               deep: bool = False) -> int:
-        return self._txlog.vacuum_files(retention_seconds, deep=deep)
+        return self._optimize_by_chunk(
+            write, min_files=min_files, max_chunks=max_lists, check=refuse_mixed,
+        )

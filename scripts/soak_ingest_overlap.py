@@ -31,6 +31,7 @@ def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from holcstore_spark import get_spark, ChunkStoreConfig
+    from holcstore_spark.sources import chunk_store as cs_mod
     from holcstore_spark.sources.chunk_store import ChunkStore
     from pyspark.sql import functions as F
 
@@ -51,14 +52,14 @@ def main() -> None:
     n = src.count()
     print(f"source rows: {n}")
 
-    def serial(self, big, small):
-        big(); small()
+    def serial(spark, *thunks):
+        return [t() for t in thunks]
 
-    orig = ChunkStore._overlap_staged_writes
+    orig = cs_mod.overlap_jobs
     pattern = (["serial", "overlap", "overlap", "serial"] * ((reps + 1) // 2))[: 2 * reps]
     res = {"serial": [], "overlap": []}
     for mode in pattern:
-        ChunkStore._overlap_staged_writes = serial if mode == "serial" else orig
+        cs_mod.overlap_jobs = serial if mode == "serial" else orig
         path = tempfile.mkdtemp(prefix="holc_soak_ov_")
         shutil.rmtree(path, ignore_errors=True)
         st = ChunkStore(spark, path, ChunkStoreConfig(
@@ -72,7 +73,7 @@ def main() -> None:
         nm = st.latest_meta().count()
         print(f"{mode}: ingest={dt:.2f}s (probe {p:.2f}, meta rows {nm})")
         shutil.rmtree(path, ignore_errors=True)
-    ChunkStore._overlap_staged_writes = orig
+    cs_mod.overlap_jobs = orig
     for m, v in res.items():
         print(f"{m}: min={min(v):.2f} all={[round(x, 2) for x in v]}")
     spark.stop()

@@ -409,12 +409,13 @@ class TestForget:
 
 class TestStagingCancellation:
     def test_queued_writes_cancelled_on_first_failure(
-        self, spark, tmp_store_path, monkeypatch
+        self, spark, monkeypatch
     ):
-        """review r15: _map_staged must CANCEL still-queued chunk
-        writes once one fails — waiting on futures in submission order
-        would let workers drain the whole queue first (the orphan set
-        the cancellation exists to shrink).
+        """review r15: the fan-out behind every binpack repack
+        (io_util.overlap_jobs) must CANCEL still-queued writes once one
+        fails — waiting on futures in submission order would let
+        workers drain the whole queue first (the orphan set the
+        cancellation exists to shrink).
 
         Event-gated, no wall-clock bounds (ADVICE r15: the previous
         sleep-derived drain bound flaked under CI load): every
@@ -423,15 +424,17 @@ class TestStagingCancellation:
         freed worker can hold at most ONE queued item while the rest
         of the queue must be cancelled, however late the
         FIRST_EXCEPTION wakeup arrives."""
+        import functools
         import threading
         from concurrent.futures import ThreadPoolExecutor
 
         import pytest
 
-        from holcstore_spark.sources import index_base
+        from holcstore_spark.sources import io_util
 
         cancel_landed = threading.Event()
-        slow_started = threading.Event()
+        n_slow = 3  # with 'boom', fills the helper's 4 workers
+        slow_started = threading.Semaphore(0)
 
         class SignallingExecutor(ThreadPoolExecutor):
             def shutdown(self, wait=True, *, cancel_futures=False):
@@ -447,33 +450,35 @@ class TestStagingCancellation:
                     wait=wait, cancel_futures=cancel_futures
                 )
 
-        monkeypatch.setattr(
-            index_base, "ThreadPoolExecutor", SignallingExecutor
-        )
-        idx = BandIndex(spark, tmp_store_path)
+        monkeypatch.setattr(io_util, "ThreadPoolExecutor", SignallingExecutor)
         started = []
 
-        def write_one(item, abs_dir, rel_dir):
+        def write_one(item):
             started.append(item)
-            if item == "slow":
-                slow_started.set()
+            if item.startswith("slow"):
+                slow_started.release()
                 cancel_landed.wait(30)  # deadlock insurance only
                 return []
             if item == "boom":
-                slow_started.wait(10)   # both workers busy, queue full
+                for _ in range(n_slow):  # every worker busy, queue full
+                    slow_started.acquire(timeout=10)
                 raise RuntimeError("chunk write failed")
             # a queued item the freed worker picked up before the
             # cancellation landed: park until it does
             cancel_landed.wait(30)
             return []
 
-        items = ["slow", "boom"] + [f"queued{i}" for i in range(12)]
+        items = [f"slow{i}" for i in range(n_slow)] + ["boom"] + [
+            f"queued{i}" for i in range(12)
+        ]
         try:
             with pytest.raises(RuntimeError, match="chunk write failed"):
-                # max_workers=2: 'slow' and 'boom' occupy both workers;
+                # the slow items and 'boom' occupy all four workers;
                 # every 'queuedN' is still queued when 'boom' raises and
                 # must be cancelled, not drained
-                idx._map_staged(write_one, items, max_workers=2)
+                io_util.overlap_jobs(
+                    spark, *(functools.partial(write_one, i) for i in items)
+                )
         finally:
             cancel_landed.set()
         ran = [s for s in started if s.startswith("queued")]

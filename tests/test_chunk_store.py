@@ -813,3 +813,33 @@ class TestInsertAfterDelete:
             assert st.alive_data().count() == 31 * 24
             got = st.get_ts({"k": "a"})
             assert len(got) == 5 and (got == 2.0).all()
+
+
+class TestUndeclaredKeyTypes:
+    """A key column without a declared type is written with the type of
+    the first written frame (then read back from the files' footers), on
+    the driver write path and the Spark bulk path alike."""
+
+    @pytest.mark.parametrize("path_kind", ["set_ts", "ingest_long"])
+    def test_int_key_round_trips_as_int(self, spark, tmp_store_path, path_kind):
+        cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
+                               chunk_axis=("year", "month"))
+        st = ChunkStore(spark, os.path.join(tmp_store_path, path_kind), cfg)
+        serie = hourly("2024-01-01", 24, tz="UTC", value=3.0)
+        if path_kind == "set_ts":
+            st.set_ts({"site": 7}, serie)
+        else:
+            st.ingest_long(spark.createDataFrame(pd.DataFrame({
+                "site": 7, "ts": serie.index.tz_localize(None),
+                "value": serie.to_numpy(),
+            })))
+        assert dict(st.alive_data().dtypes)["site"] == "bigint"
+        # a fresh instance types the key from the written files
+        again = ChunkStore(spark, st.path, cfg)
+        for s in (st, again):
+            got = s.get_ts({"site": 7})
+            assert len(got) == 24 and (got == 3.0).all()
+        # a later write of the same key type keeps working
+        again.set_ts({"site": 8}, hourly("2024-01-01", 24, tz="UTC", value=4.0))
+        assert (again.get_ts({"site": 8}) == 4.0).all()
+        assert again.count_keys() == 2

@@ -434,6 +434,99 @@ class TestWriteJobBudget:
         assert st.get_ts({"site": "d"}) is None
 
 
+def _fragmented_table(spark, kind, path):
+    """A manifest table of ``kind`` whose data files are fragmented
+    enough for ``optimize(min_files=2)`` to repack something."""
+    def docs(lo, hi):
+        return spark.createDataFrame(pd.DataFrame({
+            "doc_id": range(lo, hi),
+            "text": [" ".join(f"w{i}x{j}" for j in range(12))
+                     for i in range(lo, hi)],
+        }))
+
+    if kind == "chunk_store":
+        cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
+                               chunk_axis=("year", "month"),
+                               key_types={"site": "str"})
+        t = ChunkStore(spark, path, cfg)
+        for s_ in ("a", "b", "c"):
+            t.set_ts({"site": s_}, hourly("2024-01-01", 24))
+    elif kind == "kv_store":
+        from holcstore_spark.sources.kv_store import KeyValueStore
+
+        t = KeyValueStore(spark, path)
+        for i in range(3):
+            t.set_lc("p", hourly("2024-01-01", 24, value=i), client_id=1,
+                     versionning=True)
+    elif kind == "attr_store":
+        from holcstore_spark.sources.attr_store import AttrStore
+
+        t = AttrStore(spark, path, keys=("k",))
+        for k in ("a", "b", "c"):
+            t.set_ts({"k": k}, hourly("2024-01-01", 24))
+    elif kind == "band_index":
+        from holcstore_spark.operators.dedup import minhash_bands
+        from holcstore_spark.sources.band_index import BandIndex
+
+        t = BandIndex(spark, path)
+        for v, (lo, hi) in enumerate(((0, 20), (20, 40))):
+            t.append_bands(minhash_bands(docs(lo, hi)), txn_app="s",
+                           txn_version=v)
+    elif kind == "gram_index":
+        from holcstore_spark.sources.gram_index import GramIndex
+
+        t = GramIndex(spark, path, k=4)
+        for v, (lo, hi) in enumerate(((0, 20), (20, 40))):
+            t.ingest(docs(lo, hi), txn_app="s", txn_version=v).collect()
+    elif kind == "lexical_index":
+        from holcstore_spark.sources.lexical_index import LexicalIndex
+
+        t = LexicalIndex(spark, path)
+        for v, (lo, hi) in enumerate(((0, 20), (20, 40))):
+            t.ingest(docs(lo, hi), txn_app="s", txn_version=v)
+    else:
+        from holcstore_spark.sources.vector_index import VectorIndex
+
+        import numpy as np
+
+        vecs = np.random.default_rng(0).standard_normal((200, 64))
+        emb = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<float>",
+        )
+        t = VectorIndex(spark, path, n_lists=4, iters=2, dim=64)
+        for v in (0, 1):
+            t.append(emb.filter(F.col("vec_id") % 2 == v), txn_app="s",
+                     txn_version=v)
+    return t
+
+
+class TestMaintenanceJobGroup:
+    """perfbench attributes every Spark job to the verb that launched it
+    through the caller's job group (``bench.unattributed_jobs``): the
+    maintenance verbs of every manifest table must launch no job outside
+    the group they are called in — the repack fan-out's pool threads
+    included."""
+
+    @pytest.mark.parametrize("kind", [
+        "chunk_store", "kv_store", "attr_store", "band_index",
+        "gram_index", "lexical_index", "vector_index",
+    ])
+    def test_optimize_and_vacuum_stay_in_caller_group(
+        self, spark, tmp_store_path, kind
+    ):
+        t = _fragmented_table(spark, kind, os.path.join(tmp_store_path, kind))
+        tracker = spark.sparkContext.statusTracker()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        got = {}
+        in_group = jobs_of(spark, lambda: got.update(n=t.optimize(min_files=2)))
+        in_group += jobs_of(spark, lambda: t.vacuum(retention_seconds=0))
+        assert got["n"] >= 1, "optimize repacked nothing"
+        outside = set(tracker.getJobIdsForGroup(None)) - ungrouped
+        assert not outside, f"jobs outside the caller's group: {sorted(outside)}"
+        assert in_group  # the repack's jobs, all attributed
+
+
 def sync_pair(spark, tmp_store_path, name):
     cfg = ChunkStoreConfig(keys=("site",), freq="1h", tz="UTC",
                            chunk_axis=("year", "month"), allow_sync=True,

@@ -2551,7 +2551,7 @@ class TestRound10ReviewFindings:
         # review #4: an INCOMPLETE probe (empty store / unprovable key)
         # must not re-scan footers on every schema derivation — only a
         # new commit re-probes
-        import holcstore_spark.sources.chunk_store as cs_mod
+        import holcstore_spark.sources.manifest_table as cs_mod
 
         st = acid_store(spark, tmpdir, name="probecache")
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3, value=1.0))
@@ -2650,18 +2650,21 @@ class TestOptimize:
 
         a = self._fragmented(spark, tmpdir, "opt4")
         b = ChunkStore(spark, a.path, a.config)
-        orig = cs_mod.ChunkStore._stage_into_txn
+        orig = cs_mod.ChunkStore._write_staged
         state = {"fired": False}
 
         def inject(self_, sdf, table, npart=None):
-            orig(self_, sdf, table, npart)
+            out = orig(self_, sdf, table, npart)
             if self_ is a and not state["fired"]:
                 state["fired"] = True
                 b.set_ts({"site": "new"}, hourly("2024-01-01", 4, value=7.0))
+            return out
 
-        monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", inject)
+        # the repack stages through _write_staged (the binpack core's
+        # write); its entries join a's transaction after the fan-out
+        monkeypatch.setattr(cs_mod.ChunkStore, "_write_staged", inject)
         n = a.optimize(min_files=2)  # lands despite same-chunk append
-        monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        monkeypatch.setattr(cs_mod.ChunkStore, "_write_staged", orig)
         assert n == 1 and state["fired"]
         a.refresh()
         assert (a.get_ts({"site": "new"}) == 7.0).all()  # append survived
@@ -2674,21 +2677,22 @@ class TestOptimize:
 
         a = self._fragmented(spark, tmpdir, "opt5")
         b = ChunkStore(spark, a.path, a.config)
-        orig = cs_mod.ChunkStore._stage_into_txn
+        orig = cs_mod.ChunkStore._write_staged
         state = {"fired": False}
 
         def inject(self_, sdf, table, npart=None):
-            orig(self_, sdf, table, npart)
+            out = orig(self_, sdf, table, npart)
             if self_ is a and not state["fired"]:
                 state["fired"] = True
                 # rewrites s0's file — one of the repack's sources
                 b.set_ts({"site": "s0"}, hourly("2024-01-01", 4, value=99.0),
                          replace=True)
+            return out
 
-        monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", inject)
+        monkeypatch.setattr(cs_mod.ChunkStore, "_write_staged", inject)
         with pytest.raises(ConcurrentWriteError):
             a.optimize(min_files=2)
-        monkeypatch.setattr(cs_mod.ChunkStore, "_stage_into_txn", orig)
+        monkeypatch.setattr(cs_mod.ChunkStore, "_write_staged", orig)
         assert state["fired"]
         a.refresh()
         assert (a.get_ts({"site": "s0"}) == 99.0).all()  # rewrite won
@@ -2935,6 +2939,11 @@ class TestIdempotentTxn:
         assert st.last_txn_version("A") == 7
         assert st.last_txn_version("B") == 0
         assert st.last_txn_version("C") is None
+        # one contract for every manifest table: the indexes too
+        from holcstore_spark.sources.band_index import BandIndex
+
+        idx = BandIndex(spark, os.path.join(str(tmpdir), "apps_idx"))
+        assert idx.last_txn_version("C") is None
 
     def test_rebase_walk_refuses_midflight_duplicate(self, spark, tmpdir):
         # the race the snapshot pre-check can't see: a second instance of

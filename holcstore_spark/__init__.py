@@ -27,7 +27,9 @@ Layout
                    multi-writer concurrency, manifest file skipping,
                    ``history()`` / ``time_travel`` / ``changes_between``
                    / ``vacuum``); ``convert_to_acid`` copies a store of
-                   the retired plain layout into it
+                   the retired plain layout into it, and
+                   ``upgrade_format`` moves an older format of it over
+                   in place
 - ``streaming``  — incremental sync (change feed / pull client),
                    Structured Streaming ingestion (foreachBatch →
                    ingest_long; watermarked windowed rollups), and the
@@ -39,8 +41,11 @@ Layout
 
 from holcstore_spark.config import ChunkStoreConfig
 from holcstore_spark.session import get_spark
-from holcstore_spark.sources.convert import convert_to_acid
+from holcstore_spark.sources.convert import convert_to_acid, upgrade_format
 
 __version__ = "0.1.0"
 
-__all__ = ["get_spark", "ChunkStoreConfig", "convert_to_acid", "__version__"]
+__all__ = [
+    "get_spark", "ChunkStoreConfig", "convert_to_acid", "upgrade_format",
+    "__version__",
+]

@@ -919,14 +919,12 @@ def train_subspace_books(
     them serially leaves the cluster idle through every job's tail and
     every driver round-trip (guide §2.6: submit independent jobs from a
     small thread pool so the next job back-fills executors the current
-    one's stragglers freed). Same driver-thread-pool precedent as the
-    managed indexes' staging pool (index_base). Results are ordered by
-    subspace and bit-identical to the serial loop: each training is
-    deterministic in isolation and shares no state.
+    one's stragglers freed) — through ``io_util.overlap_jobs``, the one
+    driver pool. Results are ordered by subspace and bit-identical to the
+    serial loop: each training is deterministic in isolation and shares
+    no state.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
+    from holcstore_spark.sources.io_util import overlap_jobs
 
     def one(j: int) -> list[list[int]]:
         sub_df = df.select(
@@ -939,17 +937,10 @@ def train_subspace_books(
         )
 
     if m <= 1:
-        return [one(j) for j in range(m)]
-    # 2-4 in flight fills the tails without resource thrash (§2.6).
-    # inheritable_thread_target copies the caller thread's JVM-local
-    # properties (setJobGroup / setJobDescription / scheduler pool) into
-    # each pool thread, so a caller's cancellation group and UI labels
-    # cover the concurrent trainings too (guide §2.6's documented idiom).
-    with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-        return list(
-            pool.map(inheritable_thread_target(df.sparkSession)(one),
-                     range(m))
-        )
+        return [one(j) for j in range(m)]  # overlap_jobs needs a thunk
+    return overlap_jobs(
+        df.sparkSession, *(lambda j=j: one(j) for j in range(m))
+    )
 
 
 def pq_encode(

@@ -23,9 +23,6 @@ binpack, O(fragmentation) like the stores' optimize, never O(index).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,10 +51,12 @@ class BandIndex(ForgetMixin):
     reproduced by the surviving kept bands.
     """
 
-    #: MinHash parameters are FROZEN at index creation (band keys from
-    #: different (n_hashes, bands, shingle_k) are not comparable — a
-    #: silent param change would stop matching history entirely)
-    _CONFIG_FILE = "_index_config.json"
+    #: MinHash parameters are FROZEN at index creation: a silent param
+    #: change would stop matching history entirely
+    _PARAMS_MISMATCH = (
+        "band keys from different MinHash parameters are not comparable; "
+        "create a new index (and re-hash history) to change them"
+    )
 
     def __init__(
         self,
@@ -88,23 +87,6 @@ class BandIndex(ForgetMixin):
         }
         self._check_or_save_params()
         self._txlog = TxLog(path)
-
-    # -- frozen params -------------------------------------------------
-    def _check_or_save_params(self) -> None:
-        from holcstore_spark.sources.io_util import claim_file_first_wins
-
-        target = os.path.join(self.path, self._CONFIG_FILE)
-        payload = json.dumps(self.params, indent=1, sort_keys=True)
-        os.makedirs(self.path, exist_ok=True)
-        existing = json.loads(claim_file_first_wins(target, payload))
-        if existing != self.params:
-            raise ValueError(
-                f"band index at {self.path} was created with "
-                f"{existing}, incompatible with requested "
-                f"{self.params} — band keys from different MinHash "
-                "parameters are not comparable; create a new index "
-                "(and re-hash history) to change them"
-            )
 
     # -- read side -------------------------------------------------------
     def _schema(self) -> T.StructType:

@@ -601,11 +601,13 @@ class ChunkStore(StoreTable):
             for kt in canon_tuples
         ]
 
-    def _note_append_keys(self, key_tuples) -> None:
+    def _note_append_keys(self, key_tuples, stacklevel: int = 4) -> None:
         """Record the key digests an append-path insert lands, so the
         commit can conflict with a concurrent insert of the same series
         (extends the KeyExistsError contract to multi-writer ACID
-        operation)."""
+        operation). Runs on the caller's thread: ``stacklevel`` points
+        the blind-append warning at the line that called the public
+        write."""
         if not self._key_level_detection_ok():
             return
         txn = self._active_txn
@@ -619,7 +621,7 @@ class ChunkStore(StoreTable):
                 "the same key will not conflict and can land twice "
                 "(Delta-like insert semantics). Batch below the cap or "
                 "raise APPEND_KEYS_CAP to keep same-key insert detection.",
-                stacklevel=4,
+                stacklevel=stacklevel,
             )
             txn.append_keys = None
             return
@@ -1472,19 +1474,21 @@ class ChunkStore(StoreTable):
             self.meta().join(written, on=pair, how="left_semi").limit(1).count()
         )):
 
-            def _stage_meta() -> None:
+            def _stage_meta() -> list:
                 # built from the CHECKPOINTED bounds frame — independent
                 # of the data write, so it can overlap it (§2.6). The
-                # append-key digests ride along: they are only READ at
-                # commit time (after the overlap joins), never by the
-                # data staging, so their small collect job overlaps too.
+                # append keys' small collect job overlaps too; their
+                # digests are noted on this thread afterwards (they are
+                # only READ at commit)
                 kt_rows = new_keys.limit(self.APPEND_KEYS_CAP + 1).collect()
-                self._note_append_keys(tuple(r) for r in kt_rows)
                 self._stage_into_txn(meta_sdf, "meta")
+                return kt_rows
 
-            overlap_jobs(
+            _, kt_rows = overlap_jobs(
                 self.spark, lambda: self._stage_into_txn(dense, "data"), _stage_meta
             )
+            # user → _transactional wrapper → ingest_long → here → note
+            self._note_append_keys((tuple(r) for r in kt_rows), stacklevel=5)
             return
 
         chunks = [r[0] for r in written.select("chunk_index").distinct().collect()]

@@ -1,4 +1,7 @@
-"""One-time migration of a store written by the retired plain layout.
+"""One-time migrations of directories written by older on-disk formats.
+
+Opening such a directory is refused with a message naming the call that
+moves it over; no read path for an old format is kept.
 
 The plain layout kept hive-partitioned Parquet (``data/chunk_index=…``,
 ``meta/`` for ChunkStore; root files or ``client_id=…`` directories for
@@ -10,10 +13,15 @@ reads them back with Spark (hive discovery restores ``chunk_index`` and
 staging seam, as ONE commit with op ``"convert"``. The source directory
 is never modified; a crash leaves orphan files only in the destination,
 which ``vacuum(deep=True)`` reclaims.
+
+Older formats of the transaction-log layout (JSON checkpoints, logs
+without orphan sidecars, older index configs) are upgraded IN PLACE by
+:func:`upgrade_format`.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame
@@ -24,7 +32,13 @@ from holcstore_spark.sources.attr_store import AttrStore
 from holcstore_spark.sources.chunk_store import _META_EXTRA, ChunkStore
 from holcstore_spark.sources.io_util import has_parquet
 from holcstore_spark.sources.kv_store import KeyValueStore
-from holcstore_spark.sources.txlog import has_legacy_files
+from holcstore_spark.sources.lexical_index import _BUCKET_SCHEME
+from holcstore_spark.sources.txlog import (
+    FileEntry,
+    Snapshot,
+    TxLog,
+    has_legacy_files,
+)
 
 
 def _type_name(dt: T.DataType) -> str:
@@ -135,3 +149,93 @@ def convert_to_acid(src: str, dst: ChunkStore | KeyValueStore | AttrStore) -> No
     else:
         _check(src, frame, [*dst.keys, "ts", "value"], {})
         _commit_root_store(dst, frame.select(*dst.keys, "ts", "value"))
+
+
+class _UpgradingLog(TxLog):
+    """A log opened without the format check, to be upgraded."""
+
+    def _check_format(self, names: list[str]) -> None:
+        pass
+
+
+def _upgrade_index_config(path: str) -> None:
+    """Fill in place the keys an older index config lacks; the files on
+    disk already match these defaults (``n_buckets`` came with
+    ``md5h8``; no PQ keys meant no PQ and training on the full first
+    batch)."""
+    target = os.path.join(path, "_index_config.json")
+    if not os.path.exists(target):
+        return
+    with open(target) as f:
+        cfg = json.load(f)
+    if "sep" in cfg and "n_buckets" not in cfg:
+        # re-bucketing would be a write path only this format exercises
+        raise ValueError(
+            f"{path} holds a lexical or gram index built before n_buckets "
+            "existed, with first-hex-digit buckets no reader handles. "
+            "Rebuild it: create a new index and ingest the corpus again"
+        )
+    new = dict(cfg)
+    if "n_buckets" in cfg:
+        new.setdefault("bucket_scheme", _BUCKET_SCHEME)
+    if "n_lists" in cfg:  # VectorIndex
+        if isinstance(cfg.get("attr_cols"), list):
+            new["attr_cols"] = {c: "string" for c in cfg["attr_cols"]}
+        new = {"pq_m": None, "pq_centroids": 16, "train_sample": 0, **new}
+    if new != cfg:
+        with open(f"{target}.tmp", "w") as f:
+            f.write(json.dumps(new, indent=1, sort_keys=True))
+        os.replace(f"{target}.tmp", target)
+
+
+def _upgrade_txlog(path: str) -> None:
+    log = _UpgradingLog(path)
+    names = os.listdir(log.dir)
+    json_cps = {
+        int(n[len("_checkpoint."):-len(".json")]): n
+        for n in names if n.startswith("_checkpoint.") and n.endswith(".json")
+    }
+    if not json_cps and os.path.exists(log._marker_path()):
+        return
+    if json_cps:
+        v = max(json_cps)
+        if v > (log._latest_checkpoint(listing=names) or -1):
+            with open(os.path.join(log.dir, json_cps[v])) as f:
+                cp = json.load(f)
+            files = {t: [FileEntry(e) for e in cp["files"].get(t, [])]
+                     for t in TxLog.TABLES}
+            log._write_checkpoint(v, Snapshot(
+                v, files, int(cp.get("max_op_id", 0)),
+                base_checkpoint=cp.get("base"), replayed=cp.get("replayed"),
+                app_versions=cp.get("txns"),
+            ))
+        for n in json_cps.values():
+            os.remove(os.path.join(log.dir, n))
+        log._write_checkpoint_pointer(log._latest_checkpoint(fresh=True))
+    log.vacuum_files(deep=True)  # stamps the marker
+
+
+def upgrade_format(path: str) -> None:
+    """Move the store or index at ``path`` from an older on-disk format
+    to the current one, in place — the call every refused open names.
+    Run it offline: stop every other writer first.
+
+    - the latest JSON checkpoint is rewritten as parquet (with empty
+      replay provenance when it has none: a commit it summarized then
+      reads as not observed, the safe direction), the JSON checkpoints
+      are deleted and ``_last_checkpoint`` is repointed;
+    - one deep ``files/`` sweep (one-hour retention: younger unreferenced
+      files are noted for the default vacuum) stamps the orphan-tracking
+      marker;
+    - index configs get the keys their format lacked.
+
+    A lexical or gram index built before ``n_buckets`` existed is
+    refused with a pointer to a rebuild. On a current directory it
+    changes nothing."""
+    if not os.path.isdir(os.path.join(path, "_txlog")):
+        raise ValueError(
+            f"{path} holds no transaction log; a store of the plain "
+            "layout moves over with convert_to_acid(src, dst)"
+        )
+    _upgrade_index_config(path)
+    _upgrade_txlog(path)

@@ -51,9 +51,6 @@ join co-locatable by hash prefix at warehouse scale (the layout
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,12 +61,8 @@ from holcstore_spark.sources.index_base import ForgetMixin
 #: one staged file per non-empty bucket per ingest (the band_id role)
 _N_BUCKETS = 16
 
-#: the gram→bucket mapping is versioned and FROZEN per index: ``md5h8``
-#: (since r15) is ``int(gram_h[:8], 16) % n_buckets``; ``nibble``
-#: (pre-r15, always 16 buckets) is the hash's first hex digit. Legacy
-#: configs (predating the knob) are inferred as ``nibble`` so new
-#: ingests keep landing in the buckets the on-disk layout uses (r16 fix
-#: of the silent-upgrade bug the r15 advisor flagged).
+#: the gram→bucket mapping, recorded in every index config:
+#: ``int(gram_h[:8], 16) % n_buckets``
 _BUCKET_SCHEME = "md5h8"
 
 
@@ -97,10 +90,12 @@ class GramIndex(ForgetMixin):
     BandIndex contract).
     """
 
-    #: gram params are FROZEN at index creation (hashes from different
-    #: (k, sep) are not comparable — a silent change would stop
-    #: matching history entirely)
-    _CONFIG_FILE = "_index_config.json"
+    #: gram params are FROZEN at index creation: a silent change would
+    #: stop matching history entirely
+    _PARAMS_MISMATCH = (
+        "gram hashes from different (k, sep) are not comparable; create "
+        "a new index (and re-hash history) to change them"
+    )
 
     def __init__(
         self,
@@ -142,37 +137,6 @@ class GramIndex(ForgetMixin):
         self._check_or_save_params()
         self._txlog = TxLog(path)
 
-    # -- frozen params -------------------------------------------------
-    def _check_or_save_params(self) -> None:
-        from holcstore_spark.sources.io_util import claim_file_first_wins
-
-        target = os.path.join(self.path, self._CONFIG_FILE)
-        payload = json.dumps(self.params, indent=1, sort_keys=True)
-        os.makedirs(self.path, exist_ok=True)
-        existing = json.loads(claim_file_first_wins(target, payload))
-        if "bucket_scheme" not in existing:
-            if "n_buckets" in existing:
-                # r15-era config: the md5h8 scheme, knob already present
-                existing["bucket_scheme"] = _BUCKET_SCHEME
-            else:
-                # pre-r15 config: fixed 16-bucket first-nibble fan-out —
-                # ADOPT it (the on-disk layout uses it); silently
-                # re-mapping to md5h8 would split the same gram across
-                # two buckets and rot the per-file key stats
-                existing["bucket_scheme"] = "nibble"
-                existing["n_buckets"] = _N_BUCKETS
-        # the scheme is derived, never user-requested: inherit the
-        # index's own before the compatibility compare
-        self.params["bucket_scheme"] = existing["bucket_scheme"]
-        if existing != self.params:
-            raise ValueError(
-                f"gram index at {self.path} was created with "
-                f"{existing}, incompatible with requested "
-                f"{self.params} — gram hashes from different (k, sep) "
-                "are not comparable; create a new index (and re-hash "
-                "history) to change them"
-            )
-
     # -- read side -------------------------------------------------------
     def _schema(self) -> T.StructType:
         return T.StructType([
@@ -206,18 +170,12 @@ class GramIndex(ForgetMixin):
     def _typed(self, rows_df: DataFrame) -> DataFrame:
         """Project ``(id, gram_h)`` rows to the index schema: id CAST
         to the frozen id_type (commit-time, not read-time — ADVICE
-        r12), bucket = the index's frozen ``bucket_scheme`` over the
-        hash (md5h8 since r15; first-nibble on pre-r15 indexes)."""
+        r12), bucket = ``_BUCKET_SCHEME`` over the hash."""
         p = self.params
-        if p["bucket_scheme"] == "nibble":
-            bucket = F.conv(
-                F.substring(F.col("gram_h"), 1, 1), 16, 10
-            ).cast("int")
-        else:
-            bucket = (
-                F.conv(F.substring(F.col("gram_h"), 1, 8), 16, 10)
-                .cast("long") % F.lit(p["n_buckets"])
-            ).cast("int")
+        bucket = (
+            F.conv(F.substring(F.col("gram_h"), 1, 8), 16, 10)
+            .cast("long") % F.lit(p["n_buckets"])
+        ).cast("int")
         return rows_df.select(
             F.col(p["id_col"]).cast(p["id_type"]).alias(p["id_col"]),
             bucket.alias("bucket"),

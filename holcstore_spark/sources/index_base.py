@@ -41,6 +41,7 @@ single-writer guidance the blind-append semantics already document.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame
@@ -61,6 +62,34 @@ class ForgetMixin(ManifestTable):
     ``self._txlog``, ``self._schema()``), ``self.params["id_col"]`` and
     ``self.params["id_type"]`` (long/int/string).
     """
+
+    #: the index's creation parameters, FROZEN by its first open
+    _CONFIG_FILE = "_index_config.json"
+    #: why an open asking for other parameters is refused
+    _PARAMS_MISMATCH = ""
+
+    def _check_or_save_params(self) -> None:
+        """Freeze ``self.params`` on the index's first open; refuse a
+        later open asking for other ones, and a config of an older
+        format (a key missing, or a list where a mapping belongs)."""
+        from holcstore_spark.sources.io_util import claim_file_first_wins
+        from holcstore_spark.sources.txlog import old_format_error
+
+        target = os.path.join(self.path, self._CONFIG_FILE)
+        payload = json.dumps(self.params, indent=1, sort_keys=True)
+        os.makedirs(self.path, exist_ok=True)
+        existing = json.loads(claim_file_first_wins(target, payload))
+        if self.params.keys() - existing.keys() or any(
+            isinstance(v, dict) != isinstance(existing[k], dict)
+            for k, v in self.params.items()
+        ):
+            raise old_format_error(self.path, f"an index config {existing}")
+        if existing != self.params:
+            raise ValueError(
+                f"{type(self).__name__} at {self.path} was created with "
+                f"{existing}, incompatible with requested {self.params} — "
+                f"{self._PARAMS_MISMATCH}"
+            )
 
     def _tombstone_schema(self) -> T.StructType:
         p = self.params

@@ -154,9 +154,10 @@ def overlap_jobs(spark, *thunks):
     §2.6: actions are only sequential because driver code calls them
     sequentially — overlapping lets each job's tasks back-fill executor
     cores the others' task tails leave idle, so the wall-clock cost is
-    ~max of the thunks instead of their sum). The binpack repacks of
-    every manifest table and ChunkStore's overlapped data/meta staging
-    run through it.
+    ~max of the thunks instead of their sum). The one driver pool: the
+    binpack repacks of every manifest table, ChunkStore's overlapped
+    data/meta staging and ``similarity.train_subspace_books``'s
+    per-subspace PQ trainings run through it.
 
     Callers must guarantee the thunks are independent: no shared
     mutable state beyond thread-safe accumulators, and no thunk reads

@@ -59,8 +59,6 @@ operator, so indexed and scanned rankings are bit-identical.
 from __future__ import annotations
 
 import hashlib
-import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,25 +72,16 @@ from holcstore_spark.sources.index_base import ForgetMixin
 _N_BUCKETS = 16
 _STATS_BUCKET = -1
 
-#: the term→bucket mapping is versioned and FROZEN per index: ``md5h8``
-#: (since r15) is ``int(md5[:8], 16) % n_buckets``; ``nibble`` (pre-r15,
-#: always 16 buckets) is the first hex digit of md5. The two disagree
-#: even at n_buckets=16 (1st vs 8th hex digit), so an index must keep
-#: the scheme it was built with — the config records it, and legacy
-#: configs (predating the knob) are inferred as ``nibble`` (r16 fix of
-#: the silent-upgrade bug the r15 advisor flagged).
+#: the term→bucket mapping, recorded in every index config:
+#: ``int(md5[:8], 16) % n_buckets``
 _BUCKET_SCHEME = "md5h8"
 
 
-def term_bucket(
-    term: str, n_buckets: int = _N_BUCKETS, scheme: str = _BUCKET_SCHEME
-) -> int:
+def term_bucket(term: str, n_buckets: int = _N_BUCKETS) -> int:
     """Driver-side twin of the ingest-side bucket expression — MUST
     match :func:`_bucket_expr` exactly, or a query would prune away the
     very files its terms live in."""
     h = hashlib.md5(term.encode("utf-8")).hexdigest()
-    if scheme == "nibble":
-        return int(h[0], 16)
     return int(h[:8], 16) % n_buckets
 
 
@@ -114,10 +103,8 @@ def suggest_n_buckets(corpus_tokens: int) -> int:
     return n
 
 
-def _bucket_expr(col, n_buckets: int, scheme: str):
-    """Ingest-side bucket expression (int column) for ``scheme``."""
-    if scheme == "nibble":
-        return F.conv(F.substring(F.md5(col), 1, 1), 16, 10).cast("int")
+def _bucket_expr(col, n_buckets: int):
+    """Ingest-side bucket expression (int column)."""
     return (
         F.conv(F.substring(F.md5(col), 1, 8), 16, 10)
         .cast("long") % F.lit(n_buckets)
@@ -141,9 +128,11 @@ class LexicalIndex(ForgetMixin):
     stop the replay flavor of that mistake).
     """
 
-    #: the tokenizer split is FROZEN at index creation: postings from a
-    #: different ``sep`` are a different token universe
-    _CONFIG_FILE = "_index_config.json"
+    #: the tokenizer split is FROZEN at index creation
+    _PARAMS_MISMATCH = (
+        "postings from a different tokenizer sep are a different token "
+        "universe; create a new index to change it"
+    )
 
     def __init__(
         self,
@@ -179,37 +168,6 @@ class LexicalIndex(ForgetMixin):
         self._check_or_save_params()
         self._txlog = TxLog(path)
 
-    # -- frozen params -------------------------------------------------
-    def _check_or_save_params(self) -> None:
-        from holcstore_spark.sources.io_util import claim_file_first_wins
-
-        target = os.path.join(self.path, self._CONFIG_FILE)
-        payload = json.dumps(self.params, indent=1, sort_keys=True)
-        os.makedirs(self.path, exist_ok=True)
-        existing = json.loads(claim_file_first_wins(target, payload))
-        if "bucket_scheme" not in existing:
-            if "n_buckets" in existing:
-                # r15-era config: the md5h8 scheme, knob already present
-                existing["bucket_scheme"] = _BUCKET_SCHEME
-            else:
-                # pre-r15 config: fixed 16-bucket first-nibble fan-out —
-                # ADOPT it (the files on disk are laid out under it);
-                # silently re-mapping to md5h8 would prune reads to
-                # buckets that don't hold the term's postings
-                existing["bucket_scheme"] = "nibble"
-                existing["n_buckets"] = _N_BUCKETS
-        # the scheme is derived, never user-requested: inherit the
-        # index's own before the compatibility compare
-        self.params["bucket_scheme"] = existing["bucket_scheme"]
-        if existing != self.params:
-            raise ValueError(
-                f"lexical index at {self.path} was created with "
-                f"{existing}, incompatible with requested "
-                f"{self.params} — postings from a different tokenizer "
-                "sep are a different token universe; create a new "
-                "index to change it"
-            )
-
     # -- read side -------------------------------------------------------
     def _schema(self) -> T.StructType:
         return T.StructType([
@@ -224,8 +182,8 @@ class LexicalIndex(ForgetMixin):
             T.StructField("dl", T.LongType()),
         ])
 
-    def _bucket_paths(self, snap, buckets: set) -> list:
-        """Manifest prune: live data files whose chunk (= bucket) range
+    def _bucket_entries(self, snap, buckets: set) -> list:
+        """Manifest prune: live data entries whose chunk (= bucket) range
         intersects the wanted set. Each staged file covers exactly one
         bucket, so this opens only the buckets asked for; stat-less
         entries (never produced by our own staging) stay conservative."""
@@ -235,7 +193,7 @@ class LexicalIndex(ForgetMixin):
             if cmin is None or cmax is None or any(
                 cmin <= b <= cmax for b in buckets
             ):
-                out.append(os.path.join(self.path, e["path"]))
+                out.append(e)
         return out
 
     def postings(self, terms, snap=None) -> DataFrame:
@@ -247,17 +205,11 @@ class LexicalIndex(ForgetMixin):
             raise ValueError("postings requires at least one term")
         snap = snap if snap is not None else self._txlog.snapshot()
         nb = self.params["n_buckets"]
-        scheme = self.params["bucket_scheme"]
-        paths = self._bucket_paths(
-            snap, {term_bucket(t, nb, scheme) for t in terms}
-        )
-        if not paths:
-            return self.spark.createDataFrame([], self._schema())
-        out = (
-            self.spark.read.schema(self._schema()).parquet(*paths)
-            .filter(F.col("term").isin(terms))
-        )
-        return self._mask_deleted(out, snap)
+        entries = self._bucket_entries(snap, {term_bucket(t, nb) for t in terms})
+        out = self._read_entries(entries)
+        if not entries:
+            return out
+        return self._mask_deleted(out.filter(F.col("term").isin(terms)), snap)
 
     def stats(self, snap=None) -> DataFrame:
         """Corpus scalars as a 1-row frame ``(__n_docs, __total_dl)`` —
@@ -265,14 +217,13 @@ class LexicalIndex(ForgetMixin):
         metadata-sized. Ingested totals: deletes do NOT decrement them
         (the Lucene semantics in the module docstring)."""
         snap = snap if snap is not None else self._txlog.snapshot()
-        paths = self._bucket_paths(snap, {_STATS_BUCKET})
-        if not paths:
+        entries = self._bucket_entries(snap, {_STATS_BUCKET})
+        if not entries:
             return self.spark.createDataFrame(
                 [(0, 0)], "`__n_docs` long, `__total_dl` long"
             )
-        stripe = (
-            self.spark.read.schema(self._schema()).parquet(*paths)
-            .filter(F.col("bucket") == _STATS_BUCKET)
+        stripe = self._read_entries(entries).filter(
+            F.col("bucket") == _STATS_BUCKET
         )
         return stripe.agg(
             F.coalesce(F.sum("tf"), F.lit(0)).alias("__n_docs"),
@@ -286,13 +237,11 @@ class LexicalIndex(ForgetMixin):
         :meth:`doc_lengths` (masked read) and :meth:`recompute_stats`
         (tombstone-side correction)."""
         p = self.params
-        paths = self._bucket_paths(
-            snap, set(range(self.params["n_buckets"]))
-        )
-        if not paths:
+        entries = self._bucket_entries(snap, set(range(p["n_buckets"])))
+        if not entries:
             return None
         return (
-            self.spark.read.schema(self._schema()).parquet(*paths)
+            self._read_entries(entries)
             .filter(F.col("bucket") >= 0)
             .select(F.col(p["id_col"]), F.col("dl"))
             .distinct()
@@ -416,9 +365,7 @@ class LexicalIndex(ForgetMixin):
         )
         postings = tf.join(dl_frame, on=p["id_col"]).select(
             F.col(p["id_col"]),
-            _bucket_expr(
-                F.col("term"), p["n_buckets"], p["bucket_scheme"]
-            ).alias("bucket"),
+            _bucket_expr(F.col("term"), p["n_buckets"]).alias("bucket"),
             "term", "tf", "dl",
         )
         stripe = dl_frame.agg(

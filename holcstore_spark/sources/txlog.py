@@ -54,7 +54,10 @@ concurrent inserts both survive.
 Stores written by the retired plain layout (hive-partitioned parquet
 overwritten in place, no ``_txlog``) are refused at open
 (:func:`open_txlog`); ``holcstore_spark.convert_to_acid`` copies them
-into a new store.
+into a new store. A log in an older format of this layout (a JSON
+checkpoint, or no orphan-tracking marker) is refused by every open
+(:meth:`TxLog._check_format`); ``holcstore_spark.upgrade_format`` moves
+it over in place.
 """
 
 from __future__ import annotations
@@ -71,6 +74,15 @@ class CheckpointCorrupt(ValueError):
     corruption with retry/fallback (snapshot restarts its replay, the
     provenance walk answers 'not observed') and those reactions are
     WRONG for a file that is fine but momentarily unreadable."""
+
+
+def old_format_error(path: str, what: str) -> ValueError:
+    """The refusal every open of an older on-disk format raises: it names
+    the one call that moves the directory over."""
+    return ValueError(
+        f"{path} holds {what}, an older on-disk format; stop its writers "
+        f"and move it over once with holcstore_spark.upgrade_format({path!r})"
+    )
 
 
 class TxnAlreadyApplied(Exception):
@@ -450,21 +462,8 @@ class TxLog:
     def __init__(self, root: str, committer=None):
         self.root = root
         self.dir = os.path.join(root, "_txlog")
-        if not os.path.isdir(self.dir):
-            # brand-new log: there is no pre-sidecar legacy garbage by
-            # construction, so stamp the orphan-migration marker now —
-            # only stores whose log PRE-DATES sidecar tracking need the
-            # one-time deep sweep (see vacuum_files). Racing creators
-            # both write the same empty marker: benign.
-            os.makedirs(self.dir, exist_ok=True)
-            try:
-                odir = os.path.join(self.dir, "_orphans")
-                os.makedirs(odir, exist_ok=True)
-                with open(os.path.join(odir, ".migrated"), "w") as f:
-                    f.write("")
-            except OSError:
-                pass
         os.makedirs(self.dir, exist_ok=True)
+        self._check_format(os.listdir(self.dir))
         #: the pluggable atomic slot-claim primitive (see
         #: LocalFSCommitter for the contract an object-store
         #: conditional-PUT implementation must honor)
@@ -476,6 +475,32 @@ class TxLog:
         #: automatically because the listing changes.
         self._snap_sig: tuple | None = None
         self._snap_cached: Snapshot | None = None
+
+    def _marker_path(self) -> str:
+        return os.path.join(self.dir, "_orphans", ".migrated")
+
+    def _check_format(self, names: list[str]) -> None:
+        """Refuse a log in an older on-disk format; stamp a new one. The
+        ``_orphans/.migrated`` marker says every file the log stopped
+        referencing is named by an orphan sidecar or was deep-swept, so
+        the default vacuum reads sidecars only. A log with no record and
+        no checkpoint is new: it is stamped (racing creators write the
+        same empty file), and a failed stamp raises. Costs the caller's
+        listdir and one stat."""
+        if any(n.startswith("_checkpoint.") and n.endswith(".json") for n in names):
+            raise old_format_error(self.root, "a transaction log with a JSON checkpoint")
+        marker = self._marker_path()
+        if os.path.exists(marker):
+            return
+        if self.versions(names) or any(
+            self._checkpoint_name_version(n) is not None for n in names
+        ):
+            raise old_format_error(
+                self.root, "a transaction log without orphan tracking"
+            )
+        os.makedirs(os.path.dirname(marker), exist_ok=True)
+        with open(marker, "w"):
+            pass
 
     # -- log primitives ------------------------------------------------
     def _rec_path(self, version: int) -> str:
@@ -513,111 +538,65 @@ class TxLog:
     #: entries)
     _ENTRY_COLS = ("path", "rows", "chunk_min", "chunk_max", "key_stats")
 
-    def _checkpoint_path(self, version: int) -> str:
-        # legacy JSON checkpoint name — still READ (pre-round-9 logs and
-        # hand-written test fixtures); new checkpoints are parquet
-        return os.path.join(self.dir, f"_checkpoint.{version:020d}.json")
-
     def _checkpoint_path_pq(self, version: int) -> str:
         return os.path.join(self.dir, f"_checkpoint.{version:020d}.parquet")
 
-    def _checkpoint_exists(self, version: int) -> bool:
-        return os.path.exists(self._checkpoint_path_pq(version)) or os.path.exists(
-            self._checkpoint_path(version)
-        )
+    def _read_checkpoint(self, version: int, header_only: bool = False) -> dict:
+        """Load a parquet checkpoint into the canonical dict shape
+        ``{version, max_op_id, base, replayed, txns, files}`` (at 10⁶
+        live files a zstd parquet checkpoint is ~150× smaller than the
+        JSON encoding it replaced, Delta's parquet-checkpoint move).
+        ``header_only`` skips the file-entry set: one footer read
+        (``read_schema``), so the post-link provenance chain walk costs
+        O(header) per hop instead of rebuilding hundreds of thousands of
+        entries it never looks at. Raises FileNotFoundError when absent
+        and :class:`CheckpointCorrupt` (a ValueError, naming the file)
+        when unreadable — the callers' retry/fallback semantics key on
+        exactly those, so a TRANSIENT I/O error (EIO, EMFILE,
+        permissions) deliberately propagates as-is: mapping it to
+        "corrupt" would make the post-link provenance walk read a
+        durable, summarized commit as 'not observed' and back it out
+        (double-apply on retry)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pqm
 
-    def _read_checkpoint(self, version: int) -> dict:
-        """Load a checkpoint in either format into the canonical dict
-        shape ``{version, max_op_id, base, replayed, files}``. Parquet is
-        preferred (the write format since round 9 — at 10⁶ live files a
-        zstd parquet checkpoint is ~150× smaller than the JSON it
-        replaces, Delta's parquet-checkpoint move); JSON remains readable
-        for pre-existing logs. Raises FileNotFoundError when absent and
-        :class:`CheckpointCorrupt` (a ValueError) when unreadable — the
-        callers' retry/fallback semantics key on exactly those, so a
-        TRANSIENT I/O error (EIO, EMFILE, permissions) deliberately
-        propagates as-is: mapping it to "corrupt" would make the
-        post-link provenance walk read a durable, summarized commit as
-        'not observed' and back it out (double-apply on retry)."""
-        pq_path = self._checkpoint_path_pq(version)
-        if os.path.exists(pq_path):
-            import pyarrow as pa
-            import pyarrow.parquet as pqm
-
-            try:
-                t = pqm.read_table(pq_path)
-            except pa.ArrowInvalid as ex:
-                raise CheckpointCorrupt(
-                    f"corrupt parquet checkpoint: {ex}"
-                ) from ex
-            meta = t.schema.metadata or {}
-            raw = meta.get(b"holc_checkpoint")
-            if raw is None:
-                raise CheckpointCorrupt(
-                    "parquet checkpoint missing header metadata"
-                )
-            try:
-                head = json.loads(raw)
-                cols = t.to_pydict()
-                files: dict[str, list[FileEntry]] = {
-                    tb: [] for tb in self.TABLES
-                }
-                for tb, path, rows, cmin, cmax, ks, extra in zip(
-                    cols["table"], cols["path"], cols["rows"],
-                    cols["chunk_min"], cols["chunk_max"], cols["key_stats"],
-                    cols["extra"],
-                ):
-                    e = FileEntry(path=path, rows=rows, chunk_min=cmin,
-                                  chunk_max=cmax,
-                                  key_stats=json.loads(ks) if ks else None)
-                    if extra:
-                        # non-column-typed values round-trip here,
-                        # OVERWRITING the typed None placeholders —
-                        # losslessness for hand-built entries
-                        e.update(json.loads(extra))
-                    files.setdefault(tb, []).append(e)
-            except (KeyError, json.JSONDecodeError) as ex:
-                # parses-but-wrong-shape (foreign parquet at a
-                # checkpoint name) must stay inside the documented
-                # ValueError contract, not escape as KeyError
-                raise CheckpointCorrupt(
-                    f"malformed parquet checkpoint: {ex!r}"
-                ) from ex
-            return {**head, "files": files}
-        with open(self._checkpoint_path(version)) as f:
-            return json.load(f)
-
-    def _read_checkpoint_header(self, version: int) -> dict:
-        """Provenance header only — {version, max_op_id, base, replayed}
-        — WITHOUT reconstructing the file-entry set. For parquet this is
-        one footer read (``read_schema``), so the post-link provenance
-        chain walk costs O(header) per hop instead of rebuilding
-        hundreds of thousands of entries it never looks at; legacy JSON
-        has no cheaper path and loads fully."""
-        pq_path = self._checkpoint_path_pq(version)
-        if os.path.exists(pq_path):
-            import pyarrow as pa
-            import pyarrow.parquet as pqm
-
-            try:
-                meta = pqm.read_schema(pq_path).metadata or {}
-            except pa.ArrowInvalid as ex:
-                raise CheckpointCorrupt(
-                    f"corrupt parquet checkpoint: {ex}"
-                ) from ex
-            raw = meta.get(b"holc_checkpoint")
-            if raw is None:
-                raise CheckpointCorrupt(
-                    "parquet checkpoint missing header metadata"
-                )
-            try:
-                return json.loads(raw)
-            except json.JSONDecodeError as ex:
-                raise CheckpointCorrupt(
-                    f"malformed checkpoint header: {ex!r}"
-                ) from ex
-        with open(self._checkpoint_path(version)) as f:
-            return json.load(f)
+        path = self._checkpoint_path_pq(version)
+        try:
+            t = pqm.read_schema(path) if header_only else pqm.read_table(path)
+        except pa.ArrowInvalid as ex:
+            raise CheckpointCorrupt(f"corrupt parquet checkpoint {path}: {ex}") from ex
+        schema = t if header_only else t.schema
+        raw = (schema.metadata or {}).get(b"holc_checkpoint")
+        if raw is None:
+            raise CheckpointCorrupt(f"parquet checkpoint {path} missing header metadata")
+        try:
+            head = json.loads(raw)
+            if header_only:
+                return head
+            cols = t.to_pydict()
+            files: dict[str, list[FileEntry]] = {tb: [] for tb in self.TABLES}
+            for tb, p, rows, cmin, cmax, ks, extra in zip(
+                cols["table"], cols["path"], cols["rows"],
+                cols["chunk_min"], cols["chunk_max"], cols["key_stats"],
+                cols["extra"],
+            ):
+                e = FileEntry(path=p, rows=rows, chunk_min=cmin,
+                              chunk_max=cmax,
+                              key_stats=json.loads(ks) if ks else None)
+                if extra:
+                    # non-column-typed values round-trip here,
+                    # OVERWRITING the typed None placeholders —
+                    # losslessness for hand-built entries
+                    e.update(json.loads(extra))
+                files.setdefault(tb, []).append(e)
+        except (KeyError, json.JSONDecodeError) as ex:
+            # parses-but-wrong-shape (foreign parquet at a checkpoint
+            # name) must stay inside the documented ValueError
+            # contract, not escape as KeyError
+            raise CheckpointCorrupt(
+                f"malformed parquet checkpoint {path}: {ex!r}"
+            ) from ex
+        return {**head, "files": files}
 
     def _write_checkpoint(self, version: int, snap: "Snapshot") -> None:
         """Write the live-file set as a zstd parquet checkpoint (typed
@@ -698,7 +677,7 @@ class TxLog:
             return None
         # guard against a pointer outliving its checkpoint (manual file
         # surgery): only trust it if the checkpoint file exists
-        return v if self._checkpoint_exists(v) else None
+        return v if os.path.exists(self._checkpoint_path_pq(v)) else None
 
     def _write_checkpoint_pointer(self, version: int) -> None:
         cur = self._read_checkpoint_pointer()
@@ -734,19 +713,13 @@ class TxLog:
 
     @staticmethod
     def _checkpoint_name_version(fname: str) -> int | None:
-        """Checkpoint version from a directory-entry name, either format
-        (.parquet since round 9, .json legacy); None for non-checkpoint
-        entries (incl. ``.tmp-`` partials, which match neither suffix)."""
-        if not fname.startswith("_checkpoint."):
-            return None
-        if fname.endswith(".json"):
-            stem = fname[len("_checkpoint."):-5]
-        elif fname.endswith(".parquet"):
-            stem = fname[len("_checkpoint."):-8]
-        else:
+        """Checkpoint version from a directory-entry name; None for
+        non-checkpoint entries (incl. ``.tmp-`` partials, which do not
+        end in ``.parquet``)."""
+        if not (fname.startswith("_checkpoint.") and fname.endswith(".parquet")):
             return None
         try:
-            return int(stem)
+            return int(fname[len("_checkpoint."):-len(".parquet")])
         except ValueError:
             return None
 
@@ -817,7 +790,10 @@ class TxLog:
         the caller's directory listing for the FIRST attempt (one
         listdir per cold snapshot instead of several); retries always
         re-list — a stale listing/pointer is a possible cause of the
-        retry."""
+        retry. A checkpoint that is still undecodable after a fresh
+        re-list picks the same version again is corrupt, not racing:
+        its :class:`CheckpointCorrupt` is raised as-is."""
+        corrupt_cp = None
         for _attempt in range(8):
             if _attempt > 0:
                 listing = None
@@ -860,12 +836,17 @@ class TxLog:
                             live[t][e["path"]] = FileEntry(e)
                         for e in rec["removes"].get(t, []):
                             live[t].pop(e["path"], None)
-            except (FileNotFoundError, json.JSONDecodeError, CheckpointCorrupt):
-                # pruned (or replaced) under us, or a checkpoint read
-                # raced its writer — restart against the fresh log.
-                # (Deliberately NOT all ValueError: an int() failure on
-                # a corrupt record field should propagate diagnosably,
-                # not burn 8 retries and blame log maintenance.)
+            except CheckpointCorrupt:
+                if cp == corrupt_cp:
+                    raise
+                corrupt_cp = cp
+                continue
+            except (FileNotFoundError, json.JSONDecodeError):
+                # pruned (or replaced) under us — restart against the
+                # fresh log. (Deliberately NOT all ValueError: an int()
+                # failure on a corrupt record field should propagate
+                # diagnosably, not burn 8 retries and blame log
+                # maintenance.)
                 continue
             cp2 = self._latest_checkpoint(as_of)
             if cp2 is not None and cp2 > last:
@@ -1097,31 +1078,19 @@ class TxLog:
         no files at all — the two cases the old file-path heuristic
         misjudged, ADVICE r7). One absent from the chain was never
         replayed: the slot was recycled and the write would be silently
-        lost — backed out and retried.
-
-        Legacy checkpoints (written before provenance existed) fall
-        back to the path heuristic for adds; adds-free commits are
-        then treated conservatively as unobserved (their old
-        absence-based evidence could be satisfied by a DIFFERENT
-        summarized commit removing the same paths). Unreadable
-        checkpoint → not observed (the safe, loud direction)."""
+        lost — backed out and retried. Unreadable checkpoint → not
+        observed (the safe, loud direction)."""
         ours = (version, record.get("rid"))
-        cur: int | None = cp_version
-        data = None
+        cur = cp_version
         for _ in range(100_000):  # chain is strictly decreasing; belt only
             try:
                 # header-only read: the walk needs replayed/base, never
-                # the file-entry set — O(footer) per hop, not O(files).
-                # (For legacy JSON the header IS the full dict, so the
-                # heuristic leaf below still has its files.)
-                data = self._read_checkpoint_header(cur)
-            except (FileNotFoundError, CheckpointCorrupt,
-                    json.JSONDecodeError, TypeError):
+                # the file-entry set — O(footer) per hop, not O(files)
+                data = self._read_checkpoint(cur, header_only=True)
+                if any(tuple(p) == ours for p in data.get("replayed") or ()):
+                    return True
+            except (FileNotFoundError, CheckpointCorrupt, TypeError):
                 return False
-            if "replayed" not in data:
-                break  # legacy checkpoint: heuristic fallback below
-            if any(tuple(p) == ours for p in data["replayed"]):
-                return True
             base = data.get("base")
             # a corrupt checkpoint whose base is a non-int must read as
             # "not observed" (same as unreadable), not crash post-link
@@ -1132,17 +1101,7 @@ class TxLog:
                 # checkpoint (version > base) but wasn't — not observed
                 return False
             cur = base
-        else:
-            return False
-        live = {
-            e["path"]
-            for t in self.TABLES
-            for e in data.get("files", {}).get(t, [])
-        }
-        adds = [
-            e["path"] for t in self.TABLES for e in record["adds"].get(t, [])
-        ]
-        return bool(adds) and any(p in live for p in adds)
+        return False
 
     def _check_conflict(self, other: dict, ours: dict) -> None:
         from holcstore_spark.sources.chunk_store import ConcurrentWriteError
@@ -1577,7 +1536,8 @@ class TxLog:
         paths actually became unreferenced. ``deep=True`` additionally
         walks every staging dir — the only way to find files orphaned by
         a writer killed before any sidecar could be written (kill -9
-        mid-staging); run it occasionally, not per-vacuum."""
+        mid-staging); run it occasionally, not per-vacuum. A completed
+        deep sweep (re)stamps the orphan-tracking marker."""
         import time as _time
 
         cutoff = _time.time() - max(0.0, retention_seconds)
@@ -1587,18 +1547,6 @@ class TxLog:
         live_dirs = {os.path.dirname(p) for p in live}
         n = 0
         odir = self._orphans_dir()
-        migrated = os.path.join(odir, ".migrated")
-        if not os.path.exists(migrated):
-            # pre-sidecar store (or first-ever vacuum): its existing
-            # garbage carries no sidecars, so sweep deep ONCE. The
-            # marker is a dedicated file written only by THIS method at
-            # the end of a completed deep sweep — keying the migration
-            # on the _orphans dir's existence was wrong because
-            # note_orphans() creates that dir on the first post-upgrade
-            # commit, so an upgraded store that committed before its
-            # first vacuum silently skipped the migration and its
-            # legacy unreferenced files leaked (ADVICE r9).
-            deep = True
         os.makedirs(odir, exist_ok=True)
         import shutil as _shutil
 
@@ -1627,7 +1575,7 @@ class TxLog:
                 return 0
             for f in names:
                 if f.startswith("."):
-                    # the .migrated marker — or a tmp from a note_orphans
+                    # the marker — or a tmp from a note_orphans
                     # crashed between write and rename: reclaim old tmps
                     # (their paths fall to a deep sweep)
                     if reclaim_broken and f.endswith(".tmp"):
@@ -1725,10 +1673,8 @@ class TxLog:
                 pass
         if deep:
             n += self._deep_sweep(live, live_dirs, cutoff)
-            try:
-                with open(migrated, "w") as fh:
-                    fh.write("")  # deep migration sweep completed
-            except OSError:
+            # every unreferenced file is now deleted or noted
+            with open(self._marker_path(), "w"):
                 pass
         for f in os.listdir(self.dir):
             if ".tmp-" in f:
@@ -1747,10 +1693,10 @@ class TxLog:
         killed before commit was ever attempted. Age-gates on file
         mtime (= staging time), which is exact for never-live files.
         Non-live files still INSIDE the window are noted as orphan
-        sidecars instead of silently skipped: without that, the one-time
-        migration sweep would hand its ``.migrated`` marker to the
-        default O(orphans) path while legacy orphans younger than the
-        retention window leak forever (they never had sidecars). A
+        sidecars instead of silently skipped: without that, the sweep
+        would stamp the orphan-tracking marker while unnoted orphans
+        younger than the retention window leak forever (the default
+        sweep reads sidecars only). A
         freshly-STAGED file of an in-flight writer gets noted too, which
         is harmless — once its commit lands the path is live and the
         sweep spares it, dropping the sidecar."""
@@ -1775,9 +1721,9 @@ class TxLog:
                         if os.path.isdir(abs_p):
                             # a young NESTED dir (e.g. a writer's
                             # _temporary/): note every file inside it —
-                            # skipping it silently while the migration
-                            # marker gets stamped would leak the whole
-                            # subtree forever
+                            # skipping it silently while the marker
+                            # gets stamped would leak the whole subtree
+                            # forever
                             for dp, _dn, fns in os.walk(abs_p):
                                 for fn in fns:
                                     young.append(os.path.relpath(

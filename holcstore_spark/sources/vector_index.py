@@ -31,7 +31,6 @@ compose in one read.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,7 +52,10 @@ class VectorIndex(ForgetMixin):
                        filters={"lang": "en"})
     """
 
-    _CONFIG_FILE = "_index_config.json"
+    _PARAMS_MISMATCH = (
+        "the space partition and stored columns are frozen; create a new "
+        "index to change them"
+    )
 
     def __init__(
         self,
@@ -133,33 +135,6 @@ class VectorIndex(ForgetMixin):
             CentroidStore(os.path.join(path, "_pq", f"sub{j}"))
             for j in range(self.params["pq_m"] or 0)
         ]
-
-    # -- frozen params ---------------------------------------------------
-    def _check_or_save_params(self) -> None:
-        from holcstore_spark.sources.io_util import claim_file_first_wins
-
-        target = os.path.join(self.path, self._CONFIG_FILE)
-        payload = json.dumps(self.params, indent=1, sort_keys=True)
-        os.makedirs(self.path, exist_ok=True)
-        existing = json.loads(claim_file_first_wins(target, payload))
-        # configs written before attr types were declared stored a bare
-        # name LIST (= all-string) — normalize so they stay openable
-        if isinstance(existing.get("attr_cols"), list):
-            existing["attr_cols"] = {
-                c: "string" for c in existing["attr_cols"]
-            }
-        # configs written before PQ support lack these keys (= no PQ)
-        existing.setdefault("pq_m", None)
-        existing.setdefault("pq_centroids", 16)
-        # configs written before r16 always trained on the full frame
-        existing.setdefault("train_sample", 0)
-        if existing != self.params:
-            raise ValueError(
-                f"vector index at {self.path} was created with "
-                f"{existing}, incompatible with requested "
-                f"{self.params} — the space partition and stored "
-                "columns are frozen; create a new index to change them"
-            )
 
     def _space_params(self) -> dict:
         return {"n_clusters": self.params["n_lists"],

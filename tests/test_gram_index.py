@@ -390,46 +390,31 @@ class TestBucketFanout:
 
 
 class TestLegacyBucketScheme:
-    """r16 (ADVICE r15, high): a pre-r15 config (no n_buckets) was
-    silently re-mapped from the first-nibble bucket formula to
-    int(gram_h[:8],16) % 16 — new ingests would split the same gram
-    across two buckets. The fix infers a frozen ``bucket_scheme``."""
+    """The gram→bucket scheme is recorded in every index config. A config
+    written before ``n_buckets`` existed (first-hex-digit buckets) is
+    refused at open, and ``upgrade_format`` refuses it too, with a
+    pointer to a rebuild."""
 
     def test_pre_r15_config_adopts_nibble_scheme(
-        self, spark, tmp_store_path, corpus
+        self, spark, tmp_store_path
     ):
         import json
 
-        os.makedirs(tmp_store_path, exist_ok=True)
+        from holcstore_spark import upgrade_format
+        from holcstore_spark.sources.txlog import TxLog
+
+        TxLog(tmp_store_path)  # the index's (current) log
+        cfg = {"id_col": "doc_id", "id_type": "long", "k": K, "sep": " "}
         with open(os.path.join(tmp_store_path,
                                "_index_config.json"), "w") as f:
-            json.dump({
-                "id_col": "doc_id", "id_type": "long",
-                "k": K, "sep": " ",
-            }, f, indent=1, sort_keys=True)
-        history, batch1, _ = corpus
-        idx = GramIndex(spark, tmp_store_path, k=K)
-        assert idx.params["bucket_scheme"] == "nibble"
-        assert idx.params["n_buckets"] == 16
-        idx.ingest(history, txn_app="s", txn_version=0).collect()
-        got = stats_map(idx.ingest(batch1, txn_app="s", txn_version=1))
-        assert got[10][1] == 5 and got[11][1] == 0  # dedup still exact
-        # every stored row's bucket follows the nibble formula
-        bad = idx.df().filter(
-            F.col("bucket")
-            != F.conv(F.substring("gram_h", 1, 1), 16, 10).cast("int")
-        ).count()
-        assert bad == 0
-        # and at least one gram would land elsewhere under md5h8 —
-        # otherwise this regression test has no teeth
-        moved = idx.df().filter(
-            F.col("bucket") != (
-                F.conv(F.substring("gram_h", 1, 8), 16, 10)
-                .cast("long") % 16
-            ).cast("int")
-        ).count()
-        assert moved > 0
-        # a new index (no legacy config) still defaults to md5h8
+            json.dump(cfg, f, indent=1, sort_keys=True)
+        with pytest.raises(ValueError, match="upgrade_format"):
+            GramIndex(spark, tmp_store_path, k=K)
+        with pytest.raises(ValueError, match="Rebuild"):
+            upgrade_format(tmp_store_path)
+        with open(os.path.join(tmp_store_path, "_index_config.json")) as f:
+            assert json.load(f) == cfg
+        # a new index records md5h8
         fresh = GramIndex(
             spark, os.path.join(tmp_store_path, "..", "fresh"), k=K
         )

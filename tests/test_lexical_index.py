@@ -10,6 +10,7 @@ and (d) follow the documented Lucene deletion semantics.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pandas as pd
@@ -359,91 +360,59 @@ class TestConcurrentWriters:
 
 
 class TestLegacyBucketScheme:
-    """r16 (ADVICE r15, high): a pre-r15 config (no n_buckets) was
-    silently re-mapped from the first-nibble bucket formula to
-    int(md5[:8],16) % 16 — the two disagree (1st vs 8th hex digit), so
-    reads pruned to files that don't hold the term's postings. The fix
-    persists/infers a frozen ``bucket_scheme`` per index."""
+    """The term→bucket scheme is recorded in every index config. A config
+    written before it was (r15: ``n_buckets``, no ``bucket_scheme``) is
+    refused at open and moved over by ``upgrade_format``; one written
+    before ``n_buckets`` existed (first-hex-digit buckets) is refused by
+    the upgrade too, with a pointer to a rebuild."""
 
     @staticmethod
     def _write_legacy_config(path, params):
         import json
 
-        os.makedirs(path, exist_ok=True)
+        from holcstore_spark.sources.txlog import TxLog
+
+        TxLog(path)  # the index's (current) log
         with open(os.path.join(path, "_index_config.json"), "w") as f:
             json.dump(params, f, indent=1, sort_keys=True)
 
     def test_pre_r15_config_adopts_nibble_scheme(self, spark,
-                                                 tmp_store_path, corpus):
-        """A legacy index ingests AND prunes under the nibble formula:
-        the full roundtrip (ingest → bucket-pruned topk) matches the
-        scan operator bit-exactly. Under the r15 bug the prune opened
-        the wrong files and returned missing/empty rankings."""
-        from holcstore_spark.operators.text import bm25_topk
+                                                 tmp_store_path):
+        """Refused at open, refused by the upgrade (a rebuild is the
+        way over), and left untouched by both."""
+        from holcstore_spark import upgrade_format
 
-        self._write_legacy_config(tmp_store_path, {
-            "id_col": "doc_id", "id_type": "long", "sep": " ",
-        })
-        idx = LexicalIndex(spark, tmp_store_path)
-        assert idx.params["bucket_scheme"] == "nibble"
-        assert idx.params["n_buckets"] == 16
-        assert idx.ingest(corpus, txn_app="s", txn_version=0)
-        q = ["hash", "join", "scan"]
-        assert rank_rows(idx.topk(q, k=10)) == rank_rows(
-            bm25_topk(corpus, q, k=10)
-        )
-        # the on-disk buckets really are first-nibble ones
-        rows = idx.postings(q).collect()
-        assert rows
-        for r in rows:
-            assert r["bucket"] == term_bucket(r["term"], 16, "nibble")
-        # reopening infers the same scheme (the config is never
-        # rewritten), and a different fan-out request still refuses
-        again = LexicalIndex(spark, tmp_store_path)
-        assert again.params["bucket_scheme"] == "nibble"
-        with pytest.raises(ValueError, match="incompatible"):
-            LexicalIndex(spark, tmp_store_path, n_buckets=64)
+        cfg = {"id_col": "doc_id", "id_type": "long", "sep": " "}
+        self._write_legacy_config(tmp_store_path, cfg)
+        with pytest.raises(ValueError, match="upgrade_format"):
+            LexicalIndex(spark, tmp_store_path)
+        with pytest.raises(ValueError, match="Rebuild"):
+            upgrade_format(tmp_store_path)
+        with open(os.path.join(tmp_store_path, "_index_config.json")) as f:
+            assert json.load(f) == cfg
 
     def test_r15_config_keeps_md5h8(self, spark, tmp_store_path):
         """An r15-era config (n_buckets present, no scheme key) was
-        built under md5h8 — inference must NOT flip it to nibble."""
+        built under md5h8: the upgrade records exactly that."""
+        from holcstore_spark import upgrade_format
+
         self._write_legacy_config(tmp_store_path, {
             "id_col": "doc_id", "id_type": "long", "sep": " ",
             "n_buckets": 64,
         })
+        with pytest.raises(ValueError, match="upgrade_format"):
+            LexicalIndex(spark, tmp_store_path, n_buckets=64)
+        upgrade_format(tmp_store_path)
         idx = LexicalIndex(spark, tmp_store_path, n_buckets=64)
         assert idx.params["bucket_scheme"] == "md5h8"
+        with open(os.path.join(tmp_store_path, "_index_config.json")) as f:
+            assert json.load(f)["bucket_scheme"] == "md5h8"
 
     def test_new_index_persists_scheme(self, spark, tmp_store_path):
-        import json
-
         LexicalIndex(spark, tmp_store_path)
         with open(os.path.join(tmp_store_path,
                                "_index_config.json")) as f:
             assert json.load(f)["bucket_scheme"] == "md5h8"
-
-    def test_nibble_driver_twin_matches_engine(self, spark, corpus):
-        """term_bucket(..., 'nibble') must equal the pre-r15 ingest
-        expression conv(substring(md5(t),1,1),16,10) term-for-term."""
-        rows = (
-            corpus.select(F.explode(F.split("text", " ")).alias("t"))
-            .distinct()
-            .select(
-                "t",
-                F.conv(F.substring(F.md5("t"), 1, 1), 16, 10)
-                .cast("int").alias("b"),
-            )
-            .collect()
-        )
-        diff = [r for r in rows
-                if term_bucket(r["t"], 16, "nibble") != r["b"]]
-        assert not diff
-        # and the two schemes genuinely disagree on this corpus —
-        # otherwise this regression test has no teeth
-        assert any(
-            term_bucket(r["t"], 16, "nibble") != term_bucket(r["t"], 16)
-            for r in rows
-        )
 
 
 class TestSuggestNBuckets:

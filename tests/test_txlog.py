@@ -927,6 +927,22 @@ class TestAcidDefaultAndHistory:
             st.ingest_long(st.spark.createDataFrame(pdf))
         assert len(st.get_ts({"site": "s4"})) == 2  # the write itself landed
 
+    def test_blind_append_warning_points_at_caller(self, spark, tmpdir, monkeypatch):
+        # the warning fires on the caller's thread, not inside the pool
+        # that overlaps the data and meta staging
+        st = acid_store(spark, tmpdir, name="blindline")
+        monkeypatch.setattr(ChunkStore, "APPEND_KEYS_CAP", 3)
+        pdf = pd.DataFrame({
+            "site": [f"s{i}" for i in range(5) for _ in range(2)],
+            "ts": list(pd.date_range("2024-01-01", periods=2, freq="1h",
+                                     tz="UTC")) * 5,
+            "value": [1.0] * 10,
+        })
+        with pytest.warns(UserWarning, match="BLIND append") as rec:
+            st.ingest_long(st.spark.createDataFrame(pdf), mode="insert")
+        blind = [w for w in rec if "BLIND append" in str(w.message)]
+        assert [w.filename for w in blind] == [__file__]
+
 
 class TestPostLinkDiscrimination:
     """Code-review r7: a checkpoint >= v appearing after our link is
@@ -1247,7 +1263,7 @@ class TestStaleBaseRetryBudget:
 class TestProvenanceChainWalk:
     """VERDICT r8 #3: the checkpoint-provenance membership walk
     (txlog._checkpoint_observed) guards against silently-lost writes —
-    its chain/legacy/back-out branches need direct coverage."""
+    its chain/back-out branches need direct coverage."""
 
     def _chained_log(self, tmpdir, interval=4, n=8):
         log = TxLog(os.path.join(tmpdir, "chain"))
@@ -1274,56 +1290,24 @@ class TestProvenanceChainWalk:
                  "removes": {"data": [], "meta": []}}
         assert log._checkpoint_observed(8, ghost, 2) is False
 
-    def test_legacy_checkpoint_path_heuristic_fallback(self, tmpdir):
-        import json as _json
-
-        log = self._chained_log(tmpdir)
-        # rewrite checkpoint 8 as a LEGACY JSON checkpoint WITHOUT
-        # provenance (pre-r8 format, pre-r9 encoding) — the walk must
-        # read it and fall back to the path heuristic
-        data = log._read_checkpoint(8)
-        legacy = {"version": 8, "max_op_id": data["max_op_id"],
-                  "files": data["files"]}
-        os.remove(log._checkpoint_path_pq(8))
-        with open(log._checkpoint_path(8), "w") as f:
-            f.write(_json.dumps(legacy))
-        rec2 = log.read(2)  # its added path is still live in the files set
-        assert log._checkpoint_observed(8, rec2, 2) is True
-        gone = {"rid": "beef", "adds": {"data": [_uentry("files/nope/p.parquet")],
-                                        "meta": []},
-                "removes": {"data": [], "meta": []}}
-        assert log._checkpoint_observed(8, gone, 2) is False
-        # adds-free commit: legacy evidence is unverifiable — the
-        # conservative answer is "not observed" (back out and retry)
-        empty = {"rid": "cafe", "adds": {"data": [], "meta": []},
-                 "removes": {"data": [], "meta": []}}
-        assert log._checkpoint_observed(8, empty, 2) is False
-
     def test_corrupt_checkpoint_base_is_not_observed_not_a_crash(self, tmpdir):
-        import json as _json
-
         log = self._chained_log(tmpdir)
-        data = log._read_checkpoint(8)
-        data["base"] = "bogus"  # corrupt link
-        data["replayed"] = []   # force the walk to follow base
-        os.remove(log._checkpoint_path_pq(8))
-        with open(log._checkpoint_path(8), "w") as f:
-            f.write(_json.dumps(data))
+        snap = log.snapshot(as_of=8)
+        snap.base_checkpoint = "bogus"  # corrupt link
+        snap.replay_chain = ()          # force the walk to follow base
+        log._write_checkpoint(8, snap)
         rec2 = log.read(2)
         # ADVICE r8: must return False (safe direction), not TypeError
         assert log._checkpoint_observed(8, rec2, 2) is False
 
     def test_unobserved_commit_backed_out_exactly_once(self, tmpdir, monkeypatch):
-        import json as _json
-
         from holcstore_spark.sources.chunk_store import StaleBaseError
+        from holcstore_spark.sources.txlog import Snapshot
 
         log = TxLog(os.path.join(tmpdir, "backout"))
         # fabricate a post-link horizon: a checkpoint at 5 that never
         # replayed our record (recycled-slot world)
-        with open(log._checkpoint_path(5), "w") as f:
-            f.write(_json.dumps({"version": 5, "max_op_id": 1, "base": None,
-                                 "replayed": [], "files": {"data": [], "meta": []}}))
+        log._write_checkpoint(5, Snapshot(5, {"data": [], "meta": []}, 1))
         orig = TxLog._latest_checkpoint
 
         def fake(self, as_of=None, listing=None, fresh=False):
@@ -1350,17 +1334,17 @@ class TestPruneRetainsYoungCheckpoints:
             log.commit(i - 1, "w", i,
                        adds={"data": [_uentry(f"files/r{i}/p.parquet", i, i)]},
                        removes={})
-        assert log._checkpoint_exists(4)
+        assert os.path.exists(log._checkpoint_path_pq(4))
         log.prune_log()
         # ADVICE r8 low: the superseded checkpoint 4 is a chain link a
         # racing writer's provenance walk may still need — young links
         # survive the prune
-        assert log._checkpoint_exists(4)
+        assert os.path.exists(log._checkpoint_path_pq(4))
         # aged out, it goes
         old = __import__("time").time() - log.CHECKPOINT_RETENTION_SECONDS - 60
         os.utime(log._checkpoint_path_pq(4), (old, old))
         log.prune_log()
-        assert not log._checkpoint_exists(4)
+        assert not os.path.exists(log._checkpoint_path_pq(4))
 
 
 class TestCompactingChangeFeedSkip:
@@ -1589,7 +1573,6 @@ class TestVacuumOrphanSidecars:
 
         st = acid_store(spark, tmpdir, name="vo2")
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3))
-        st.vacuum()  # drop the migration marker: store is sidecar-aware
         # a kill-9-style orphan: staged dir, no sidecar ever written
         d = os.path.join(st.path, "files", "deadbeefdeadbeef")
         os.makedirs(d)
@@ -1887,17 +1870,18 @@ class TestReviewFindingsRound9:
 
     def test_presidecar_store_migrates_with_one_deep_sweep(self, spark, tmpdir):
         # review #4: a store written before the sidecar scheme has
-        # garbage with no sidecars — the first default vacuum sweeps
-        # deep ONCE (and drops the marker), so its garbage is not
-        # silently immortal
+        # garbage with no sidecars — one deep sweep reclaims it and
+        # stamps the marker, after which the default vacuum reads
+        # sidecars only (reopening such a store is refused until
+        # upgrade_format runs that sweep: tests/test_convert.py)
         st = acid_store(spark, tmpdir, name="mig")
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3, value=1.0))
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3, value=2.0),
                   replace=True)
         odir = os.path.join(st.path, "_txlog", "_orphans")
         shutil.rmtree(odir)  # simulate the pre-sidecar layout
-        n = st.vacuum(retention_seconds=0)
-        assert n >= 1                 # deep-once migration found it
+        n = st.vacuum(retention_seconds=0, deep=True)
+        assert n >= 1                 # the deep sweep found it
         assert os.path.isdir(odir)    # marker: next vacuums are O(orphans)
         assert st.vacuum(retention_seconds=0) == 0
         st.refresh()
@@ -1909,7 +1893,7 @@ class TestParquetCheckpoints:
     """Round 9: checkpoints write as zstd parquet (typed entry columns +
     one header metadata blob) — ~150× smaller than the JSON they replace
     at large file counts (0.3 MB vs 46 MB at 400k entries), the axis that
-    matters on object stores. JSON checkpoints remain readable."""
+    matters on object stores."""
 
     def test_parquet_checkpoint_roundtrips_exactly(self, tmpdir):
         log = TxLog(os.path.join(tmpdir, "pq"))
@@ -1919,7 +1903,6 @@ class TestParquetCheckpoints:
                        adds={"data": [_uentry(f"files/p{i}/a.parquet", i, i)]},
                        removes={})
         assert os.path.exists(log._checkpoint_path_pq(8))
-        assert not os.path.exists(log._checkpoint_path(8))  # no JSON twin
         data = log._read_checkpoint(8)
         assert data["version"] == 8 and len(data["replayed"]) == 8
         paths = {e["path"] for e in data["files"]["data"]}
@@ -1930,41 +1913,6 @@ class TestParquetCheckpoints:
         # and a cold snapshot replay off the parquet checkpoint is exact
         cold = TxLog(log.root).snapshot()
         assert cold.version == 9 and len(cold.files["data"]) == 9
-
-    def test_legacy_json_log_continues_with_parquet(self, tmpdir):
-        import json as _json
-
-        log = TxLog(os.path.join(tmpdir, "mix"))
-        log.CHECKPOINT_INTERVAL = 8
-        for i in range(1, 9):
-            log.commit(i - 1, "w", i,
-                       adds={"data": [_uentry(f"files/m{i}/a.parquet", i, i)]},
-                       removes={})
-        # convert checkpoint 8 to the pre-round-9 JSON encoding
-        data = log._read_checkpoint(8)
-        os.remove(log._checkpoint_path_pq(8))
-        with open(log._checkpoint_path(8), "w") as f:
-            f.write(_json.dumps(data))
-        assert log._latest_checkpoint(fresh=True) == 8
-        # a FRESH instance replays off the JSON checkpoint and keeps
-        # committing; the next checkpoint writes parquet with the JSON
-        # one as its provenance base
-        log2 = TxLog(log.root)
-        log2.CHECKPOINT_INTERVAL = 8
-        for i in range(9, 17):
-            log2.commit(i - 1, "w", i,
-                        adds={"data": [_uentry(f"files/m{i}/a.parquet", i, i)]},
-                        removes={})
-        assert os.path.exists(log2._checkpoint_path_pq(16))
-        cp16 = log2._read_checkpoint(16)
-        assert cp16["base"] == 8
-        # provenance membership works ACROSS the mixed-format chain:
-        # record 2 is summarized by the JSON checkpoint one hop down
-        rec2 = log2.read(2) if os.path.exists(log2._rec_path(2)) else None
-        if rec2 is not None:
-            assert log2._checkpoint_observed(16, rec2, 2) is True
-        snap = TxLog(log.root).snapshot()
-        assert snap.version == 16 and len(snap.files["data"]) == 16
 
 
 class TestParquetCheckpointHardening:
@@ -1999,6 +1947,30 @@ class TestParquetCheckpointHardening:
         # backs out a durable commit) — it propagates loudly
         with pytest.raises(PermissionError):
             log._checkpoint_observed(8, rec2, 2)
+
+    def test_truncated_checkpoint_footer_raises_corrupt_not_race(
+        self, tmpdir, monkeypatch
+    ):
+        # a checkpoint that stays undecodable after a fresh re-list is
+        # corrupt: its error names the file, it is not retried as a
+        # prune/checkpoint race
+        import re
+
+        from holcstore_spark.sources.txlog import CheckpointCorrupt
+
+        log = self._log(tmpdir)
+        path = log._checkpoint_path_pq(8)
+        with open(path, "r+b") as f:
+            f.truncate(os.path.getsize(path) - 10)
+        calls = []
+        real = TxLog._read_checkpoint
+        monkeypatch.setattr(
+            TxLog, "_read_checkpoint",
+            lambda self, v: calls.append(v) or real(self, v),
+        )
+        with pytest.raises(CheckpointCorrupt, match=re.escape(path)):
+            TxLog(log.root).snapshot()
+        assert calls == [8, 8]  # one fresh re-list, then raised as-is
 
     def test_foreign_parquet_checkpoint_is_corrupt_not_keyerror(self, tmpdir):
         import pyarrow as pa
@@ -2100,10 +2072,13 @@ class TestRound10AdviceFixes:
     def test_upgraded_store_commit_before_first_vacuum_migrates(
         self, spark, tmpdir
     ):
-        # low: note_orphans() creates _orphans/ on the first post-upgrade
-        # commit; the one-time deep migration sweep must key on the
-        # dedicated .migrated marker, not the dir's existence
+        # low: note_orphans() creates _orphans/ on a commit; the format
+        # check must key on the dedicated .migrated marker, not the
+        # dir's existence — and the deep sweep runs in upgrade_format,
+        # never silently inside a default vacuum
         import time as _time
+
+        from holcstore_spark import upgrade_format
 
         st = acid_store(spark, tmpdir, name="upg")
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3, value=1.0))
@@ -2117,16 +2092,21 @@ class TestRound10AdviceFixes:
             f.write(b"x")
         old = _time.time() - 7200
         os.utime(leak, (old, old))
-        # the store COMMITS before its first vacuum → note_orphans
-        # recreates _orphans/ (without the marker)
+        # a commit recreates _orphans/ (without the marker)
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3, value=2.0),
                   replace=True)
         assert os.path.isdir(odir)
         assert not os.path.exists(os.path.join(odir, ".migrated"))
-        st.vacuum(retention_seconds=0)  # default sweep must still migrate
+        st.vacuum(retention_seconds=0)  # the default sweep stays shallow
+        assert os.path.exists(leak)
+        with pytest.raises(ValueError, match="upgrade_format"):
+            acid_store(spark, tmpdir, name="upg")
+        upgrade_format(st.path)
         assert not os.path.exists(leak)
         assert os.path.exists(os.path.join(odir, ".migrated"))
-        # migrated: the next default sweep is sidecars-only again
+        st = acid_store(spark, tmpdir, name="upg")
+        assert (st.get_ts({"site": "a"}) == 2.0).all()
+        # upgraded: the default sweep is sidecars-only
         d2 = os.path.join(st.path, "files", "legacyleak000001")
         os.makedirs(d2)
         leak2 = os.path.join(d2, "part-0.parquet")
@@ -2137,8 +2117,12 @@ class TestRound10AdviceFixes:
         assert os.path.exists(leak2)  # only deep=True reaches it now
 
     def test_fresh_store_is_born_migrated(self, spark, tmpdir, monkeypatch):
-        # a log created by THIS code version has no legacy garbage, so
-        # its first vacuum must stay O(orphans) — no deep walk
+        # a log created by THIS code version has no legacy garbage: it
+        # is stamped at creation, and no vacuum walks deep unless asked
+        # — not even one whose marker went missing under an open
+        # instance (reopening that store is refused instead)
+        from holcstore_spark import upgrade_format
+
         st = acid_store(spark, tmpdir, name="born")
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3, value=1.0))
         marker = os.path.join(st.path, "_txlog", "_orphans", ".migrated")
@@ -2149,7 +2133,14 @@ class TestRound10AdviceFixes:
             lambda self, *a, **k: called.append(1) or 0,
         )
         st.vacuum(retention_seconds=0)
+        os.remove(marker)
+        st.vacuum(retention_seconds=0)
         assert not called
+        with pytest.raises(ValueError, match="upgrade_format"):
+            acid_store(spark, tmpdir, name="born")
+        upgrade_format(st.path)
+        assert called == [1] and os.path.exists(marker)
+        acid_store(spark, tmpdir, name="born")
 
     def test_statless_compact_not_marked_compacting(self, spark, tmpdir):
         # low: a fully-tombstoned store whose manifest entries carry
@@ -2503,7 +2494,7 @@ class TestRound10ReviewFindings:
 
     def test_deep_sweep_notes_young_nested_dir_contents(self, spark, tmpdir):
         # review #2: a YOUNG nested staging dir (writer killed mid-write
-        # just before the migration) must have its contents noted as
+        # just before a deep sweep) must have its contents noted as
         # orphans — not silently skipped while .migrated is stamped
         st = acid_store(spark, tmpdir, name="youngdir")
         st.set_ts({"site": "a"}, hourly("2024-01-01", 3, value=1.0))
@@ -2515,8 +2506,8 @@ class TestRound10ReviewFindings:
         leak = os.path.join(nest, "part-0.parquet")
         with open(leak, "wb") as f:
             f.write(b"x")
-        # fresh mtimes: inside the retention window at migration time
-        st.vacuum()  # migration deep sweep: too young to delete, NOTED
+        # fresh mtimes: inside the retention window at sweep time
+        st.vacuum(deep=True)  # too young to delete, NOTED
         assert os.path.exists(leak)
         assert os.path.exists(os.path.join(odir, ".migrated"))
         # once the note expires, the DEFAULT sidecar sweep reclaims it

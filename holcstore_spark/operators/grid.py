@@ -10,10 +10,12 @@ Spark realization: for REINDEXING (the write path needs the dense rows)
 the grid is ``sequence(start, end, interval)`` + ``explode`` — generated
 *per key from that key's own bounds*, so grid size is O(span/freq) per key
 and never materialized globally; values land on it via a single left join
-shuffled on ``(keys…, ts)``. HOLE DETECTION (r16) never materializes the
-grid at all: holes are derived from consecutive *present* grid points
-(lag/lead gaps vs the requested bounds), so its shuffles are bounded by
-the data, not the span. No driver loops — scales to millions of keys.
+shuffled on ``(keys…, ts)``. HOLE DETECTION never materializes the grid
+at all: one scan and one window per key, ordered by the row's grid point
+(NULL when the row is not a present grid point), turns the lag/lead gaps
+between present points and the requested bounds into holes. Its single
+shuffle is bounded by the input rows, not the span. No driver loops —
+scales to millions of keys.
 """
 
 from __future__ import annotations
@@ -88,25 +90,26 @@ def completeness_holes(
 
     Output: keys…, hole_start, hole_end (inclusive grid-point bounds, each
     widened by ``margin_seconds`` — reference ``freq_margin``,
-    hostore/utils/timeseries.py:42-64). A key entirely absent from the input
-    yields one hole spanning the whole range only if its rows exist with all
-    null values; fully-absent keys are handled by the store wrapper
-    (left-anti join against the requested key list, hostore.py:120-124).
+    hostore/utils/timeseries.py:42-64). A key whose rows hold no present
+    grid point (all null, off-grid or out of range) yields one hole
+    spanning the whole range; keys with no row at all yield nothing and
+    are handled by the store wrapper (left-anti join against the
+    requested key list, hostore.py:120-124).
+    The output is hash-partitioned on ``keys``, so a per-key operator
+    chained on it (``merge_intervals``) adds no shuffle.
     """
-    # r16 (guide §1.1/§2.4): holes are derived from CONSECUTIVE PRESENT
-    # grid points, not from a dense sequence+explode grid left-joined to
-    # the values. The old shape materialized O(span/freq) grid rows per
-    # key and shuffled them twice (the (keys, ts) join exchange plus the
-    # (keys) window exchange feeding null_runs); this shape shuffles only
-    # the PRESENT rows (≤ data size, never span size) once for the
-    # window. Equivalent for unique (keys…, ts) inputs — both production
-    # callers (the entry query's .distinct() frame and find_holes'
-    # overlay_merge output, unique per (prm, ts) by construction)
-    # guarantee that: a present on-grid point = a df row with non-null
-    # value on a grid instant; every maximal gap between consecutive
-    # present points (plus the leading/trailing gaps against the
-    # requested bounds, plus a full-range hole for keys with no present
-    # point at all) is exactly a null run of the dense grid.
+    # Gaps and islands in one ordered sweep per key. Each row becomes
+    # (keys…, __ts), __ts being its ts when the row is a present grid point
+    # (non-null value, inside [start, end], aligned to freq) and NULL
+    # otherwise. One window ordered by __ts sees a key's NULL rows first
+    # (NULLS FIRST), so they never fall between two present points, and
+    # every maximal gap between consecutive present points — plus the
+    # leading/trailing gaps against the requested bounds, plus one
+    # full-range hole on the last row of a key with no present point — is
+    # exactly a null run of the dense grid. A duplicated (keys…, ts) is a
+    # zero-width gap and makes no hole. The source is read once and the
+    # single shuffle carries one narrow row per input row, never one per
+    # grid point.
     from holcstore_spark.functions.scalar import epoch_us
 
     if pd.Timestamp(start) > pd.Timestamp(end):
@@ -124,62 +127,45 @@ def completeness_holes(
     g_end = F.timestamp_micros(
         epoch_us(start_l) + (span_us - span_us % freq_us)
     )
-    f = _interval(freq_seconds)
-    src = df.select(*keys, F.col(ts).alias("__ts"), F.col(value).alias("__v"))
-    # the present set is deduplicated with a plain distinct (map-side
-    # partial dedup before its exchange); the window then re-clusters by
-    # the keys alone over PRESENT rows only — both shuffles are bounded
-    # by the data, never by the grid span
-    pres = src.filter(
-        F.col("__v").isNotNull()
-        & (F.col("__ts") >= start_l)
-        & (F.col("__ts") <= end_l)
-        & ((epoch_us(F.col("__ts")) - epoch_us(start_l)) % freq_us == 0)
-    ).select(*keys, "__ts").distinct()
+    f = F.expr(_interval(freq_seconds))
+    t = F.col(ts)
+    present = (
+        F.col(value).isNotNull()
+        & (t >= start_l)
+        & (t <= end_l)
+        & ((epoch_us(t) - epoch_us(start_l)) % freq_us == 0)
+    )
     w = Window.partitionBy(*keys).orderBy("__ts")
-    p2 = (
-        pres.withColumn("__prev", F.lag("__ts").over(w))
-        .withColumn("__lead", F.lead("__ts").over(w))
+    swept = df.select(*keys, F.when(present, t).alias("__ts")).select(
+        *keys,
+        "__ts",
+        F.lag("__ts").over(w).alias("__prev"),
+        F.lead("__ts").over(w).alias("__next"),
+        # lead(__ts) is NULL on every NULL row another NULL row follows, so
+        # it cannot mark a key's last row; lead of a constant can
+        F.lead(F.lit(True)).over(w).isNull().alias("__last"),
     )
-    hole = F.struct(
-        F.col("__h.s").alias("run_start"), F.col("__h.e").alias("run_end")
-    )
-    head_hole = F.when(
-        F.col("__prev").isNull() & (F.col("__ts") > start_l),
-        F.struct(start_l.alias("s"), (F.col("__ts") - F.expr(f)).alias("e")),
+    cur, prev, nxt = F.col("__ts"), F.col("__prev"), F.col("__next")
+
+    def hole(s: Column, e: Column) -> Column:
+        return F.struct(s.alias("run_start"), e.alias("run_end"))
+
+    head_or_gap = F.when(
+        prev.isNull() & (cur > start_l), hole(start_l, cur - f)
     ).when(
-        F.col("__prev").isNotNull()
-        & (epoch_us(F.col("__ts")) - epoch_us(F.col("__prev")) > freq_us),
-        F.struct(
-            (F.col("__prev") + F.expr(f)).alias("s"),
-            (F.col("__ts") - F.expr(f)).alias("e"),
-        ),
+        epoch_us(cur) - epoch_us(prev) > freq_us, hole(prev + f, cur - f)
     )
-    tail_hole = F.when(
-        F.col("__lead").isNull() & (F.col("__ts") < g_end),
-        F.struct((F.col("__ts") + F.expr(f)).alias("s"), g_end.alias("e")),
-    )
-    gap_holes = (
-        p2.select(*keys, F.explode(F.array(head_hole, tail_hole)).alias("__h"))
+    tail = F.when(nxt.isNull() & (cur < g_end), hole(cur + f, g_end))
+    full = F.when(F.col("__last") & cur.isNull(), hole(start_l, g_end))
+    m = F.expr(_interval(margin_seconds))
+    return (
+        swept.select(*keys, F.explode(F.array(head_or_gap, tail, full)).alias("__h"))
         .filter(F.col("__h").isNotNull())
-        .select(*keys, hole.alias("__hh"))
-    )
-    # keys present in df but with zero present grid points → one hole
-    # spanning the whole grid (the all-null-grid case of the old shape)
-    all_keys = src.select(*keys).distinct()
-    empty_keys = all_keys.join(
-        pres.select(*keys).distinct(), on=list(keys), how="left_anti"
-    )
-    full_holes = empty_keys.select(
-        *keys,
-        F.struct(start_l.alias("run_start"), g_end.alias("run_end")).alias("__hh"),
-    )
-    holes = gap_holes.unionByName(full_holes).select(*keys, "__hh.*")
-    m = _interval(margin_seconds)
-    return holes.select(
-        *keys,
-        (F.col("run_start") - F.expr(m)).alias("hole_start"),
-        (F.col("run_end") + F.expr(m)).alias("hole_end"),
+        .select(
+            *keys,
+            (F.col("__h.run_start") - m).alias("hole_start"),
+            (F.col("__h.run_end") + m).alias("hole_end"),
+        )
     )
 
 

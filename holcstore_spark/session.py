@@ -10,6 +10,12 @@ Conventions that every operator in this package relies on:
   which matters at the 100 TB target scale.
 - Arrow on: the pandas edge (toPandas / applyInPandas / mapInPandas) moves
   columnar batches, not rows.
+- DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled = false``): pyspark's
+  capture walks the Python stack and makes three extra py4j calls on
+  every DataFrame/Column API call, so analysis errors now carry no Python
+  call site and building a plan costs a third of the py4j calls. A
+  session made outside :func:`get_spark` keeps pyspark's default (on).
 """
 
 from __future__ import annotations
@@ -65,6 +71,10 @@ def get_spark(
         # the 1g default kills large ingests
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
+        # pyspark reads this flag once per process, on the first API call
+        # with an active session, so the builder must set it; a caller who
+        # wants call sites in errors passes "true" back in extra_conf
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Shuffle/scratch files on tmpfs when available: on this VM the backing
     # disk's write throughput swings ~4x run-to-run, and shuffle spill files

@@ -19,7 +19,12 @@ def spark():
 
 @pytest.fixture()
 def tmp_store_path():
-    path = tempfile.mkdtemp(prefix="holc_test_")
-    shutil.rmtree(path, ignore_errors=True)
-    yield path
-    shutil.rmtree(path, ignore_errors=True)
+    """A fresh (not yet existing) store path inside a per-test directory.
+
+    Tests also open siblings of it (``tmp_store_path + "_acid"``,
+    ``os.path.join(tmp_store_path, "..", "fresh")``); removing the whole
+    parent at teardown removes those too.
+    """
+    parent = tempfile.mkdtemp(prefix="holc_test_")
+    yield os.path.join(parent, "store")
+    shutil.rmtree(parent, ignore_errors=True)

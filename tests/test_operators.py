@@ -130,6 +130,113 @@ class TestGrid:
         assert counts == {"a": 4, "b": 1}
 
 
+def _hole_rows(rng, start, n_points, freq_s, composite):
+    """Seeded long rows around a ``start``-anchored grid of ``n_points``:
+    random keys plus fixed keys for each non-present row shape."""
+    step = pd.Timedelta(seconds=freq_s)
+    half = step / 2
+
+    def key(name, i=0):
+        return (name, i) if composite else (name,)
+
+    rows = []
+    for i in range(6):
+        density = rng.uniform(0.1, 0.9)
+        for h in range(-3, n_points + 3):
+            if rng.random() > density:
+                continue
+            ts = start + h * step + (half if rng.random() < 0.1 else pd.Timedelta(0))
+            value = None if rng.random() < 0.2 else float(h)
+            rows.append((*key("r", i % 3 if composite else i), ts, value))
+            if rng.random() < 0.15:  # duplicated (keys, ts), maybe null
+                rows.append((*key("r", i % 3 if composite else i), ts,
+                             None if rng.random() < 0.5 else 1.0))
+    rows += [
+        (*key("one_null"), start + step, None),
+        (*key("many_absent", 1), start, None),
+        (*key("many_absent", 1), start + half, 1.0),            # off-grid
+        (*key("many_absent", 1), start - step, 1.0),            # before start
+        (*key("many_absent", 1), start + (n_points + 2) * step, 1.0),  # after end
+        (*key("many_absent", 1), None, 1.0),                    # NULL ts
+        (*key("many_absent", 1), start + 2 * step, None),
+        (*key("dup_only"), start + 2 * step, 1.0),
+        (*key("dup_only"), start + 2 * step, 2.0),
+        (*key("dup_only"), start + 2 * step, None),
+        (*key("null_ts"), None, 1.0),
+        (*key("null_ts"), start + 3 * step, 1.0),
+    ]
+    return rows
+
+
+def _dense_holes(df, keys, freq_s, start, end, margin_s):
+    """Holes by the dense-grid formulation: reindex onto the grid and take
+    the null runs. A grid point is present when any of its rows carries a
+    value, so duplicates fold to one row first."""
+    one_per_point = df.groupBy(*keys, "ts").agg(F.max("value").alias("value"))
+    grid = reindex_to_grid(one_per_point, keys, freq_s, start=start, end=end)
+    m = F.expr(f"INTERVAL {margin_s} SECOND")
+    return null_runs(grid, keys).select(
+        *keys,
+        (F.col("run_start") - m).alias("hole_start"),
+        (F.col("run_end") + m).alias("hole_end"),
+    )
+
+
+class TestHoleParity:
+    """completeness_holes (one window pass over present points) against
+    the dense-grid formulation on seeded random inputs."""
+
+    @pytest.mark.parametrize(
+        "seed,start_off,end_off,margin_s,composite",
+        [
+            (1, "0min", "0min", 0, False),
+            (2, "20min", "0min", 3600, False),        # start off the hour grid
+            (3, "0min", "45min", 1800, False),        # end off the grid
+            (4, "0min", "30min", 7200, True),         # composite key
+        ],
+    )
+    def test_matches_dense_grid(self, spark, seed, start_off, end_off,
+                                margin_s, composite):
+        import numpy as np
+
+        rng = np.random.default_rng(seed)
+        n_points = 30
+        start = _ts(0) + pd.Timedelta(start_off)
+        end = start + pd.Timedelta(hours=n_points - 1) + pd.Timedelta(end_off)
+        keys = ("k", "j") if composite else ("k",)
+        rows = _hole_rows(rng, start, n_points, 3600, composite)
+        cols = ["k", "j", "ts", "value"] if composite else ["k", "ts", "value"]
+        pdf = pd.DataFrame(rows, columns=cols)
+        pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
+        schema = ", ".join(
+            ["k string"] + (["j int"] if composite else []) + ["ts timestamp", "value double"]
+        )
+        df = spark.createDataFrame(pdf, schema=schema)
+
+        holes = completeness_holes(df, keys, 3600, start=start, end=end,
+                                   margin_seconds=margin_s)
+        got = sorted(tuple(r) for r in holes.collect())
+        want = sorted(tuple(r) for r in _dense_holes(
+            df, keys, 3600, start, end, margin_s).collect())
+        assert got == want
+        # every key with rows but no present point has exactly one hole
+        absent = [h for h in got if h[0] in ("one_null", "many_absent")]
+        assert len(absent) == 2, absent
+
+        merged = merge_intervals(
+            holes.select(*keys, F.col("hole_start").alias("start"),
+                         F.col("hole_end").alias("end")),
+            keys=keys,
+        )
+        by_key: dict = {}
+        for *k, s, e in got:
+            by_key.setdefault(tuple(k), []).append(Range(s, e))
+        want_merged = sorted(
+            (*k, r.sd, r.ed) for k, rs in by_key.items() for r in Range.combine(rs)
+        )
+        assert sorted(tuple(r) for r in merged.collect()) == want_merged
+
+
 class TestIntervals:
     def test_merge_intervals_df(self, spark):
         pdf = pd.DataFrame(

@@ -616,6 +616,76 @@ class TestBulkJobBudget:
         assert replica.get_ts({"site": "s4"}) is None
 
 
+class TestAnalyticsJobBudget:
+    """The hole chain of the analytics queries: read a versioned store,
+    fold the versions, find the holes, merge them. The hole pass is one
+    window over the overlay, so the store is scanned once and
+    merge_intervals reuses its partitioning (no extra shuffle)."""
+
+    S, E = "2024-01-03 00:00:00", "2024-02-02 00:00:00"
+
+    @pytest.fixture()
+    def versioned(self, spark, tmp_store_path):
+        cfg = ChunkStoreConfig(keys=("site", "version"), freq="1h", tz="UTC",
+                               chunk_axis=("year", "month"),
+                               key_types={"site": "str", "version": "int"})
+        st = ChunkStore(spark, os.path.join(tmp_store_path, "ana"), cfg)
+        series = {}
+        for i, site in enumerate(("a", "b", "c")):
+            base = hourly("2024-01-01", 24 * 40, value=i)
+            series[(site, 0)] = base.drop(base.index[100 + 30 * i:160 + 30 * i])
+            series[(site, 1)] = hourly("2024-01-10", 24 * 5, value=9.0)
+        st.set_many_ts(series)
+        return st
+
+    def _chain(self, store):
+        from holcstore_spark.operators.grid import completeness_holes
+        from holcstore_spark.operators.intervals import merge_intervals
+        from holcstore_spark.operators.overlay import overlay_merge
+
+        d = store.alive_data(None, self.S, self.E).filter(F.col("value").isNotNull())
+        ov = overlay_merge(d, combined_by=("site",), order_by=("-version",))
+        holes = completeness_holes(ov, ("site",), 3600, start=self.S,
+                                   end=self.E, margin_seconds=3 * 3600)
+        merged = merge_intervals(
+            holes.select("site", F.col("hole_start").alias("start"),
+                         F.col("hole_end").alias("end")),
+            keys=("site",))
+        return holes, merged
+
+    def test_hole_chain_jobs_and_single_scan(self, spark, versioned):
+        holes, merged = self._chain(versioned)
+        got = {}
+        counts = {
+            "holes": len(jobs_of(spark, lambda: got.update(h=holes.collect()))),
+            "merged": len(jobs_of(spark, lambda: got.update(m=merged.collect()))),
+        }
+        assert counts["holes"] <= 3 and counts["merged"] <= 3, counts
+        # each site has one hole, its version-0 gap, so one merged interval
+        assert sorted(r["site"] for r in got["h"]) == ["a", "b", "c"]
+        assert len(got["m"]) == 3
+        for df in (holes, merged):
+            txt = plan_text(df)
+            assert n_nodes(txt, "Scan parquet") == 1, txt
+        # merge_intervals adds no exchange on top of the hole pass
+        assert (n_nodes(plan_text(merged), "Exchange")
+                == n_nodes(plan_text(holes), "Exchange"))
+
+    def test_plan_build_skips_call_site_capture(self, spark, versioned,
+                                                monkeypatch):
+        import pyspark.errors.utils as perr
+
+        assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+        assert perr.is_debugging_enabled() is False
+
+        def capture(*_a, **_k):
+            raise AssertionError("call site captured while building a plan")
+
+        monkeypatch.setattr(perr, "_capture_call_site", capture)
+        holes, merged = self._chain(versioned)
+        plan_text(merged)
+
+
 class TestArrowFilterParity:
     """One filter dialect on both engines: ``arrow_filter`` (driver-side
     pyarrow scans) selects the same rows as ``attrs_filter`` (Spark)."""

@@ -4,12 +4,13 @@ The reference turns time bounds into ``chunk_index__gte/__lte`` range
 predicates so the b-tree skips chunks (chunk_timeserie_store.py:855-861).
 Here ``chunk_index`` is a regular column of immutable files governed by
 the transaction log, whose manifest keeps per-file chunk and key
-min/max: the same derived chunk range selects the files a read opens
-(``Snapshot.entries_overlapping``), and :func:`key_equality_values` with
-:func:`entry_may_match_keys` narrows them by the key columns — the
-property that keeps a point read cheap on a 100 TB table. The predicates
-are also re-applied in-plan, where Parquet row-group statistics skip
-the rest.
+min/max. This module derives the inputs of the one file-skipping rule,
+:func:`holcstore_spark.sources.txlog.may_hold` (the ``Snapshot`` list
+form is ``entries_may_hold``): the chunk range of a time window, and
+:func:`key_equality_values`, the per-key candidate sets of a filter
+dict — the property that keeps a point read cheap on a 100 TB table.
+The predicates are also re-applied in-plan, where Parquet row-group
+statistics skip the rest.
 """
 
 from __future__ import annotations
@@ -86,25 +87,3 @@ def key_equality_values(filters: dict | None) -> dict[str, list]:
         else:
             out[field] = vals
     return {f: vals for f, vals in out.items() if vals}
-
-
-def entry_may_match_keys(entry: dict, key_values: dict[str, list]) -> bool:
-    """Can a manifest entry's file hold a row satisfying ``key_values``
-    (from :func:`key_equality_values`)? Per-field independent
-    bounding-box test — conservative: a missing/incomparable stat never
-    skips a file. Sound because the constraints are conjunctive: a row
-    passing the full filter has EVERY constrained field inside its
-    file's stats range, so one provably-empty dimension rules the file
-    out."""
-    ks = entry.get("key_stats") or {}
-    for field, vals in key_values.items():
-        rng = ks.get(field)
-        if not rng:
-            continue  # no stats for this field: conservative
-        lo, hi = rng
-        try:
-            if not any(lo <= v <= hi for v in vals):
-                return False
-        except TypeError:
-            continue  # incomparable stat/value types: conservative
-    return True

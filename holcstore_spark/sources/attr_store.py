@@ -11,8 +11,6 @@ Writes: plain set over an existing key raises; ``update=True`` is
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,10 +67,7 @@ class AttrStore(StoreTable):
         return self._df_at(self._read_snapshot())
 
     def _df_at(self, snap) -> DataFrame:
-        files = snap.paths("data", self.path)
-        if not files:
-            return self.spark.createDataFrame([], self._schema())
-        return self.spark.read.parquet(*files)
+        return self._read_entries(snap.files["data"])
 
     # -- write primitives (manifest-governed immutable files) ----------
     def _key_digest(self, kt: tuple) -> str:
@@ -81,45 +76,11 @@ class AttrStore(StoreTable):
         canon = tuple(str(v) for v in kt)
         return hashlib.md5(repr(canon).encode()).hexdigest()[:16]
 
-    def _may_contain(self, entry: dict, kts: list[tuple]) -> bool:
-        """Per-file bounding-box pruning over ALL key columns: the file
-        may hold one of ``kts`` only if some tuple fits inside every
-        dimension's min/max range. Missing or incomparable stats stay
-        conservative per dimension (never skip a file we can't prove
-        clean)."""
-        ks = entry.get("key_stats") or {}
-        rngs = [ks.get(k) for k in self.keys]
-        if not any(rngs):
-            return True
-        for kt in kts:
-            fits = True
-            for v, rng in zip(kt, rngs):
-                if rng is None:
-                    continue
-                lo, hi = rng
-                try:
-                    if not (lo <= v <= hi):
-                        fits = False
-                        break
-                except TypeError:
-                    continue  # incomparable stat/value: conservative
-            if fits:
-                return True
-        return False
-
     def _stage(self, df: DataFrame, npart: int | None = None) -> list:
-        abs_dir, rel_dir = self._txlog.new_staging_dir()
-        (
-            (
-                df.repartitionByRange(npart, *self.keys)
-                if npart is not None
-                else df.repartitionByRange(*self.keys)
-            )
-            .sortWithinPartitions(*self.keys, "ts")
-            .write.mode("overwrite")
-            .parquet(abs_dir)
+        return self._write_files(
+            df, range_cols=self.keys, sort_cols=(*self.keys, "ts"),
+            key_cols=self.keys, npart=npart,
         )
-        return self._txlog.collect_entries(abs_dir, rel_dir, key_cols=self.keys)
 
     def _append(self, new: DataFrame, kts: list[tuple], op: str, snap,
                 txn: tuple[str, int] | None = None) -> None:
@@ -139,18 +100,18 @@ class AttrStore(StoreTable):
         self, kts: list[tuple], keep_pred, new: DataFrame | None, op: str,
         snap, txn: tuple[str, int] | None = None,
     ) -> None:
-        """Copy-on-write of the files that can contain ``kts`` (per-file
-        key stats), one atomic commit. ``touched=[]`` + dropped_keys
-        makes conflicts purely key-level: same-key interleavings raise,
-        different-series writers commit concurrently; removed-file
-        path intersection still catches shared-file collisions."""
-        affected = [
-            e for e in snap.files["data"] if self._may_contain(e, kts)
-        ]
+        """Copy-on-write of the files whose per-file key stats can hold,
+        on every key column, a value of one of ``kts``, one atomic
+        commit. ``touched=[]`` + dropped_keys makes conflicts purely
+        key-level: same-key interleavings raise, different-series
+        writers commit concurrently; removed-file path intersection
+        still catches shared-file collisions."""
+        affected = snap.entries_may_hold("data", key_values={
+            k: [kt[i] for kt in kts] for i, k in enumerate(self.keys)
+        })
         parts = []
         if affected:
-            paths = [os.path.join(self.path, e["path"]) for e in affected]
-            parts.append(self.spark.read.parquet(*paths).filter(keep_pred))
+            parts.append(self._read_entries(affected).filter(keep_pred))
         if new is not None:
             parts.append(new.select(*self.keys, "ts", "value"))
         adds = []
@@ -328,20 +289,11 @@ class AttrStore(StoreTable):
         filter's equality/`__in` candidates are opened. Conservative —
         stat-less entries always read — and callers re-apply the exact
         predicate in-plan; honors time-travel pins."""
-        from holcstore_spark.plans.pruning import (
-            entry_may_match_keys,
-            key_equality_values,
-        )
+        from holcstore_spark.plans.pruning import key_equality_values
 
-        entries = self._read_snapshot().files["data"]
-        kv = key_equality_values(filters)
-        if kv:
-            entries = [e for e in entries if entry_may_match_keys(e, kv)]
-        if not entries:
-            return self.spark.createDataFrame([], self._schema())
-        files = [os.path.join(self.path, e["path"]) for e in entries]
-        # schemaless like _df_at: int keys map to LongType at write time
-        return self.spark.read.parquet(*files)
+        return self._read_entries(self._read_snapshot().entries_may_hold(
+            "data", key_values=key_equality_values(filters)
+        ))
 
     def get_ts(self, ts_attributes: dict, flat: bool = False):
         """Partial-attrs read (reference: timeserie_store.py:59-93):

@@ -34,7 +34,6 @@ Stores of the pre-transaction-log plain layout are refused at open;
 
 from __future__ import annotations
 
-import bisect
 import contextlib
 import operator
 import os
@@ -504,26 +503,25 @@ class ChunkStore(StoreTable):
     ) -> list:
         """The write behind :meth:`_stage_into_txn`: stage ``frame`` into
         a fresh dir and return its non-empty manifest entries."""
-        abs_dir, rel_dir = self._txlog.new_staging_dir()
+        keys = self.config.keys if table == "data" else ()
+        max_col = "updated_at" if table == "meta" else None
         if isinstance(frame, pa.Table):
+            abs_dir, rel_dir = self._txlog.new_staging_dir()
             self._write_arrow(frame, table, abs_dir)
+            entries = self._txlog.collect_entries(
+                abs_dir, rel_dir, key_cols=keys, max_col=max_col
+            )
+        elif table == "data":
+            entries = self._write_files(
+                self._cast_canonical(frame, self._data_schema(frame)),
+                range_cols=("chunk_index", *keys), sort_cols=(*keys, "ts"),
+                key_cols=keys, npart=npart,
+            )
         else:
-            if table == "data":
-                df = self._cast_canonical(frame, self._data_schema(frame))
-                rng = ("chunk_index", *self.config.keys)
-                df = (
-                    df.repartitionByRange(npart, *rng)
-                    if npart is not None
-                    else df.repartitionByRange(*rng)
-                ).sortWithinPartitions(*self.config.keys, "ts")
-            else:
-                df = self._cast_canonical(frame, self._meta_schema(frame)).coalesce(1)
-            df.write.mode("overwrite").parquet(abs_dir)
-        entries = self._txlog.collect_entries(
-            abs_dir, rel_dir,
-            key_cols=self.config.keys if table == "data" else (),
-            max_col="updated_at" if table == "meta" else None,
-        )
+            entries = self._write_files(
+                self._cast_canonical(frame, self._meta_schema(frame)),
+                range_cols=None, sort_cols=(), max_col=max_col,
+            )
         for e in entries:
             if not e["rows"]:
                 os.remove(os.path.join(self.path, e["path"]))
@@ -663,11 +661,9 @@ class ChunkStore(StoreTable):
         compacted meta file and removes the whole backlog. Tombstone
         rows survive (they ARE latest states), so the change feed and
         watermarks are unchanged."""
-        files = [
-            os.path.join(self.path, e["path"])
-            for e in [*txn.snapshot.files["meta"], *txn.adds["meta"]]
-        ]
-        m = self.spark.read.schema(self._meta_schema()).parquet(*files)
+        m = self._read_entries(
+            [*txn.snapshot.files["meta"], *txn.adds["meta"]], self._meta_schema()
+        )
         w = Window.partitionBy(*self.config.keys, "chunk_index").orderBy(
             F.desc("op_id")
         )
@@ -687,46 +683,21 @@ class ChunkStore(StoreTable):
 
     def _affected_files(self, chunk_set: set[int]) -> list:
         """The live data files a copy-on-write of ``chunk_set`` must
-        rewrite: files whose manifest chunk range overlaps it, narrowed
-        by per-file KEY stats to files that can hold a replaced series.
-        Files whose key ranges cannot contain any replaced series hold
-        only bystander rows — they stay live untouched (less IO, and
-        key-disjoint same-chunk writers stop sharing removes, so their
-        commits don't conflict). Every key dimension contributes
-        independently (bounding-box over-approximation, same soundness
-        argument as plans.pruning.entry_may_match_keys): one provably
-        empty dimension rules a file out even when the first key is
-        low-cardinality (e.g. one site, many meters)."""
+        rewrite: files whose manifest stats can hold one of its chunks
+        and, per key column, a key of a replaced series
+        (:func:`~holcstore_spark.sources.txlog.may_hold`). Files that
+        cannot hold a replaced series have only bystander rows and stay
+        live untouched: less IO, and key-disjoint same-chunk writers do
+        not share removes, so their commits do not conflict."""
         txn = self._active_txn
-        affected = [
-            e
-            for e in txn.snapshot.files["data"]
-            if e.get("chunk_min") is None
-            or any(e["chunk_min"] <= c <= e["chunk_max"] for c in chunk_set)
-        ]
-        if txn.dropped_key_tuples is None:
-            return affected
-        dims = [
-            (k, sorted({kt[i] for kt in txn.dropped_key_tuples}))
-            for i, k in enumerate(self.config.keys)
-        ]
-
-        def may_contain(e) -> bool:
-            ks = e.get("key_stats") or {}
-            for k, vals in dims:
-                rng = ks.get(k)
-                if not rng:
-                    continue  # no stats for this dim: conservative
-                lo, hi = rng
-                try:
-                    i = bisect.bisect_left(vals, lo)
-                    if not (i < len(vals) and vals[i] <= hi):
-                        return False
-                except TypeError:
-                    continue  # incomparable: conservative
-            return True
-
-        return [e for e in affected if may_contain(e)]
+        tuples = txn.dropped_key_tuples
+        return txn.snapshot.entries_may_hold(
+            "data", chunks=chunk_set,
+            key_values=None if tuples is None else {
+                k: [kt[i] for kt in tuples]
+                for i, k in enumerate(self.config.keys)
+            },
+        )
 
     def _rewrite_spark(
         self, sdf_new: DataFrame, chunks, pairs=None, merge=None,
@@ -760,8 +731,7 @@ class ChunkStore(StoreTable):
         schema = self._data_schema(sdf_new)
         sdf_new = self._cast_canonical(sdf_new, schema)
         if affected:
-            paths = [os.path.join(self.path, e["path"]) for e in affected]
-            old = self.spark.read.schema(schema).parquet(*paths)
+            old = self._read_entries(affected, schema)
             covered = (
                 sdf_new.select(*pair).distinct() if pairs is None
                 else self._pairs_frame(pairs)
@@ -883,18 +853,12 @@ class ChunkStore(StoreTable):
         lookup then opens only the files whose key range can hold the
         requested series — at large file counts this is the difference
         between listing a month and listing one file."""
-        from holcstore_spark.plans.pruning import entry_may_match_keys
-
-        entries = self._snapshot().entries_overlapping("data", chunk_lo, chunk_hi)
-        if key_values:
-            entries = [e for e in entries if entry_may_match_keys(e, key_values)]
-        return self._read_entries(entries)
+        return self._read_entries(self._snapshot().entries_may_hold(
+            "data", chunks=(chunk_lo, chunk_hi), key_values=key_values
+        ))
 
     def meta(self) -> DataFrame:
-        files = self._snapshot().paths("meta", self.path)
-        if not files:
-            return self.spark.createDataFrame([], self._meta_schema())
-        return self.spark.read.schema(self._meta_schema()).parquet(*files)
+        return self._read_entries(self._snapshot().files["meta"], self._meta_schema())
 
     def _meta_empty(self) -> bool:
         return not self._snapshot().files["meta"]
@@ -1632,7 +1596,7 @@ class ChunkStore(StoreTable):
         cols = columns or [*pair, "op_id", "is_deleted"]
         meta = [
             os.path.join(self.path, en["path"])
-            for en in snap.entries_overlapping("meta", lo, hi)
+            for en in snap.entries_may_hold("meta", chunks=(lo, hi))
         ]
         if not meta:
             types = {"chunk_index": "int32", "op_id": "int64", "is_deleted": bool}
@@ -1688,27 +1652,17 @@ class ChunkStore(StoreTable):
         physical rows (sync's overlap probe)."""
         import pyarrow.dataset as pads
 
-        from holcstore_spark.plans.pruning import (
-            entry_may_match_keys,
-            key_equality_values,
-        )
+        from holcstore_spark.plans.pruning import key_equality_values
 
         pair = [*self.config.keys, "chunk_index"]
         cols = [*pair, "ts", "value"] if values else pair
-        chunks = sorted(int(c) for c in alive["chunk_index"].unique())
-
-        def holds_alive_chunk(en) -> bool:
-            cmin, cmax = en.get("chunk_min"), en.get("chunk_max")
-            if cmin is None or cmax is None:
-                return True
-            i = bisect.bisect_left(chunks, cmin)
-            return i < len(chunks) and chunks[i] <= cmax
-
-        kv = key_equality_values({f"{k}__in": v for k, v in in_sets.items()})
-        entries = [
-            en for en in snap.entries_overlapping("data", chunks[0], chunks[-1])
-            if holds_alive_chunk(en) and entry_may_match_keys(en, kv)
-        ]
+        chunks = [int(c) for c in alive["chunk_index"].unique()]
+        entries = snap.entries_may_hold(
+            "data", chunks=chunks,
+            key_values=key_equality_values(
+                {f"{k}__in": v for k, v in in_sets.items()}
+            ),
+        )
         if not entries:
             return pd.DataFrame(columns=cols)
         data = pads.dataset([os.path.join(self.path, en["path"]) for en in entries])
@@ -2148,11 +2102,8 @@ class ChunkStore(StoreTable):
         if n == 0 and not full and not straddle:
             return 0
         if straddle:
-            paths = [os.path.join(self.path, e["path"]) for e in straddle]
-            kept = (
-                self.spark.read.schema(self._data_schema())
-                .parquet(*paths)
-                .filter(F.col("chunk_index") >= cutoff_idx)
+            kept = self._read_entries(straddle).filter(
+                F.col("chunk_index") >= cutoff_idx
             )
             self._stage_into_txn(kept, "data")
         txn.removes["data"].extend(full + straddle)

@@ -115,16 +115,9 @@ class ForgetMixin(ManifestTable):
     def tombstones(self, snap=None) -> DataFrame:
         """The deleted-id set at a snapshot (default latest)."""
         snap = snap if snap is not None else self._txlog.snapshot()
-        files = snap.paths("meta", self.path)
-        if not files:
-            return self.spark.createDataFrame(
-                [], self._tombstone_schema()
-            )
-        return (
-            self.spark.read.schema(self._tombstone_schema())
-            .parquet(*files)
-            .distinct()
-        )
+        entries = snap.files["meta"]
+        out = self._read_entries(entries, self._tombstone_schema())
+        return out.distinct() if entries else out
 
     def _mask_deleted(self, df: DataFrame, snap) -> DataFrame:
         """Anti-join the tombstone set — a no-op (zero plan overhead)
@@ -284,18 +277,10 @@ class ForgetMixin(ManifestTable):
         """The binpack write of the indexes: one chunk's rows as ONE
         file sorted by ``sort_cols``, with per-file ``key_cols`` stats
         (``write(src, sources)`` of :meth:`ManifestTable._binpack`)."""
-
-        def write(src, _sources):
-            abs_dir, rel_dir = self._txlog.new_staging_dir()
-            (
-                src.coalesce(1).sortWithinPartitions(*sort_cols)
-                .write.mode("overwrite").parquet(abs_dir)
-            )
-            return self._txlog.collect_entries(
-                abs_dir, rel_dir, key_cols=key_cols, chunk_col=chunk_col,
-            )
-
-        return write
+        return lambda src, _sources: self._write_files(
+            src, range_cols=None, sort_cols=sort_cols, key_cols=key_cols,
+            chunk_col=chunk_col,
+        )
 
     def _optimize_by_chunk(
         self,
@@ -376,7 +361,6 @@ class ForgetMixin(ManifestTable):
             return False
         from holcstore_spark.sources.io_util import safe_local_checkpoint
 
-        p = self.params
         # materialized once: the frame is evaluated by the emptiness
         # probe AND the staging write — a non-deterministic ids source
         # (limit/sample) must not tombstone different ids than were
@@ -388,13 +372,9 @@ class ForgetMixin(ManifestTable):
             # no-op. Skipping the watermark is safe: replaying this
             # batch re-runs the same no-op.
             return False
-        abs_dir, rel_dir = self._txlog.new_staging_dir()
-        (
-            ids_df.coalesce(1)
-            .sortWithinPartitions(p["id_col"])
-            .write.mode("overwrite").parquet(abs_dir)
+        adds = self._write_files(
+            ids_df, range_cols=None, sort_cols=(self.params["id_col"],)
         )
-        adds = self._txlog.collect_entries(abs_dir, rel_dir)
         committed = self._txlog.commit_idempotent(
             snap.version, "delete", TxLog.next_op_id(snap),
             {"meta": adds}, {},

@@ -103,15 +103,11 @@ class KeyValueStore(StoreTable):
         ChunkStore.data key_values). Honors time-travel pins. Pruning is
         conservative (stat-less entries always read) and the callers
         re-apply the exact predicates in-plan."""
-        from holcstore_spark.plans.pruning import entry_may_match_keys
-
-        snap = self._read_snapshot()
         cid = None if client_id is None else int(client_id)
-        entries = snap.entries_overlapping("data", cid, cid)
-        if prms:
-            kv = {"prm": [str(p) for p in prms]}
-            entries = [e for e in entries if entry_may_match_keys(e, kv)]
-        return self._read_entries(entries)
+        return self._read_entries(self._read_snapshot().entries_may_hold(
+            "data", chunks=(cid, cid),
+            key_values={"prm": [str(p) for p in prms]} if prms else None,
+        ))
 
     # -- write primitives (manifest-governed immutable files) ----------
     def _kv_digest(self, client_id, prm) -> str:
@@ -122,22 +118,11 @@ class KeyValueStore(StoreTable):
         ).hexdigest()[:16]
 
     def _stage(self, df: DataFrame, npart: int | None = None) -> list:
-        abs_dir, rel_dir = self._txlog.new_staging_dir()
-        sel = df.select(*[f.name for f in self._schema().fields])
-        rng = ("client_id", "prm")
-        (
-            (
-                sel.repartitionByRange(npart, *rng)
-                if npart is not None
-                else sel.repartitionByRange(*rng)
-            )
-            .sortWithinPartitions("prm", "version", "ts")
-            .write.mode("overwrite")
-            .parquet(abs_dir)
-        )
         # client_id IS the chunk column of this store's manifest entries
-        return self._txlog.collect_entries(
-            abs_dir, rel_dir, key_cols=("prm",), chunk_col="client_id"
+        return self._write_files(
+            df.select(*[f.name for f in self._schema().fields]),
+            range_cols=("client_id", "prm"), sort_cols=("prm", "version", "ts"),
+            key_cols=("prm",), chunk_col="client_id", npart=npart,
         )
 
     #: This store's remove-rows writes rewrite whole table/tenant scopes
@@ -208,11 +193,7 @@ class KeyValueStore(StoreTable):
         # copy-on-write of this client's files only (per-file client_id
         # range = the chunk stats), one atomic commit; dropped
         # (client, prm) digests keep conflicts prm-level
-        affected = [
-            e for e in snap.files["data"]
-            if e.get("chunk_min") is None
-            or e["chunk_min"] <= cid <= e["chunk_max"]
-        ]
+        affected = snap.entries_may_hold("data", chunks=(cid, cid))
         self._guard_rewrite_rows(
             affected, f"tenant rewrite (client_id={cid})"
         )

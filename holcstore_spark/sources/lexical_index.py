@@ -182,20 +182,6 @@ class LexicalIndex(ForgetMixin):
             T.StructField("dl", T.LongType()),
         ])
 
-    def _bucket_entries(self, snap, buckets: set) -> list:
-        """Manifest prune: live data entries whose chunk (= bucket) range
-        intersects the wanted set. Each staged file covers exactly one
-        bucket, so this opens only the buckets asked for; stat-less
-        entries (never produced by our own staging) stay conservative."""
-        out = []
-        for e in snap.files["data"]:
-            cmin, cmax = e.get("chunk_min"), e.get("chunk_max")
-            if cmin is None or cmax is None or any(
-                cmin <= b <= cmax for b in buckets
-            ):
-                out.append(e)
-        return out
-
     def postings(self, terms, snap=None) -> DataFrame:
         """Live postings of exactly ``terms`` — opens only the buckets
         the terms hash to (O(postings of the query terms), never
@@ -205,7 +191,11 @@ class LexicalIndex(ForgetMixin):
             raise ValueError("postings requires at least one term")
         snap = snap if snap is not None else self._txlog.snapshot()
         nb = self.params["n_buckets"]
-        entries = self._bucket_entries(snap, {term_bucket(t, nb) for t in terms})
+        # each staged file holds one bucket (the manifest chunk column),
+        # so only the buckets of the terms are opened
+        entries = snap.entries_may_hold(
+            "data", chunks={term_bucket(t, nb) for t in terms}
+        )
         out = self._read_entries(entries)
         if not entries:
             return out
@@ -217,7 +207,7 @@ class LexicalIndex(ForgetMixin):
         metadata-sized. Ingested totals: deletes do NOT decrement them
         (the Lucene semantics in the module docstring)."""
         snap = snap if snap is not None else self._txlog.snapshot()
-        entries = self._bucket_entries(snap, {_STATS_BUCKET})
+        entries = snap.entries_may_hold("data", chunks=[_STATS_BUCKET])
         if not entries:
             return self.spark.createDataFrame(
                 [(0, 0)], "`__n_docs` long, `__total_dl` long"
@@ -237,7 +227,7 @@ class LexicalIndex(ForgetMixin):
         :meth:`doc_lengths` (masked read) and :meth:`recompute_stats`
         (tombstone-side correction)."""
         p = self.params
-        entries = self._bucket_entries(snap, set(range(p["n_buckets"])))
+        entries = snap.entries_may_hold("data", chunks=range(p["n_buckets"]))
         if not entries:
             return None
         return (

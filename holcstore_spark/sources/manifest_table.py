@@ -14,6 +14,11 @@ from:
   (:meth:`_pin`, refused on views);
 - one key-typing rule for key columns without a declared type
   (:meth:`_key_types`);
+- file IO: :meth:`_read_entries`, the one read of manifest files, and
+  :meth:`_write_files`, the one staged Spark write (fresh
+  ``files/<uuid>/`` dir → partition → sort → write → manifest entries);
+  which files a read or rewrite opens is decided by the one skipping
+  rule, :func:`holcstore_spark.sources.txlog.may_hold`;
 - maintenance: :meth:`vacuum`, :meth:`last_txn_version` and the binpack
   core (:meth:`_binpack`) every ``optimize`` calls;
 - the version surface of the three stores (:class:`StoreTable`):
@@ -22,8 +27,10 @@ from:
 
 Host contract: ``self.spark``, ``self.path``, ``self._txlog`` and
 ``self._schema(frame=None)``, the data table's Spark schema (``frame``
-types undeclared key columns on a first write, see :meth:`_key_types`).
-Subclasses keep only their schema and the meaning of their own verbs.
+types undeclared key columns on a first write, see :meth:`_key_types`),
+which :meth:`_read_entries` reads with unless given another (a meta or
+tombstone schema). Subclasses keep only their schemas, their partition
+and sort columns, and the meaning of their own verbs.
 """
 
 from __future__ import annotations
@@ -248,13 +255,42 @@ class ManifestTable:
         (persisted in checkpoint headers)."""
         return self._txlog.snapshot().app_versions.get(str(txn_app))
 
-    def _read_entries(self, entries) -> DataFrame:
-        """The rows of manifest ``entries``, read with the table's schema
-        (a typed empty frame when there are none)."""
+    # -- file IO -------------------------------------------------------
+    def _read_entries(self, entries, schema=None) -> DataFrame:
+        """THE read of manifest files: the rows of ``entries`` with
+        ``schema``, by default the table's (a typed empty frame when
+        there are none)."""
+        schema = self._schema() if schema is None else schema
         if not entries:
-            return self.spark.createDataFrame([], self._schema())
-        return self.spark.read.schema(self._schema()).parquet(
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
             *(os.path.join(self.path, e["path"]) for e in entries)
+        )
+
+    def _write_files(
+        self, df: DataFrame, *, range_cols, sort_cols, key_cols=(),
+        chunk_col: str = "chunk_index", max_col: str | None = None,
+        npart: int | None = None,
+    ) -> list:
+        """THE staged Spark write: ``df`` into a fresh ``files/<uuid>/``
+        dir, range-partitioned by ``range_cols`` (``npart`` partitions,
+        by default the session's; None: one file) and sorted within
+        each file by ``sort_cols``, so the per-file ``chunk_col`` and
+        ``key_cols`` stats of the returned manifest entries are tight.
+        ``max_col`` records that column's exact maximum per entry."""
+        abs_dir, rel_dir = self._txlog.new_staging_dir()
+        if range_cols is None:
+            df = df.coalesce(1)
+        elif npart is None:
+            df = df.repartitionByRange(*range_cols)
+        else:
+            df = df.repartitionByRange(npart, *range_cols)
+        if sort_cols:
+            df = df.sortWithinPartitions(*sort_cols)
+        df.write.mode("overwrite").parquet(abs_dir)
+        return self._txlog.collect_entries(
+            abs_dir, rel_dir, key_cols=key_cols, chunk_col=chunk_col,
+            max_col=max_col,
         )
 
     def _mask_deleted(self, df: DataFrame, snap) -> DataFrame:

@@ -34,9 +34,9 @@ Commit record shape (all paths are store-relative)::
 Per-file ``chunk_min``/``chunk_max`` come from the parquet row-group
 statistics at stage time and give planning-time FILE SKIPPING: a
 bounded read opens only manifest entries overlapping the requested
-chunk range — the manifest-stats pruning Delta calls data skipping,
-replacing hive partition pruning (``chunk_index`` is a regular
-column).
+chunk range (:func:`may_hold`, the one skipping rule) — the
+manifest-stats pruning Delta calls data skipping, replacing hive
+partition pruning (``chunk_index`` is a regular column).
 
 Conflict rules (checked against each commit that won our slot):
 
@@ -62,6 +62,7 @@ it over in place.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import uuid
@@ -257,6 +258,68 @@ def file_entry(
     return entry
 
 
+def _holds_one(vals: list, lo, hi) -> bool:
+    """Does the sorted list ``vals`` hold a value in ``[lo, hi]``?"""
+    i = bisect.bisect_left(vals, lo)
+    return i < len(vals) and vals[i] <= hi
+
+
+def may_hold(chunks=None, key_values: dict | None = None):
+    """THE file-skipping rule: a test ``entry -> bool`` that is False
+    only when a manifest entry's stats prove its file holds no row with
+    a chunk in ``chunks`` and, per column of ``key_values``, a value in
+    its candidate list. The time-bound analogue of the reference's
+    ``chunk_index__gte/__lte`` b-tree skip
+    (chunk_timeserie_store.py:855-861), over per-file stats.
+
+    ``chunks`` is None (no chunk constraint), a ``(lo, hi)`` tuple (a
+    range, None ends open) or any other collection of chunk ids.
+    ``key_values`` maps a key column to its candidate values
+    (:func:`holcstore_spark.plans.pruning.key_equality_values`); the
+    columns are conjunctive, so one provably empty column rules the file
+    out. Collections are sorted once here and each entry is tested by
+    bisection. Missing stats never skip a file, and a column whose values
+    cannot be sorted together or compared with the stats is not used."""
+    lo = hi = ids = None
+    if isinstance(chunks, tuple):
+        lo, hi = chunks
+    elif chunks is not None:
+        ids = sorted(chunks)
+    keyed = []
+    for col, vals in (key_values or {}).items():
+        try:
+            keyed.append((col, sorted(vals)))
+        except TypeError:
+            continue  # values of unorderable types: not used
+
+    def test(entry) -> bool:
+        cmin, cmax = entry.get("chunk_min"), entry.get("chunk_max")
+        if chunks is not None and cmin is not None and cmax is not None:
+            if ids is not None:
+                if not _holds_one(ids, cmin, cmax):
+                    return False
+            elif (lo is not None and cmax < lo) or (hi is not None and cmin > hi):
+                return False
+        stats = entry.get("key_stats") or {}
+        for col, vals in keyed:
+            rng = stats.get(col)
+            if not rng:
+                continue
+            try:
+                if not _holds_one(vals, rng[0], rng[1]):
+                    return False
+            except TypeError:
+                continue  # stats not comparable with the values
+        return True
+
+    return test
+
+
+def entry_may_hold(entry, chunks=None, key_values: dict | None = None) -> bool:
+    """:func:`may_hold` of one manifest entry."""
+    return may_hold(chunks, key_values)(entry)
+
+
 class Snapshot:
     __slots__ = ("version", "files", "max_op_id", "base_checkpoint",
                  "replay_chain", "app_versions")
@@ -297,24 +360,12 @@ class Snapshot:
     def paths(self, table: str, root: str) -> list[str]:
         return [os.path.join(root, e["path"]) for e in self.files[table]]
 
-    def entries_overlapping(
-        self, table: str, lo: int | None, hi: int | None
+    def entries_may_hold(
+        self, table: str, chunks=None, key_values: dict | None = None
     ) -> list[FileEntry]:
-        """Manifest-stats file skipping: entries whose chunk range
-        intersects [lo, hi] (None bound = open; stat-less entries always
-        match)."""
-        out = []
-        for e in self.files[table]:
-            cmin, cmax = e.get("chunk_min"), e.get("chunk_max")
-            if cmin is None or cmax is None:
-                out.append(e)
-                continue
-            if lo is not None and cmax < lo:
-                continue
-            if hi is not None and cmin > hi:
-                continue
-            out.append(e)
-        return out
+        """The entries of ``table`` :func:`may_hold` keeps."""
+        test = may_hold(chunks, key_values)
+        return [e for e in self.files[table] if test(e)]
 
 
 def _overlaps_touched(entry: dict, touched) -> bool:

@@ -244,18 +244,8 @@ class VectorIndex(ForgetMixin):
         new-space-clustered files (review r13)."""
         snap = snap if snap is not None else self._txlog.snapshot()
         self.active_space_version(snap)  # refuse mixed-version reads
-        entries = snap.files["data"]
-        if lists is not None:
-            want = set(int(x) for x in lists)
-            kept = []
-            for e in entries:
-                lo, hi = e.get("chunk_min"), e.get("chunk_max")
-                if lo is None:  # stat-less file: conservative, keep
-                    kept.append(e)
-                elif any(lo <= x <= hi for x in want):
-                    kept.append(e)
-            entries = kept
-        out = self._read_entries(entries)
+        want = None if lists is None else {int(x) for x in lists}
+        out = self._read_entries(snap.entries_may_hold("data", chunks=want))
         if lists is not None:
             out = out.filter(F.col("list").isin(sorted(want)))
         # DELETED ids are masked out (see delete()): a forgotten vector

@@ -152,12 +152,13 @@ def run_opt() -> None:
 def run_lookup() -> None:
     """Round 10: measure manifest key-stats file skipping on the read
     path — a fragmented chunk (one file per inserted series), point
-    lookups timed with the pruning live vs disabled (monkeypatched
-    entry_may_match_keys ≡ True = the pre-round-10 behavior), each as
-    the arrow ``get_ts`` and as the Spark ``alive_data().toPandas()``."""
+    lookups timed with the pruning live vs disabled (the one skipping
+    rule, ``txlog.may_hold``, monkeypatched to keep every file: chunk
+    and key skipping off at every site), each as the arrow ``get_ts``
+    and as the Spark ``alive_data().toPandas()``."""
     import pandas as pd
 
-    import holcstore_spark.plans.pruning as pruning_mod
+    import holcstore_spark.sources.txlog as txlog_mod
     from holcstore_spark import ChunkStoreConfig, get_spark
     from holcstore_spark.sources.chunk_store import ChunkStore
 
@@ -193,12 +194,12 @@ def run_lookup() -> None:
               f"alive_data.toPandas={t_spark * 1000:.0f}ms")
 
     timed("pruned")
-    real = pruning_mod.entry_may_match_keys
-    pruning_mod.entry_may_match_keys = lambda e, kv: True
+    real = txlog_mod.may_hold
+    txlog_mod.may_hold = lambda chunks=None, key_values=None: lambda e: True
     try:
         timed("unpruned")
     finally:
-        pruning_mod.entry_may_match_keys = real
+        txlog_mod.may_hold = real
     shutil.rmtree(path, ignore_errors=True)
     spark.stop()
 

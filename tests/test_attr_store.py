@@ -302,6 +302,31 @@ class TestAttrKeyStatsPruning:
         assert list(st.get_ts({"site": "x", "kind": "a"}, flat=True)) == [9.0]
         assert list(st.get_ts({"site": "x", "kind": "b"}, flat=True)) == [2.0]
 
+    def test_many_tuple_rewrite_skips_files_disjoint_on_one_key(
+        self, spark, tmp_store_path
+    ):
+        """A rewrite of several tuples tests each key column against the
+        tuples' values on that column: a file whose ``kind`` range holds
+        none of them stays live. A file that matches on every column
+        without matching one tuple ((x, b) against (x, a) and (y, b)) may
+        be rewritten; its rows ride through unchanged."""
+        st = AttrStore(spark, tmp_store_path + "_mt", keys=("site", "kind"))
+        for site, kind, v in (("x", "a", 1.0), ("y", "b", 2.0),
+                              ("x", "c", 3.0), ("x", "b", 4.0)):
+            st.set_ts({"site": site, "kind": kind}, s([v, v + 10]))
+        file_of_c = {
+            e["path"] for e in st._txlog.snapshot().files["data"]
+            if (e.get("key_stats") or {}).get("kind") == ["c", "c"]
+        }
+        assert len(file_of_c) == 1, "precondition: (x, c) has its own file"
+        st.set_many_ts({("x", "a"): s([9.0]), ("y", "b"): s([8.0])},
+                       update=True)
+        live = {e["path"] for e in st._txlog.snapshot().files["data"]}
+        assert file_of_c <= live, "file disjoint on kind was rewritten"
+        got = {(e["site"], e["kind"]): list(e["data"]) for e in st.get_ts({})}
+        assert got == {("x", "a"): [9.0, 11.0], ("y", "b"): [8.0, 12.0],
+                       ("x", "c"): [3.0, 13.0], ("x", "b"): [4.0, 14.0]}
+
 
 class TestAttrChangesBetween:
     def test_update_delta(self, spark, tmp_store_path):

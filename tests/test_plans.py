@@ -616,6 +616,62 @@ class TestBulkJobBudget:
         assert replica.get_ts({"site": "s4"}) is None
 
 
+class TestKvAttrJobBudget:
+    """Upper bounds on the Spark jobs of the KeyValueStore and AttrStore
+    verbs, which the benchmark does not run: their staged writes and
+    manifest reads share the ChunkStore code, so a job added there shows
+    here. Each verb is counted after one warm call of the same shape."""
+
+    def test_kv_verbs(self, spark, tmp_store_path):
+        from holcstore_spark.sources.kv_store import KeyValueStore
+
+        kv = KeyValueStore(spark, os.path.join(tmp_store_path, "kvjobs"))
+        s = hourly("2024-01-01", 24)
+        counts = {}
+        for p in ("warm", "p"):
+            for verb, fn in (
+                ("set_lc insert", lambda: kv.set_lc(p, s, client_id=1)),
+                ("set_lc versioned", lambda: kv.set_lc(
+                    p, s * 2, client_id=1, versionning=True)),
+                ("set_lc overwrite", lambda: kv.set_lc(p, s * 3, client_id=1)),
+                ("get_lc", lambda: kv.get_lc(p, 1)),
+                ("clear", lambda: kv.clear([p], 1)),
+            ):
+                counts[verb] = len(jobs_of(spark, fn))
+        budget = {"set_lc insert": 3, "set_lc versioned": 5,
+                  "set_lc overwrite": 3, "get_lc": 4, "clear": 3}
+        assert all(counts[k] <= budget[k] for k in budget), counts
+        assert kv.get_lc("p", 1) == [] and kv.get_lc("warm", 1) == []
+
+    def test_attr_verbs(self, spark, tmp_store_path):
+        from holcstore_spark.sources.attr_store import AttrStore
+
+        at = AttrStore(spark, os.path.join(tmp_store_path, "atjobs"),
+                       keys=("k",))
+        s = hourly("2024-01-01", 24)
+        counts = {}
+        for p in ("warm", "p"):
+            for verb, fn in (
+                ("set_ts insert", lambda: at.set_ts({"k": p}, s)),
+                ("set_ts update", lambda: at.set_ts(
+                    {"k": p}, s * 2, update=True)),
+                ("set_ts replace", lambda: at.set_ts(
+                    {"k": p}, s * 3, replace=True)),
+                ("get_ts", lambda: at.get_ts({"k": p})),
+                ("set_many_ts", lambda: at.set_many_ts(
+                    {(f"{p}1",): s, (f"{p}2",): s})),
+                ("delete", lambda: at.delete({"k": p})),
+            ):
+                counts[verb] = len(jobs_of(spark, fn))
+        # reads carry the table schema, so no footer-inference job runs
+        budget = {"set_ts insert": 5, "set_ts update": 8,
+                  "set_ts replace": 5, "get_ts": 3, "set_many_ts": 7,
+                  "delete": 5}
+        assert all(counts[k] <= budget[k] for k in budget), counts
+        assert at.get_ts({"k": "p"}) == []
+        assert list(at.get_ts({"k": "p1"}, flat=True)) == [1.0] * 24
+
+
 class TestAnalyticsJobBudget:
     """The hole chain of the analytics queries: read a versioned store,
     fold the versions, find the holes, merge them. The hole pass is one
@@ -815,10 +871,8 @@ class TestKeyStatsFileSkipping:
 
     def test_null_and_type_mismatch_stay_conservative(self, spark,
                                                       tmp_store_path):
-        from holcstore_spark.plans.pruning import (
-            entry_may_match_keys,
-            key_equality_values,
-        )
+        from holcstore_spark.plans.pruning import key_equality_values
+        from holcstore_spark.sources.txlog import entry_may_hold
 
         # None can hide in any file (stats ignore nulls): no pruning key
         assert key_equality_values({"site": None}) == {}
@@ -829,10 +883,10 @@ class TestKeyStatsFileSkipping:
         assert key_equality_values({"site": "a", "site__in": ["b"]}) == {}
         # incomparable stat/value types never skip
         e = {"key_stats": {"site": ["a", "c"]}}
-        assert entry_may_match_keys(e, {"site": [7]}) is True
-        assert entry_may_match_keys(e, {"site": ["b"]}) is True
-        assert entry_may_match_keys(e, {"site": ["z"]}) is False
-        assert entry_may_match_keys({"key_stats": None}, {"site": ["z"]}) is True
+        assert entry_may_hold(e, key_values={"site": [7]}) is True
+        assert entry_may_hold(e, key_values={"site": ["b"]}) is True
+        assert entry_may_hold(e, key_values={"site": ["z"]}) is False
+        assert entry_may_hold({"key_stats": None}, key_values={"site": ["z"]}) is True
 
 
 class TestKvKeyStatsFileSkipping:

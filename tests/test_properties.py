@@ -500,10 +500,8 @@ class TestKeyPruningSoundness:
     @settings(max_examples=300, deadline=None)
     @given(stats=_stats, data=st.data())
     def test_never_prunes_a_satisfiable_entry(self, stats, data):
-        from holcstore_spark.plans.pruning import (
-            entry_may_match_keys,
-            key_equality_values,
-        )
+        from holcstore_spark.plans.pruning import key_equality_values
+        from holcstore_spark.sources.txlog import entry_may_hold
 
         fields = ("a", "b")
         filters = {}
@@ -513,7 +511,7 @@ class TestKeyPruningSoundness:
             ):
                 filters[f if not lookup else f"{f}__{lookup}"] = val
         kv = key_equality_values(filters)
-        pruned = not entry_may_match_keys({"key_stats": stats}, kv)
+        pruned = not entry_may_hold({"key_stats": stats}, key_values=kv)
         if not pruned:
             return  # kept: always sound
         # pruned: NO row inside the entry box may satisfy the filter
@@ -525,6 +523,179 @@ class TestKeyPruningSoundness:
                     self._in_entry(row, stats)
                     and self._satisfies(row, filters)
                 ), (row, filters, stats, kv)
+
+
+def _ref_entry_may_match_keys(entry: dict, key_values: dict) -> bool:
+    """The per-column key test the read paths used before the skipping
+    rule moved into ``txlog.may_hold`` (reference copy)."""
+    ks = entry.get("key_stats") or {}
+    for field, vals in key_values.items():
+        rng = ks.get(field)
+        if not rng:
+            continue
+        lo, hi = rng
+        try:
+            if not any(lo <= v <= hi for v in vals):
+                return False
+        except TypeError:
+            continue
+    return True
+
+
+def _ref_overlapping(entry: dict, lo, hi) -> bool:
+    """The chunk-range test of ``Snapshot.entries_overlapping``, which
+    bounded reads used before the skipping rule moved into
+    ``txlog.may_hold`` (reference copy)."""
+    cmin, cmax = entry.get("chunk_min"), entry.get("chunk_max")
+    if cmin is None or cmax is None:
+        return True
+    if lo is not None and cmax < lo:
+        return False
+    return hi is None or cmin <= hi
+
+
+def _ref_affected(entry: dict, chunk_set: set, dims: list | None) -> bool:
+    """The test ChunkStore's copy-on-write used to pick its affected
+    files before the skipping rule moved into ``txlog.may_hold``
+    (reference copy; ``dims`` is ``[(column, sorted values)]`` or None).
+    Sorting the values raises TypeError on unorderable types — there it
+    gave no answer."""
+    import bisect
+
+    if not (entry.get("chunk_min") is None or any(
+        entry["chunk_min"] <= c <= entry["chunk_max"] for c in chunk_set
+    )):
+        return False
+    if dims is None:
+        return True
+    ks = entry.get("key_stats") or {}
+    for k, vals in dims:
+        rng = ks.get(k)
+        if not rng:
+            continue
+        lo, hi = rng
+        try:
+            i = bisect.bisect_left(vals, lo)
+            if not (i < len(vals) and vals[i] <= hi):
+                return False
+        except TypeError:
+            continue
+    return True
+
+
+class TestFileSkipRule:
+    """``txlog.may_hold``, the one file-skipping rule, on entries built
+    from random row sets: a file holding a matching row is never
+    skipped, and wherever the per-site tests it replaced gave an answer,
+    it gives the same one. Queries are drawn around the rows' own
+    values, so the stats' edges are hit often."""
+
+    # rows: (chunk, a: int key, b: str key)
+    rows = st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 5),
+                  st.sampled_from(["b", "c", "d", "f"])),
+        min_size=1, max_size=6,
+    )
+    COLS = {"a": 1, "b": 2}
+
+    @staticmethod
+    def _entry(rows, chunk_stats: bool, key_cols) -> dict:
+        e = {"path": "f.parquet", "rows": len(rows),
+             "chunk_min": None, "chunk_max": None, "key_stats": None}
+        if chunk_stats:
+            e["chunk_min"] = min(r[0] for r in rows)
+            e["chunk_max"] = max(r[0] for r in rows)
+        ks = {c: [min(r[i] for r in rows), max(r[i] for r in rows)]
+              for c, i in TestFileSkipRule.COLS.items() if c in key_cols}
+        e["key_stats"] = ks or None
+        return e
+
+    @staticmethod
+    def _near_chunks(rows):
+        """Chunk ids at and next to the rows' chunks."""
+        return st.sampled_from(sorted({r[0] + d for r in rows for d in (-1, 0, 1)}))
+
+    @staticmethod
+    def _values(rows, col):
+        """Candidate values of ``col``: the rows' own, others of the same
+        type, and values of other types (filter values can mix)."""
+        own = sorted({r[TestFileSkipRule.COLS[col]] for r in rows})
+        return st.lists(st.one_of(
+            st.sampled_from(own), st.integers(-1, 6),
+            st.sampled_from(["a", "c", "e", "g"]),
+            st.floats(-1, 6, allow_nan=False),
+        ), max_size=4)
+
+    @staticmethod
+    def _chunk_in(c, chunks) -> bool:
+        if chunks is None:
+            return True
+        if isinstance(chunks, tuple):
+            lo, hi = chunks
+            return (lo is None or c >= lo) and (hi is None or c <= hi)
+        return c in chunks
+
+    @settings(max_examples=500, deadline=None)
+    @given(rows=rows, chunk_stats=st.booleans(),
+           key_cols=st.sets(st.sampled_from(["a", "b"])), data=st.data())
+    def test_never_skips_a_matching_file(self, rows, chunk_stats, key_cols,
+                                         data):
+        from holcstore_spark.sources.txlog import entry_may_hold
+
+        near = self._near_chunks(rows)
+        bound = st.one_of(st.none(), near)
+        chunks = data.draw(st.one_of(
+            st.none(), st.tuples(bound, bound),
+            st.sets(near, max_size=4), st.lists(near, max_size=4),
+        ))
+        kv = {c: data.draw(self._values(rows, c))
+              for c in data.draw(st.sets(st.sampled_from(["a", "b"])))}
+        e = self._entry(rows, chunk_stats, key_cols)
+        held = entry_may_hold(e, chunks=chunks, key_values=kv)
+        match = any(
+            self._chunk_in(r[0], chunks)
+            and all(r[self.COLS[c]] in vals for c, vals in kv.items())
+            for r in rows
+        )
+        assert held or not match, (e, chunks, kv)
+        if chunks is None:
+            assert held == _ref_entry_may_match_keys(e, kv), (e, kv)
+        elif isinstance(chunks, tuple):
+            # ChunkStore.data: the chunk range, then the key test
+            assert held == (_ref_overlapping(e, *chunks)
+                            and _ref_entry_may_match_keys(e, kv)), (e, chunks, kv)
+
+    @settings(max_examples=500, deadline=None)
+    @given(rows=rows, chunk_stats=st.booleans(),
+           key_cols=st.sets(st.sampled_from(["a", "b"])), data=st.data())
+    def test_matches_the_affected_files_test(self, rows, chunk_stats,
+                                             key_cols, data):
+        from holcstore_spark.sources.txlog import entry_may_hold
+
+        chunk_set = data.draw(st.sets(self._near_chunks(rows), max_size=4))
+        tuples = data.draw(st.one_of(st.none(), st.lists(st.tuples(
+            st.one_of(st.sampled_from(sorted({r[1] for r in rows})),
+                      st.integers(-1, 6), st.sampled_from("ace")),
+            st.one_of(st.sampled_from(sorted({r[2] for r in rows})),
+                      st.sampled_from(["a", "c", "e", "g"])),
+        ), min_size=1, max_size=3)))
+        e = self._entry(rows, chunk_stats, key_cols)
+        kv = None if tuples is None else {
+            k: [kt[i] for kt in tuples] for i, k in enumerate(("a", "b"))
+        }
+        held = entry_may_hold(e, chunks=chunk_set, key_values=kv)
+        match = any(
+            r[0] in chunk_set and (tuples is None or any(
+                (r[1], r[2]) == kt for kt in tuples))
+            for r in rows
+        )
+        assert held or not match, (e, chunk_set, tuples)
+        try:
+            dims = None if kv is None else [(k, sorted(set(v)))
+                                            for k, v in kv.items()]
+        except TypeError:
+            return  # the reference raised here: no answer to compare
+        assert held == _ref_affected(e, chunk_set, dims), (e, chunk_set, kv)
 
 
 class TestSpanDedupProperties:

@@ -201,13 +201,13 @@ class TestManifestSkipping:
         snap = st._txlog.snapshot()
         jan = 2024 * 12 + 0
         jun = 2024 * 12 + 5
-        jan_files = snap.entries_overlapping("data", jan, jan)
-        all_files = snap.entries_overlapping("data", None, None)
+        jan_files = snap.entries_may_hold("data", chunks=(jan, jan))
+        all_files = snap.entries_may_hold("data", chunks=(None, None))
         assert len(jan_files) < len(all_files)
         # and the bounded read is correct
         got = st.get_ts({"site": "m01"}, start="2024-01-01", end="2024-01-02")
         assert got is not None and (got == 1.0).all()
-        assert snap.entries_overlapping("data", jun, jun)
+        assert snap.entries_may_hold("data", chunks=(jun, jun))
 
 
 class TestAcidMatrix:
